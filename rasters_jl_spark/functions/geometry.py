@@ -20,6 +20,16 @@ Boundary conventions (engine-defined, matching the reference's golden counts
   inside, right/top outside (half-open), which reproduces the 20² count.
 - ``touches``: closed cell rectangle intersects the closed polygon → 21².
 - ``inside``: cell rectangle fully inside the polygon → 19².
+
+Page joins use a classified cell cover (:func:`polygon_cover_df`, after
+Raptor): each cell of a polygon's bbox cover at ``COVER_RES`` is, on the
+driver, *exterior* (no edge touches the cell padded by ``_CELL_PAD`` and
+its centre is outside: dropped), *interior* (no edge touches it, centre
+inside: joins with ``inside`` true and no edges, so no PIP) or *boundary*
+(carries only the edges that can flip a point's parity in the cell). Cells
+on the globe border stay boundary with every edge, because ``cell_col``
+clamps out-of-range points into them. Pages refine with
+``inside OR pip_col(lon, lat, edges)``.
 """
 
 from __future__ import annotations
@@ -32,6 +42,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
+    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -141,17 +152,29 @@ def polygons_df(spark: SparkSession, polys: list[Polygon]) -> DataFrame:
     return _local_df(spark, rows, POLY_SCHEMA)
 
 
+# Pad of the cover-cell classification, in degrees. A page clamped into an
+# inner cover cell by WebGrid.cell_col lies within a few ulps of 360 of the
+# cell, and pip_col's x_at_y is off by a few ulps: an edge that misses the
+# cell padded by 1e-9 can never flip the parity of a page in it.
+_CELL_PAD = 1e-9
+
+
 def polygon_cover_df(
     spark: SparkSession, polys: list[Polygon], cover_res: int = COVER_RES, n_salt: int = 1
 ) -> DataFrame:
-    """Exploded (cover_cell, geom_id[, salt]) table for the cell-prefix join.
+    """Classified (cover_cell, geom_id, inside, edges[, salt]) table for the
+    cell-prefix join; the cell classes are in the module docstring.
 
-    The cover is the conservative bbox cover at ``cover_res`` — the Spark
-    analogue of the reference's per-geometry extent pre-filter
+    The cover is the bbox cover at ``cover_res`` — the Spark analogue of the
+    reference's per-geometry extent pre-filter
     (`src/methods/burning/geometry.jl:96-104`): candidates are produced by an
-    equi hash join on ``cover_cell`` instead of a scanline over a view.
+    equi hash join on ``cover_cell`` instead of a scanline over a view. A
+    boundary row keeps the edges whose y-span meets the padded cell's
+    y-range and whose max x ≥ its xmin: no other edge can satisfy
+    :func:`pip_col`'s crossing predicate for a point in the cell, so the
+    parity is the full edge array's, bit for bit.
 
-    With ``n_salt > 1`` every cover cell is replicated per salt value; the
+    With ``n_salt > 1`` every cover row is replicated per salt value; the
     page side appends ``doc_id % n_salt`` to the key so one hot urban cell
     fans out over ``n_salt`` shuffle partitions (skew mitigation; AQE's
     skew-join split is the second line of defence).
@@ -159,26 +182,19 @@ def polygon_cover_df(
     g = WebGrid(cover_res)
     rows = []
     for p in polys:
-        ix0, ix1, iy0, iy1 = _cover_cells(p, g)
-        for iy in range(iy0, iy1 + 1):
-            for ix in range(ix0, ix1 + 1):
-                for s in range(n_salt):
-                    rows.append((iy * g.nx + ix, p.geom_id, s))
+        for cell, inside, edges in _classify_cover(p, g):
+            rows.extend((cell, p.geom_id, inside, edges, s) for s in range(n_salt))
     schema = StructType(
         [
             StructField("cover_cell", LongType(), False),
             StructField("geom_id", LongType(), False),
+            StructField("inside", BooleanType(), False),
+            StructField("edges", ArrayType(_EDGE_T), False),
             StructField("salt", IntegerType(), False),
         ]
     )
     df = _local_df(spark, rows, schema)
     return df if n_salt > 1 else df.drop("salt")
-
-
-# fused cover+edge broadcast bound: cap on duplicated edge structs
-# (cover cells × edges per geom × salt); past this the two-join form's
-# smaller broadcast wins (see operators/zonal.py::spatial_join_pages)
-FUSE_EDGE_STRUCTS_MAX = 200_000
 
 
 def _cover_cells(p: Polygon, g) -> tuple[int, int, int, int]:
@@ -191,55 +207,44 @@ def _cover_cells(p: Polygon, g) -> tuple[int, int, int, int]:
     return ix0, ix1, iy0, iy1
 
 
-def _cover_cell_count(polys: list[Polygon], g) -> int:
-    n = 0
-    for p in polys:
-        ix0, ix1, iy0, iy1 = _cover_cells(p, g)
-        n += (ix1 - ix0 + 1) * (iy1 - iy0 + 1)
-    return n
+def _classify_cover(p: Polygon, g: WebGrid):
+    """(cover_cell, inside, edges) of the interior and boundary cells of one
+    polygon's bbox cover (see :func:`polygon_cover_df`), vectorised over
+    cells × edges."""
+    ix0, ix1, iy0, iy1 = _cover_cells(p, g)
+    iy, ix = np.divmod(np.arange((iy1 - iy0 + 1) * (ix1 - ix0 + 1)), ix1 - ix0 + 1)
+    ix, iy = ix + ix0, iy + iy0
+    rx0 = (-180.0 + ix * g.step - _CELL_PAD)[:, None]
+    rx1 = (-180.0 + (ix + 1) * g.step + _CELL_PAD)[:, None]
+    ry0 = (-90.0 + iy * g.step - _CELL_PAD)[:, None]
+    ry1 = (-90.0 + (iy + 1) * g.step + _CELL_PAD)[:, None]
+    edges = [tuple(map(float, e)) for e in p.edges]
+    x1, y1, x2, y2 = np.asarray(edges, dtype=np.float64).reshape(-1, 4).T
+    y_meets = (np.minimum(y1, y2) <= ry1) & (np.maximum(y1, y2) >= ry0)
+    can_cross = y_meets & (np.maximum(x1, x2) >= rx0)
 
+    def side(cx, cy):
+        return (x2 - x1) * (cy - y1) - (y2 - y1) * (cx - x1)
 
-def polygon_cover_edges_df(
-    spark: SparkSession, polys: list[Polygon], cover_res: int = COVER_RES, n_salt: int = 1
-) -> DataFrame:
-    """:func:`polygon_cover_df` with the polygon's edge array + bbox fused
-    onto every cover row — ONE broadcast join does candidate reduction AND
-    supplies the PIP/bbox inputs (the two-join form builds two broadcasts
-    and probes two hash tables per page). Same (cover_cell, geom_id) pairs
-    by construction; use only under the ``FUSE_EDGE_STRUCTS_MAX`` bound."""
-    g = WebGrid(cover_res)
-    schema_fields = [
-        StructField("cover_cell", LongType(), False),
-        StructField("geom_id", LongType(), False),
-        StructField("xmin", DoubleType(), False),
-        StructField("xmax", DoubleType(), False),
-        StructField("ymin", DoubleType(), False),
-        StructField("ymax", DoubleType(), False),
-        StructField("edges", ArrayType(_EDGE_T), False),
-        StructField("salt", IntegerType(), False),
-    ]
-    rows = []
-    for p in polys:
-        xmin, xmax, ymin, ymax = p.bbox
-        edges = [(float(a), float(b), float(c), float(d)) for a, b, c, d in p.edges]
-        ix0, ix1, iy0, iy1 = _cover_cells(p, g)
-        for iy in range(iy0, iy1 + 1):
-            for ix in range(ix0, ix1 + 1):
-                for s in range(n_salt):
-                    rows.append(
-                        (
-                            iy * g.nx + ix,
-                            p.geom_id,
-                            float(xmin),
-                            float(xmax),
-                            float(ymin),
-                            float(ymax),
-                            edges,
-                            s,
-                        )
-                    )
-    df = _local_df(spark, rows, StructType(schema_fields))
-    return df if n_salt > 1 else df.drop("salt")
+    # closed segment ∩ closed rect, the test of _seg_intersects_rect: bbox
+    # overlap and the 4 corners not all strictly on one side of the line
+    s = np.stack([side(rx0, ry0), side(rx1, ry0), side(rx0, ry1), side(rx1, ry1)])
+    touches = can_cross & (np.minimum(x1, x2) <= rx1) & ~(s > 0).all(0) & ~(s < 0).all(0)
+    # pip_col's arithmetic at the cell centres
+    mx = (-180.0 + (ix + 0.5) * g.step)[:, None]
+    my = (-90.0 + (iy + 0.5) * g.step)[:, None]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cross = ((y1 > my) != (y2 > my)) & (mx < x1 + (x2 - x1) * (my - y1) / (y2 - y1))
+    centre_in = cross.sum(1) % 2 == 1
+    border = (ix == 0) | (ix == g.nx - 1) | (iy == 0) | (iy == g.ny - 1)
+    for k in range(len(ix)):
+        cell = int(iy[k]) * g.nx + int(ix[k])
+        if border[k]:
+            yield cell, False, edges
+        elif touches[k].any():
+            yield cell, False, [edges[j] for j in np.flatnonzero(can_cross[k])]
+        elif centre_in[k]:
+            yield cell, True, []
 
 
 def polygon_block_cover_df(

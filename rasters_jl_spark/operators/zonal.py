@@ -5,7 +5,7 @@ geometry crop → mask → reduce-skipmissing, threaded over geometries. The
 Spark plan is ONE job over all geometries:
 
     pages ⋈ polygon-cover (equi hash join on coarse cell — broadcast)
-          → PIP refine (codegen'd higher-order expr over edge arrays)
+          → PIP refine on boundary cells (codegen'd higher-order expr)
           → groupBy(geom_id).agg(...)
           → left join back to polygons (empty zones, `emptyval`)
 
@@ -19,14 +19,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rasters_jl_spark.functions.geometry import (
-    FUSE_EDGE_STRUCTS_MAX,
     Polygon,
-    _cover_cell_count,
     boundary_pred,
     pip_col,
+    pip_pandas_udf,
     polygon_block_cover_df,
     polygon_cover_df,
-    polygon_cover_edges_df,
     polygons_df,
 )
 from rasters_jl_spark.grid import COVER_RES, GridSpec, WebGrid
@@ -47,28 +45,18 @@ def spatial_join_pages(
     polygon side is exploded to coarse cover cells and **broadcast** (the
     geometry side is metadata-scale). The equi join on the coarse cell does
     the candidate reduction (the reference's extent pre-filter,
-    `src/methods/burning/geometry.jl:96-104`); PIP refines exactly.
+    `src/methods/burning/geometry.jl:96-104`). Cover cells are classified
+    on the driver (:func:`polygon_cover_df`): exterior cells never join,
+    interior cells pass with no PIP test, and boundary cells refine exactly
+    with PIP over the few edges that can cross them.
 
     Returns pages columns + ``geom_id``. With ``n_salt>1`` the page side
     appends ``doc_id % n_salt`` to the join key and the cover side is
     replicated per salt — identical row set, hot cells spread over salt
-    partitions (verified by `tests/test_skew.py`).
+    partitions (verified by `tests/test_knn_skew.py`).
     """
-    spark = pages.sparkSession
     g = WebGrid(cover_res)
-    # Fuse the edge arrays ONTO the cover rows when the duplication is
-    # bounded (each cover cell row repeats its polygon's edge array): one
-    # broadcast build + one hash-join probe per page instead of two.
-    # Past the bound (huge multi-polygon zonals where cells-per-geom ×
-    # edges would inflate the broadcast), fall back to the two-join form —
-    # same rows either way, purely a physical-plan choice.
-    n_cover_cells = _cover_cell_count(polys, g)
-    fuse = n_cover_cells * max(len(p.edges) for p in polys) * max(n_salt, 1) <= FUSE_EDGE_STRUCTS_MAX
-    if fuse:
-        cover = polygon_cover_edges_df(spark, polys, cover_res, n_salt=n_salt)
-    else:
-        cover = polygon_cover_df(spark, polys, cover_res, n_salt=n_salt)
-
+    cover = polygon_cover_df(pages.sparkSession, polys, cover_res, n_salt=n_salt)
     p = pages.withColumn("_cover_cell", g.cell_col(F.col("lon"), F.col("lat")))
     if n_salt > 1:
         p = p.withColumn("_salt", (F.col("doc_id") % n_salt).cast("int"))
@@ -80,20 +68,12 @@ def spatial_join_pages(
         cand = p.join(F.broadcast(cover), p["_cover_cell"] == cover["cover_cell"]).drop(
             "cover_cell"
         )
-    if not fuse:
-        pdf = polygons_df(spark, polys).select(
-            "geom_id", "edges", "xmin", "xmax", "ymin", "ymax"
-        )
-        cand = cand.join(F.broadcast(pdf), "geom_id")
     if use_pandas_pip:
-        from rasters_jl_spark.functions.geometry import pip_pandas_udf
-
-        pip = pip_pandas_udf(polys)
-        refined = cand.where(pip(F.col("lon"), F.col("lat"), F.col("geom_id")))
+        hit = pip_pandas_udf(polys)(F.col("lon"), F.col("lat"), F.col("geom_id"))
     else:
-        refined = cand.where(pip_col(F.col("lon"), F.col("lat"), F.col("edges")))
-    # fixed output order (geom_id first, then the caller's page columns) —
-    # identical for the fused and two-join physical forms
+        hit = pip_col(F.col("lon"), F.col("lat"), F.col("edges"))
+    # interior cover cells need no ray cast; boundary cells carry the edges
+    refined = cand.where(F.col("inside") | hit)
     return refined.select("geom_id", *pages.columns)
 
 

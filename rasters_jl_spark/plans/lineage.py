@@ -86,6 +86,9 @@ def run_tiles_resumable(
                 f"with tiles_per_batch={recorded} or start a fresh ledger/output"
             )
     else:
+        # the meta is written before any Spark write creates the ledger's
+        # parent directory
+        os.makedirs(os.path.dirname(os.path.abspath(meta_path)), exist_ok=True)
         with open(meta_path, "w") as f:
             json.dump({"tiles_per_batch": tiles_per_batch}, f)
 

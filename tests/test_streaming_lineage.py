@@ -1043,6 +1043,20 @@ def test_resumable_fresh_ledger_ignores_stale_meta(spark, sf_dir, tmpdir):
     assert n == pages.select("tile_id").distinct().count()
 
 
+def test_resumable_creates_missing_ledger_parent(spark, sf_dir, tmpdir):
+    """A ledger under a directory that does not exist yet: the first run
+    creates it (the meta sidecar is written before any Spark write)."""
+    pages = geotag_pages(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    ledger, out = f"{tmpdir}/new/nested/ledger", f"{tmpdir}/nout"
+
+    def process(batch):
+        return batch.groupBy("tile_id").agg(F.count("*").alias("n"))
+
+    n = run_tiles_resumable(pages, spark, ledger, process, out, tiles_per_batch=10**6)
+    assert n == pages.select("tile_id").distinct().count()
+    assert run_tiles_resumable(pages, spark, ledger, process, out, tiles_per_batch=10**6) == 0
+
+
 def test_stream_decontaminate_covers_both_microbatches(spark, sf_dir, tmpdir):
     """Stream-static decontamination: the corpus drains as two parity
     micro-batches; eval windows from doc_id%25==0 (both parities) must

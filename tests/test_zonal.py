@@ -4,6 +4,7 @@ empty/out-of-bounds zones."""
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -204,3 +205,187 @@ def test_zonal_coverage_analytic_invariants(spark):
     plan = zonal_coverage(cells, g, polys)._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") == 2  # block cover + edge table
+
+
+# ---- classified cover join (operators/zonal.py::spatial_join_pages) ----
+
+PAGE_SCHEMA = "doc_id long, lon double, lat double"
+
+
+def test_empty_polygon_list_spatial_join(spark):
+    from rasters_jl_spark.operators.zonal import spatial_join_pages
+
+    pages = spark.createDataFrame([(1, 10.0, 20.0)], PAGE_SCHEMA)
+    out = spatial_join_pages(pages, [])
+    assert out.columns == ["geom_id", "doc_id", "lon", "lat"]
+    assert out.collect() == []
+
+
+def test_empty_polygon_list_zonal_pages(spark):
+    from rasters_jl_spark.operators.zonal import zonal_pages
+
+    pages = spark.createDataFrame([(1, 10.0, 20.0, 7)], PAGE_SCHEMA + ", n_chars int")
+    out = zonal_pages(pages, [])
+    assert out.columns == ["geom_id", "n_pages", "sum_val", "mean_val", "min_val", "max_val"]
+    assert out.collect() == []
+
+
+def _star(rng, cx, cy, r, n, snap):
+    """Seeded non-convex star; vertices on the cover lattice where ``snap``."""
+    ang = np.sort(rng.uniform(0.0, 2 * np.pi, n))
+    rad = r * rng.uniform(0.3, 1.0, n)
+    pts = np.c_[cx + rad * np.cos(ang), cy + rad * np.sin(ang)]
+    if snap:
+        on = rng.random(n) < 0.5
+        pts[on] = np.round(pts[on] / snap) * snap
+    return tuple(map(tuple, pts.tolist()))
+
+
+def _random_layer(seed, step):
+    from rasters_jl_spark import fixtures as FX
+
+    rng = np.random.default_rng(seed)
+    polys = list(FX.POLYS_GEO)  # its x=0 and y=10 edges lie on cover-cell edges
+    gid = 100
+    for _ in range(10):
+        cx, cy = rng.uniform(-150, 150), rng.uniform(-70, 70)
+        polys.append(Polygon(gid, _star(rng, cx, cy, rng.uniform(3, 30), 9, step)))
+        gid += 1
+    for _ in range(3):  # stars with a star-shaped hole
+        cx, cy = rng.uniform(-140, 140), rng.uniform(-60, 60)
+        ring = _star(rng, cx, cy, 25.0, 12, step)
+        hole = _star(rng, cx, cy, 6.0, 7, step)
+        polys.append(Polygon(gid, ring, (hole,)))
+        gid += 1
+    # reaching and crossing the globe border (cell_col clamps into border cells)
+    polys += [
+        Polygon(gid, ((-180.0, 70.0), (-150.0, 90.0), (-140.0, 60.0))),
+        Polygon(gid + 1, ((170.0, -95.0), (200.0, -80.0), (165.0, -60.0), (175.0, -80.0))),
+        Polygon(gid + 2, ((-185.0, -10.0), (-170.0, 0.0), (-185.0, 10.0))),
+    ]
+    # edges a hair outside the cells at lon 0 / lat 0, where cell_col rounds
+    # points from outside the cell into it (-1e-19 + 180 == 180)
+    polys += [
+        Polygon(gid + 3, ((-1e-20, 22.5), (20.0, 22.5), (20.0, 45.0), (-1e-20, 45.0))),
+        Polygon(gid + 4, ((30.0, -1e-20), (50.0, -1e-20), (50.0, -30.0), (30.0, -30.0))),
+    ]
+    return polys
+
+
+def _probe_pages(spark, seed, step):
+    """Cell corners and edge midpoints, random points, out-of-range lon/lat
+    and points that round into the cell beyond their own edge."""
+    rng = np.random.default_rng(seed)
+    xs = np.arange(-180.0, 180.0 + step / 4, step / 2)
+    ys = np.arange(-90.0, 90.0 + step / 4, step / 2)
+    gx, gy = np.meshgrid(xs, ys)
+    lon = np.r_[gx.ravel(), rng.uniform(-180, 180, 3000), rng.choice(xs, 1000)]
+    lat = np.r_[gy.ravel(), rng.uniform(-90, 90, 3000), rng.uniform(-90, 90, 1000)]
+    out = [(-190.0, 0.0), (190.0, 0.0), (0.0, -95.0), (0.0, 95.0), (-200.0, 100.0),
+           (195.0, -92.0), (185.0, -85.0), (-182.0, 0.5), (172.0, -93.0),
+           (-1e-19, 30.0), (-1e-19, 40.0), (40.0, -1e-19), (35.0, -1e-19)]
+    lon = np.r_[lon, [o[0] for o in out]]
+    lat = np.r_[lat, [o[1] for o in out]]
+    rows = [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))]
+    return spark.createDataFrame(rows, PAGE_SCHEMA)
+
+
+@pytest.mark.parametrize("n_salt", [1, 8])
+def test_classified_cover_join_is_exact(spark, n_salt):
+    """The classified join equals pages × polygons refined by full-edge
+    pip_col, row for row: non-convex polygons, holes, vertices and edges on
+    cover-cell edges, polygons reaching the globe border, points on cell
+    corners/edges and out-of-range points clamped into border cells."""
+    from rasters_jl_spark.functions.geometry import pip_col, polygons_df
+    from rasters_jl_spark.grid import COVER_RES, WebGrid
+    from rasters_jl_spark.operators.zonal import spatial_join_pages
+
+    step = WebGrid(COVER_RES).step
+    polys = _random_layer(3, step)
+    pages = _probe_pages(spark, 3, step)
+    full = (
+        pages.crossJoin(polygons_df(spark, polys))
+        .where(pip_col(F.col("lon"), F.col("lat"), F.col("edges")))
+        .select("geom_id", *pages.columns)
+    )
+    want = sorted(map(tuple, full.collect()))
+    got = sorted(map(tuple, spatial_join_pages(pages, polys, n_salt=n_salt).collect()))
+    assert len(want) > 1000
+    assert got == want
+
+
+def _seg_meets_box(e, x0, x1, y0, y1) -> bool:
+    """Liang–Barsky: closed segment ∩ closed box ≠ ∅ (test reference)."""
+    ax, ay, bx, by = e
+    t0, t1 = 0.0, 1.0
+    for p, q in ((ax - bx, ax - x0), (bx - ax, x1 - ax), (ay - by, ay - y0), (by - ay, y1 - ay)):
+        if p == 0:
+            if q < 0:
+                return False
+        elif p < 0:
+            t0 = max(t0, q / p)
+        else:
+            t1 = min(t1, q / p)
+    return t0 <= t1
+
+
+def _pip_ref(x, y, edges) -> bool:
+    """pip_col's even-odd ray cast at one point (test reference)."""
+    return sum(
+        (y1 > y) != (y2 > y) and x < x1 + (x2 - x1) * (y - y1) / (y2 - y1)
+        for x1, y1, x2, y2 in edges
+    ) % 2 == 1
+
+
+def test_cover_counters_star_layer(spark):
+    """Star polygons away from the globe border: every bbox cover cell that
+    meets a polygon edge is emitted as boundary, every other one as interior
+    iff its centre is inside (never as exterior), interior rows carry no
+    edges, and Σ edge structs < cover rows × edges per polygon."""
+    from rasters_jl_spark.functions.geometry import polygon_cover_df
+    from rasters_jl_spark.grid import COVER_RES, WebGrid
+
+    g = WebGrid(COVER_RES)
+    rng = np.random.default_rng(11)
+    polys = [
+        Polygon(1 + 4 * j + i, _star(rng, -135.0 + 90.0 * i, -45.0 + 90.0 * j, 20.0, 24, 0))
+        for j in range(2)
+        for i in range(4)
+    ]
+    rows = polygon_cover_df(spark, polys).collect()
+    emitted = {(r["geom_id"], r["cover_cell"]): r for r in rows}
+    n_edges = {p.geom_id: len(p.edges) for p in polys}
+    n_exterior = 0
+    for p in polys:
+        xmin, xmax, ymin, ymax = p.bbox
+        for iy in range(int((ymin + 90) // g.step), int((ymax + 90) // g.step) + 1):
+            for ix in range(int((xmin + 180) // g.step), int((xmax + 180) // g.step) + 1):
+                x0, x1, y0, y1 = g.cell_bounds(ix, iy)
+                hit = any(_seg_meets_box(e, x0, x1, y0, y1) for e in p.edges)
+                centre_in = _pip_ref((x0 + x1) / 2, (y0 + y1) / 2, p.edges)
+                r = emitted.get((p.geom_id, iy * g.nx + ix))
+                if hit:
+                    assert r is not None and not r["inside"] and r["edges"]
+                elif centre_in:
+                    assert r is not None and r["inside"] and r["edges"] == []
+                else:
+                    assert r is None  # exterior: dropped
+                    n_exterior += 1
+    assert n_exterior > 0 and any(r["inside"] for r in rows)
+    assert all(r["edges"] == [] for r in rows if r["inside"])
+    n_structs = sum(len(r["edges"]) for r in rows)
+    assert n_structs < sum(n_edges[r["geom_id"]] for r in rows)
+
+
+def test_cover_counts_polys_geo(spark):
+    """Pinned classified-cover counts of FX.POLYS_GEO at COVER_RES (its bbox
+    cover is 273 cells; polygon 4 reaches the top border row)."""
+    from rasters_jl_spark import fixtures as FX
+    from rasters_jl_spark.functions.geometry import polygon_cover_df
+
+    rows = polygon_cover_df(spark, FX.POLYS_GEO).collect()
+    assert len(rows) == 272
+    assert sum(r["inside"] for r in rows) == 164
+    assert sum(len(r["edges"]) for r in rows) == 234
+    salted = polygon_cover_df(spark, FX.POLYS_GEO, n_salt=8)
+    assert salted.count() == 8 * 272
