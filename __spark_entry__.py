@@ -8,7 +8,7 @@ cell-prefix hash join + PIP refinement + groupBy) on sf0.001.
 SURVEY.md §2 plus the training-data pipeline ops — 176 queries, ALL with
 a DuckDB oracle; see `rasters_jl_spark/registry.py` (the first 50
 REGISTRY entries are the driver correctness window, controlled by the
-current round's ``_R*_WINDOW`` list: changed + new + stalest records).
+``_DRIVER_WINDOW`` list: changed + new + stalest records).
 """
 
 from __future__ import annotations

@@ -1927,7 +1927,9 @@ def _gif_lzw_decode(mcs: int, data: bytes, max_out: int) -> bytearray:
     # exits with END's bits still in ``acc`` — zero-extended they can only
     # equal END (valid streams pad the final byte with zero bits), so
     # accept that as the terminator instead of rejecting a valid stream.
-    if nbits > 0 and acc == end:
+    # Only exactly width - 1 leftover bits are that case: fewer bits that
+    # happen to read as END are a truncated stream.
+    if nbits == width - 1 and acc == end:
         return out
     raise ValueError("malformed GIF: LZW stream ended without END code")
 

@@ -4,24 +4,37 @@ the reference's closest machinery is the `Near` selector, `src/lookup.jl`).
 Exact k-nearest pages per query point, planar squared-degree distance
 (engine-defined semantics so the brute-force oracle agrees bit-for-bit):
 
+queries: projected to (q_id, qlat, qlon) and pinned once on entry; every
+         consumer below reads the pin, so the caller's query plan runs
+         once per call;
 phase 1: candidates from rings ≤ R0 around each query cell, R0 sized from
          global page density (one scalar aggregate, not a collect loop);
          the same window pass yields rank AND the kth distance, and when
          the implied exact radius R_q = ceil(sqrt(d_k)/step)+1 fits in R0
-         the top-k is emitted DIRECTLY from phase-1 candidates — the
-         common case costs one pages scan and one q_id exchange;
-phase 2: only queries whose radius GREW past R0 re-join rings ≤ R_q;
+         the top-k is emitted DIRECTLY from the pinned phase-1 top-k — the
+         common case costs one pages scan and one q_id exchange. R_q is
+         constant within a query, so the per-query radius table is the
+         rank-1 projection of that top-k: no aggregate, no exchange;
+routing: one small action over the two pins counts the queries each later
+         tier needs, and a tier is planned only when its count is nonzero —
+         a batch phase 1 fully answers returns a plan with no ring or
+         brute subtree;
+phase 2: queries whose radius GREW past R0 (up to RING_MAX) re-join rings
+         ≤ R_q;
 brute tier: queries phase 2 cannot satisfy within RING_MAX cells (<k
          candidates in R0, or R_q would exceed RING_MAX) fall back to ONE
          broadcast-nested-loop pass over pages — rare by construction
          (density-sized R0), bounded memory (no grid-sized ring arrays),
-         still exact. AQE's empty-relation propagation elides the brute
-         scan when no query needs it.
+         still exact.
 
 Phase 2 guarantees exactness: any page closer than the phase-1 kth distance
 lies within R_q rings of the query cell. All fan-out is `explode` of
 generated ring arrays capped at (2·RING_MAX+1)² elements — no driver
 iteration, scales with #queries.
+
+Not lazy: under AQE, phase 1 (its broadcast and shuffle-map stages) and the
+routing action run inside `knn_pages()`; the returned frame's action reads
+the pinned top-k plus whichever later tiers were planned.
 """
 
 from __future__ import annotations
@@ -57,20 +70,31 @@ def _ring_candidates(
     p = pages.select(
         "cell", F.col("doc_id").alias("doc_id"), F.col("lat").alias("_plat"), F.col("lon").alias("_plon")
     )
-    # The query side arrives behind shuffles, so without a hint Spark can't
-    # see when it's small and plans a sort-merge join that shuffles the
-    # whole pages table. But the hint is only safe when the exploded side
-    # actually fits in a broadcast relation: the caller passes its row
-    # estimate (n_queries × ring cells) and past BROADCAST_ROWS_MAX the
-    # hint is withheld (many-query phase-1 at r0=RING_MAX would otherwise
-    # force a multi-GB broadcast and fail where the shuffle join works).
+    # The query side arrives behind a pin or shuffles, so without a hint
+    # Spark can't see when it's small and plans a sort-merge join that
+    # shuffles the whole pages table. But the hint is only safe when the
+    # exploded side actually fits in a broadcast relation: the caller
+    # passes its row estimate (queries × ring cells) and past
+    # BROADCAST_ROWS_MAX the hint is withheld (many-query phase-1 at
+    # r0=RING_MAX would otherwise force a multi-GB broadcast and fail
+    # where the shuffle join works).
     if exploded_rows_est is None or exploded_rows_est <= BROADCAST_ROWS_MAX:
         q = F.broadcast(q)
-    cand = q.join(p, "cell")
-    d2 = (F.col("_plat") - F.col("qlat")) * (F.col("_plat") - F.col("qlat")) + (
+    return q.join(p, "cell").withColumn("dist2", _dist2())
+
+
+def _dist2():
+    return (F.col("_plat") - F.col("qlat")) * (F.col("_plat") - F.col("qlat")) + (
         F.col("_plon") - F.col("qlon")
     ) * (F.col("_plon") - F.col("qlon"))
-    return cand.withColumn("dist2", d2)
+
+
+def _top_k(cand: DataFrame, w: Window, k: int) -> DataFrame:
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("q_id", "rank", "doc_id", "dist2")
+    )
 
 
 def knn_pages(
@@ -87,18 +111,25 @@ def knn_pages(
     (defaults to the resolution implied by the cell column — pass it).
     ``n_pages`` sizes the phase-1 ring radius from density; ``n_queries``
     gates the phase-1 broadcast hint (exploded queries×ring-cells rows
-    must fit in a broadcast relation). Pass the catalog row counts when
-    known (at 10¹² scale that's table statistics, not an online count) —
-    left None, one count() action each runs here.
-    Returns (q_id, rank, doc_id, dist2).
+    must fit in a broadcast relation). Both are sizing hints only: which
+    tiers run is decided from the pinned data, never from them. Pass the
+    catalog row counts when known (at 10¹² scale that's table statistics,
+    not an online count) — left None, one count() action each runs here.
+    Phase 1 and the routing action run inside this call (see the module
+    docstring). Returns (q_id, rank, doc_id, dist2).
     """
     from rasters_jl_spark.grid import PAGES_RES
 
     g = WebGrid(res if res is not None else PAGES_RES)
+    # The query side is read by the phase-1 ring join, the routing action
+    # and the later tiers; pinned here, the caller's plan (a Python RDD
+    # for createDataFrame(list)) runs once. Query metadata is small at any
+    # corpus scale, so a local checkpoint is the pin.
+    q = queries.select("q_id", "qlat", "qlon").localCheckpoint(eager=False)
     if n_pages is None:
         n_pages = pages.count()  # one scalar action to size R0 from density
     if n_queries is None:
-        n_queries = queries.count()  # sizes the phase-1 broadcast gate
+        n_queries = q.count()  # sizes the phase-1 broadcast gate
     density = max(n_pages, 1) / float(g.nx * g.ny)
     import math
 
@@ -129,7 +160,7 @@ def knn_pages(
     # max over the ≤k surviving rows — same value as computing it over
     # the full candidate set, since the rank-k row survives the filter.
     cand1 = _ring_candidates(
-        queries, pages, g, F.lit(r0), exploded_rows_est=n_queries * (2 * r0 + 1) ** 2
+        q, pages, g, F.lit(r0), exploded_rows_est=n_queries * (2 * r0 + 1) ** 2
     )
     rf_need = (F.ceil(F.sqrt(F.col("_dk")) / F.lit(g.step)) + 1).cast("int")
     topk = cand1.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= k)
@@ -139,71 +170,59 @@ def knn_pages(
             Window.partitionBy("q_id")
         ),
     ).withColumn("_rf", rf_need)
-    # Materialise the per-query top-k ONCE (lazy: runs on first action).
-    # All four consumers below (direct output, per-query radii, ring and
-    # brute routing) otherwise re-derive this subtree, and AQE's stage
-    # dedup only reused one of the three identical exchanges — the corpus
-    # candidate join ran per branch. The table is k×n_queries rows
-    # (bounded query metadata, the pagerank-checkpoint class), so the
-    # checkpoint is metadata-sized at any corpus scale and the pages scan
-    # runs exactly once in the common all-done-in-phase-1 case.
+    # Pin the per-query top-k once: the direct output, the per-query radii
+    # and the tier routing all read it, and AQE's stage dedup does not
+    # reuse identical exchanges across them, so unpinned the corpus
+    # candidate join would run per consumer. The table is k×n_queries rows
+    # (bounded query metadata, the pagerank-checkpoint class), so the pin
+    # is metadata-sized at any corpus scale. Under AQE the pin is not
+    # lazy: building its RDD runs the phase-1 broadcast and shuffle-map
+    # stages here, inside knn_pages().
     c = c.localCheckpoint(eager=False)
-    out_done = c.where(F.col("_rf").isNotNull() & (F.col("_rf") <= r0)).select(
+    out = c.where(F.col("_rf") <= r0).select(
         "q_id", F.col("_rn").alias("rank"), "doc_id", "dist2"
     )
 
-    # per-query radius; NULL when phase 1 found <k candidates (queries
-    # with ZERO candidates don't appear in cand1 — the left join below
-    # routes them to brute). qinfo is ≤1 row per query, so whenever the
-    # query side itself is small enough to broadcast (the same gate the
-    # phase-1 ring join uses), broadcast qinfo too: the left join then
-    # needs no exchange/sort on the queries side.
-    qinfo = c.groupBy("q_id").agg(F.min("_rf").alias("_rf"))
+    # Per-query radius: _rf is constant within a q_id (_dk is a window max
+    # over the query's partition), so the rank-1 row carries it and no
+    # aggregate is needed. NULL when phase 1 found <k candidates; queries
+    # with ZERO candidates have no row, and the left join routes them to
+    # brute. The table is ≤1 row per query, so it is broadcast under the
+    # same gate as the phase-1 query side.
+    radius = c.where(F.col("_rn") == 1).select("q_id", "_rf")
     if n_queries <= BROADCAST_ROWS_MAX:
-        qinfo = F.broadcast(qinfo)
-    q2 = queries.join(qinfo, "q_id", "left")
-    ring_q = q2.where(
-        F.col("_rf").isNotNull() & (F.col("_rf") > r0) & (F.col("_rf") <= RING_MAX)
-    )
-    brute_q = q2.where(F.col("_rf").isNull() | (F.col("_rf") > RING_MAX))
+        radius = F.broadcast(radius)
+    routed = q.join(radius, "q_id", "left")
+    needs_ring = (F.col("_rf") > r0) & (F.col("_rf") <= RING_MAX)
+    needs_brute = F.col("_rf").isNull() | (F.col("_rf") > RING_MAX)
+    # One small action over the two pins decides which tiers exist: a tier
+    # is planned only when some query needs it, so a batch phase 1 fully
+    # answers returns a plan with no second pages scan.
+    n_ring, n_brute = routed.agg(
+        F.count(F.when(needs_ring, 1)), F.count(F.when(needs_brute, 1))
+    ).first()
 
-    # phase-2 gate uses the WORST-CASE bound (every query escalating to
-    # RING_MAX rings): the true escalated count isn't knowable without an
-    # extra action, and an unconditional hint re-creates the multi-GB
-    # forced-broadcast failure on clustered corpora where most queries
-    # overflow r0. When the gate withholds the hint but the escalated side
-    # is actually small, AQE's runtime join re-planning converts the
-    # shuffle join back to a broadcast join from the materialized
-    # exchange stats — safe both ways, the hint is only a fast path.
-    cand2 = _ring_candidates(
-        ring_q.select("q_id", "qlat", "qlon", "_rf"),
-        pages,
-        g,
-        F.col("_rf"),
-        exploded_rows_est=n_queries * (2 * RING_MAX + 1) ** 2,
-    )
-    # (q_id, doc_id) is already unique in cand2: ring_cells_col emits each
-    # in-bounds cell id exactly once (offsets are clipped, never wrapped),
-    # and a page lives in one cell — so no dedup pass is needed before the
-    # top-k window (the old dropDuplicates cost an extra (q_id, doc_id)
-    # exchange + two aggregates for rows that could not repeat)
-    out_ring = (
-        cand2.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "rank", "doc_id", "dist2")
-    )
-    # brute tier: one pages pass against the (rare, tiny) unsatisfied
-    # queries — broadcast-nested-loop, no ring arrays at any resolution
-    bq = F.broadcast(brute_q.select("q_id", "qlat", "qlon"))
-    p = pages.select("doc_id", F.col("lat").alias("_plat"), F.col("lon").alias("_plon"))
-    d2 = (F.col("_plat") - F.col("qlat")) * (F.col("_plat") - F.col("qlat")) + (
-        F.col("_plon") - F.col("qlon")
-    ) * (F.col("_plon") - F.col("qlon"))
-    out_brute = (
-        bq.crossJoin(p)
-        .withColumn("dist2", d2)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "rank", "doc_id", "dist2")
-    )
-    return out_done.unionByName(out_ring).unionByName(out_brute)
+    if n_ring:
+        # phase 2: the broadcast gate sizes the exploded side from the
+        # counted escalations at the RING_MAX worst case; when it withholds
+        # the hint, AQE can still re-plan the shuffle join as a broadcast
+        # join from the materialised exchange stats
+        cand2 = _ring_candidates(
+            routed.where(needs_ring),
+            pages,
+            g,
+            F.col("_rf"),
+            exploded_rows_est=n_ring * (2 * RING_MAX + 1) ** 2,
+        )
+        # (q_id, doc_id) is already unique in cand2: ring_cells_col emits
+        # each in-bounds cell id exactly once (offsets are clipped, never
+        # wrapped), and a page lives in one cell — so no dedup pass is
+        # needed before the top-k window
+        out = out.unionByName(_top_k(cand2, w, k))
+    if n_brute:
+        # brute tier: one pages pass against the (rare, tiny) unsatisfied
+        # queries — broadcast-nested-loop, no ring arrays at any resolution
+        bq = F.broadcast(routed.where(needs_brute).select("q_id", "qlat", "qlon"))
+        p = pages.select("doc_id", F.col("lat").alias("_plat"), F.col("lon").alias("_plon"))
+        out = out.unionByName(_top_k(bq.crossJoin(p).withColumn("dist2", _dist2()), w, k))
+    return out

@@ -19,11 +19,10 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 # name -> (query_fn, oracle_sql or None)
 #
-# _DEFS holds every query; ITS order no longer matters. The driver records
+# _DEFS holds every query; its order does not matter. The driver records
 # correctness for exactly the FIRST 50 entries of REGISTRY each round, so
-# REGISTRY is rebuilt below from the current round's _R*_WINDOW (the record
-# set, currently _R7_WINDOW:
-# changed-first, then new, then the stalest driver records) followed by
+# REGISTRY is built below from _DRIVER_WINDOW, the one window list
+# (changed-first, then new, then the stalest driver records), followed by
 # everything else. tools/check_oracle.py (same compare) covers ALL entries
 # each round regardless of position; the round's full local log is
 # committed as tools/oracle_full_r{N}.txt.
@@ -101,7 +100,6 @@ _DEFS: dict[str, tuple[QueryFn, str | None]] = {
     "asof_near": (T.q_asof_near, T.SQL_asof_near),
     "mask_raster_invert": (C.q_mask_raster_invert, C.SQL_mask_raster_invert),
     "mask_geom": (C.q_mask_geom, C.SQL_mask_geom),
-    # ----- driver 50-entry window ends here -----
     "boolmask": (C.q_boolmask, C.SQL_boolmask),
     "zonal_extent": (C.q_zonal_extent, C.SQL_zonal_extent),
     "dedup_simhash": (T.q_dedup_simhash, T.SQL_dedup_simhash),
@@ -218,51 +216,17 @@ _DEFS: dict[str, tuple[QueryFn, str | None]] = {
 }
 
 
-# Round-6 driver window (first 50 entries recorded this round):
-# (a) queries whose Spark plan or oracle SQL CHANGED in round 6 (dup_ngrams
-#     NULL-text plant coalesce, LM-tier/TF-IDF broadcast escape knob,
-#     hardened PNG/JPEG decoders: bounded inflate, SOS selector mapping,
-#     fill-byte walk, per-row ValueError routing), (b) queries NEW in
-#     round 6, (c) the stalest tail — all 14 remaining r02 driver records,
-#     then r03 records in name order until the window is full.
-_R6_WINDOW = [
+# The driver window: the first 50 REGISTRY entries, recorded each round.
+# (a) queries whose Spark plan or oracle SQL changed since the last record
+#     (knn: pinned query side, rank-1 radius projection, evidence-gated
+#     ring/brute tiers), then the round-7 changes (warc_ingest parser +
+#     row_number oracle; ppl_buckets cutoff refactor; extract id= ordered_id
+#     numbering), (b) queries new in round 7, (c) the stalest tail: every
+#     remaining r03 driver record, then r04 records in name order until the
+#     window is full.
+_DRIVER_WINDOW = [
     # (a) changed
-    "dup_ngrams", "bigram_logloss", "trigram_logloss", "tfidf_topk",
-    "multimodal_png", "multimodal_jpeg", "multimodal_jpeg_color",
-    "multimodal_jpeg_420",
-    # (b) new in round 6
-    "langid_fasttext", "unigram_lm_train", "unigram_tokenize",
-    "multimodal_jpeg_prog", "ppl_buckets", "url_blocklist", "warc_ingest",
-    "bloom_decon",
-    # (c) stalest: every remaining r02 driver record
-    "lang_id", "mask_raster", "missingmask", "points",
-    "replace_missing_stack", "resample_cubic", "resample_cubicspline",
-    "resample_lanczos", "resample_rms", "series_daily",
-    "simhash_wide_pairs", "source_stats", "stream_dedup_pairs",
-    "zonal_stack",
-    # (c) then r03 records, name order
-    "aggregate_locus", "aggregate_truncated", "ann_ivfpq_rerank",
-    "ann_ivfpq_topk", "ann_lsh_topk", "ann_pq_topk", "boilerplate_strip",
-    "bpe_tokenize", "bpe_train", "cellarea_quad", "decontaminate",
-    "dedup_canonical", "dedup_exact", "dedup_spans", "explicit_cellarea",
-    "explicit_extract", "extract_many", "extract_nested",
-    "extract_polygons", "focal_median",
-]
-
-# Round-7 driver window (first 50 entries recorded this round):
-# (a) queries whose Spark code or oracle SQL CHANGED in round 7
-#     (warc_ingest: parser linear-scan fix + row_number oracle enumeration;
-#     ppl_buckets: cutoff logic factored into _hist_cutoffs/_bucket_case —
-#     plan identical, re-record anyway), (b) queries NEW in round 7,
-# (c) the stalest tail: ALL 24 remaining r03 driver records, then the
-#     stalest r04 records in name order until the window is full. After
-#     this round no driver record predates r04.
-_R7_WINDOW = [
-    # (a) changed
-    "warc_ingest", "ppl_buckets",
-    # (a) changed late in round 7: extract id= now scale-safe (ordered_id
-    #     range-partitioned numbering) — oracle unchanged, plan re-recorded
-    "extract_id",
+    "knn", "warc_ingest", "ppl_buckets", "extract_id",
     # (b) new in round 7
     "scaled_read", "warc_reshard", "coverage_exact", "series_files",
     "stream_bloom", "stream_ppl", "html_extract", "zonal_coverage",
@@ -279,11 +243,11 @@ _R7_WINDOW = [
     "zonal_pages", "zonal_pages_salted",
     # (c) then r04 records, name order
     "aggregate_mean", "aggregate_med", "aggregate_sum_noskip", "asof_near",
-    "blocklist_substring", "blocklist_word",
+    "blocklist_substring",
 ]
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
-    k: _DEFS[k] for k in (*_R7_WINDOW, *(k for k in _DEFS if k not in _R7_WINDOW))
+    k: _DEFS[k] for k in (*_DRIVER_WINDOW, *(k for k in _DEFS if k not in _DRIVER_WINDOW))
 }
 
 

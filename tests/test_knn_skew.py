@@ -6,7 +6,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from rasters_jl_spark import fixtures as FX
-from rasters_jl_spark.grid import PAGES_RES
+from rasters_jl_spark.grid import PAGES_RES, WebGrid
 from rasters_jl_spark.operators.knn import knn_pages
 from rasters_jl_spark.operators.zonal import spatial_join_pages
 from rasters_jl_spark.sources.pages import lat_col, lon_col, pages_geo
@@ -118,3 +118,93 @@ def test_knn_sparse_fine_resolution_brute_tier(spark):
         for rank, (d2, doc) in enumerate(ds[:5], 1):
             want[(qid, rank)] = (doc, round(d2, 9))
     assert got == want
+
+
+# Mixed-tier layout at res 5 (64x32 cells of 5.625 deg): a lattice of four
+# pages per cell over the western hemisphere with a disc of radius 34 deg
+# cut out around (lon -90, lat 0), plus three pages near (lon 120, lat 10).
+# Density sizes r0 = 4 (k=5) and r0 = 7 (k=50); the queries then need:
+#   q 0, inside the lattice: phase 1;
+#   q 1, at the centre of the empty disc: >=k pages in the r0 square's
+#        corners, but the kth lies past r0 rings (rf = 8): ring tier;
+#   q 2, beside the three isolated pages: <k candidates: brute tier;
+#   q 3, at (lon 160, lat -60), far from every page: no candidates at all:
+#        brute tier.
+MIXED_RES = 5
+MIXED_QUERIES = [(0, -40.3, -135.2), (1, 0.0, -90.0), (2, 10.0, 120.0), (3, -60.0, 160.0)]
+
+
+def _mixed_pages():
+    pts = []
+    for i in range(64):
+        for j in range(64):
+            lon, lat = -178.59375 + 2.8125 * i, -88.59375 + 2.8125 * j
+            if lon < 0 and (lon + 90.0) * (lon + 90.0) + lat * lat >= 34.0 * 34.0:
+                pts.append((len(pts), lat, lon))
+    for t in range(3):
+        pts.append((len(pts), 10.0 + 0.5 * t, 120.0 + 0.7 * t))
+    return pts
+
+
+def _brute_knn(pts, queries, k):
+    want = {}
+    for qid, qlat, qlon in queries:
+        ds = sorted(((la - qlat) * (la - qlat) + (lo - qlon) * (lo - qlon), d) for d, la, lo in pts)
+        for rank, (d2, doc) in enumerate(ds[:k], 1):
+            want[(qid, rank)] = (doc, d2)
+    return want
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("k", [5, 50])
+def test_knn_mixed_tiers_match_bruteforce(spark, k):
+    """One batch answered by phase 1, the phase-2 ring tier and the brute
+    tier (with and without phase-1 candidates) is exact, and the returned
+    plan carries both the ring branch and the brute branch."""
+    g = WebGrid(MIXED_RES)
+    pts = _mixed_pages()
+    pages = spark.createDataFrame(pts, "doc_id long, lat double, lon double")
+    pages = pages.withColumn("cell", g.cell_col(F.col("lon"), F.col("lat")))
+    queries = spark.createDataFrame(MIXED_QUERIES, "q_id long, qlat double, qlon double")
+    out = knn_pages(queries, pages, k=k, res=MIXED_RES)
+    plan = _plan(out)
+    assert "Generate explode" in plan  # phase-2 ring cells
+    assert "BroadcastNestedLoopJoin" in plan  # brute tier
+    rows = out.collect()
+    want = _brute_knn(pts, MIXED_QUERIES, k)
+    assert len(rows) == len(want)
+    assert {(r["q_id"], r["rank"]): (r["doc_id"], r["dist2"]) for r in rows} == want
+
+
+def test_knn_phase1_batch_plans_no_later_tier(spark, pages):
+    """A uniform-density batch that phase 1 fully answers returns a plan
+    with neither later tier: no ring explode, no broadcast-nested-loop
+    brute pass, and no second scan of the pages."""
+    p = pages.select("doc_id", "lat", "lon", "cell")
+    ids = spark.range(FX.KNN_ID_BASE, FX.KNN_ID_BASE + 10)
+    queries = ids.select(
+        (F.col("id") - FX.KNN_ID_BASE).alias("q_id"),
+        lat_col(F.col("id")).alias("qlat"),
+        lon_col(F.col("id")).alias("qlon"),
+    )
+    out = knn_pages(queries, p, k=5, res=PAGES_RES)
+    plan = _plan(out)
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "Generate" not in plan
+    assert plan.count("InMemoryTableScan") <= 1
+    assert out.count() == 50
+
+
+@pytest.mark.parametrize("empty", ["queries", "pages"])
+def test_knn_empty_input_returns_empty_frame(spark, empty):
+    q_rows = [] if empty == "queries" else [(1, 10.0, 20.0)]
+    p_rows = [] if empty == "pages" else [(7, 10.5, 20.5, 0)]
+    queries = spark.createDataFrame(q_rows, "q_id long, qlat double, qlon double")
+    pages = spark.createDataFrame(p_rows, "doc_id long, lat double, lon double, cell long")
+    pages = pages.withColumn("cell", WebGrid(PAGES_RES).cell_col(F.col("lon"), F.col("lat")))
+    out = knn_pages(queries, pages, k=5, res=PAGES_RES)
+    assert out.columns == ["q_id", "rank", "doc_id", "dist2"]
+    assert out.collect() == []

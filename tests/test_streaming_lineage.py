@@ -1227,6 +1227,26 @@ def test_gif_lzw_width_bump_on_final_code_byte_boundary():
         assert bytes(_gif_lzw_decode(4, enc, len(idx))) == idx
 
 
+def test_gif_lzw_rejects_end_bits_at_wrong_width():
+    """Leftover bits that read as END are accepted only when they are one
+    bit narrower than the decoder's width (the byte-boundary END case).
+    At mcs=2 (CLEAR 4, END 5) the width is 5 after 10 data codes; CLEAR +
+    14 literals + END packed into 3 bits fills exactly 64 bits, a
+    truncated stream that must raise."""
+    from rasters_jl_spark.functions.multimodal import _gif_lzw_decode
+
+    codes = [(4, 3), (0, 3), (1, 3)] + [(c % 4, 4) for c in range(8)] + [(c % 4, 5) for c in range(4)]
+    acc = nbits = 0
+    for code, width in codes + [(5, 3)]:
+        acc |= code << nbits
+        nbits += width
+    assert nbits == 64
+    with pytest.raises(ValueError, match="without END"):
+        _gif_lzw_decode(2, acc.to_bytes(8, "little"), 100)
+    # two more zero bits make END a full 5-bit code: the stream is valid
+    assert bytes(_gif_lzw_decode(2, acc.to_bytes(9, "little"), 100)) == bytes(c for c, _w in codes[1:])
+
+
 def test_decode_gif_interlace_and_errors():
     import struct
 
