@@ -4,7 +4,7 @@ Run on a cluster (the engine's production entrypoint, north rule):
 
     spark-submit --py-files dist/rasters_jl_spark.zip jobs/zonal_job.py \
         --pages <pages_geo path/table> --out <output path> \
-        [--ledger <lineage path>] [--salt 8]
+        [--ledger <lineage path>]
 
 - resumable: with --ledger, tiles already marked done are skipped
   (per-partition lineage, `rasters_jl_spark/plans/lineage.py`);
@@ -33,7 +33,6 @@ def main():
         default=None,
         help="with --ledger: also write the final merged one-row-per-geom table here",
     )
-    ap.add_argument("--salt", type=int, default=8)
     ap.add_argument("--tiles-per-batch", type=int, default=256)
     ap.add_argument(
         "--incremental",
@@ -59,7 +58,7 @@ def main():
         from rasters_jl_spark.plans.lineage import run_tiles_incremental_ref
 
         def tile_partials(batch):
-            j = spatial_join_pages(batch, FX.POLYS_GEO, n_salt=args.salt)
+            j = spatial_join_pages(batch, FX.POLYS_GEO)
             v = F.col("n_chars")
             return j.groupBy("tile_id", "geom_id").agg(
                 F.count(v).alias("n_pages"),
@@ -96,7 +95,7 @@ def main():
             pages,
             spark,
             args.ledger,
-            lambda batch: zonal_pages(batch, FX.POLYS_GEO, n_salt=args.salt),
+            lambda batch: zonal_pages(batch, FX.POLYS_GEO),
             args.out,
             tiles_per_batch=args.tiles_per_batch,
         )
@@ -106,9 +105,7 @@ def main():
             ).parquet(args.merged)
     else:
         pages = read_table(spark, args.pages)
-        zonal_pages(pages, FX.POLYS_GEO, n_salt=args.salt).write.mode("overwrite").parquet(
-            args.out
-        )
+        zonal_pages(pages, FX.POLYS_GEO).write.mode("overwrite").parquet(args.out)
     spark.stop()
 
 

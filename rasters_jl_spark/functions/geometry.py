@@ -12,7 +12,7 @@ and evaluates point-in-polygon with **JVM higher-order functions** over the
 edge array (``size(filter(edges, crossing_pred)) % 2``) — an even-odd ray
 cast identical to `_burn_crossings!` (`src/methods/burning/polygon.jl:97-134`)
 but running inside whole-stage codegen with zero Python and zero extra
-shuffle. A pandas-UDF variant exists for benchmarking (`pip_pandas_udf`).
+shuffle.
 
 Boundary conventions (engine-defined, matching the reference's golden counts
 19²/20²/21² in `test/methods.jl:254-259`):
@@ -160,9 +160,9 @@ _CELL_PAD = 1e-9
 
 
 def polygon_cover_df(
-    spark: SparkSession, polys: list[Polygon], cover_res: int = COVER_RES, n_salt: int = 1
+    spark: SparkSession, polys: list[Polygon], cover_res: int = COVER_RES
 ) -> DataFrame:
-    """Classified (cover_cell, geom_id, inside, edges[, salt]) table for the
+    """Classified (cover_cell, geom_id, inside, edges) table for the
     cell-prefix join; the cell classes are in the module docstring.
 
     The cover is the bbox cover at ``cover_res`` — the Spark analogue of the
@@ -173,28 +173,22 @@ def polygon_cover_df(
     y-range and whose max x ≥ its xmin: no other edge can satisfy
     :func:`pip_col`'s crossing predicate for a point in the cell, so the
     parity is the full edge array's, bit for bit.
-
-    With ``n_salt > 1`` every cover row is replicated per salt value; the
-    page side appends ``doc_id % n_salt`` to the key so one hot urban cell
-    fans out over ``n_salt`` shuffle partitions (skew mitigation; AQE's
-    skew-join split is the second line of defence).
     """
     g = WebGrid(cover_res)
-    rows = []
-    for p in polys:
-        for cell, inside, edges in _classify_cover(p, g):
-            rows.extend((cell, p.geom_id, inside, edges, s) for s in range(n_salt))
+    rows = [
+        (cell, p.geom_id, inside, edges)
+        for p in polys
+        for cell, inside, edges in _classify_cover(p, g)
+    ]
     schema = StructType(
         [
             StructField("cover_cell", LongType(), False),
             StructField("geom_id", LongType(), False),
             StructField("inside", BooleanType(), False),
             StructField("edges", ArrayType(_EDGE_T), False),
-            StructField("salt", IntegerType(), False),
         ]
     )
-    df = _local_df(spark, rows, schema)
-    return df if n_salt > 1 else df.drop("salt")
+    return _local_df(spark, rows, schema)
 
 
 def _cover_cells(p: Polygon, g) -> tuple[int, int, int, int]:
@@ -562,39 +556,3 @@ def line_cells_udf(x0: float, y0: float, dx: float, dy: float, nx: int, ny: int)
         return pd.Series(out)
 
     return _walk
-
-
-# --------------------------------------------------------------------------
-# pandas-UDF PIP variant (for benchmarking against the codegen path)
-# --------------------------------------------------------------------------
-
-
-def pip_pandas_udf(polys: list[Polygon]):
-    """Vectorised numpy even-odd test; edge data (ALL rings — holes flip
-    parity like in pip_col) baked into the closure and broadcast with the
-    serialized UDF. Same half-open convention as pip_col."""
-    edge_arrays = {
-        p.geom_id: np.asarray(p.edges, dtype=np.float64) for p in polys
-    }
-
-    @F.pandas_udf("boolean")
-    def _pip(lon: pd.Series, lat: pd.Series, geom_id: pd.Series) -> pd.Series:
-        x = lon.to_numpy()
-        y = lat.to_numpy()
-        gid = geom_id.to_numpy()
-        out = np.zeros(len(x), dtype=bool)
-        for g, edges in edge_arrays.items():
-            m = gid == g
-            if not m.any():
-                continue
-            xs, ys = x[m], y[m]
-            inside = np.zeros(len(xs), dtype=bool)
-            for x1, y1, x2, y2 in edges:
-                cond = (y1 > ys) != (y2 > ys)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    xint = x1 + (x2 - x1) * (ys - y1) / (y2 - y1)
-                inside ^= cond & (xs < xint)
-            out[m] = inside
-        return pd.Series(out)
-
-    return _pip

@@ -15,14 +15,13 @@ adds a has-null guard in the same pass (`src/methods/zonal.jl:155-165`).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rasters_jl_spark.functions.geometry import (
     Polygon,
     boundary_pred,
     pip_col,
-    pip_pandas_udf,
     polygon_block_cover_df,
     polygon_cover_df,
     polygons_df,
@@ -33,11 +32,7 @@ GEOM_BLOCK = 16  # raster cells per cover-block edge for the single-scan join
 
 
 def spatial_join_pages(
-    pages: DataFrame,
-    polys: list[Polygon],
-    cover_res: int = COVER_RES,
-    n_salt: int = 1,
-    use_pandas_pip: bool = False,
+    pages: DataFrame, polys: list[Polygon], cover_res: int = COVER_RES
 ) -> DataFrame:
     """pages × polygons inner join on point-in-polygon.
 
@@ -50,28 +45,18 @@ def spatial_join_pages(
     interior cells pass with no PIP test, and boundary cells refine exactly
     with PIP over the few edges that can cross them.
 
-    Returns pages columns + ``geom_id``. With ``n_salt>1`` the page side
-    appends ``doc_id % n_salt`` to the join key and the cover side is
-    replicated per salt — identical row set, hot cells spread over salt
-    partitions (verified by `tests/test_knn_skew.py`).
+    Returns pages columns + ``geom_id``. The join is a map-side probe of the
+    broadcast cover, so the pages are never shuffled for it: a hot cell
+    costs probe CPU in the tasks that hold its pages, not a skewed
+    partition, and needs no salting.
     """
     g = WebGrid(cover_res)
-    cover = polygon_cover_df(pages.sparkSession, polys, cover_res, n_salt=n_salt)
+    cover = polygon_cover_df(pages.sparkSession, polys, cover_res)
     p = pages.withColumn("_cover_cell", g.cell_col(F.col("lon"), F.col("lat")))
-    if n_salt > 1:
-        p = p.withColumn("_salt", (F.col("doc_id") % n_salt).cast("int"))
-        cand = p.join(
-            F.broadcast(cover),
-            (p["_cover_cell"] == cover["cover_cell"]) & (p["_salt"] == cover["salt"]),
-        ).drop("cover_cell", "salt", "_salt")
-    else:
-        cand = p.join(F.broadcast(cover), p["_cover_cell"] == cover["cover_cell"]).drop(
-            "cover_cell"
-        )
-    if use_pandas_pip:
-        hit = pip_pandas_udf(polys)(F.col("lon"), F.col("lat"), F.col("geom_id"))
-    else:
-        hit = pip_col(F.col("lon"), F.col("lat"), F.col("edges"))
+    cand = p.join(F.broadcast(cover), p["_cover_cell"] == cover["cover_cell"]).drop(
+        "cover_cell"
+    )
+    hit = pip_col(F.col("lon"), F.col("lat"), F.col("edges"))
     # interior cover cells need no ray cast; boundary cells carry the edges
     refined = cand.where(F.col("inside") | hit)
     return refined.select("geom_id", *pages.columns)
@@ -89,8 +74,13 @@ def zonal_pages(
 
     Empty zones come back with count 0 and NULL stats (the reference's
     ``missing`` default; `emptyval` overrides, `src/methods/zonal.jl:133-152`).
+
+    ``n_salt`` has no effect and is not forwarded; it is accepted only so
+    existing callers that pass it keep working. Salting spreads a hot key
+    over the partitions of a shuffled join, but the cover join is a
+    broadcast probe that never shuffles the pages (:func:`spatial_join_pages`).
     """
-    joined = spatial_join_pages(pages, polys, cover_res, n_salt=n_salt)
+    joined = spatial_join_pages(pages, polys, cover_res)
     v = F.col(value_col)
     agg = joined.groupBy("geom_id").agg(
         F.count(v).alias("n_pages"),

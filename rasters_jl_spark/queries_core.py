@@ -149,8 +149,8 @@ def q_zonal_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_zonal_pages_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same result as zonal_pages but through the salted hot-cell join path
-    (salting must not change the row set — FIXTURES.md F10)."""
+    """zonal_pages called with ``n_salt=8``, which ``zonal_pages`` accepts
+    and ignores: the same plan and the same rows as ``zonal_pages``."""
     return _zonal_df(spark, sf_dir, n_salt=8)
 
 

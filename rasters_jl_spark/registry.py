@@ -27,7 +27,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # each round regardless of position; the round's full local log is
 # committed as tools/oracle_full_r{N}.txt.
 _DEFS: dict[str, tuple[QueryFn, str | None]] = {
-    # --- (a) new in round 3 ---
+    # every query, in no particular order (the driver order is REGISTRY)
     "ann_ivfpq_topk": (T.q_ann_ivfpq_topk, T.SQL_ann_ivfpq_topk),
     "ann_ivfpq_rerank": (T.q_ann_ivfpq_rerank, T.SQL_ann_ivfpq_rerank),
     "decontaminate": (T.q_decontaminate, T.SQL_decontaminate),
@@ -58,7 +58,6 @@ _DEFS: dict[str, tuple[QueryFn, str | None]] = {
     "blocklist_word": (T.q_blocklist_word, T.SQL_blocklist_word),
     "blocklist_substring": (T.q_blocklist_substring, T.SQL_blocklist_substring),
     "unigram_logloss": (T.q_unigram_logloss, T.SQL_unigram_logloss),
-    # u_col/u_sql uniform changed (md5-based) → sample oracles changed
     "sample_weighted": (T.q_sample_weighted, T.SQL_sample_weighted),
     "sample_replace": (X.q_sample_replace, X.SQL_sample_replace),
     "multimodal_frames": (X.q_multimodal_frames, X.SQL_multimodal_frames),
@@ -82,20 +81,17 @@ _DEFS: dict[str, tuple[QueryFn, str | None]] = {
     "ann_pq_topk": (T.q_ann_pq_topk, T.SQL_ann_pq_topk),
     "aggregate_truncated": (C.q_aggregate_truncated, C.SQL_aggregate_truncated),
     "rasterize_lines": (X.q_rasterize_lines, X.SQL_rasterize_lines),
-    # --- (b) plan or oracle changed in round 3 ---
     "multimodal_features": (X.q_multimodal_features, X.SQL_multimodal_features),
     "extract_polygons": (C.q_extract_polygons, C.SQL_extract_polygons),
     "extract_nested": (X.q_extract_nested, X.SQL_extract_nested),
     "aggregate_locus": (X.q_aggregate_locus, X.SQL_aggregate_locus),
     "ann_lsh_topk": (T.q_ann_lsh_topk, T.SQL_ann_lsh_topk),
-    # --- (c) flagship family + polygon-count scale proofs ---
     "zonal_pages": (C.q_zonal_pages, C.SQL_zonal_pages),
     "zonal_pages_salted": (C.q_zonal_pages_salted, C.SQL_zonal_pages_salted),
     "spatial_join_pip": (C.q_spatial_join_pip, C.SQL_spatial_join_pip),
     "knn": (C.q_knn, C.SQL_knn),
     "zonal_many": (X.q_zonal_many, X.SQL_zonal_many),
     "rasterize_many": (X.q_rasterize_many, X.SQL_rasterize_many),
-    # --- (d) rotation: latest driver record is r01 ---
     "dedup_exact": (T.q_dedup_exact, T.SQL_dedup_exact),
     "asof_near": (T.q_asof_near, T.SQL_asof_near),
     "mask_raster_invert": (C.q_mask_raster_invert, C.SQL_mask_raster_invert),
@@ -126,8 +122,6 @@ _DEFS: dict[str, tuple[QueryFn, str | None]] = {
     "focal_mean": (C.q_focal_mean, C.SQL_focal_mean),
     "boolmask_touches": (X.q_boolmask_touches, X.SQL_boolmask_touches),
     "boolmask_inside": (X.q_boolmask_inside, X.SQL_boolmask_inside),
-    # --- tail: driver-recorded in r02 (and re-verified locally each round)
-    #     or r01-recorded trivial/stable scans ---
     "geotag": (C.q_geotag, C.SQL_geotag),
     "cell_count": (C.q_cell_count, C.SQL_cell_count),
     "tile_stats": (C.q_tile_stats, C.SQL_tile_stats),
@@ -177,7 +171,6 @@ _DEFS: dict[str, tuple[QueryFn, str | None]] = {
     "mask_raster": (C.q_mask_raster, C.SQL_mask_raster),
     "rasterize_polygons": (C.q_rasterize_polygons, C.SQL_rasterize_polygons),
     "zonal_stack": (C.q_zonal_stack, C.SQL_zonal_stack),
-    # --- new in round 5 ---
     "dup_ngrams": (T.q_dup_ngrams, T.SQL_dup_ngrams),
     "bigram_logloss": (T.q_bigram_logloss, T.SQL_bigram_logloss),
     "multimodal_png": (X.q_multimodal_png, X.SQL_multimodal_png),
@@ -188,14 +181,12 @@ _DEFS: dict[str, tuple[QueryFn, str | None]] = {
     "multimodal_jpeg_420": (X.q_multimodal_jpeg_420, X.SQL_multimodal_jpeg_420),
     "multimodal_jpeg_prog": (X.q_multimodal_jpeg_prog, X.SQL_multimodal_jpeg_prog),
     "c4_clean": (T.q_c4_clean, T.SQL_c4_clean),
-    # --- new in round 6 ---
     "ppl_buckets": (T.q_ppl_buckets, T.SQL_ppl_buckets),
     "url_blocklist": (T.q_url_blocklist, T.SQL_url_blocklist),
     "unigram_lm_train": (T.q_unigram_lm_train, T.SQL_unigram_lm_train),
     "unigram_tokenize": (T.q_unigram_tokenize, T.SQL_unigram_tokenize),
     "warc_ingest": (X.q_warc_ingest, X.SQL_warc_ingest),
     "bloom_decon": (T.q_bloom_decon, T.SQL_bloom_decon),
-    # --- new in round 7 ---
     "scaled_read": (X.q_scaled_read, X.SQL_scaled_read),
     "warc_reshard": (X.q_warc_reshard, X.SQL_warc_reshard),
     "coverage_exact": (X.q_coverage_exact, X.SQL_coverage_exact),
@@ -217,33 +208,34 @@ _DEFS: dict[str, tuple[QueryFn, str | None]] = {
 
 
 # The driver window: the first 50 REGISTRY entries, recorded each round.
-# (a) queries whose Spark plan or oracle SQL changed since the last record
-#     (knn: pinned query side, rank-1 radius projection, evidence-gated
-#     ring/brute tiers), then the round-7 changes (warc_ingest parser +
-#     row_number oracle; ppl_buckets cutoff refactor; extract id= ordered_id
-#     numbering), (b) queries new in round 7, (c) the stalest tail: every
-#     remaining r03 driver record, then r04 records in name order until the
-#     window is full.
+# (a) knn (pinned query side, rank-1 radius projection, evidence-gated
+#     ring/brute tiers); (b) the round-8 rewrites of the read_documents
+#     consumers; (c) the page cover join (one broadcast form, no salt);
+#     (d) the round-7 changes (warc_ingest parser + row_number oracle;
+#     ppl_buckets cutoff refactor; extract id= ordered_id numbering);
+#     (e) queries new in round 7; (f) the stalest tail: the remaining r03
+#     driver records until the window is full.
 _DRIVER_WINDOW = [
-    # (a) changed
-    "knn", "warc_ingest", "ppl_buckets", "extract_id",
-    # (b) new in round 7
+    # (a)
+    "knn",
+    # (b)
+    "dedup_minhash", "dedup_exact", "simhash_pairs", "decontaminate", "tfidf_topk",
+    # (c)
+    "zonal_pages", "zonal_pages_salted", "spatial_join_pip", "stream_zonal_stats",
+    # (d)
+    "warc_ingest", "ppl_buckets", "extract_id",
+    # (e)
     "scaled_read", "warc_reshard", "coverage_exact", "series_files",
     "stream_bloom", "stream_ppl", "html_extract", "zonal_coverage",
     "sessionize", "stream_sessions", "pagerank_hosts", "pii_cards",
     "robots_filter", "multimodal_gif", "zonal_median", "crawl_revisits",
     "multimodal_gif_frames",
-    # (c) stalest: every remaining r03 driver record
+    # (f)
     "focal_weighted", "mask_geom", "mask_raster_invert", "multimodal_audio",
     "multimodal_features", "multimodal_frames", "multimodal_resize",
     "rasterize_lines", "rasterize_many", "sample_replace", "sample_weighted",
-    "series_anomaly", "series_rolling", "spatial_join_pip",
-    "stream_decontaminate", "stream_zonal_stats", "warp_agg", "warp_hook",
-    "warp_mercator", "warp_sinusoidal", "zonal_many", "zonal_northup",
-    "zonal_pages", "zonal_pages_salted",
-    # (c) then r04 records, name order
-    "aggregate_mean", "aggregate_med", "aggregate_sum_noskip", "asof_near",
-    "blocklist_substring",
+    "series_anomaly", "series_rolling", "stream_decontaminate", "warp_agg",
+    "warp_hook", "warp_mercator", "warp_sinusoidal", "zonal_many", "zonal_northup",
 ]
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {

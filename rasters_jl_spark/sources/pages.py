@@ -14,19 +14,14 @@ expressible identically in Spark and DuckDB so the oracle can re-derive it:
 Per-row invariant: ``text`` passes through every stage byte-identical
 (verified by the ``text_identity`` query and tests).
 
-Cell assignment is pure integer column math (JVM, whole-stage codegen) —
-see :mod:`rasters_jl_spark.grid`. A batched Arrow pandas-UDF variant with the
-same semantics lives in :func:`geotag_pandas_udf` for parity with engines
-whose geocoder is a Python library; the column-math path is the default hot
-path because it never leaves the JVM.
+Geotagging and cell assignment are pure column math (JVM, whole-stage
+codegen; see :mod:`rasters_jl_spark.grid`): pages never leave the JVM.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType, DoubleType
 
 from rasters_jl_spark.grid import PAGES_RES, TILE_RES, WebGrid
 
@@ -99,26 +94,3 @@ def pages_geo_sql(res: int = PAGES_RES, tile_res: int = TILE_RES, table: str = "
         {g.parent_cell_sql(g.cell_sql(f"({LON_SQL})", f"({LAT_SQL})"), tile_res)} AS tile_id
     FROM {table}
     """
-
-
-# ---- pandas-UDF geotag variant (Arrow-batched; semantics identical) ----
-
-_GEO_SCHEMA = StructType(
-    [StructField("lat", DoubleType()), StructField("lon", DoubleType())]
-)
-
-
-def geotag_pandas_udf():
-    """Arrow-vectorised geocoder stand-in: same hash formula, batched numpy.
-
-    At production scale this is where a real geocoding model/library would
-    run (mapInPandas over html bytes); kept as the pluggable slow path.
-    """
-
-    @F.pandas_udf(_GEO_SCHEMA)
-    def _geotag(doc_id: pd.Series) -> pd.DataFrame:
-        lat = (doc_id * LAT_MULT) % 1800000 / 10000.0 - 90.0
-        lon = (doc_id * LON_MULT) % 3600000 / 10000.0 - 180.0
-        return pd.DataFrame({"lat": lat, "lon": lon})
-
-    return _geotag

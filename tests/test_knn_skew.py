@@ -1,5 +1,7 @@
-"""kNN exactness vs in-Spark brute force, and salted-join identity
+"""kNN exactness vs in-Spark brute force, and the hot-cell page join
 (FIXTURES.md F9/F10)."""
+
+import re
 
 import pytest
 from pyspark.sql import Window
@@ -8,7 +10,7 @@ from pyspark.sql import functions as F
 from rasters_jl_spark import fixtures as FX
 from rasters_jl_spark.grid import PAGES_RES, WebGrid
 from rasters_jl_spark.operators.knn import knn_pages
-from rasters_jl_spark.operators.zonal import spatial_join_pages
+from rasters_jl_spark.operators.zonal import spatial_join_pages, zonal_pages
 from rasters_jl_spark.sources.pages import lat_col, lon_col, pages_geo
 
 
@@ -43,20 +45,21 @@ def test_knn_matches_bruteforce(spark, pages):
 
 
 def test_salted_join_identical_rows(pages):
-    """Salting must not change the join row set (F10)."""
-    plain = {
-        (r["doc_id"], r["geom_id"])
-        for r in spatial_join_pages(pages, FX.POLYS_GEO, n_salt=1).select("doc_id", "geom_id").collect()
-    }
-    salted = {
-        (r["doc_id"], r["geom_id"])
-        for r in spatial_join_pages(pages, FX.POLYS_GEO, n_salt=8).select("doc_id", "geom_id").collect()
-    }
-    assert plain == salted and len(plain) > 0
+    """``zonal_pages(..., n_salt=8)`` (the ``zonal_pages_salted`` query)
+    ignores the keyword: same rows as the default call, and no salt column
+    anywhere in its physical plan."""
+    salted = zonal_pages(pages, FX.POLYS_GEO, n_salt=8)
+    plain = {tuple(r) for r in zonal_pages(pages, FX.POLYS_GEO).collect()}
+    assert {tuple(r) for r in salted.collect()} == plain
+    assert sum(r[1] for r in plain) > 0
+    assert re.search(r"\b_?salt#", _plan(salted)) is None
 
 
 def test_skewed_hot_cell(spark):
-    """80% of rows forced into one cell: salted join still exact (F10)."""
+    """80% of rows forced into one cell (F10): the join count is exactly
+    the number of points inside the box."""
+    from rasters_jl_spark.functions.geometry import Polygon
+
     n = 2000
     docs = spark.range(n).select(F.col("id").alias("doc_id"))
     hot = docs.select(
@@ -65,28 +68,17 @@ def test_skewed_hot_cell(spark):
         F.when(F.col("doc_id") % 5 != 0, F.lit(0.0005)).otherwise(lon_col(F.col("doc_id"))).alias("lon"),
         F.lit(1).alias("n_chars"),
     )
-    from rasters_jl_spark.functions.geometry import Polygon
-
     box = [Polygon(1, ((-1.0, -1.0), (1.0, -1.0), (1.0, 1.0), (-1.0, 1.0)))]
-    plain = spatial_join_pages(hot, box, n_salt=1).count()
-    salted = spatial_join_pages(hot, box, n_salt=8).count()
-    assert plain == salted
-    assert plain >= 0.8 * n
 
+    def inside(x, y):  # pip_col's even-odd ray cast
+        return sum(
+            (y1 > y) != (y2 > y) and x < x1 + (x2 - x1) * (y - y1) / (y2 - y1)
+            for x1, y1, x2, y2 in box[0].edges
+        ) % 2 == 1
 
-def test_pandas_pip_matches_expr(pages):
-    """The Arrow pandas-UDF PIP and the codegen'd expression PIP agree."""
-    a = {
-        (r["doc_id"], r["geom_id"])
-        for r in spatial_join_pages(pages, FX.POLYS_GEO).select("doc_id", "geom_id").collect()
-    }
-    b = {
-        (r["doc_id"], r["geom_id"])
-        for r in spatial_join_pages(pages, FX.POLYS_GEO, use_pandas_pip=True)
-        .select("doc_id", "geom_id")
-        .collect()
-    }
-    assert a == b
+    want = sum(inside(r["lon"], r["lat"]) for r in hot.collect())
+    assert want >= 0.8 * n
+    assert spatial_join_pages(hot, box).count() == want
 
 
 def test_knn_sparse_fine_resolution_brute_tier(spark):

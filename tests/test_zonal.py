@@ -290,8 +290,7 @@ def _probe_pages(spark, seed, step):
     return spark.createDataFrame(rows, PAGE_SCHEMA)
 
 
-@pytest.mark.parametrize("n_salt", [1, 8])
-def test_classified_cover_join_is_exact(spark, n_salt):
+def test_classified_cover_join_is_exact(spark):
     """The classified join equals pages × polygons refined by full-edge
     pip_col, row for row: non-convex polygons, holes, vertices and edges on
     cover-cell edges, polygons reaching the globe border, points on cell
@@ -309,7 +308,7 @@ def test_classified_cover_join_is_exact(spark, n_salt):
         .select("geom_id", *pages.columns)
     )
     want = sorted(map(tuple, full.collect()))
-    got = sorted(map(tuple, spatial_join_pages(pages, polys, n_salt=n_salt).collect()))
+    got = sorted(map(tuple, spatial_join_pages(pages, polys).collect()))
     assert len(want) > 1000
     assert got == want
 
@@ -387,5 +386,3 @@ def test_cover_counts_polys_geo(spark):
     assert len(rows) == 272
     assert sum(r["inside"] for r in rows) == 164
     assert sum(len(r["edges"]) for r in rows) == 234
-    salted = polygon_cover_df(spark, FX.POLYS_GEO, n_salt=8)
-    assert salted.count() == 8 * 272
