@@ -194,14 +194,6 @@ def minhash_candidate_pairs(
     )
 
 
-def jaccard_col(t1: Column, t2: Column) -> Column:
-    """Jaccard over distinct token sets (deterministic set semantics)."""
-    a = F.array_distinct(F.split(t1, " "))
-    b = F.array_distinct(F.split(t2, " "))
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    return inter / (F.size(a) + F.size(b) - F.size(F.array_intersect(a, b)))
-
-
 def minhash_dedup_pairs(docs: DataFrame, text_col: str = "text", threshold: float = 0.5) -> DataFrame:
     """Full MinHash+LSH near-dup pipeline: candidates → verify Jaccard ≥ t.
 

@@ -5,14 +5,14 @@ The reference "burns" geometries onto grids with a scanline rasterizer
 The Spark-native re-expression keeps geometries as a *tiny broadcast side*:
 
     polygons(geom_id, xmin, xmax, ymin, ymax,
-             edges: array<struct<x1,y1,x2,y2:double>>,
-             verts: array<struct<x,y:double>>)
+             edges: array<struct<x1,y1,x2,y2:double>>)
 
 and evaluates point-in-polygon with **JVM higher-order functions** over the
 edge array (``size(filter(edges, crossing_pred)) % 2``) — an even-odd ray
 cast identical to `_burn_crossings!` (`src/methods/burning/polygon.jl:97-134`)
-but running inside whole-stage codegen with zero Python and zero extra
-shuffle.
+with zero Python and zero extra shuffle. ``filter``/``exists``/``aggregate``
+are interpreted (``CodegenFallback``) inside the otherwise generated stage,
+so their cost grows with the edges each row carries.
 
 Boundary conventions (engine-defined, matching the reference's golden counts
 19²/20²/21² in `test/methods.jl:254-259`):
@@ -21,19 +21,26 @@ Boundary conventions (engine-defined, matching the reference's golden counts
 - ``touches``: closed cell rectangle intersects the closed polygon → 21².
 - ``inside``: cell rectangle fully inside the polygon → 19².
 
-Page joins use a classified cell cover (:func:`polygon_cover_df`, after
-Raptor): each cell of a polygon's bbox cover at ``COVER_RES`` is, on the
-driver, *exterior* (no edge touches the cell padded by ``_CELL_PAD`` and
-its centre is outside: dropped), *interior* (no edge touches it, centre
-inside: joins with ``inside`` true and no edges, so no PIP) or *boundary*
-(carries only the edges that can flip a point's parity in the cell). Cells
-on the globe border stay boundary with every edge, because ``cell_col``
-clamps out-of-range points into them. Pages refine with
-``inside OR pip_col(lon, lat, edges)``.
+Both grids join a classified cover (after Raptor): :func:`_classify` sorts
+each (rectangle, polygon) pair on the driver into *exterior* (no edge
+touches the padded rectangle, centre outside), *interior* (no edge touches
+it, centre inside: ``inside`` true and no edges, so no per-row test) or
+*boundary* (carries only the edges a test inside the rectangle can use).
+Pages join :func:`polygon_cover_df`, whose rectangles are ``COVER_RES``
+cells; exterior cells are dropped, and cells on the globe border stay
+boundary with every edge, because ``cell_col`` clamps out-of-range points
+into them. Pages refine with ``inside OR pip_col(lon, lat, edges)``. Raster
+cells join :func:`raster_cover_df`, whose rectangles are blocks of
+``GridSpec`` cells: one row per block, holding a struct for each polygon
+whose bbox reaches it (exterior ones too, so the candidate rows are the
+blocks of each polygon's bbox). The driver classifies a polygon one block
+row at a time over the edges of that row's y-band.
 """
 
 from __future__ import annotations
 
+import itertools
+import math
 from dataclasses import dataclass
 
 import numpy as np
@@ -64,6 +71,12 @@ class Polygon:
     ring: tuple[tuple[float, float], ...]
     holes: tuple[tuple[tuple[float, float], ...], ...] = ()
 
+    def __post_init__(self):
+        # every point of a ring of >= 2 points is an edge endpoint, so the
+        # edge tests also see the vertices; a shorter ring has no edge
+        if any(len(r) < 2 for r in (self.ring, *self.holes)):
+            raise ValueError(f"polygon {self.geom_id}: every ring needs >= 2 points")
+
     @staticmethod
     def _close(r) -> tuple[tuple[float, float], ...]:
         r = tuple(r)
@@ -84,19 +97,11 @@ class Polygon:
         return out
 
     @property
-    def all_verts(self) -> list[tuple[float, float]]:
-        out = list(self.ring)
-        for h in self.holes:
-            out.extend(h)
-        return out
-
-    @property
     def bbox(self) -> tuple[float, float, float, float]:
         # spans ALL rings: a genuine hole nests inside the outer ring (no
         # change), while a disjoint component ring extends the extent so
         # bbox prefilters never clip it
-        xs = [p[0] for p in self.all_verts]
-        ys = [p[1] for p in self.all_verts]
+        xs, ys = zip(*(q for r in (self.ring, *self.holes) for q in r))
         return (min(xs), max(xs), min(ys), max(ys))
 
 
@@ -108,7 +113,6 @@ _EDGE_T = StructType(
         StructField("y2", DoubleType()),
     ]
 )
-_VERT_T = StructType([StructField("x", DoubleType()), StructField("y", DoubleType())])
 
 POLY_SCHEMA = StructType(
     [
@@ -118,7 +122,6 @@ POLY_SCHEMA = StructType(
         StructField("ymin", DoubleType(), False),
         StructField("ymax", DoubleType(), False),
         StructField("edges", ArrayType(_EDGE_T), False),
-        StructField("verts", ArrayType(_VERT_T), False),
     ]
 )
 
@@ -146,7 +149,6 @@ def polygons_df(spark: SparkSession, polys: list[Polygon]) -> DataFrame:
                 float(ymin),
                 float(ymax),
                 [(float(a), float(b), float(c), float(d)) for a, b, c, d in p.edges],
-                [(float(x), float(y)) for x, y in p.all_verts],
             )
         )
     return _local_df(spark, rows, POLY_SCHEMA)
@@ -191,104 +193,195 @@ def polygon_cover_df(
     return _local_df(spark, rows, schema)
 
 
-def _cover_cells(p: Polygon, g) -> tuple[int, int, int, int]:
-    """(ix0, ix1, iy0, iy1) clamped cover-cell index range of a bbox."""
-    xmin, xmax, ymin, ymax = p.bbox
-    ix0 = int(np.clip(np.floor((xmin + 180.0) / g.step), 0, g.nx - 1))
-    ix1 = int(np.clip(np.floor((xmax + 180.0) / g.step), 0, g.nx - 1))
-    iy0 = int(np.clip(np.floor((ymin + 90.0) / g.step), 0, g.ny - 1))
-    iy1 = int(np.clip(np.floor((ymax + 90.0) / g.step), 0, g.ny - 1))
-    return ix0, ix1, iy0, iy1
-
-
 def _classify_cover(p: Polygon, g: WebGrid):
     """(cover_cell, inside, edges) of the interior and boundary cells of one
-    polygon's bbox cover (see :func:`polygon_cover_df`), vectorised over
-    cells × edges."""
-    ix0, ix1, iy0, iy1 = _cover_cells(p, g)
+    polygon's bbox cover (see :func:`polygon_cover_df`)."""
+    xmin, xmax, ymin, ymax = p.bbox
+    ix0, ix1 = (int(np.clip(np.floor((v + 180.0) / g.step), 0, g.nx - 1)) for v in (xmin, xmax))
+    iy0, iy1 = (int(np.clip(np.floor((v + 90.0) / g.step), 0, g.ny - 1)) for v in (ymin, ymax))
     iy, ix = np.divmod(np.arange((iy1 - iy0 + 1) * (ix1 - ix0 + 1)), ix1 - ix0 + 1)
     ix, iy = ix + ix0, iy + iy0
-    rx0 = (-180.0 + ix * g.step - _CELL_PAD)[:, None]
-    rx1 = (-180.0 + (ix + 1) * g.step + _CELL_PAD)[:, None]
-    ry0 = (-90.0 + iy * g.step - _CELL_PAD)[:, None]
-    ry1 = (-90.0 + (iy + 1) * g.step + _CELL_PAD)[:, None]
     edges = [tuple(map(float, e)) for e in p.edges]
-    x1, y1, x2, y2 = np.asarray(edges, dtype=np.float64).reshape(-1, 4).T
-    y_meets = (np.minimum(y1, y2) <= ry1) & (np.maximum(y1, y2) >= ry0)
-    can_cross = y_meets & (np.maximum(x1, x2) >= rx0)
-
-    def side(cx, cy):
-        return (x2 - x1) * (cy - y1) - (y2 - y1) * (cx - x1)
-
-    # closed segment ∩ closed rect, the test of _seg_intersects_rect: bbox
-    # overlap and the 4 corners not all strictly on one side of the line
-    s = np.stack([side(rx0, ry0), side(rx1, ry0), side(rx0, ry1), side(rx1, ry1)])
-    touches = can_cross & (np.minimum(x1, x2) <= rx1) & ~(s > 0).all(0) & ~(s < 0).all(0)
-    # pip_col's arithmetic at the cell centres
-    mx = (-180.0 + (ix + 0.5) * g.step)[:, None]
-    my = (-90.0 + (iy + 0.5) * g.step)[:, None]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        cross = ((y1 > my) != (y2 > my)) & (mx < x1 + (x2 - x1) * (my - y1) / (y2 - y1))
-    centre_in = cross.sum(1) % 2 == 1
+    touches, can_cross, centre_in = _classify(
+        -180.0 + ix * g.step - _CELL_PAD,
+        -180.0 + (ix + 1) * g.step + _CELL_PAD,
+        -90.0 + iy * g.step - _CELL_PAD,
+        -90.0 + (iy + 1) * g.step + _CELL_PAD,
+        -180.0 + (ix + 0.5) * g.step,
+        -90.0 + (iy + 0.5) * g.step,
+        edges,
+    )
     border = (ix == 0) | (ix == g.nx - 1) | (iy == 0) | (iy == g.ny - 1)
     for k in range(len(ix)):
         cell = int(iy[k]) * g.nx + int(ix[k])
         if border[k]:
             yield cell, False, edges
-        elif touches[k].any():
+        elif touches[k]:
             yield cell, False, [edges[j] for j in np.flatnonzero(can_cross[k])]
         elif centre_in[k]:
             yield cell, True, []
 
 
-def polygon_block_cover_df(
-    spark: SparkSession,
-    polys: list[Polygon],
-    grid,
-    block: int = 16,
-    pad_cells: int = 0,
-) -> DataFrame:
-    """(_bx, _by, geom_id): coarse raster-block cover of each polygon bbox.
-
-    The geometry half of the SINGLE-SCAN cover join over a finite raster
-    grid (the GridSpec analogue of :func:`polygon_cover_df`): cells compute
-    ``(ix // block, iy // block)`` and equi-join this broadcast table, so N
-    polygons cost one raster scan + one hash join instead of N filtered
-    subtrees (the reference's per-geometry extent pre-filter,
-    `src/methods/burning/geometry.jl:96-104`, batched across geometries).
-
-    ``pad_cells=1`` for boundary=:touches (cell rects extend half a cell
-    past their centers). Indices are true floor divisions, so negative
-    cells from ``extend()`` land in the correct negative blocks.
-
-    Steps are SIGNED (north-up rasters have ``dy < 0``): dividing the bbox
-    bounds by a negative step swaps which bound yields the low index, so
-    the index range is min/max over both quotients — the sign-correct form
-    of the reference's pre-burn axis reorder
-    (`src/methods/burning/array_init.jl:54-85`).
+def _classify(rx0, rx1, ry0, ry1, mx, my, edges):
+    """Classify R padded rectangles ``rx0..ry1`` (arrays, or scalars shared
+    by all R) against one polygon's E ``edges``, vectorised over rectangles
+    × edges. Returns ``touches`` (R,): some closed edge meets the closed
+    rectangle (the test of :func:`_seg_intersects_rect`); ``can_cross``
+    (R, E): y-span meets and max x ≥ ``rx0`` — no other edge satisfies
+    :func:`pip_col`'s crossing predicate in the rectangle; ``centre_in``
+    (R,): :func:`pip_col`'s arithmetic at ``(mx, my)``. An edge whose
+    y-span misses a rectangle is in none of the three, so callers may pass
+    only the edges of its y-band.
     """
-    import math
+    rx0, rx1, ry0, ry1, mx, my = (
+        a[:, None]
+        for a in np.broadcast_arrays(
+            *(np.asarray(v, dtype=np.float64) for v in (rx0, rx1, ry0, ry1, mx, my))
+        )
+    )
+    x1, y1, x2, y2 = np.asarray(edges, dtype=np.float64).reshape(-1, 4).T
+    y_meets = (np.minimum(y1, y2) <= ry1) & (np.maximum(y1, y2) >= ry0)
+    x_meets = (np.minimum(x1, x2) <= rx1) & (np.maximum(x1, x2) >= rx0)
+    can_cross = y_meets & (np.maximum(x1, x2) >= rx0)
+
+    def side(cx, cy):
+        return (x2 - x1) * (cy - y1) - (y2 - y1) * (cx - x1)
+
+    s = np.stack([side(rx0, ry0), side(rx1, ry0), side(rx0, ry1), side(rx1, ry1)])
+    touches = (y_meets & x_meets & ~(s > 0).all(0) & ~(s < 0).all(0)).any(1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cross = ((y1 > my) != (y2 > my)) & (mx < x1 + (x2 - x1) * (my - y1) / (y2 - y1))
+    return touches, can_cross, cross.sum(1) % 2 == 1
+
+
+GEOM_BLOCK = 16  # raster cells per cover-block edge of the raster cover
+
+# most (block, edge) pairs one _classify call sees: its temporaries stay
+# ~10 MB however many blocks a polygon's bbox spans and edges it has
+_CLASSIFY_PAIRS = 1 << 18
+
+
+def with_blocks(raster: DataFrame) -> DataFrame:
+    """``raster`` plus the cover block ``(_bx, _by)`` of each cell: true
+    floor divisions, so negative cells from ``extend()`` land in negative
+    blocks."""
+    return raster.withColumn("_bx", F.floor(F.col("ix") / GEOM_BLOCK).cast("int")).withColumn(
+        "_by", F.floor(F.col("iy") / GEOM_BLOCK).cast("int")
+    )
+
+
+def _raster_cover_rows(polys: list[Polygon], grid, boundary: str) -> list[tuple]:
+    """(_bx, _by, geom_id, xmin, xmax, ymin, ymax, inside, edges) rows of the
+    classified raster block cover; see :func:`raster_cover_df`.
+
+    Classified one block row at a time over the edges of its y-band, in
+    chunks of at most ``_CLASSIFY_PAIRS`` (block, edge) pairs; a boundary
+    block adds the edges of its x-band (column) afterwards."""
+    pad_cells = 1 if boundary == "touches" else 0
+
+    def blocks(lo, hi, c0, step):
+        """Block indices whose cells hold a centre of [lo, hi] (grown by
+        ``pad_cells``), and each block's coordinate range."""
+        q0, q1 = (lo - c0) / step, (hi - c0) / step
+        i0 = math.ceil(min(q0, q1)) - pad_cells
+        i1 = math.floor(max(q0, q1)) + pad_cells
+        b = np.arange(i0 // GEOM_BLOCK, i1 // GEOM_BLOCK + 1)
+        e = c0 + (np.stack([b, b + 1]) * GEOM_BLOCK - 0.5) * step
+        return b, e.min(0), e.max(0)
 
     rows = []
     for p in polys:
-        xmin, xmax, ymin, ymax = p.bbox
-        qx0, qx1 = (xmin - grid.x0) / grid.dx, (xmax - grid.x0) / grid.dx
-        qy0, qy1 = (ymin - grid.y0) / grid.dy, (ymax - grid.y0) / grid.dy
-        ix0 = math.ceil(min(qx0, qx1)) - pad_cells
-        ix1 = math.floor(max(qx0, qx1)) + pad_cells
-        iy0 = math.ceil(min(qy0, qy1)) - pad_cells
-        iy1 = math.floor(max(qy0, qy1)) + pad_cells
-        for bx in range(ix0 // block, ix1 // block + 1):
-            for by in range(iy0 // block, iy1 // block + 1):
-                rows.append((bx, by, p.geom_id))
+        bbox = tuple(map(float, p.bbox))
+        bx, rx0, rx1 = blocks(bbox[0], bbox[1], grid.x0, grid.dx)
+        by, ry0, ry1 = blocks(bbox[2], bbox[3], grid.y0, grid.dy)
+        # relative pad: far beyond the few ulps by which x_col, pip_col and
+        # these bounds round at the coordinates' magnitude
+        big = max(np.abs(np.concatenate([rx0, rx1, ry0, ry1])).max(initial=1.0), *map(abs, bbox))
+        pad = _CELL_PAD * big
+        rx0, rx1, ry0, ry1 = rx0 - pad, rx1 + pad, ry0 - pad, ry1 + pad
+        edges = [tuple(map(float, e)) for e in p.edges]
+        ea = np.asarray(edges, dtype=np.float64)
+        xlo, xhi = np.minimum(ea[:, 0], ea[:, 2]), np.maximum(ea[:, 0], ea[:, 2])
+        ylo, yhi = np.minimum(ea[:, 1], ea[:, 3]), np.maximum(ea[:, 1], ea[:, 3])
+        inside = np.zeros((len(bx), len(by)), dtype=bool)
+        kept = [[]] * inside.size  # a boundary block's edges, at i * len(by) + j
+        col_edges = {}
+        for j in range(len(by)):
+            band = np.flatnonzero((ylo <= ry1[j]) & (yhi >= ry0[j]))
+            step = max(1, _CLASSIFY_PAIRS // max(len(band), 1))
+            for c in range(0, len(bx), step):
+                sl = slice(c, c + step)
+                touches, can_cross, centre_in = _classify(
+                    rx0[sl], rx1[sl], ry0[j], ry1[j], (rx0[sl] + rx1[sl]) / 2, (ry0[j] + ry1[j]) / 2, ea[band]
+                )
+                inside[sl, j] = centre_in & ~touches
+                for k in np.flatnonzero(touches):
+                    i = c + k
+                    if i not in col_edges:
+                        col_edges[i] = np.flatnonzero((xlo <= rx1[i]) & (xhi >= rx0[i]))
+                    # x-band edges keep the clipped-area fold exact: any other
+                    # edge has b <= a in clip_area_edge_col and adds 0.0
+                    keep = np.union1d(band[can_cross[k]], col_edges[i])
+                    kept[i * len(by) + j] = [edges[q] for q in keep]
+        const = [itertools.repeat(v) for v in (p.geom_id, *bbox)]
+        bxs, bys = np.repeat(bx, len(by)).tolist(), np.tile(by, len(bx)).tolist()
+        rows.extend(zip(bxs, bys, *const, inside.ravel().tolist(), kept))
+    return rows
+
+
+def raster_cover_df(spark: SparkSession, polys: list[Polygon], grid, boundary: str) -> DataFrame:
+    """Classified block cover of a finite raster grid, one row per block:
+    (_bx, _by, geoms: array<struct<geom_id, xmin, xmax, ymin, ymax, inside,
+    edges>>). Cells equi-join it on their :func:`with_blocks` key — the
+    reference's per-geometry extent pre-filter
+    (`src/methods/burning/geometry.jl:96-104`) batched across geometries.
+
+    Every block holding a cell centre of a polygon's bbox, grown by one
+    cell for boundary=:touches, holds one struct of that polygon,
+    classified over the union of its cells' closed rects, padded: interior
+    and exterior structs carry no edges, boundary structs the edges that can
+    cross the block or whose x-span meets it, in polygon order, so every
+    boundary predicate and the clipped-area fold over them equal those over
+    all edges for any cell of the block.
+
+    Steps are SIGNED (north-up ``dy < 0``): index ranges and block rects
+    are min/max over both bounds — the sign-correct form of the reference's
+    pre-burn axis reorder (`src/methods/burning/array_init.jl:54-85`).
+    """
+    by_block = {}
+    for r in _raster_cover_rows(polys, grid, boundary):
+        by_block.setdefault(r[:2], []).append(r[2:])
+    geom = [*POLY_SCHEMA.fields[:5], StructField("inside", BooleanType(), False), POLY_SCHEMA["edges"]]
     schema = StructType(
         [
             StructField("_bx", IntegerType(), False),
             StructField("_by", IntegerType(), False),
-            StructField("geom_id", LongType(), False),
+            StructField("geoms", ArrayType(StructType(geom), False), False),
         ]
     )
-    return _local_df(spark, rows, schema)
+    return _local_df(spark, [(*k, v) for k, v in by_block.items()], schema)
+
+
+def raster_cover_hit(grid, boundary: str, row) -> Column:
+    """A raster cell (``ix``, ``iy``) against one cover row, read through
+    ``row(name)``: ``inside``, or in the bbox (grown by one cell for
+    touches) and ``boundary``'s predicate over the row's edges."""
+    cx = grid.x_col(F.col("ix"))
+    cy = grid.y_col(F.col("iy"))
+    # |step|: cell half-widths and bbox pads are magnitudes — signed steps
+    # (north-up dy<0) must not flip the predicate direction
+    adx, ady = abs(grid.dx), abs(grid.dy)
+    bpx = adx if boundary == "touches" else 0.0
+    bpy = ady if boundary == "touches" else 0.0
+    in_bbox = (
+        (cx >= row("xmin") - bpx)
+        & (cx <= row("xmax") + bpx)
+        & (cy >= row("ymin") - bpy)
+        & (cy <= row("ymax") + bpy)
+    )
+    return row("inside") | (
+        in_bbox & boundary_pred(boundary, cx, cy, adx / 2.0, ady / 2.0, row("edges"))
+    )
 
 
 # --------------------------------------------------------------------------
@@ -300,7 +393,8 @@ def pip_col(x: Column, y: Column, edges: Column) -> Column:
     """Even-odd ray-cast: crossings of the ray (-inf, y) → (x, y).
 
     size(filter(edges, e -> (y1>y) != (y2>y) AND x < x_at_y(e))) % 2 == 1
-    Pure Catalyst expression — whole-stage codegen, no Python, no shuffle.
+    Pure Catalyst expression — no Python, no shuffle; ``filter`` itself is
+    interpreted (``CodegenFallback``), so the cost is per edge carried.
     Identical formula in :func:`pip_sql` for the DuckDB oracle.
     """
     crossings = F.size(
@@ -440,24 +534,20 @@ def _seg_intersects_rect(e: Column, rx0, rx1, ry0, ry1) -> Column:
     return bbox_overlap & (p1_in | p2_in | (~all_pos & ~all_neg))
 
 
-def cell_touches_col(cx: Column, cy: Column, hdx: float, hdy: float, poly_row) -> Column:
+def cell_touches_col(cx: Column, cy: Column, hdx: float, hdy: float, edges: Column) -> Column:
     """boundary=:touches — closed cell rect [cx±hdx]×[cy±hdy] meets polygon.
 
-    True iff the cell center is inside, OR a polygon vertex falls in the
-    rect, OR a polygon edge intersects the rect. Reproduces the reference's
-    21² golden (`test/methods.jl:258`).
+    True iff the cell center is inside OR a polygon edge intersects the
+    rect (a vertex in the rect is an endpoint of an edge that does).
+    Reproduces the reference's 21² golden (`test/methods.jl:258`).
     """
     rx0, rx1, ry0, ry1 = cx - hdx, cx + hdx, cy - hdy, cy + hdy
-    center_in = pip_col(cx, cy, poly_row["edges"])
-    vert_in = F.exists(
-        poly_row["verts"],
-        lambda v: (v["x"] >= rx0) & (v["x"] <= rx1) & (v["y"] >= ry0) & (v["y"] <= ry1),
-    )
-    edge_hits = F.exists(poly_row["edges"], lambda e: _seg_intersects_rect(e, rx0, rx1, ry0, ry1))
-    return center_in | vert_in | edge_hits
+    center_in = pip_col(cx, cy, edges)
+    edge_hits = F.exists(edges, lambda e: _seg_intersects_rect(e, rx0, rx1, ry0, ry1))
+    return center_in | edge_hits
 
 
-def cell_inside_col(cx: Column, cy: Column, hdx: float, hdy: float, poly_row) -> Column:
+def cell_inside_col(cx: Column, cy: Column, hdx: float, hdy: float, edges: Column) -> Column:
     """boundary=:inside — cell rect fully inside the polygon (19² golden).
 
     All four corners pass the ray-cast AND no edge crosses the (slightly
@@ -466,7 +556,6 @@ def cell_inside_col(cx: Column, cy: Column, hdx: float, hdy: float, poly_row) ->
     """
     eps_x, eps_y = hdx * 1e-9, hdy * 1e-9
     rx0, rx1, ry0, ry1 = cx - hdx, cx + hdx, cy - hdy, cy + hdy
-    edges = poly_row["edges"]
     corners_in = (
         pip_col(rx0, ry0, edges)
         & pip_col(rx1 - eps_x, ry0, edges)
@@ -480,13 +569,13 @@ def cell_inside_col(cx: Column, cy: Column, hdx: float, hdy: float, poly_row) ->
     return corners_in & ~edge_hits
 
 
-def boundary_pred(boundary: str, cx: Column, cy: Column, hdx: float, hdy: float, poly_row) -> Column:
+def boundary_pred(boundary: str, cx: Column, cy: Column, hdx: float, hdy: float, edges: Column) -> Column:
     if boundary == "center":
-        return pip_col(cx, cy, poly_row["edges"])
+        return pip_col(cx, cy, edges)
     if boundary == "touches":
-        return cell_touches_col(cx, cy, hdx, hdy, poly_row)
+        return cell_touches_col(cx, cy, hdx, hdy, edges)
     if boundary == "inside":
-        return cell_inside_col(cx, cy, hdx, hdy, poly_row)
+        return cell_inside_col(cx, cy, hdx, hdy, edges)
     raise ValueError(f"boundary must be center|touches|inside, got {boundary!r}")
 
 

@@ -26,14 +26,6 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def redact_col(text: Column) -> Column:
-    """Text with every PII match replaced by its placeholder."""
-    out = text
-    for _name, pat, repl in PII_PATTERNS:
-        out = F.regexp_replace(out, pat, repl)
-    return out
-
-
 def redact_pii(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """All input columns with ``text_col`` redacted, plus per-type match
     counts (n_email, n_ip, n_phone). Each count is taken on the text AS

@@ -47,7 +47,7 @@ class GridSpec:
     Steps are SIGNED: ``dy < 0`` is a north-up raster (row 0 at the top),
     the native orientation of real GeoTIFFs; ``dx < 0`` a reversed x axis.
     All coordinate math here and the geometry-burn path
-    (`functions/geometry.py::polygon_block_cover_df`,
+    (`functions/geometry.py::raster_cover_df`,
     `operators/zonal.py::raster_geom_candidates`) is sign-correct — the
     reference instead reorders axes before burning (`_prepare_for_burning`,
     `src/methods/burning/array_init.jl:54-85`); :func:`normalize_raster`

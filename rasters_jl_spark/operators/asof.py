@@ -10,11 +10,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def select_between(df: DataFrame, ts_col: str, t0, t1) -> DataFrame:
-    """`Ti=Between(t0, t1)` → a pushdown-friendly range predicate."""
-    return df.where((F.col(ts_col) >= t0) & (F.col(ts_col) < t1))
-
-
 def select_near(
     df: DataFrame, ts_col: str, t, group_cols: list[str], tiebreak: list[str] = ("event_id",)
 ) -> DataFrame:

@@ -10,10 +10,15 @@ analogues of the reference's lazy views (`src/methods/crop_extend.jl`,
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rasters_jl_spark.functions.geometry import Polygon, boundary_pred, polygons_df
+from rasters_jl_spark.functions.geometry import (
+    Polygon,
+    raster_cover_df,
+    raster_cover_hit,
+    with_blocks,
+)
 from rasters_jl_spark.grid import GridSpec
 
 
@@ -34,7 +39,10 @@ def crop_to_geoms(raster: DataFrame, grid: GridSpec, polys) -> DataFrame:
     """``crop(x; to=polygon)`` — crop to the combined bbox of a geometry
     set (`src/methods/crop_extend.jl:71-117` `to=` geometry branch;
     golden `test/methods.jl:481-494`). Pure wrapper: extent = union of
-    polygon bboxes, then the pushdown-friendly coordinate filter."""
+    polygon bboxes, then the pushdown-friendly coordinate filter; no
+    polygons keep no cell."""
+    if not polys:
+        return raster.where(F.lit(False))
     xmin = min(p.bbox[0] for p in polys)
     xmax = max(p.bbox[1] for p in polys)
     ymin = min(p.bbox[2] for p in polys)
@@ -112,107 +120,34 @@ def mask_geom(
     """Mask by geometry: NULL outside the polygons (invert: NULL inside).
 
     Reference: `_mask`/`boolmask` (`src/methods/mask.jl:76-103,297-319`)
-    with boundary ∈ {center, touches, inside}. Spark: broadcast the polygon
-    edge arrays, evaluate the boundary predicate as a codegen'd higher-order
-    expression per cell — a broadcast semi-join, no shuffle. Past
-    ``BOOLMASK_LITERAL_MAX`` polygons the covered-cells join takes over.
+    with boundary ∈ {center, touches, inside}. Spark: one map-only scan
+    through the classified per-block cover (:func:`_covered`).
     """
-    if len(polys) > BOOLMASK_LITERAL_MAX:
-        j = _covered_flag(raster, grid, polys, boundary)
-        keep = ~F.col("_cov") if invert else F.col("_cov")
-        return j.select(
-            "ix", "iy", F.when(keep, F.col("value")).otherwise(F.lit(None)).alias("value")
-        )
-    inside = boolmask_col(raster, grid, polys, boundary)
-    keep = ~inside if invert else inside
-    return raster.select(
+    j = _covered(raster, grid, polys, boundary)
+    keep = ~F.col("_cov") if invert else F.col("_cov")
+    return j.select(
         "ix", "iy", F.when(keep, F.col("value")).otherwise(F.lit(None)).alias("value")
     )
 
 
-# past this many polygons the literal OR-chain predicate (boolmask_col)
-# would blow Catalyst codegen/constant-folding limits; the covered-cells
-# broadcast cover JOIN takes over (same semantics, O(1) expression size)
-BOOLMASK_LITERAL_MAX = 64
+def _covered(raster: DataFrame, grid: GridSpec, polys: list[Polygon], boundary: str) -> DataFrame:
+    """raster columns + boolean ``_cov``: the cell is covered by ANY polygon.
 
-
-def covered_cells(raster: DataFrame, grid: GridSpec, polys: list[Polygon], boundary: str) -> DataFrame:
-    """Distinct (ix, iy) cells covered by ANY polygon — the join path for
-    large polygon sets: one scan through the broadcast block-cover + edge
-    join (`operators/zonal.py::raster_geom_candidates`), then a distinct."""
-    from rasters_jl_spark.operators.zonal import raster_geom_candidates
-
-    cand = raster_geom_candidates(raster.select("ix", "iy"), grid, polys, boundary)
-    return cand.where(F.col("_inside")).select("ix", "iy").dropDuplicates(["ix", "iy"])
-
-
-def _covered_flag(raster: DataFrame, grid: GridSpec, polys: list[Polygon], boundary: str) -> DataFrame:
-    """raster columns + boolean ``_cov`` via the covered-cells left join."""
-    cov = covered_cells(raster, grid, polys, boundary).withColumn("_hit", F.lit(True))
-    return raster.join(cov, ["ix", "iy"], "left").withColumn(
-        "_cov", F.coalesce(F.col("_hit"), F.lit(False))
-    ).drop("_hit")
-
-
-def boolmask_col(raster: DataFrame, grid: GridSpec, polys: list[Polygon], boundary: str) -> Column:
-    """Column: cell is covered by ANY of the polygons under ``boundary``.
-
-    Literal-predicate form — zero joins, zero shuffles, but O(n_polys ×
-    edges) expression size; callers switch to :func:`covered_cells` past
-    ``BOOLMASK_LITERAL_MAX`` polygons."""
-    spark = raster.sparkSession
-    pdf = polygons_df(spark, polys)
-    rows = pdf.collect()  # geometry side: tiny, broadcast into the plan as literals
-    cx = grid.x_col(F.col("ix"))
-    cy = grid.y_col(F.col("iy"))
-    pred = F.lit(False)
-    for r in rows:
-        poly_row = {
-            "edges": F.array(
-                *[
-                    F.struct(
-                        F.lit(e["x1"]).alias("x1"),
-                        F.lit(e["y1"]).alias("y1"),
-                        F.lit(e["x2"]).alias("x2"),
-                        F.lit(e["y2"]).alias("y2"),
-                    )
-                    for e in r["edges"]
-                ]
-            ),
-            "verts": F.array(
-                *[
-                    F.struct(F.lit(v["x"]).alias("x"), F.lit(v["y"]).alias("y"))
-                    for v in r["verts"]
-                ]
-            ),
-        }
-        # magnitudes: signed steps (north-up dy<0) must not flip pads/widths
-        bbox_pad_x = abs(grid.dx) if boundary == "touches" else 0.0
-        bbox_pad_y = abs(grid.dy) if boundary == "touches" else 0.0
-        in_bbox = (
-            (cx >= r["xmin"] - bbox_pad_x)
-            & (cx <= r["xmax"] + bbox_pad_x)
-            & (cy >= r["ymin"] - bbox_pad_y)
-            & (cy <= r["ymax"] + bbox_pad_y)
-        )
-        pred = pred | (
-            in_bbox
-            & boundary_pred(boundary, cx, cy, abs(grid.dx) / 2.0, abs(grid.dy) / 2.0, poly_row)
-        )
-    return pred
+    Each cell lies in one block, so it left-joins the broadcast block
+    cover (:func:`raster_cover_df`, all of the block's polygons in one
+    array) and ``exists`` tests them: interior structs pass, boundary
+    structs take the boundary predicate over their edges — map-only, no
+    distinct and no join back."""
+    blocks = raster_cover_df(raster.sparkSession, polys, grid, boundary)
+    j = with_blocks(raster).join(F.broadcast(blocks), ["_bx", "_by"], "left")
+    hit = F.exists("geoms", lambda g: raster_cover_hit(grid, boundary, g.getField))
+    return j.withColumn("_cov", F.coalesce(hit, F.lit(False))).drop("_bx", "_by", "geoms")
 
 
 def boolmask(raster: DataFrame, grid: GridSpec, polys: list[Polygon], boundary: str = "center", invert: bool = False) -> DataFrame:
     """(ix, iy, mask:boolean) — reference `boolmask` (`src/methods/mask.jl:265-361`)."""
-    if len(polys) > BOOLMASK_LITERAL_MAX:
-        c = F.col("_cov")
-        if invert:
-            c = ~c
-        return _covered_flag(raster, grid, polys, boundary).select("ix", "iy", c.alias("mask"))
-    c = boolmask_col(raster, grid, polys, boundary)
-    if invert:
-        c = ~c
-    return raster.select("ix", "iy", c.alias("mask"))
+    c = ~F.col("_cov") if invert else F.col("_cov")
+    return _covered(raster, grid, polys, boundary).select("ix", "iy", c.alias("mask"))
 
 
 def replace_missing(raster: DataFrame, sentinel: float, to_null: bool = True) -> DataFrame:

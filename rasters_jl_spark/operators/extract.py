@@ -210,10 +210,11 @@ def extract_polygons(
     polygon covers — the reference's `extract(x, polygons)` = boolmask →
     row per true cell (`src/methods/extract.jl:151-337` polygon branch).
 
-    ONE raster scan through the broadcast block-cover join
+    ONE raster scan through the broadcast classified block-cover join
     (:func:`rasters_jl_spark.operators.zonal.raster_geom_candidates`):
     expression size is O(1) in the polygon count — the boundary predicate
-    runs over joined edge ARRAYS, not a per-polygon literal subtree — so
+    runs over a boundary block's edge ARRAY, not a per-polygon literal
+    subtree, and interior blocks skip it — so
     1,024 polygons cost the same plan as 2 (no Union, no shuffle at all;
     the output is a filtered projection of the candidate join).
     """

@@ -9,25 +9,15 @@ from pyspark.sql import functions as F
 
 from rasters_jl_spark.functions.geometry import Polygon
 from rasters_jl_spark.grid import GridSpec
-from rasters_jl_spark.operators.core import boolmask_col
+from rasters_jl_spark.operators.core import _covered
 
 
 def missingmask(raster: DataFrame, grid: GridSpec, polys: list[Polygon], boundary: str = "center") -> DataFrame:
     """Union{Missing,Bool} mask: true inside, NULL outside — the reference's
-    `missingmask` (`src/methods/mask.jl:404-434`). Large polygon sets route
-    through the covered-cells join like the other mask operators."""
-    from rasters_jl_spark.operators.core import BOOLMASK_LITERAL_MAX, _covered_flag
-
-    if len(polys) > BOOLMASK_LITERAL_MAX:
-        return _covered_flag(raster, grid, polys, boundary).select(
-            "ix",
-            "iy",
-            F.when(F.col("_cov"), F.lit(True)).otherwise(F.lit(None).cast("boolean")).alias("mask"),
-        )
-    c = boolmask_col(raster, grid, polys, boundary)
-    return raster.select(
-        "ix", "iy", F.when(c, F.lit(True)).otherwise(F.lit(None).cast("boolean")).alias("mask")
-    )
+    `missingmask` (`src/methods/mask.jl:404-434`), through the per-block
+    cover join like the other mask operators."""
+    mask = F.when(F.col("_cov"), F.lit(True)).otherwise(F.lit(None).cast("boolean"))
+    return _covered(raster, grid, polys, boundary).select("ix", "iy", mask.alias("mask"))
 
 
 def create_raster(
@@ -92,13 +82,6 @@ def slice_series(df: DataFrame, ts_col: str, every: str = "1 day") -> DataFrame:
     column; slicing is date_trunc + groupBy (partition pruning at scale)."""
     unit = every.split(" ")[-1].rstrip("s")
     return df.withColumn("slice_ts", F.date_trunc(unit, F.col(ts_col)))
-
-
-def combine_series(slices: list[DataFrame]) -> DataFrame:
-    """`combine` — union of slices; a no-op re-stack in long format."""
-    from functools import reduce
-
-    return reduce(lambda a, b: a.unionByName(b), slices)
 
 
 def series_from_files(

@@ -119,8 +119,8 @@ def rasterize_polygons(
 ) -> DataFrame:
     """Burn polygons over a cell universe with per-geometry fills.
 
-    ONE scan of the universe: cells equi-join the broadcast block cover +
-    edge tables (`operators/zonal.py::raster_geom_candidates`), the fill
+    ONE scan of the universe: cells equi-join the broadcast classified
+    block cover (`operators/zonal.py::raster_geom_candidates`), the fill
     value and geometry order join from a second broadcast table, and one
     groupBy(cell) reduces — N polygons cost one scan and one shuffle, not
     N filtered subtrees (the reference's own scale smoke burns 10,000

@@ -382,11 +382,12 @@ def coverage_polygons(
     mode='sum' adds per-geometry counts (overlaps count multiply).
 
     Plan: only cells NEAR geometry explode — candidates come from the
-    broadcast block-cover join (``raster_geom_candidates`` with the
-    touches-padded cover; the unused cell-level predicate is pruned by
-    Catalyst), each candidate fans out scale² subpixel centers tested by
-    the codegen'd PIP over the joined edge array, one groupBy(cell)
-    partial-aggregates map-side, and the universe left-join restores
+    broadcast classified block-cover join (``raster_geom_candidates`` with
+    the touches-padded cover; the unused cell-level predicate is pruned by
+    Catalyst), exterior-block candidates drop out, the others fan out
+    scale² subpixel centers that pass on an interior block and otherwise
+    take the PIP over the block's edges, one groupBy(cell) partial-
+    aggregates map-side, and the universe left-join restores
     zero-coverage cells. At 100× data the subpixel explode never touches
     the (vast) empty part of the raster.
     """
@@ -395,15 +396,16 @@ def coverage_polygons(
 
     cand = raster_geom_candidates(
         raster_universe.select("ix", "iy"), grid, polys, boundary="touches", keep_arrays=True
-    ).select("ix", "iy", "geom_id", "edges")
+    ).select("ix", "iy", "geom_id", "inside", "edges")
+    cand = cand.where(F.col("inside") | (F.size("edges") > 0))
     sub = F.sequence(F.lit(0), F.lit(scale - 1))
-    df = cand.select("ix", "iy", "geom_id", "edges", F.explode(sub).alias("u"))
-    df = df.select("ix", "iy", "geom_id", "edges", "u", F.explode(sub).alias("v"))
+    df = cand.select("*", F.explode(sub).alias("u"))
+    df = df.select("*", F.explode(sub).alias("v"))
     hdx, hdy = grid.dx / 2.0, grid.dy / 2.0
     sub_x, sub_y = grid.dx / scale, grid.dy / scale
     px = grid.x_col(F.col("ix")) - F.lit(hdx) + (F.col("u").cast("double") + F.lit(0.5)) * F.lit(sub_x)
     py = grid.y_col(F.col("iy")) - F.lit(hdy) + (F.col("v").cast("double") + F.lit(0.5)) * F.lit(sub_y)
-    hits = df.where(pip_col(px, py, F.col("edges")))
+    hits = df.where(F.col("inside") | pip_col(px, py, F.col("edges")))
     if mode == "union":
         agg = F.count_distinct(F.col("u") * scale + F.col("v"))
     elif mode == "sum":

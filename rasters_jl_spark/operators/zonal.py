@@ -5,7 +5,7 @@ geometry crop → mask → reduce-skipmissing, threaded over geometries. The
 Spark plan is ONE job over all geometries:
 
     pages ⋈ polygon-cover (equi hash join on coarse cell — broadcast)
-          → PIP refine on boundary cells (codegen'd higher-order expr)
+          → PIP refine on boundary cells (higher-order expr over their edges)
           → groupBy(geom_id).agg(...)
           → left join back to polygons (empty zones, `emptyval`)
 
@@ -20,15 +20,14 @@ from pyspark.sql import functions as F
 
 from rasters_jl_spark.functions.geometry import (
     Polygon,
-    boundary_pred,
     pip_col,
-    polygon_block_cover_df,
     polygon_cover_df,
     polygons_df,
+    raster_cover_df,
+    raster_cover_hit,
+    with_blocks,
 )
 from rasters_jl_spark.grid import COVER_RES, GridSpec, WebGrid
-
-GEOM_BLOCK = 16  # raster cells per cover-block edge for the single-scan join
 
 
 def spatial_join_pages(
@@ -130,45 +129,27 @@ def raster_geom_candidates(
     grid: GridSpec,
     polys: list[Polygon],
     boundary: str = "center",
-    block: int = GEOM_BLOCK,
     keep_arrays: bool = False,
 ) -> DataFrame:
     """ONE-SCAN (cell, geometry) candidates over a finite raster grid.
 
     Returns the raster columns plus ``geom_id``, the polygon bbox columns,
-    and ``_inside`` (the boundary predicate). Plan: cells compute their
-    coarse block, equi-join the broadcast block cover (candidate
-    reduction), join the broadcast polygon edge table, and evaluate the
-    boundary predicate on the joined edge/vert ARRAYS — expression size is
-    O(1) in the polygon count, and N polygons cost one raster scan instead
-    of N filtered subtrees. Each cell lives in exactly one block, so no
+    and ``_inside`` (the boundary predicate); ``keep_arrays`` also keeps the
+    block's ``inside`` flag and ``edges``. Plan: cells compute their
+    coarse block, equi-join the ONE broadcast classified block cover
+    (:func:`raster_cover_df`) and ``inline`` its polygon structs into one
+    candidate row each; interior blocks pass with no per-cell test,
+    exterior blocks fail, and boundary blocks evaluate the boundary
+    predicate over the few edges they carry — expression size is O(1) in
+    the polygon count, and N polygons cost one raster scan instead of N
+    filtered subtrees. Each cell lives in exactly one block, so no
     candidate is produced twice.
     """
-    spark = raster.sparkSession
-    pad = 1 if boundary == "touches" else 0
-    cover = polygon_block_cover_df(spark, polys, grid, block, pad_cells=pad)
-    pdf = polygons_df(spark, polys)
-    r = raster.withColumn("_bx", F.floor(F.col("ix") / block).cast("int")).withColumn(
-        "_by", F.floor(F.col("iy") / block).cast("int")
-    )
-    cand = r.join(F.broadcast(cover), ["_bx", "_by"]).join(F.broadcast(pdf), "geom_id")
-    cx = grid.x_col(F.col("ix"))
-    cy = grid.y_col(F.col("iy"))
-    # |step|: cell half-widths and bbox pads are magnitudes — signed steps
-    # (north-up dy<0) must not flip the predicate direction
-    adx, ady = abs(grid.dx), abs(grid.dy)
-    bpx = adx if boundary == "touches" else 0.0
-    bpy = ady if boundary == "touches" else 0.0
-    in_bbox = (
-        (cx >= F.col("xmin") - bpx)
-        & (cx <= F.col("xmax") + bpx)
-        & (cy >= F.col("ymin") - bpy)
-        & (cy <= F.col("ymax") + bpy)
-    )
-    poly_row = {"edges": F.col("edges"), "verts": F.col("verts")}
-    inside = in_bbox & boundary_pred(boundary, cx, cy, adx / 2.0, ady / 2.0, poly_row)
-    out = cand.withColumn("_inside", inside).drop("_bx", "_by")
-    return out if keep_arrays else out.drop("edges", "verts")
+    cover = raster_cover_df(raster.sparkSession, polys, grid, boundary)
+    cand = with_blocks(raster).join(F.broadcast(cover), ["_bx", "_by"])
+    cand = cand.select(*raster.columns, F.inline("geoms"))
+    out = cand.withColumn("_inside", raster_cover_hit(grid, boundary, F.col))
+    return out if keep_arrays else out.drop("inside", "edges")
 
 
 def zonal_raster(
@@ -188,7 +169,7 @@ def zonal_raster(
     missing — so the result is missing unless the polygon exactly tiles its
     box AND no data cell is missing (`test/methods.jl:358-365` golden).
 
-    Plan: ONE raster scan through the broadcast block-cover join
+    Plan: ONE raster scan through the classified block-cover join
     (:func:`raster_geom_candidates`) + one groupBy(geom_id) — N polygons no
     longer mean N scans (the reference's own scale smoke is 10,000 regions,
     `test/mosaic.jl:69-74`).
@@ -244,7 +225,7 @@ def zonal_stack(stack: DataFrame, grid, polys, boundary: str = "center") -> Data
     per layer → here one row per (geom_id, layer)).
 
     ``stack``: (ix, iy, layer, value). ONE scan: cells join the broadcast
-    block cover + edge tables (:func:`raster_geom_candidates`) — expression
+    classified block cover (:func:`raster_geom_candidates`) — expression
     size and scan count are O(1) in the polygon count — then a single
     groupBy(geom_id, layer) with map-side partial aggregation.
     Empty (geom, layer) zones come back n_cells=0 / NULL stats.
@@ -284,9 +265,11 @@ def zonal_coverage(
     67-165`), which a Rasters.jl user composes as
     ``zonal(sum, raster .* coverage(geom))``.
 
-    Per (cell, geom) candidate the clipped fraction is the closed-form
-    per-edge clamped Green's-theorem integral fold over the JOINED edge
-    array (`functions/geometry.py::clip_area_edge_col`) — pure codegen, no
+    Per (cell, geom) candidate the clipped fraction is 1 on an interior
+    block and otherwise the closed-form per-edge clamped Green's-theorem
+    integral fold over the block's edges
+    (`functions/geometry.py::clip_area_edge_col`; the edges a boundary
+    block drops add exactly 0.0) — an interpreted ``aggregate``, no
     subpixel explode. Plan: one scan → broadcast block-cover join →
     fraction expression → groupBy(geom_id) with map-side partial agg.
 
@@ -315,7 +298,9 @@ def zonal_coverage(
         lambda acc, e: acc
         + clip_area_edge_col((e["x1"], e["y1"], e["x2"], e["y2"]), x0, x1, y0, y1),
     )
-    frac = F.abs(signed) / F.lit(abs(grid.dx) * abs(grid.dy))
+    frac = F.when(F.col("inside"), F.lit(1.0)).otherwise(
+        F.abs(signed) / F.lit(abs(grid.dx) * abs(grid.dy))
+    )
     q = cand.select(
         "geom_id",
         F.round(frac * F.lit(float(frac_units))).cast("long").alias("_fi"),

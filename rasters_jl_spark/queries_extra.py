@@ -1265,9 +1265,9 @@ SQL_zonal_many = _zonal_many_sql()
 # ------------------------------------------------------------- extract_many
 def q_extract_many(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1,024-polygon extract — proves the polygon-extraction surface shares
-    the single-scan block-cover join (`raster_geom_candidates`): one raster
-    scan, zero shuffles, O(1) expression size in the polygon count (the old
-    shape built one PIP literal subtree per polygon,
+    the single-scan classified block-cover join (`raster_geom_candidates`):
+    one raster scan, zero shuffles, O(1) expression size in the polygon
+    count (the old shape built one PIP literal subtree per polygon,
     `src/methods/extract.jl:151-337` at the `test/mosaic.jl:69-74` scale).
     Aggregated per geometry (count + sum) to keep the compare payload sane —
     the underlying row set is the full (geom_id, cell, value) table."""

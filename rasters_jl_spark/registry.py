@@ -211,10 +211,11 @@ _DEFS: dict[str, tuple[QueryFn, str | None]] = {
 # (a) knn (pinned query side, rank-1 radius projection, evidence-gated
 #     ring/brute tiers); (b) the round-8 rewrites of the read_documents
 #     consumers; (c) the page cover join (one broadcast form, no salt);
-#     (d) the round-7 changes (warc_ingest parser + row_number oracle;
-#     ppl_buckets cutoff refactor; extract id= ordered_id numbering);
-#     (e) queries new in round 7; (f) the stalest tail: the remaining r03
-#     driver records until the window is full.
+#     (d) the raster cover join (one classified block cover, one mask
+#     form); (e) the round-7 changes (warc_ingest parser + row_number
+#     oracle; ppl_buckets cutoff refactor; extract id= ordered_id
+#     numbering); (f) queries new in round 7; (g) the stalest tail: the
+#     remaining r03 driver records until the window is full.
 _DRIVER_WINDOW = [
     # (a)
     "knn",
@@ -223,19 +224,22 @@ _DRIVER_WINDOW = [
     # (c)
     "zonal_pages", "zonal_pages_salted", "spatial_join_pip", "stream_zonal_stats",
     # (d)
-    "warc_ingest", "ppl_buckets", "extract_id",
+    "mask_geom", "boolmask", "boolmask_multipoly", "boolmask_holed",
+    "boolmask_touches", "boolmask_inside", "missingmask",
+    "extract_polygons", "extract_many", "extract_nested",
+    "rasterize_polygons", "rasterize_many", "rasterize_multilayer", "rasterize_prod",
+    "zonal_stack", "zonal_many", "zonal_northup", "zonal_median", "zonal_coverage",
+    "coverage_polygon", "coverage_polygon_union",
     # (e)
-    "scaled_read", "warc_reshard", "coverage_exact", "series_files",
-    "stream_bloom", "stream_ppl", "html_extract", "zonal_coverage",
-    "sessionize", "stream_sessions", "pagerank_hosts", "pii_cards",
-    "robots_filter", "multimodal_gif", "zonal_median", "crawl_revisits",
-    "multimodal_gif_frames",
+    "warc_ingest", "ppl_buckets", "extract_id",
     # (f)
-    "focal_weighted", "mask_geom", "mask_raster_invert", "multimodal_audio",
-    "multimodal_features", "multimodal_frames", "multimodal_resize",
-    "rasterize_lines", "rasterize_many", "sample_replace", "sample_weighted",
-    "series_anomaly", "series_rolling", "stream_decontaminate", "warp_agg",
-    "warp_hook", "warp_mercator", "warp_sinusoidal", "zonal_many", "zonal_northup",
+    "scaled_read", "warc_reshard", "coverage_exact", "series_files",
+    "stream_bloom", "stream_ppl", "html_extract",
+    "sessionize", "stream_sessions", "pagerank_hosts", "pii_cards",
+    "robots_filter", "multimodal_gif", "crawl_revisits",
+    "multimodal_gif_frames",
+    # (g)
+    "focal_weighted",
 ]
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {

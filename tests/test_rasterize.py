@@ -102,16 +102,14 @@ def test_polygon_last_overwrites(universe):
 
 
 def test_boolmask_many_polygons_join_path(spark):
-    """>BOOLMASK_LITERAL_MAX polygons route through the covered-cells join
-    (no literal OR-chain, no codegen blowup); result checked against the
-    diamond closed form |x-cx|+|y-cy| < r, which equals even-odd PIP here
+    """600 polygons through the per-block cover join; result checked against
+    the diamond closed form |x-cx|+|y-cy| < r, which equals even-odd PIP here
     because no cell center lies on an edge (fixture construction)."""
     from rasters_jl_spark import fixtures as FX
-    from rasters_jl_spark.operators.core import BOOLMASK_LITERAL_MAX, boolmask
+    from rasters_jl_spark.operators.core import boolmask
     from rasters_jl_spark.operators.extras import create_raster
 
     polys = FX.many_polys()[:600]
-    assert len(polys) > BOOLMASK_LITERAL_MAX
     g = FX.MANY_GRID
     universe = create_raster(spark, g, fill=1.0)
     got = {(r["ix"], r["iy"]) for r in boolmask(universe, g, polys, "center").collect() if r["mask"]}

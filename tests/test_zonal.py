@@ -204,7 +204,7 @@ def test_zonal_coverage_analytic_invariants(spark):
 
     plan = zonal_coverage(cells, g, polys)._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan
-    assert plan.count("BroadcastHashJoin") == 2  # block cover + edge table
+    assert plan.count("BroadcastHashJoin") == 1  # the classified block cover
 
 
 # ---- classified cover join (operators/zonal.py::spatial_join_pages) ----
@@ -386,3 +386,282 @@ def test_cover_counts_polys_geo(spark):
     assert len(rows) == 272
     assert sum(r["inside"] for r in rows) == 164
     assert sum(len(r["edges"]) for r in rows) == 234
+
+
+# ---- degenerate input: no polygons, short rings ----
+
+def _no_poly_cases():
+    from rasters_jl_spark.operators.core import boolmask, crop_to_geoms
+    from rasters_jl_spark.operators.extract import extract_polygons
+    from rasters_jl_spark.operators.extras import missingmask
+    from rasters_jl_spark.operators.rasterize import rasterize_polygons
+    from rasters_jl_spark.operators.resample import coverage_polygons
+    from rasters_jl_spark.operators.zonal import zonal_coverage, zonal_stack
+
+    g = POLY_GRID
+    every_row = [  # (name, call, column, value of that column on every row)
+        ("mask_geom", lambda r: mask_geom(r, g, []), "value", None),
+        ("boolmask", lambda r: boolmask(r, g, []), "mask", False),
+        ("missingmask", lambda r: missingmask(r, g, []), "mask", None),
+        ("coverage_polygons", lambda r: coverage_polygons(r, g, []), "coverage", 0.0),
+    ]
+    empty = [  # (name, call, columns of the empty frame)
+        ("crop_to_geoms", lambda r: crop_to_geoms(r, g, []), ["ix", "iy", "value"]),
+        ("zonal_raster", lambda r: zonal_raster(r, g, []),
+         ["geom_id", "sum_val", "mean_val", "n_cells"]),
+        ("zonal_stack", lambda r: zonal_stack(r.withColumn("layer", F.lit("a")), g, []),
+         ["geom_id", "layer", "n_cells", "sum_val", "mean_val", "min_val", "max_val"]),
+        ("zonal_coverage", lambda r: zonal_coverage(r, g, []),
+         ["geom_id", "cov_cells", "w_sum", "w_mean"]),
+        ("extract_polygons", lambda r: extract_polygons(r, g, []),
+         ["geom_id", "ix", "iy", "value"]),
+        ("rasterize_polygons", lambda r: rasterize_polygons(r, g, [], {}),
+         ["ix", "iy", "value"]),
+    ]
+    return [pytest.param(c, col, v, None, id=n) for n, c, col, v in every_row] + [
+        pytest.param(c, None, None, cols, id=n) for n, c, cols in empty
+    ]
+
+
+@pytest.mark.parametrize("call,col,value,empty_cols", _no_poly_cases())
+def test_raster_operators_without_polygons(product_raster, call, col, value, empty_cols):
+    """polys=[]: the masks keep every raster row with a NULL value or a
+    false/NULL mask; every other operator returns an empty frame with its
+    usual columns."""
+    out = call(product_raster)
+    if empty_cols is not None:
+        assert out.columns == empty_cols
+        assert out.collect() == []
+    else:
+        rows = out.collect()
+        assert len(rows) == 26 * 31
+        assert all(r[col] == value for r in rows)
+
+
+@pytest.mark.parametrize(
+    "ring,holes",
+    [
+        ((), ()),
+        (((1.0, 2.0),), ()),
+        (((0.0, 0.0), (4.0, 0.0), (0.0, 4.0)), (((1.0, 1.0),),)),
+        (((0.0, 0.0), (4.0, 0.0), (0.0, 4.0)), ((),)),
+    ],
+    ids=["empty_ring", "one_point_ring", "one_point_hole", "empty_hole"],
+)
+def test_polygon_rejects_rings_without_edges(ring, holes):
+    """A ring of < 2 points has no edge, so the edge tests would never see
+    its vertex: Polygon refuses it. Two points make a (degenerate) edge."""
+    with pytest.raises(ValueError, match="2 points"):
+        Polygon(1, ring, holes)
+    assert Polygon(1, ((1.0, 2.0), (3.0, 2.0))).edges == [(1.0, 2.0, 3.0, 2.0), (3.0, 2.0, 1.0, 2.0)]
+
+
+# ---- classified block cover (operators/zonal.py::raster_geom_candidates) ----
+
+_BLOCK_BASE = GridSpec(x0=0.05, y0=-9.95, dx=0.1, dy=0.1, nx=160, ny=128)
+
+
+def _block_grid(kind):
+    g = _BLOCK_BASE
+    if kind == "flipped":
+        return GridSpec(g.x0 + (g.nx - 1) * g.dx, g.y0 + (g.ny - 1) * g.dy, -g.dx, -g.dy, g.nx, g.ny)
+    if kind == "projected":  # 1e7 m magnitudes, where one ulp is ~1e-9
+        return GridSpec(9_400_015.3, 4_100_014.9, 30.1, 29.7, g.nx, g.ny, "EPSG:3857")
+    return g
+
+
+def _block_layer(grid, seed):
+    """Seeded non-convex stars, three with a star-shaped hole, spanning many
+    16-cell blocks and reaching negative indices, with half their vertices
+    on cell corners as x_col/y_col compute them; plus triangles with one
+    vertex on a block corner (exactly or one ulp off) that reach into one
+    quadrant, so the blocks of the other three meet them at most there."""
+    rng = np.random.default_rng(seed)
+    step = np.array([grid.dx, grid.dy])
+    h = np.abs(step) / 2.0
+
+    def corner(u, v, side):
+        """Corner of cell (u, v) on ``side`` (±1 per axis, in coordinates)."""
+        c = np.array([grid.x0 + float(u) * grid.dx, grid.y0 + float(v) * grid.dy])
+        return c + np.asarray(side) * h
+
+    def star(cu, cv, r, n):
+        ang = np.sort(rng.uniform(0.0, 2 * np.pi, n))
+        rad = r * rng.uniform(0.55, 1.0, n)
+        pts = []
+        for u, v in zip(cu + rad * np.cos(ang), cv + rad * np.sin(ang)):
+            if rng.random() < 0.5:
+                pts.append(corner(round(u), round(v), rng.choice([-1.0, 1.0], 2)))
+            else:
+                pts.append(np.array([grid.x0 + u * grid.dx, grid.y0 + v * grid.dy]))
+        return tuple(tuple(p.tolist()) for p in pts)
+
+    polys = [Polygon(1 + k, star(*rng.uniform(-10, 150, 2), rng.uniform(20, 60), 11)) for k in range(8)]
+    for k in range(3):
+        cu, cv = rng.uniform(20, 120, 2)
+        polys.append(Polygon(9 + k, star(cu, cv, 50.0, 14), (star(cu, cv, 14.0, 7),)))
+    for k in range(12):
+        b = 16 * np.array([rng.integers(1, 10), rng.integers(1, 8)])
+        mine = rng.integers(0, 2, 2)  # the corner of cell b - 1 or of cell b
+        c = corner(*(b - 1 + mine), np.sign(step) * (1 - 2 * mine))
+        c = np.nextafter(c, c + rng.choice([-1.0, 0.0, 1.0], 2) * np.abs(c + 1.0))
+        q = rng.choice([-1.0, 1.0], 2) * h * 2  # the quadrant it reaches into
+        pts = (c, c + q * (9.3, 3.1), c + q * (4.2, 11.7))
+        polys.append(Polygon(12 + k, tuple(tuple(p.tolist()) for p in pts)))
+    return polys
+
+
+def _block_raster(spark, kind):
+    g = _block_grid(kind)
+    r = spark.range(g.nx * g.ny).select(
+        (F.col("id") % g.nx).cast("int").alias("ix"),
+        (F.col("id") / g.nx).cast("int").alias("iy"),
+        ((F.col("id") * 7) % 11).cast("double").alias("value"),
+    )
+    if kind == "extended":
+        from rasters_jl_spark.operators.core import extend
+
+        r = extend(r, g, -40, g.nx - 1, -40, g.ny - 1)
+    return r, g
+
+
+def _full_edge_pairs(raster, grid, polys, boundary):
+    """(cell, geom) pairs under in_bbox & boundary_pred over ALL edges."""
+    from rasters_jl_spark.functions.geometry import boundary_pred, polygons_df
+
+    cx, cy = grid.x_col(F.col("ix")), grid.y_col(F.col("iy"))
+    adx, ady = abs(grid.dx), abs(grid.dy)
+    bpx, bpy = (adx, ady) if boundary == "touches" else (0.0, 0.0)
+    in_bbox = (
+        (cx >= F.col("xmin") - bpx)
+        & (cx <= F.col("xmax") + bpx)
+        & (cy >= F.col("ymin") - bpy)
+        & (cy <= F.col("ymax") + bpy)
+    )
+    hit = in_bbox & boundary_pred(boundary, cx, cy, adx / 2.0, ady / 2.0, F.col("edges"))
+    return raster.crossJoin(polygons_df(raster.sparkSession, polys)).where(hit)
+
+
+@pytest.mark.parametrize("kind", ["positive", "flipped", "extended", "projected"])
+def test_classified_block_cover_is_exact(spark, kind):
+    """The one-broadcast block-cover join equals the full-edge predicates
+    row for row in every boundary mode on signed, negative-index and
+    1e7-magnitude grids, and zonal_coverage equals the full-edge
+    clipped-area fold; all three block classes occur."""
+    from rasters_jl_spark.functions.geometry import clip_area_edge_col, raster_cover_df
+    from rasters_jl_spark.operators.zonal import raster_geom_candidates, zonal_coverage
+
+    raster, g = _block_raster(spark, kind)
+    polys = _block_layer(g, 5)
+    cover = [s for r in raster_cover_df(spark, polys, g, "touches").collect() for s in r.geoms]
+    assert sum(r["inside"] for r in cover) > 20  # interior
+    assert sum(not r["inside"] and not r["edges"] for r in cover) > 20  # exterior
+    assert sum(bool(r["edges"]) for r in cover) > 20  # boundary
+    for boundary in ("center", "touches", "inside"):
+        cand = raster_geom_candidates(raster, g, polys, boundary)
+        got = {(r.ix, r.iy, r.geom_id) for r in cand.where("_inside").collect()}
+        want = {
+            (r.ix, r.iy, r.geom_id)
+            for r in _full_edge_pairs(raster, g, polys, boundary).select("ix", "iy", "geom_id").collect()
+        }
+        assert len(want) > 1000
+        assert got == want, boundary
+    if kind == "projected":
+        # at 1e7 m the full-edge fold is no reference: it loses up to ~1e-5
+        # of an interior cell to cancellation in its squared coordinates
+        return
+
+    hdx, hdy = abs(g.dx) / 2.0, abs(g.dy) / 2.0
+    cx, cy = g.x_col(F.col("ix")), g.y_col(F.col("iy"))
+    signed = F.aggregate(
+        F.col("edges"),
+        F.lit(0.0),
+        lambda acc, e: acc
+        + clip_area_edge_col((e["x1"], e["y1"], e["x2"], e["y2"]), cx - hdx, cx + hdx, cy - hdy, cy + hdy),
+    )
+    frac = F.abs(signed) / F.lit(4 * hdx * hdy)
+    fi, pi = F.col("fi") / F.lit(1e9), F.col("pi") / F.lit(1e6)
+    ref = (
+        _full_edge_pairs(raster, g, polys, "touches")
+        .groupBy("geom_id")
+        .agg(
+            F.sum(F.round(frac * F.lit(1e9)).cast("long")).alias("fi"),
+            F.sum(F.round(F.col("value") * frac * F.lit(1e6)).cast("long")).alias("pi"),
+        )
+        .where("fi > 0")
+        .select("geom_id", F.round(fi, 6), F.round(pi, 6), F.round(pi / fi, 6))
+    )
+    want = sorted(map(tuple, ref.collect()))
+    got = sorted(map(tuple, zonal_coverage(raster, g, polys).collect()))
+    assert len(want) > 10
+    assert got == want
+
+
+
+def test_raster_cover_chunks_and_bands_are_invisible(monkeypatch):
+    """Classifying a block row over its y-band's edges, a few (block, edge)
+    pairs at a time, gives the rows of one call over every block and edge."""
+    import rasters_jl_spark.functions.geometry as G
+
+    g = _block_grid("flipped")
+    polys = _block_layer(g, 5)
+    want = G._raster_cover_rows(polys, g, "touches")
+    monkeypatch.setattr(G, "_CLASSIFY_PAIRS", 5)
+    assert G._raster_cover_rows(polys, g, "touches") == want
+    for p in polys:  # the same classes from one unbanded, unchunked call
+        rows = [r for r in want if r[2] == p.geom_id]
+        bx, by = np.array([r[0] for r in rows]), np.array([r[1] for r in rows])
+        ex = g.x0 + (np.stack([bx, bx + 1]) * G.GEOM_BLOCK - 0.5) * g.dx
+        ey = g.y0 + (np.stack([by, by + 1]) * G.GEOM_BLOCK - 0.5) * g.dy
+        pad = G._CELL_PAD * max(np.abs(ex).max(), np.abs(ey).max(), *map(abs, p.bbox), 1.0)
+        rx0, rx1, ry0, ry1 = ex.min(0) - pad, ex.max(0) + pad, ey.min(0) - pad, ey.max(0) + pad
+        touches, _, centre_in = G._classify(rx0, rx1, ry0, ry1, (rx0 + rx1) / 2, (ry0 + ry1) / 2, p.edges)
+        assert [bool(r[8]) for r in rows] == touches.tolist()
+        assert [r[7] for r in rows] == (centre_in & ~touches).tolist()
+
+
+def test_raster_cover_driver_memory_is_bounded():
+    """A 4,000-edge outline over 80,080 blocks: the driver classifies it in
+    a few MB beyond the rows it returns (all blocks × all edges at once
+    would be ~10 GB of temporaries)."""
+    import tracemalloc
+
+    from rasters_jl_spark.functions.geometry import _raster_cover_rows
+
+    th = np.linspace(0, 2 * np.pi, 4000, endpoint=False)
+    r = 18 * (1 + 0.25 * np.sin(7 * th) + 0.05 * np.sin(97 * th))
+    poly = Polygon(1, tuple(zip((20 + r * np.cos(th)).tolist(), (20 + r * np.sin(th)).tolist())))
+    g = GridSpec(0.005, 0.005, 0.01, 0.01, 4000, 4000)
+    tracemalloc.start()
+    try:
+        rows = _raster_cover_rows([poly], g, "touches")
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert len(rows) == 80_080
+    boundary = [r for r in rows if r[8]]
+    assert 2000 < len(boundary) < 5000
+    assert sum(len(r[8]) for r in boundary) < 40 * len(boundary)
+    assert peak < 24 * 2**20
+
+
+@pytest.mark.parametrize("n_polys", [2, 600])
+def test_masks_are_map_only(spark, n_polys):
+    """The masks probe one broadcast per-block cover: no shuffle, no
+    distinct, no join back to the raster, at any polygon count."""
+    from rasters_jl_spark import fixtures as FX
+    from rasters_jl_spark.operators.core import boolmask
+    from rasters_jl_spark.operators.extras import create_raster, missingmask
+
+    g = FX.MANY_GRID
+    universe = create_raster(spark, g, fill=1.0)
+    polys = FX.many_polys()[:n_polys]
+    for df in (
+        mask_geom(universe, g, polys, "touches"),
+        boolmask(universe, g, polys, "inside", invert=True),
+        missingmask(universe, g, polys),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("BroadcastHashJoin") == 1
+        assert "hashpartitioning" not in plan and "SortMergeJoin" not in plan
+        assert df.count() == g.nx * g.ny
