@@ -23,6 +23,8 @@ import pandas as pd  # module scope: pandas_udf type-hint inference needs it
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rasters_jl_spark.session import local_df
+
 
 def _aho_corasick(terms: tuple[str, ...]):
     """Build goto/fail/output tables. Pure Python, run once on the driver;
@@ -66,7 +68,7 @@ def blocklist_hits(
     """(doc_id, n_hits): blocklist occurrences per document (0 included)."""
     if mode == "word":
         spark = docs.sparkSession
-        tdf = spark.createDataFrame([(t,) for t in sorted(set(terms))], "term string")
+        tdf = local_df(spark, [(t,) for t in sorted(set(terms))], "term string")
         # split on ANY whitespace run (C4 tokenizes the same way): a term
         # at a newline/tab boundary must still hit
         toks = docs.select(

@@ -23,6 +23,8 @@ import pandas as pd  # module scope: pandas_udf type-hint inference needs it her
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rasters_jl_spark.session import local_df
+
 BPE_MERGES = 8  # sandbox rounds (30k-50k in production — a parameter)
 
 
@@ -155,8 +157,8 @@ def bpe_train(
             merges.append((len(merges), l, rr, f))
             syms = apply_merge_col(syms, l, rr)
         state = state.withColumn("syms", syms).localCheckpoint(eager=False)
-    df = spark.createDataFrame(
-        merges, "round int, left string, right string, pair_freq bigint"
+    df = local_df(
+        spark, merges, "round int, left string, right string, pair_freq bigint"
     )
     return merges, df
 
@@ -249,8 +251,8 @@ def bpe_train_local(
                     i += 1
             words[wi] = out
             _count_word(out, wi, +1)
-    df = docs.sparkSession.createDataFrame(
-        merges, "round int, left string, right string, pair_freq bigint"
+    df = local_df(
+        docs.sparkSession, merges, "round int, left string, right string, pair_freq bigint"
     )
     return merges, df
 

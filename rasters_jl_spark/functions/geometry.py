@@ -2,7 +2,9 @@
 
 The reference "burns" geometries onto grids with a scanline rasterizer
 (`src/methods/burning/polygon.jl:12-134`, edges `src/methods/burning/edges.jl`).
-The Spark-native re-expression keeps geometries as a *tiny broadcast side*:
+The Spark-native re-expression keeps geometries as a *tiny broadcast side*,
+built on the driver as a JVM local relation
+(:func:`rasters_jl_spark.session.local_df`):
 
     polygons(geom_id, xmin, xmax, ymin, ymax,
              edges: array<struct<x1,y1,x2,y2:double>>)
@@ -58,6 +60,7 @@ from pyspark.sql.types import (
 )
 
 from rasters_jl_spark.grid import COVER_RES, WebGrid
+from rasters_jl_spark.session import local_df
 
 
 @dataclass(frozen=True)
@@ -126,16 +129,6 @@ POLY_SCHEMA = StructType(
 )
 
 
-def _local_df(spark: SparkSession, rows: list, schema) -> DataFrame:
-    """Tiny metadata-table constructor: ONE partition instead of the
-    default-parallelism slices ``createDataFrame(list)`` produces.
-
-    These geometry/cover tables are broadcast sides; building the
-    broadcast from a 32-slice parallelized RDD costs a 32-task job per
-    broadcast per query run for a handful of rows. One slice = one task."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-
-
 def polygons_df(spark: SparkSession, polys: list[Polygon]) -> DataFrame:
     """Broadcastable polygon table with precomputed edge arrays + bbox."""
     rows = []
@@ -151,7 +144,7 @@ def polygons_df(spark: SparkSession, polys: list[Polygon]) -> DataFrame:
                 [(float(a), float(b), float(c), float(d)) for a, b, c, d in p.edges],
             )
         )
-    return _local_df(spark, rows, POLY_SCHEMA)
+    return local_df(spark, rows, POLY_SCHEMA)
 
 
 # Pad of the cover-cell classification, in degrees. A page clamped into an
@@ -190,7 +183,7 @@ def polygon_cover_df(
             StructField("edges", ArrayType(_EDGE_T), False),
         ]
     )
-    return _local_df(spark, rows, schema)
+    return local_df(spark, rows, schema)
 
 
 def _classify_cover(p: Polygon, g: WebGrid):
@@ -351,15 +344,18 @@ def raster_cover_df(spark: SparkSession, polys: list[Polygon], grid, boundary: s
     by_block = {}
     for r in _raster_cover_rows(polys, grid, boundary):
         by_block.setdefault(r[:2], []).append(r[2:])
-    geom = [*POLY_SCHEMA.fields[:5], StructField("inside", BooleanType(), False), POLY_SCHEMA["edges"]]
+    # nested fields stay nullable: local_df's Arrow path cannot cast them
+    # to non-nullable
+    geom = [StructField(f.name, f.dataType) for f in POLY_SCHEMA.fields]
+    geom.insert(5, StructField("inside", BooleanType()))
     schema = StructType(
         [
             StructField("_bx", IntegerType(), False),
             StructField("_by", IntegerType(), False),
-            StructField("geoms", ArrayType(StructType(geom), False), False),
+            StructField("geoms", ArrayType(StructType(geom)), False),
         ]
     )
-    return _local_df(spark, [(*k, v) for k, v in by_block.items()], schema)
+    return local_df(spark, [(*k, v) for k, v in by_block.items()], schema)
 
 
 def raster_cover_hit(grid, boundary: str, row) -> Column:

@@ -47,6 +47,8 @@ from functools import lru_cache
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rasters_jl_spark.session import local_df
+
 LANGID_LANGS = ("de", "en", "es", "fr")  # alphabetical == argmax tie order
 LANGID_BUCKETS = 512
 LANGID_GRAM_SIZES = (2, 3)
@@ -179,8 +181,8 @@ def langid_score(
         weight_rows = langid_train(n_buckets)
     spark = docs.sparkSession
     wcols = [f"w_{l}" for l in LANGID_LANGS]
-    weights = spark.createDataFrame(
-        weight_rows, f"bucket long, {', '.join(c + ' long' for c in wcols)}"
+    weights = local_df(
+        spark, weight_rows, f"bucket long, {', '.join(c + ' long' for c in wcols)}"
     )
     t = F.coalesce(F.col(text_col), F.lit(""))
     grams = docs.select(

@@ -59,6 +59,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rasters_jl_spark.functions.bpe import word_freqs
+from rasters_jl_spark.session import local_df
 
 try:  # module scope so pandas_udf type-hint inference works (house rule)
     import pandas as pd
@@ -241,7 +242,7 @@ def unigram_lm_train(
     wf.unpersist()
     costs = costs_from_counts(counts)
     rows = [(p, counts[p], costs[p]) for p in sorted(counts)]
-    df = spark.createDataFrame(rows, "piece string, cnt bigint, cost_nano bigint")
+    df = local_df(spark, rows, "piece string, cnt bigint, cost_nano bigint")
     return counts, costs, df
 
 
@@ -282,7 +283,7 @@ def unigram_lm_train_local(
         counts = _prune(n, chars, vocab_size)
     costs = costs_from_counts(counts)
     out = [(p, counts[p], costs[p]) for p in sorted(counts)]
-    df = spark.createDataFrame(out, "piece string, cnt bigint, cost_nano bigint")
+    df = local_df(spark, out, "piece string, cnt bigint, cost_nano bigint")
     return counts, costs, df
 
 

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rasters_jl_spark.session import local_df
+
 # 'ref' is deliberately NOT in the default list: unlike utm_*/fbclid/gclid
 # it is a semantic parameter on many sites (branch refs, referral codes
 # that change the served page) — callers curating a corpus where ref= is
@@ -122,7 +124,7 @@ def blocked_domains(
     entries broadcast in MBs); the groupBy exchange carries ≤ 1 row per
     blocked doc after map-side partial aggregation."""
     spark = pages.sparkSession
-    bl = spark.createDataFrame([(e,) for e in sorted(set(blocklist))], "entry string")
+    bl = local_df(spark, [(e,) for e in sorted(set(blocklist))], "entry string")
     hosts = pages.select(
         F.col(id_col).alias("doc_id"), host_col(F.col(url_col)).alias("host")
     )

@@ -22,6 +22,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rasters_jl_spark.session import local_df
+
 
 @dataclass(frozen=True)
 class ExplicitAxis:
@@ -84,8 +86,8 @@ class ExplicitAxis:
         return rows
 
     def bucket_df(self, spark: SparkSession, idx_name: str) -> DataFrame:
-        return spark.createDataFrame(
-            self.bucket_rows(), f"_bk int, {idx_name} int, _lo double, _hi double"
+        return local_df(
+            spark, self.bucket_rows(), f"_bk int, {idx_name} int, _lo double, _hi double"
         )
 
     def assign(self, df: DataFrame, coord_col: str, idx_name: str) -> DataFrame:
@@ -131,11 +133,13 @@ class ExplicitGrid:
         """(ix, iy, xlo, xhi, ylo, yhi) — the cell-bounds table."""
         # metadata-scale axes: force single partitions so the cross join is
         # one task, not defaultParallelism² slivers
-        xs = spark.createDataFrame(
+        xs = local_df(
+            spark,
             [(i, lo, hi) for i, (lo, hi) in enumerate(self.x.bounds)],
             "ix int, xlo double, xhi double",
         ).coalesce(1)
-        ys = spark.createDataFrame(
+        ys = local_df(
+            spark,
             [(i, lo, hi) for i, (lo, hi) in enumerate(self.y.bounds)],
             "iy int, ylo double, yhi double",
         ).coalesce(1)

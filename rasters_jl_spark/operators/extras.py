@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from rasters_jl_spark.functions.geometry import Polygon
 from rasters_jl_spark.grid import GridSpec
 from rasters_jl_spark.operators.core import _covered
+from rasters_jl_spark.session import local_df
 
 
 def missingmask(raster: DataFrame, grid: GridSpec, polys: list[Polygon], boundary: str = "center") -> DataFrame:
@@ -171,8 +172,8 @@ def extract_lines(
     check `:307-314`), joined to raster values."""
     from rasters_jl_spark.functions.geometry import line_cells_udf
 
-    seg_df = spark.createDataFrame(
-        segments, "geom_id long, x1 double, y1 double, x2 double, y2 double"
+    seg_df = local_df(
+        spark, segments, "geom_id long, x1 double, y1 double, x2 double, y2 double"
     )
     walk = line_cells_udf(grid.x0, grid.y0, grid.dx, grid.dy, grid.nx, grid.ny)
     cells = (

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from rasters_jl_spark.functions.geometry import Polygon, line_cells_udf
 from rasters_jl_spark.grid import GridSpec
+from rasters_jl_spark.session import local_df
 
 _REDUCERS = {
     "sum": lambda c: F.sum(c),
@@ -92,8 +93,8 @@ def rasterize_lines(
 
     ``segments``: (geom_id, x1, y1, x2, y2, fill).
     """
-    seg_df = spark.createDataFrame(
-        segments, "geom_id long, x1 double, y1 double, x2 double, y2 double, fill double"
+    seg_df = local_df(
+        spark, segments, "geom_id long, x1 double, y1 double, x2 double, y2 double, fill double"
     )
     walk = line_cells_udf(grid.x0, grid.y0, grid.dx, grid.dy, grid.nx, grid.ny)
     exploded = (
@@ -132,7 +133,8 @@ def rasterize_polygons(
     cand = raster_geom_candidates(raster_universe, grid, polys, boundary).where(
         F.col("_inside")
     )
-    meta = spark.createDataFrame(
+    meta = local_df(
+        spark,
         [(p.geom_id, float(fills[p.geom_id]), seq) for seq, p in enumerate(polys)],
         "geom_id long, _fill double, _geom_seq int",
     )
@@ -168,7 +170,7 @@ def rasterize_polygons_multi(
         for layer, layer_fills in fills.items()
         for seq, p in enumerate(polys)
     ]
-    meta = spark.createDataFrame(rows, "geom_id long, layer string, _fill double, _geom_seq int")
+    meta = local_df(spark, rows, "geom_id long, layer string, _fill double, _geom_seq int")
     u = cand.join(F.broadcast(meta), "geom_id").select(
         "ix", "iy", "layer", "_fill", "_geom_seq"
     )

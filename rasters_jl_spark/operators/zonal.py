@@ -17,17 +17,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from rasters_jl_spark.functions.geometry import (
+    POLY_SCHEMA,
     Polygon,
     pip_col,
     polygon_cover_df,
-    polygons_df,
     raster_cover_df,
     raster_cover_hit,
     with_blocks,
 )
 from rasters_jl_spark.grid import COVER_RES, GridSpec, WebGrid
+from rasters_jl_spark.session import local_df
 
 
 def spatial_join_pages(
@@ -88,7 +90,11 @@ def zonal_pages(
         F.min(v).alias("min_val"),
         F.max(v).alias("max_val"),
     )
-    all_geoms = polygons_df(pages.sparkSession, polys).select("geom_id")
+    # one partition, as the result is one row per polygon: a batch of the
+    # tile-ledger job writes one file, not one per LocalTableScan slice
+    all_geoms = local_df(
+        pages.sparkSession, [(p.geom_id,) for p in polys], StructType([POLY_SCHEMA["geom_id"]])
+    ).coalesce(1)
     out = all_geoms.join(F.broadcast(agg), "geom_id", "left").withColumn(
         "n_pages", F.coalesce(F.col("n_pages"), F.lit(0))
     )
@@ -243,7 +249,7 @@ def zonal_stack(stack: DataFrame, grid, polys, boundary: str = "center") -> Data
         )
     )
     spark = stack.sparkSession
-    geoms = spark.createDataFrame([(p.geom_id,) for p in polys], "geom_id int")
+    geoms = local_df(spark, [(p.geom_id,) for p in polys], "geom_id int")
     layers = stack.select("layer").distinct()
     universe = geoms.crossJoin(layers)
     return universe.join(F.broadcast(hits), ["geom_id", "layer"], "left").withColumn(

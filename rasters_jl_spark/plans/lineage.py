@@ -21,13 +21,15 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rasters_jl_spark.session import local_df
+
 LEDGER_SCHEMA = "tile_id long, batch_rows long, rows_per_sec double, wall_s double, status string"
 
 
 def completed_tiles(spark: SparkSession, ledger_path: str) -> DataFrame:
     if os.path.exists(ledger_path):
         return spark.read.parquet(ledger_path).where(F.col("status") == "done").select("tile_id")
-    return spark.createDataFrame([], "tile_id long")
+    return local_df(spark, [], "tile_id long")
 
 
 def remaining_tiles(pages: DataFrame, spark: SparkSession, ledger_path: str) -> DataFrame:
@@ -107,7 +109,8 @@ def run_tiles_resumable(
         wall = time.time() - t0
         # batch_rows = result rows written by THIS batch (every tile in the
         # batch carries the same value — it is a batch metric, not per-tile).
-        ledger = spark.createDataFrame(
+        ledger = local_df(
+            spark,
             [
                 (int(t), n_rows, float(n_rows / max(wall, 1e-9)), float(wall), "done")
                 for t in batch_ids
@@ -204,7 +207,8 @@ def _run_incremental_batches(
             d = os.path.join(out_path, f"tile_id={int(t)}")
             if os.path.isdir(d):
                 shutil.rmtree(d)
-        ledger = spark.createDataFrame(
+        ledger = local_df(
+            spark,
             [(int(t), 0, 0, 0.0, run_id, "done") for t in zero_tiles],
             INC_LEDGER_SCHEMA,
         )
@@ -222,7 +226,8 @@ def _run_incremental_batches(
         result.write.mode("overwrite").partitionBy("tile_id").parquet(out_path)
         n_rows = int(obs.get["n"])
         wall = time.time() - t0
-        ledger = spark.createDataFrame(
+        ledger = local_df(
+            spark,
             [
                 (int(t), rows_by_tile[t], n_rows, float(wall), run_id, "done")
                 for t in batch_ids
@@ -316,7 +321,7 @@ def run_tiles_incremental_ref(
         # input_rows ledger fingerprint over the CHANGED tiles only — via a
         # broadcast semi-join, not an IN literal (the changed set can be
         # large after a big append; a literal list would bloat the plan)
-        ids_df = spark.createDataFrame([(i,) for i in ids], "tile_id long")
+        ids_df = local_df(spark, [(i,) for i in ids], "tile_id long")
         counts = (
             pages.join(F.broadcast(ids_df), "tile_id")
             .groupBy("tile_id")

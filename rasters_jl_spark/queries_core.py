@@ -46,6 +46,7 @@ from rasters_jl_spark.sources.raster_synth import (
     synth_raster,
     synth_raster_sql,
 )
+from rasters_jl_spark.session import local_df
 
 G = RASTER_GRID
 PAGES_CTE = f"pages AS ({pages_geo_sql()})"
@@ -455,7 +456,7 @@ _REG2 = [(3, 6, 1.1), (3, 7, 1.2), (4, 6, 1.3), (4, 7, 1.4)]
 
 
 def _region_df(spark: SparkSession, rows) -> DataFrame:
-    return spark.createDataFrame(rows, "ix int, iy int, value double")
+    return local_df(spark, rows, "ix int, iy int, value double")
 
 
 def _mosaic_df(spark: SparkSession, method: str) -> DataFrame:

@@ -11,6 +11,7 @@ from rasters_jl_spark.functions import ann, dedup, langid, textstats
 from rasters_jl_spark.operators.asof import select_near
 from rasters_jl_spark.operators.sample import sample_weighted, u_sql
 from rasters_jl_spark.sources.pages import pages_geo
+from rasters_jl_spark.session import local_df
 
 # ---------------------------------------------------------- corpora CTEs
 AUG_EXACT_CTE = f"""aug AS (
@@ -71,8 +72,8 @@ def _aug_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two planted <3-token docs exercise the whole-text shingle fallback —
     # the engine/oracle parity the fixture corpus (no short docs) would
     # otherwise never test
-    shorts = spark.createDataFrame(
-        [(-1, FX.SHORT_DOC_TEXT), (-2, FX.SHORT_DOC_TEXT)], "doc_id long, text string"
+    shorts = local_df(
+        spark, [(-1, FX.SHORT_DOC_TEXT), (-2, FX.SHORT_DOC_TEXT)], "doc_id long, text string"
     )
     # single post-union spread (see _aug_exact): one exchange, n tasks.
     # The lazy localCheckpoint pins ONE materialisation of the augmented

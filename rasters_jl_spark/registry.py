@@ -212,10 +212,11 @@ _DEFS: dict[str, tuple[QueryFn, str | None]] = {
 #     ring/brute tiers); (b) the round-8 rewrites of the read_documents
 #     consumers; (c) the page cover join (one broadcast form, no salt);
 #     (d) the raster cover join (one classified block cover, one mask
-#     form); (e) the round-7 changes (warc_ingest parser + row_number
-#     oracle; ppl_buckets cutoff refactor; extract id= ordered_id
-#     numbering); (f) queries new in round 7; (g) the stalest tail: the
-#     remaining r03 driver records until the window is full.
+#     form); (e) the other queries whose plans read a driver-built table,
+#     now a JVM local relation (session.local_df). Left out for room:
+#     dedup_components, dedup_spans, dedup_spans_strip and
+#     simhash_wide_pairs, whose one such table is _aug_near's, also read
+#     by (b).
 _DRIVER_WINDOW = [
     # (a)
     "knn",
@@ -231,15 +232,11 @@ _DRIVER_WINDOW = [
     "zonal_stack", "zonal_many", "zonal_northup", "zonal_median", "zonal_coverage",
     "coverage_polygon", "coverage_polygon_union",
     # (e)
-    "warc_ingest", "ppl_buckets", "extract_id",
-    # (f)
-    "scaled_read", "warc_reshard", "coverage_exact", "series_files",
-    "stream_bloom", "stream_ppl", "html_extract",
-    "sessionize", "stream_sessions", "pagerank_hosts", "pii_cards",
-    "robots_filter", "multimodal_gif", "crawl_revisits",
-    "multimodal_gif_frames",
-    # (g)
-    "focal_weighted",
+    "bpe_train", "bpe_train_local", "bpe_train_batched", "bpe_tokenize",
+    "unigram_lm_train", "unigram_tokenize", "langid_fasttext",
+    "url_blocklist", "blocklist_word", "scaled_read", "replace_missing_stack",
+    "mosaic_first", "mosaic_last", "mosaic_mean", "mosaic_stack",
+    "explicit_extract", "explicit_cellarea", "extract_lines", "rasterize_lines",
 ]
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {

@@ -1,4 +1,5 @@
-"""SparkSession builder with scale-appropriate defaults.
+"""SparkSession builder with scale-appropriate defaults, and the one
+constructor of driver-side tables (:func:`local_df`).
 
 Local testing runs ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the same
 conf ships via ``spark-submit --py-files`` — nothing here is local-only.
@@ -8,7 +9,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -21,7 +25,11 @@ def get_spark(
 
     Defaults chosen for 100 TB-scale behaviour, not just local runs:
     - AQE on (runtime coalescing + skew-join splitting for hot urban cells)
-    - Arrow on (every Python boundary is a vectorised pandas UDF)
+    - Arrow on for pandas conversions (``toPandas``, ``createDataFrame``
+      of a pandas frame). Driver-side tables are built by :func:`local_df`
+      and need no Python worker; the engine's Python workers run only its
+      pandas UDFs, ``mapInPandas``/``applyInPandas`` kernels and streaming
+      state functions.
     - shuffle partitions sized to cores locally; on a cluster this should be
       ~2-3x total executor cores (set via spark-submit conf).
     """
@@ -58,3 +66,31 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_df(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """A driver-built table — polygon and cover sides, metadata, ledgers —
+    from ``rows`` (tuples in ``schema``'s field order; ``schema`` is a
+    StructType or a DDL string). Fields nested in an array or struct must
+    be nullable: pyspark rebuilds nested Arrow columns as nullable and
+    then cannot cast them to a non-nullable type.
+
+    The rows go to the JVM as one Arrow table, which Spark plans as a
+    ``LocalRelation``: its scan (``LocalTableScan``) and any broadcast of
+    it run in the JVM. ``createDataFrame`` over a Python list instead
+    plans a Python RDD (``Scan ExistingRDD``), and every action over it
+    runs a Python worker task per partition. On a 4-core host one such
+    task takes 0.18-0.29 s from submit to its first row, 0.15-0.17 s of it
+    in pyspark's per-task ``importlib.invalidate_caches()``, which re-reads
+    ``pyspark.zip`` for each of its 16 zip importers; a broadcast join over
+    a 1,721-row polygon cover took 0.57 s built that way and 0.20 s built
+    here (medians of 10).
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

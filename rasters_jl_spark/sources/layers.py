@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rasters_jl_spark.session import local_df
+
 LAYERS_SCHEMA = (
     "layer string, missingval double, dtype string, unit string, "
     "scale double, offset double"
@@ -35,7 +37,7 @@ def layers_meta(spark: SparkSession, entries: list[tuple]) -> DataFrame:
     """(layer, missingval, dtype, unit[, scale, offset]) — one row per stack
     layer. 4-tuples (no gain) are padded with NULL scale/offset."""
     rows = [tuple(e) + (None,) * (6 - len(e)) for e in entries]
-    return spark.createDataFrame(rows, LAYERS_SCHEMA)
+    return local_df(spark, rows, LAYERS_SCHEMA)
 
 
 def replace_missing_stack(stack: DataFrame, meta: DataFrame, to_null: bool = True) -> DataFrame:
