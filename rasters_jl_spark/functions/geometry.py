@@ -46,7 +46,6 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -59,7 +58,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from rasters_jl_spark.grid import COVER_RES, WebGrid
+from rasters_jl_spark.grid import COVER_RES, GridSpec, WebGrid
 from rasters_jl_spark.session import local_df
 
 
@@ -154,13 +153,11 @@ def polygons_df(spark: SparkSession, polys: list[Polygon]) -> DataFrame:
 _CELL_PAD = 1e-9
 
 
-def polygon_cover_df(
-    spark: SparkSession, polys: list[Polygon], cover_res: int = COVER_RES
-) -> DataFrame:
+def polygon_cover_df(spark: SparkSession, polys: list[Polygon]) -> DataFrame:
     """Classified (cover_cell, geom_id, inside, edges) table for the
     cell-prefix join; the cell classes are in the module docstring.
 
-    The cover is the bbox cover at ``cover_res`` — the Spark analogue of the
+    The cover is the bbox cover at ``COVER_RES`` — the Spark analogue of the
     reference's per-geometry extent pre-filter
     (`src/methods/burning/geometry.jl:96-104`): candidates are produced by an
     equi hash join on ``cover_cell`` instead of a scanline over a view. A
@@ -169,7 +166,7 @@ def polygon_cover_df(
     :func:`pip_col`'s crossing predicate for a point in the cell, so the
     parity is the full edge array's, bit for bit.
     """
-    g = WebGrid(cover_res)
+    g = WebGrid(COVER_RES)
     rows = [
         (cell, p.geom_id, inside, edges)
         for p in polys
@@ -576,12 +573,8 @@ def boundary_pred(boundary: str, cx: Column, cy: Column, hdx: float, hdy: float,
 
 
 # --------------------------------------------------------------------------
-# Line → cells (DDA grid walk) — geometry-side pandas UDF (tiny data)
+# Line → cells (DDA grid walk) — on the driver (geometry-side, tiny data)
 # --------------------------------------------------------------------------
-
-_CELLS_T = ArrayType(
-    StructType([StructField("ix", IntegerType()), StructField("iy", IntegerType())])
-)
 
 
 def line_cells(x1, y1, x2, y2, x0, y0, dx, dy, nx, ny):
@@ -630,14 +623,23 @@ def line_cells(x1, y1, x2, y2, x0, y0, dx, dy, nx, ny):
     return cells
 
 
-def line_cells_udf(x0: float, y0: float, dx: float, dy: float, nx: int, ny: int):
-    """pandas UDF: (x1,y1,x2,y2) → array<struct<ix,iy>> of traversed cells."""
+def line_cells_df(spark: SparkSession, segments: list[tuple], grid: GridSpec) -> DataFrame:
+    """(geom_id, ix, iy, fill) of every cell the segments of each geometry
+    pass through, once per geometry (the reference's adjacent-duplicate
+    check, `src/methods/extract.jl:307-314`), in first-seen order: a cell
+    keeps the fill of the first segment that reached it.
 
-    @F.pandas_udf(_CELLS_T)
-    def _walk(x1: pd.Series, y1: pd.Series, x2: pd.Series, y2: pd.Series) -> pd.Series:
-        out = []
-        for a, b, c, d in zip(x1, y1, x2, y2):
-            out.append(line_cells(a, b, c, d, x0, y0, dx, dy, nx, ny))
-        return pd.Series(out)
-
-    return _walk
+    ``segments``: (geom_id, x1, y1, x2, y2[, fill]); ``fill`` is NULL when
+    the segments carry none. The walk runs here, on the driver, and the
+    cells go to Spark as a local relation, so no Python worker runs.
+    """
+    seen: dict[tuple[int, int, int], float | None] = {}
+    for geom_id, x1, y1, x2, y2, *fill in segments:
+        walked = line_cells(x1, y1, x2, y2, grid.x0, grid.y0, grid.dx, grid.dy, grid.nx, grid.ny)
+        for ix, iy in walked:
+            seen.setdefault((geom_id, ix, iy), fill[0] if fill else None)
+    return local_df(
+        spark,
+        [(*key, fill) for key, fill in seen.items()],
+        "geom_id long, ix int, iy int, fill double",
+    )

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rasters_jl_spark.functions.geometry import Polygon
+from rasters_jl_spark.functions.geometry import Polygon, line_cells_df
 from rasters_jl_spark.grid import GridSpec
 from rasters_jl_spark.operators.core import _covered
 from rasters_jl_spark.session import local_df
@@ -170,18 +170,7 @@ def extract_lines(
     """Per-line extract: every cell the segment passes through, deduped per
     geometry (`src/methods/extract.jl:151-337` line path + adjacent-dup
     check `:307-314`), joined to raster values."""
-    from rasters_jl_spark.functions.geometry import line_cells_udf
-
-    seg_df = local_df(
-        spark, segments, "geom_id long, x1 double, y1 double, x2 double, y2 double"
-    )
-    walk = line_cells_udf(grid.x0, grid.y0, grid.dx, grid.dy, grid.nx, grid.ny)
-    cells = (
-        seg_df.withColumn("_cells", walk("x1", "y1", "x2", "y2"))
-        .select("geom_id", F.explode("_cells").alias("_c"))
-        .select("geom_id", F.col("_c.ix").alias("ix"), F.col("_c.iy").alias("iy"))
-        .dropDuplicates(["geom_id", "ix", "iy"])
-    )
+    cells = line_cells_df(spark, segments, grid).drop("fill")
     how = "inner" if skipmissing else "left"
     out = cells.join(raster.select("ix", "iy", "value"), ["ix", "iy"], how)
     if skipmissing:

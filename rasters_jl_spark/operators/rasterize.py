@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rasters_jl_spark.functions.geometry import Polygon, line_cells_udf
+from rasters_jl_spark.functions.geometry import Polygon, line_cells_df
 from rasters_jl_spark.grid import GridSpec
 from rasters_jl_spark.session import local_df
 
@@ -86,28 +86,15 @@ def rasterize_lines(
     grid: GridSpec,
     reducer: str = "sum",
 ) -> DataFrame:
-    """Burn line segments: DDA grid walk per segment (geometry-side pandas
-    UDF, `src/methods/burning/line.jl:94-199`), explode to (cell, fill),
-    dedup cells per geometry (the reference's adjacent-duplicate check,
-    `src/methods/extract.jl:307-314`), then reduce.
+    """Burn line segments: the DDA grid walk per segment
+    (`src/methods/burning/line.jl:94-199`) runs on the driver and dedups
+    cells per geometry (:func:`line_cells_df`), then one groupBy reduces.
 
     ``segments``: (geom_id, x1, y1, x2, y2, fill).
     """
-    seg_df = local_df(
-        spark, segments, "geom_id long, x1 double, y1 double, x2 double, y2 double, fill double"
-    )
-    walk = line_cells_udf(grid.x0, grid.y0, grid.dx, grid.dy, grid.nx, grid.ny)
-    exploded = (
-        seg_df.withColumn("_cells", walk("x1", "y1", "x2", "y2"))
-        .select("geom_id", "fill", F.explode("_cells").alias("_c"))
-        .select("geom_id", "fill", F.col("_c.ix").alias("ix"), F.col("_c.iy").alias("iy"))
-        .dropDuplicates(["geom_id", "ix", "iy"])
-    )
     red = _REDUCERS[reducer]
-    out = exploded.withColumn("_geom_seq", F.col("geom_id")).groupBy("ix", "iy").agg(
-        red(F.col("fill")).cast("double").alias("value")
-    )
-    return out
+    cells = line_cells_df(spark, segments, grid).withColumn("_geom_seq", F.col("geom_id"))
+    return cells.groupBy("ix", "iy").agg(red(F.col("fill")).cast("double").alias("value"))
 
 
 def rasterize_polygons(

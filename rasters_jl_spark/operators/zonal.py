@@ -32,9 +32,7 @@ from rasters_jl_spark.grid import COVER_RES, GridSpec, WebGrid
 from rasters_jl_spark.session import local_df
 
 
-def spatial_join_pages(
-    pages: DataFrame, polys: list[Polygon], cover_res: int = COVER_RES
-) -> DataFrame:
+def spatial_join_pages(pages: DataFrame, polys: list[Polygon]) -> DataFrame:
     """pages × polygons inner join on point-in-polygon.
 
     The cell-prefix hash join: pages carry a precomputed fine cell; the
@@ -51,8 +49,8 @@ def spatial_join_pages(
     costs probe CPU in the tasks that hold its pages, not a skewed
     partition, and needs no salting.
     """
-    g = WebGrid(cover_res)
-    cover = polygon_cover_df(pages.sparkSession, polys, cover_res)
+    g = WebGrid(COVER_RES)
+    cover = polygon_cover_df(pages.sparkSession, polys)
     p = pages.withColumn("_cover_cell", g.cell_col(F.col("lon"), F.col("lat")))
     cand = p.join(F.broadcast(cover), p["_cover_cell"] == cover["cover_cell"]).drop(
         "cover_cell"
@@ -67,7 +65,6 @@ def zonal_pages(
     pages: DataFrame,
     polys: list[Polygon],
     value_col: str = "n_chars",
-    cover_res: int = COVER_RES,
     n_salt: int = 1,
     emptyval=None,
 ) -> DataFrame:
@@ -81,7 +78,7 @@ def zonal_pages(
     over the partitions of a shuffled join, but the cover join is a
     broadcast probe that never shuffles the pages (:func:`spatial_join_pages`).
     """
-    joined = spatial_join_pages(pages, polys, cover_res)
+    joined = spatial_join_pages(pages, polys)
     v = F.col(value_col)
     agg = joined.groupBy("geom_id").agg(
         F.count(v).alias("n_pages"),

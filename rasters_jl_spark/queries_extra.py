@@ -748,8 +748,8 @@ SQL_stream_dedup_pairs = _stream_dedup_sql()
 
 # ------------------------------------------------------- stream_zonal_stats
 def q_stream_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateful streaming zonal (running per-geometry stats via
-    applyInPandasWithState), checked against the BATCH zonal result: the
+    """Stateful streaming zonal (running per-geometry stats in Spark's
+    streaming aggregate state), checked against the BATCH zonal result: the
     corpus drains as two micro-batches; state carries (n, sum, min, max)
     across batches, so the LATEST emitted row per geometry must equal the
     batch aggregation over all pages."""

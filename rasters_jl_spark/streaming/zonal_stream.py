@@ -9,13 +9,14 @@ recomputed per batch (the zonal analogue of `dedup_stream.py`):
       → broadcast polygon-cover equi-join + PIP refine (stream-static
         inner join — the same single-scan shape as batch
         `operators/zonal.py::spatial_join_pages`)
-      → groupBy(geom_id).applyInPandasWithState:
-            state = (n, sum, min, max) running tuple
-            emit the UPDATED running-stats row each micro-batch
+      → groupBy(geom_id).agg(count, sum, min, max) in update mode:
+            Spark's own streaming aggregate keeps the running tuple
+            and emits the UPDATED running-stats row each micro-batch
       → foreachBatch append (geom_id, stats, batch_id)
 
-State is O(1) per geometry (4 scalars), so the state store stays
-metadata-sized at any page volume. The latest row per geometry equals the
+The state is JVM rows in Spark's state store, one partial-aggregate row of
+4 scalars per geometry, so it stays metadata-sized at any page volume and
+no Python worker runs. The latest row per geometry equals the
 batch `zonal_pages` result over everything ingested so far — asserted by
 the `stream_zonal_stats` registry oracle and the 2-micro-batch state test.
 
@@ -25,45 +26,12 @@ execution is engine-native (north-rule requirement), not a reference port.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from rasters_jl_spark.functions.geometry import Polygon
 
 STATS_SCHEMA = "geom_id long, n_pages long, sum_val double, min_val double, max_val double"
-STATE_SCHEMA = "n bigint, s double, mn double, mx double"
-
-
-def _zonal_update(key, pdfs, state: GroupState):
-    """Fold this batch's values for one geometry into the running tuple and
-    emit the updated stats row. count/sum/min/max merge exactly across any
-    batch split (the same partial-merge algebra as
-    `operators/zonal.py::merge_zonal_partials`)."""
-    if state.exists:
-        n, s, mn, mx = state.get
-    else:
-        n, s, mn, mx = 0, 0.0, None, None
-    for pdf in pdfs:
-        v = pdf["_v"].astype("float64")
-        if len(v) == 0:
-            continue
-        n += int(len(v))
-        s += float(v.sum())
-        bmn, bmx = float(v.min()), float(v.max())
-        mn = bmn if mn is None else min(mn, bmn)
-        mx = bmx if mx is None else max(mx, bmx)
-    state.update((n, s, mn, mx))
-    yield pd.DataFrame(
-        {
-            "geom_id": [int(key[0])],
-            "n_pages": [n],
-            "sum_val": [s],
-            "min_val": [mn],
-            "max_val": [mx],
-        }
-    )
 
 
 def zonal_stats_stream(
@@ -74,20 +42,17 @@ def zonal_stats_stream(
     The polygon cover + edge tables are STATIC broadcast sides (geometry is
     metadata-scale); the stream side only computes per-row cells and the
     PIP predicate, so the only stateful shuffle is the groupBy(geom_id) —
-    geometry-count-sized, not page-count-sized."""
+    geometry-count-sized, not page-count-sized. Rows are in
+    ``STATS_SCHEMA``."""
     from rasters_jl_spark.operators.zonal import spatial_join_pages
 
     joined = spatial_join_pages(pages, polys)
-    return (
-        joined.select("geom_id", F.col(value_col).cast("double").alias("_v"))
-        .groupBy("geom_id")
-        .applyInPandasWithState(
-            _zonal_update,
-            outputStructType=STATS_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    v = F.col(value_col).cast("double")
+    return joined.groupBy("geom_id").agg(
+        F.count(v).alias("n_pages"),
+        F.sum(v).alias("sum_val"),
+        F.min(v).alias("min_val"),
+        F.max(v).alias("max_val"),
     )
 
 

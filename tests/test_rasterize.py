@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from rasters_jl_spark.functions.geometry import Polygon
 from rasters_jl_spark.grid import GridSpec
+from rasters_jl_spark.operators.extras import extract_lines
 from rasters_jl_spark.operators.rasterize import (
     rasterize_lines,
     rasterize_points,
@@ -70,6 +71,26 @@ def test_line_burn_80(spark):
         spark, segs, POLY_GRID, reducer="sum"
     )
     assert out.agg(F.sum("value")).collect()[0][0] == 80.0
+    assert not _python_nodes(out)
+
+
+def test_extract_lines_walk_on_driver(spark):
+    """extract_lines: the same driver-side walk, cells deduped per geometry
+    (the ring's 4 corner cells are walked twice) and joined to the raster."""
+    segs = [(1, *POINTVEC[i], *POINTVEC[i + 1]) for i in range(4)]
+    raster = spark.createDataFrame(
+        [(ix, iy, float(ix)) for ix in range(POLY_GRID.nx) for iy in range(POLY_GRID.ny)],
+        "ix int, iy int, value double",
+    )
+    out = extract_lines(spark, segs, raster, POLY_GRID)
+    assert out.count() == 80
+    assert not _python_nodes(out)
+
+
+def _python_nodes(df):
+    """Python evaluation nodes of ``df``'s physical plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [n for n in ("ArrowEvalPython", "BatchEvalPython") if n in plan]
 
 
 def test_diagonal_line_cells():

@@ -21,7 +21,9 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# the checkout in place of tools/: tools/profile.py would shadow the standard
+# library's profile module, which pyspark imports (via cProfile)
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 import numpy as np
 from pyspark.sql import functions as F

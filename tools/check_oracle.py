@@ -10,10 +10,13 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout in place of tools/: tools/profile.py would shadow the standard
+# library's profile module, which pyspark imports (via cProfile)
+sys.path[0] = str(Path(__file__).resolve().parent.parent)
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [

@@ -14,7 +14,9 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# the checkout in place of tools/: tools/profile.py would shadow the standard
+# library's profile module, which pyspark imports (via cProfile)
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import SparkSession
 

@@ -16,7 +16,9 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# the checkout in place of tools/: tools/profile.py would shadow the standard
+# library's profile module, which pyspark imports (via cProfile)
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 import bench  # noqa: E402
 
 GATE_MS = float(os.environ.get("SPARK_GRAFT_BENCH_BURN_GATE_MS", "135"))

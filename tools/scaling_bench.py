@@ -72,7 +72,9 @@ def main():
     # window against a high-core rep from another) and was observed to
     # swing the reported efficiency by ±0.05 with IDENTICAL plans. Both
     # numbers are printed; per-rep ratios are in the JSON.
-    sys.path.insert(0, REPO)
+    # the checkout in place of tools/: tools/profile.py would shadow the standard
+    # library's profile module, which pyspark imports (via cProfile)
+    sys.path[0] = REPO
     import bench as bench_mod
 
     best = {n_lo: None, n_hi: None}
