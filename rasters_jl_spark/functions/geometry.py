@@ -85,10 +85,6 @@ class Polygon:
         return r if r[0] == r[-1] else r + (r[0],)
 
     @property
-    def closed_ring(self) -> tuple[tuple[float, float], ...]:
-        return self._close(self.ring)
-
-    @property
     def edges(self) -> list[tuple[float, float, float, float]]:
         out = []
         for ring in (self.ring, *self.holes):
@@ -440,10 +436,13 @@ def polys_values_sql(polys: list[Polygon]) -> str:
 # disjoint and clamp is monotone), and each clamped-line integral has the
 # closed form (H(ub) − H(ua))/m with H(u) = cu²/2 + Y1·max(0,u−Y1) +
 # Y0·min(0,u−Y0), cu = clamp(u, Y0, Y1). EDGE-INDEPENDENT — no
-# Sutherland–Hodgman vertex-list recursion, so it unrolls to pure
-# whole-stage-codegen column math (and symbolically to the DuckDB oracle,
-# in the same operation order, so results are bit-identical). CW rings give
-# the negated area — callers take |Σ| per ring; holes need opposite winding.
+# Sutherland–Hodgman vertex-list recursion, so it is plain column math:
+# unrolled over literal edges (`coverage_clipped`) it stays in whole-stage
+# codegen, folded over an edge array with ``aggregate`` (`zonal_coverage`)
+# it runs interpreted, as higher-order functions are ``CodegenFallback``.
+# The DuckDB twin has the same operation order, so results are
+# bit-identical. CW rings give the negated area — callers take |Σ| per
+# ring; holes need opposite winding.
 
 
 def clip_area_edge_col(exy, x0, x1, y0, y1) -> Column:

@@ -19,9 +19,13 @@ Two grid families:
   ``StableRange``, `src/utils.jl:362-555`, plays: never re-derive coordinates
   from floats downstream).
 
-Every method comes in two flavours: ``*_col`` returning a pyspark Column and
-``*_sql`` returning the identical ANSI-SQL text for the DuckDB oracle. The
-formulas are the same strings of arithmetic so the two can never diverge.
+Most methods come in two flavours: ``*_col`` returning a pyspark Column and
+``*_sql`` returning ANSI-SQL text for the DuckDB oracle, written as the same
+arithmetic. They are two texts, so it is the oracle compare that keeps them
+equal, not their construction. Not every method has a twin
+(:meth:`WebGrid.ring_cells_col` has none), and a twin's text may differ
+where the values agree (`sources/pages.py::lat_col` pre-reduces the hash
+that ``LAT_SQL`` spells directly).
 """
 
 from __future__ import annotations
@@ -115,12 +119,6 @@ class GridSpec:
     @property
     def ymax(self) -> float:
         return max(self.y0 - self.dy / 2.0, self.y0 + (self.ny - 0.5) * self.dy)
-
-    def cell_id_col(self, ix: Column, iy: Column) -> Column:
-        return iy.cast("long") * F.lit(self.nx) + ix.cast("long")
-
-    def cell_id_sql(self, ix: str, iy: str) -> str:
-        return f"(CAST({iy} AS BIGINT) * {self.nx} + CAST({ix} AS BIGINT))"
 
     # -- orientation --
     @property
@@ -240,7 +238,8 @@ class WebGrid:
         """Array of all cell ids within Chebyshev distance ``radius``.
 
         Built with explode-free higher-order functions: flatten of a 2-d
-        sequence — stays in whole-stage codegen.
+        transform over sequences. Higher-order functions are
+        ``CodegenFallback``, so this expression is evaluated interpreted.
         """
         ix = cell % F.lit(self.nx)
         iy = (cell / F.lit(self.nx)).cast("long")

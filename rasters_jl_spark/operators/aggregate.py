@@ -12,9 +12,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the one reducer table: aggregate, resample's and warp's downscale, keyed
+# by the names their callers pass (``mean`` and gdalwarp's ``average``)
 _REDUCERS = {
     "sum": F.sum,
     "mean": F.avg,
+    "average": F.avg,
     "min": F.min,
     "max": F.max,
     "count": F.count,
@@ -24,6 +27,8 @@ _REDUCERS = {
     "med": lambda c: F.percentile(c, F.lit(0.5)),
     "q1": lambda c: F.percentile(c, F.lit(0.25)),
     "q3": lambda c: F.percentile(c, F.lit(0.75)),
+    # gdalwarp -r rms: sqrt of the mean of squares
+    "rms": lambda c: F.sqrt(F.avg(F.col(c) * F.col(c))),
 }
 
 
@@ -49,8 +54,8 @@ def aggregate(
 ) -> DataFrame:
     """Downscale by integer ``scale`` (int, or (sx, sy) for mixed scales).
 
-    - reducer methods (sum/mean/min/max/count/med/q1/q3/mode): groupBy on
-      ``(ix div sx, iy div sy)``.
+    - reducer methods (sum/mean/average/min/max/count/med/q1/q3/rms/mode):
+      groupBy on ``(ix div sx, iy div sy)``.
     - ``skipmissing=True``: NULLs ignored (Spark agg default) — the
       reference's `_reduce_skip` (`src/methods/aggregate.jl:504-537`).
     - ``skipmissing=False``: any NULL in the block → NULL out — the

@@ -2,7 +2,10 @@
 
 resample re-expresses GDAL warp (`ext/RastersArchGDALExt/resample.jl:9-124`)
 as joins: every target cell computes its source coordinate by inverse affine
-(pure column math), then
+(pure column math), then samples or reduces. ``_sample`` (near, bilinear,
+the cubic family) and ``_downscale`` (the aggregates) are the one sampling
+core: `warp` (`operators/warp.py`) feeds them the coordinates of its CRS
+chain in place of the inverse affine.
 
 - ``near``: floor to the owning source cell → one equi hash join. Floor on
   the half-cell-shifted coordinate avoids round-half ambiguity entirely —
@@ -13,8 +16,13 @@ as joins: every target cell computes its source coordinate by inverse affine
   answer to the reference's bit-stability requirement
   (`test/resample.jl:16-27` matches gdalwarp bit-for-bit). Missing source
   cells are skipped and weights renormalised; all-missing → NULL.
-- aggregate methods (average/sum/min/max): every source cell maps to the
-  target cell containing its center → groupBy (used when downscaling).
+- ``cubic``/``cubicspline``/``lanczos``: a k×k stencil explode, one equi
+  left join and a groupBy(target) with the same missing-weight
+  renormalisation.
+- aggregate methods (the one reducer table ``aggregate._REDUCERS``:
+  sum/mean/average/min/max/count/med/q1/q3/rms, plus mode): every source
+  cell maps to the target cell containing its center → groupBy (used when
+  downscaling).
 
 cellarea: closed-form spherical latitude-band area
 (`ext/RastersProjExt/cellarea.jl:56-65`): 2πR²(sin y₂ − sin y₁)·Δx/360.
@@ -32,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rasters_jl_spark.grid import GridSpec
+from rasters_jl_spark.operators.aggregate import _REDUCERS, _aggregate_mode
 
 EARTH_R_KM = 6371.0088
 
@@ -117,41 +126,43 @@ def _target_cells(spark, tgt: GridSpec) -> DataFrame:
     return xs.crossJoin(ys)
 
 
-def resample(
-    raster: DataFrame,
-    src: GridSpec,
-    tgt: GridSpec,
-    method: str = "near",
-) -> DataFrame:
-    """Regrid ``raster`` from ``src`` onto ``tgt``. Returns (ix, iy, value)
-    indexed on the target grid."""
-    spark = raster.sparkSession
-    cells = _target_cells(spark, tgt)
-    xt = tgt.x_col(F.col("jx"))
-    yt = tgt.y_col(F.col("jy"))
+_KERNEL_W = {"cubic": cubic_w_col, "cubicspline": cubicspline_w_col, "lanczos": lanczos_w_col}
+# the gdalwarp -r aggregate surface (`src/extensions.jl:59-75`): a reducer
+# of the one table, or the deterministic mode
+DOWNSCALE = (*_REDUCERS, "mode")
+METHODS = ("near", "bilinear", *KERNEL_OFFSETS, *DOWNSCALE)
 
+
+def _sample(cells: DataFrame, xs, ys, raster: DataFrame, src: GridSpec, method: str) -> DataFrame:
+    """The one target-cell sampler: target cells ``(jx, jy)`` carrying the
+    SOURCE-CRS coordinate Columns ``xs``/``ys`` of their centres → (ix, iy,
+    value) on the target grid. ``resample`` passes the target's own centre
+    Columns, ``warp`` its projection chain as ``F.expr`` text or the hook's
+    pandas-UDF output; all share one join discipline and one semantics."""
+    by_cell = raster.select(F.col("ix").alias("_sx"), F.col("iy").alias("_sy"), "value")
     if method == "near":
-        sx = src.ix_of_x_col(xt)
-        sy = src.iy_of_y_col(yt)
-        t = cells.select(
-            F.col("jx").alias("ix"), F.col("jy").alias("iy"), sx.alias("_sx"), sy.alias("_sy")
-        ).where(src.in_bounds_col(F.col("_sx"), F.col("_sy")))
-        r = raster.select(
-            F.col("ix").alias("_sx"), F.col("iy").alias("_sy"), F.col("value")
-        )
-        return t.join(r, ["_sx", "_sy"], "left").select("ix", "iy", "value")
-
-    if method == "bilinear":
-        fx = (xt - F.lit(src.x0)) / F.lit(src.dx)
-        fy = (yt - F.lit(src.y0)) / F.lit(src.dy)
         t = cells.select(
             F.col("jx").alias("ix"),
             F.col("jy").alias("iy"),
-            F.floor(fx).cast("int").alias("_x0"),
-            F.floor(fy).cast("int").alias("_y0"),
-            (fx - F.floor(fx)).alias("_wx"),
-            (fy - F.floor(fy)).alias("_wy"),
-        )
+            src.ix_of_x_col(xs).alias("_sx"),
+            src.iy_of_y_col(ys).alias("_sy"),
+        ).where(src.in_bounds_col(F.col("_sx"), F.col("_sy")))
+        return t.join(by_cell, ["_sx", "_sy"], "left").select("ix", "iy", "value")
+    if method != "bilinear" and method not in _KERNEL_W:
+        raise ValueError(f"unknown method {method!r}; one of {METHODS}")
+
+    fx = (xs - F.lit(src.x0)) / F.lit(src.dx)
+    fy = (ys - F.lit(src.y0)) / F.lit(src.dy)
+    t = cells.select(
+        F.col("jx").alias("ix"),
+        F.col("jy").alias("iy"),
+        F.floor(fx).cast("int").alias("_x0"),
+        F.floor(fy).cast("int").alias("_y0"),
+        (fx - F.floor(fx)).alias("_wx"),
+        (fy - F.floor(fy)).alias("_wy"),
+    )
+
+    if method == "bilinear":
         out = t
         for tag, (ddx, ddy) in {"00": (0, 0), "10": (1, 0), "01": (0, 1), "11": (1, 1)}.items():
             r = raster.select(
@@ -161,91 +172,74 @@ def resample(
             )
             out = out.join(r, ["_x0", "_y0"], "left")
         wx, wy = F.col("_wx"), F.col("_wy")
-        w00 = (1 - wx) * (1 - wy)
-        w10 = wx * (1 - wy)
-        w01 = (1 - wx) * wy
-        w11 = wx * wy
-        num = F.lit(0.0)
-        den = F.lit(0.0)
-        for tag, w in (("00", w00), ("10", w10), ("01", w01), ("11", w11)):
+        weights = {
+            "00": (1 - wx) * (1 - wy),
+            "10": wx * (1 - wy),
+            "01": (1 - wx) * wy,
+            "11": wx * wy,
+        }
+        num, den = F.lit(0.0), F.lit(0.0)
+        for tag, w in weights.items():
             v = F.col(f"_v{tag}")
             num = num + F.when(v.isNotNull(), w * v).otherwise(F.lit(0.0))
             den = den + F.when(v.isNotNull(), w).otherwise(F.lit(0.0))
         val = F.when(den > 0, num / den).otherwise(F.lit(None))
         return out.select("ix", "iy", val.alias("value"))
 
-    if method in ("cubic", "cubicspline", "lanczos"):
-        # k×k stencil (4×4 cubic family, 6×6 lanczos): explode the (di, dj)
-        # offsets per target cell, ONE equi left join to the source raster,
-        # groupBy(target) with missing-skipping weight renormalisation
-        # (same discipline as bilinear). One shuffle; the fan-out is narrow.
-        wfun = {
-            "cubic": cubic_w_col,
-            "cubicspline": cubicspline_w_col,
-            "lanczos": lanczos_w_col,
-        }[method]
-        fx = (xt - F.lit(src.x0)) / F.lit(src.dx)
-        fy = (yt - F.lit(src.y0)) / F.lit(src.dy)
-        t = cells.select(
-            F.col("jx").alias("ix"),
-            F.col("jy").alias("iy"),
-            F.floor(fx).cast("int").alias("_x0"),
-            F.floor(fy).cast("int").alias("_y0"),
-            (fx - F.floor(fx)).alias("_wx"),
-            (fy - F.floor(fy)).alias("_wy"),
-        )
-        offs = F.array(*[F.lit(i) for i in KERNEL_OFFSETS[method]])
-        n = t.select("*", F.explode(offs).alias("_di"))
-        n = n.select("*", F.explode(offs).alias("_dj"))
-        n = n.withColumn("_sx", (F.col("_x0") + F.col("_di")).cast("int")).withColumn(
-            "_sy", (F.col("_y0") + F.col("_dj")).cast("int")
-        )
-        r = raster.select(
-            F.col("ix").alias("_sx"), F.col("iy").alias("_sy"), F.col("value")
-        )
-        j = n.join(r, ["_sx", "_sy"], "left")
-        w = wfun(F.col("_di").cast("double") - F.col("_wx")) * wfun(
-            F.col("_dj").cast("double") - F.col("_wy")
-        )
-        v = F.col("value")
-        agg = j.groupBy("ix", "iy").agg(
-            F.sum(F.when(v.isNotNull(), w * v).otherwise(F.lit(0.0))).alias("_num"),
-            F.sum(F.when(v.isNotNull(), w).otherwise(F.lit(0.0))).alias("_den"),
-            F.count(v).alias("_cnt"),
-        )
-        out_v = F.when(
-            (F.col("_cnt") > 0) & (F.col("_den") != 0.0), F.col("_num") / F.col("_den")
-        )
-        return agg.select("ix", "iy", out_v.alias("value"))
+    # k×k stencil (4×4 cubic family, 6×6 lanczos): explode the (di, dj)
+    # offsets per target cell, ONE equi left join to the source raster,
+    # groupBy(target) with missing-skipping weight renormalisation (same
+    # discipline as bilinear). One shuffle; the fan-out is narrow.
+    wfun = _KERNEL_W[method]
+    offs = F.array(*[F.lit(i) for i in KERNEL_OFFSETS[method]])
+    n = t.select("*", F.explode(offs).alias("_di"))
+    n = n.select("*", F.explode(offs).alias("_dj"))
+    n = n.withColumn("_sx", (F.col("_x0") + F.col("_di")).cast("int")).withColumn(
+        "_sy", (F.col("_y0") + F.col("_dj")).cast("int")
+    )
+    j = n.join(by_cell, ["_sx", "_sy"], "left")
+    w = wfun(F.col("_di").cast("double") - F.col("_wx")) * wfun(
+        F.col("_dj").cast("double") - F.col("_wy")
+    )
+    v = F.col("value")
+    agg = j.groupBy("ix", "iy").agg(
+        F.sum(F.when(v.isNotNull(), w * v).otherwise(F.lit(0.0))).alias("_num"),
+        F.sum(F.when(v.isNotNull(), w).otherwise(F.lit(0.0))).alias("_den"),
+        F.count(v).alias("_cnt"),
+    )
+    out_v = F.when((F.col("_cnt") > 0) & (F.col("_den") != 0.0), F.col("_num") / F.col("_den"))
+    return agg.select("ix", "iy", out_v.alias("value"))
 
-    if method in ("average", "sum", "min", "max", "count", "med", "q1", "q3", "mode", "rms"):
-        # downscale: source cell center → owning target cell, groupBy
-        # (full GDAL -r aggregate surface, `src/extensions.jl:59-75`)
+
+def _downscale(raster: DataFrame, tix, tiy, tgt: GridSpec, method: str) -> DataFrame:
+    """The one downscale path: ``tix``/``tiy`` are the target-index Columns
+    of each SOURCE cell centre; cells landing off the target grid drop, the
+    rest reduce per target cell with one groupBy (two for ``mode``)."""
+    mapped = raster.select(tix.alias("tix"), tiy.alias("tiy"), "value").where(
+        tgt.in_bounds_col(F.col("tix"), F.col("tiy"))
+    )
+    mapped = mapped.select(F.col("tix").alias("ix"), F.col("tiy").alias("iy"), "value")
+    if method == "mode":
+        return _aggregate_mode(mapped, 1, skipmissing=True)
+    red = _REDUCERS[method]
+    return mapped.groupBy("ix", "iy").agg(red("value").cast("double").alias("value"))
+
+
+def resample(
+    raster: DataFrame,
+    src: GridSpec,
+    tgt: GridSpec,
+    method: str = "near",
+) -> DataFrame:
+    """Regrid ``raster`` from ``src`` onto ``tgt``. Returns (ix, iy, value)
+    indexed on the target grid; ``method`` is one of :data:`METHODS`."""
+    if method in DOWNSCALE:
+        # source cell center → owning target cell
         sx = src.x_col(F.col("ix"))
         sy = src.y_col(F.col("iy"))
-        mapped = raster.select(
-            tgt.ix_of_x_col(sx).alias("tix"), tgt.iy_of_y_col(sy).alias("tiy"), "value"
-        ).where(tgt.in_bounds_col(F.col("tix"), F.col("tiy")))
-        mapped = mapped.select(F.col("tix").alias("ix"), F.col("tiy").alias("iy"), "value")
-        if method == "mode":
-            from rasters_jl_spark.operators.aggregate import _aggregate_mode
-
-            return _aggregate_mode(mapped, 1, skipmissing=True)
-        red = {
-            "average": F.avg,
-            "sum": F.sum,
-            "min": F.min,
-            "max": F.max,
-            "count": F.count,
-            "med": lambda c: F.percentile(c, F.lit(0.5)),
-            "q1": lambda c: F.percentile(c, F.lit(0.25)),
-            "q3": lambda c: F.percentile(c, F.lit(0.75)),
-            # gdalwarp -r rms: sqrt of the mean of squares
-            "rms": lambda c: F.sqrt(F.avg(F.col(c) * F.col(c))),
-        }[method]
-        return mapped.groupBy("ix", "iy").agg(red("value").cast("double").alias("value"))
-
-    raise ValueError(f"unknown method {method!r}")
+        return _downscale(raster, tgt.ix_of_x_col(sx), tgt.iy_of_y_col(sy), tgt, method)
+    cells = _target_cells(raster.sparkSession, tgt)
+    return _sample(cells, tgt.x_col(F.col("jx")), tgt.y_col(F.col("jy")), raster, src, method)
 
 
 def cellarea(spark, grid: GridSpec, radius_km: float = EARTH_R_KM) -> DataFrame:

@@ -12,10 +12,13 @@ the documented hook for database-backed CRSs.
 
 Plan shape (scale-first): the TARGET index space is generated (no data),
 each target center is pushed through inverse(tgt.crs) ∘ forward(src.crs)
-to fractional source coordinates, and sampling is the same equi-join
-discipline as `resample` — `near` is one broadcast-able left join on the
-integer source cell, `bilinear` four stencil joins with missing-weight
-renormalisation. One shuffle family, no per-cell Python, no driver loops.
+to fractional source coordinates, and sampling is `resample`'s own core
+(`operators/resample.py::_sample`, `_downscale`): `near` is one
+broadcast-able left join on the integer source cell, `bilinear` four
+stencil joins with missing-weight renormalisation, the cubic family one
+k×k stencil join, and the aggregate methods map each source cell forward
+to its target cell and reduce. One shuffle family, no per-cell Python, no
+driver loops.
 
 Projection formulas are built ONCE as SQL text (evaluated via F.expr in
 Spark and verbatim in the DuckDB oracle), so the two engines share one
@@ -31,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rasters_jl_spark.grid import GridSpec
+from rasters_jl_spark.operators.resample import DOWNSCALE, _downscale, _sample, _target_cells
 
 WGS84_R_M = 6378137.0  # spherical Web-Mercator / sinusoidal radius (meters)
 
@@ -121,55 +125,6 @@ def source_coord_sql(src: GridSpec, tgt: GridSpec, jx: str, jy: str) -> tuple[st
     return lonlat_to_crs_sql(src.crs, lon, lat)
 
 
-def _sample(cells: DataFrame, xs_col, ys_col, raster: DataFrame, src: GridSpec, method: str) -> DataFrame:
-    """Shared sampling stage: target cells carrying SOURCE-CRS coordinate
-    Columns → near / bilinear equi joins against the source raster. Both
-    the analytic (codegen SQL) and hook (pandas-UDF transform) paths land
-    here, so they share one join discipline and one semantics."""
-    if method == "near":
-        t = cells.select(
-            F.col("jx").alias("ix"),
-            F.col("jy").alias("iy"),
-            src.ix_of_x_col(xs_col).alias("_sx"),
-            src.iy_of_y_col(ys_col).alias("_sy"),
-        ).where(src.in_bounds_col(F.col("_sx"), F.col("_sy")))
-        r = raster.select(F.col("ix").alias("_sx"), F.col("iy").alias("_sy"), "value")
-        return t.join(r, ["_sx", "_sy"], "left").select("ix", "iy", "value")
-
-    fx = (xs_col - F.lit(src.x0)) / F.lit(src.dx)
-    fy = (ys_col - F.lit(src.y0)) / F.lit(src.dy)
-    t = cells.select(
-        F.col("jx").alias("ix"),
-        F.col("jy").alias("iy"),
-        F.floor(fx).cast("int").alias("_x0"),
-        F.floor(fy).cast("int").alias("_y0"),
-        (fx - F.floor(fx)).alias("_wx"),
-        (fy - F.floor(fy)).alias("_wy"),
-    )
-    out = t
-    for tag, (ddx, ddy) in {"00": (0, 0), "10": (1, 0), "01": (0, 1), "11": (1, 1)}.items():
-        r = raster.select(
-            (F.col("ix") - ddx).alias("_x0"),
-            (F.col("iy") - ddy).alias("_y0"),
-            F.col("value").alias(f"_v{tag}"),
-        )
-        out = out.join(r, ["_x0", "_y0"], "left")
-    wx, wy = F.col("_wx"), F.col("_wy")
-    weights = {
-        "00": (1 - wx) * (1 - wy),
-        "10": wx * (1 - wy),
-        "01": (1 - wx) * wy,
-        "11": wx * wy,
-    }
-    num, den = F.lit(0.0), F.lit(0.0)
-    for tag, w in weights.items():
-        v = F.col(f"_v{tag}")
-        num = num + F.when(v.isNotNull(), w * v).otherwise(F.lit(0.0))
-        den = den + F.when(v.isNotNull(), w).otherwise(F.lit(0.0))
-    val = F.when(den > 0, num / den).otherwise(F.lit(None))
-    return out.select("ix", "iy", val.alias("value"))
-
-
 def warp(
     raster: DataFrame,
     src: GridSpec,
@@ -178,7 +133,8 @@ def warp(
     inverse_transform=None,
 ) -> DataFrame:
     """Reproject ``raster`` from ``src`` (in ``src.crs``) onto ``tgt`` (in
-    ``tgt.crs``). Returns (ix, iy, value) indexed on the target grid.
+    ``tgt.crs``). Returns (ix, iy, value) indexed on the target grid;
+    ``method`` is one of resample's :data:`METHODS`.
     Outside-extent behaviour: ``near`` DROPS target cells mapping outside
     the source grid (GDAL's nodata, minus the rows); ``bilinear`` keeps a
     NULL-value row when the whole 4-corner stencil is missing (the
@@ -190,15 +146,21 @@ def warp(
     as an Arrow-batched pandas UDF over the GENERATED target index space —
     |tgt| rows, never the data — and the sampling joins are byte-identical
     to the analytic path (same `_sample`). Valid for near/bilinear."""
-    spark = raster.sparkSession
-    xs_cells = spark.range(0, tgt.nx).select(F.col("id").cast("int").alias("jx"))
-    ys_cells = spark.range(0, tgt.ny).select(F.col("id").cast("int").alias("jy"))
-    cells = xs_cells.crossJoin(ys_cells)
+    if inverse_transform is not None and method not in ("near", "bilinear"):
+        raise ValueError("inverse_transform hook supports near|bilinear")
 
+    if method in DOWNSCALE:
+        # DOWNSCALE direction: each SOURCE cell center maps through
+        # forward(tgt.crs) ∘ inverse(src.crs) to its owning target cell,
+        # then one partial+final groupBy — the gdalwarp -r aggregate
+        # surface across a CRS change. No join at all: the transform is
+        # column math on the data side, the shuffle is the aggregation.
+        xt, yt = _target_coord_of_source_sql(src, tgt, "ix", "iy")
+        tix, tiy = F.expr(tgt.ix_of_x_sql(xt)), F.expr(tgt.iy_of_y_sql(yt))
+        return _downscale(raster, tix, tiy, tgt, method)
+
+    cells = _target_cells(raster.sparkSession, tgt)
     if inverse_transform is not None:
-        if method not in ("near", "bilinear"):
-            raise ValueError("inverse_transform hook supports near|bilinear")
-
         @F.pandas_udf("x double, y double")
         def _tx(xt: pd.Series, yt: pd.Series) -> pd.DataFrame:
             sx, sy = inverse_transform(xt.to_numpy(), yt.to_numpy())
@@ -210,34 +172,7 @@ def warp(
         return _sample(withc, F.col("_c.x"), F.col("_c.y"), raster, src, method)
 
     xs, ys = source_coord_sql(src, tgt, "jx", "jy")
-    if method in ("near", "bilinear"):
-        return _sample(cells, F.expr(xs), F.expr(ys), raster, src, method)
-
-    if method in ("average", "sum", "min", "max", "count", "med", "rms"):
-        # DOWNSCALE direction: each SOURCE cell center maps through
-        # forward(tgt.crs) ∘ inverse(src.crs) to its owning target cell,
-        # then one partial+final groupBy — the gdalwarp -r aggregate
-        # surface across a CRS change. No join at all: the transform is
-        # column math on the data side, the shuffle is the aggregation.
-        xt_src, yt_src = _target_coord_of_source_sql(src, tgt, "ix", "iy")
-        mapped = raster.select(
-            F.expr(tgt.ix_of_x_sql(xt_src)).alias("tix"),
-            F.expr(tgt.iy_of_y_sql(yt_src)).alias("tiy"),
-            "value",
-        ).where(tgt.in_bounds_col(F.col("tix"), F.col("tiy")))
-        mapped = mapped.select(F.col("tix").alias("ix"), F.col("tiy").alias("iy"), "value")
-        red = {
-            "average": F.avg,
-            "sum": F.sum,
-            "min": F.min,
-            "max": F.max,
-            "count": F.count,
-            "med": lambda c: F.percentile(c, F.lit(0.5)),
-            "rms": lambda c: F.sqrt(F.avg(F.col(c) * F.col(c))),
-        }[method]
-        return mapped.groupBy("ix", "iy").agg(red("value").cast("double").alias("value"))
-
-    raise ValueError(f"warp method must be near|bilinear|<aggregate>, got {method!r}")
+    return _sample(cells, F.expr(xs), F.expr(ys), raster, src, method)
 
 
 def _target_coord_of_source_sql(src: GridSpec, tgt: GridSpec, ix: str, iy: str) -> tuple[str, str]:

@@ -6,8 +6,8 @@ Spark plan is ONE job over all geometries:
 
     pages ⋈ polygon-cover (equi hash join on coarse cell — broadcast)
           → PIP refine on boundary cells (higher-order expr over their edges)
+          ∪ one NULL-valued row per polygon (empty zones, `emptyval`)
           → groupBy(geom_id).agg(...)
-          → left join back to polygons (empty zones, `emptyval`)
 
 `skipmissing=true` is Spark's NULL-ignoring aggregation; `skipmissing=false`
 adds a has-null guard in the same pass (`src/methods/zonal.jl:155-165`).
@@ -78,23 +78,23 @@ def zonal_pages(
     over the partitions of a shuffled join, but the cover join is a
     broadcast probe that never shuffles the pages (:func:`spatial_join_pages`).
     """
-    joined = spatial_join_pages(pages, polys)
+    joined = spatial_join_pages(pages, polys).select("geom_id", value_col)
+    # one NULL-valued row per polygon: every zone forms a group, so an empty
+    # zone's count is 0 and its stats NULL with no join back to the polygons
+    empty = local_df(
+        pages.sparkSession, [(p.geom_id,) for p in polys], StructType([POLY_SCHEMA["geom_id"]])
+    ).coalesce(1)
+    empty = empty.select("geom_id", F.lit(None).cast(pages.schema[value_col].dataType).alias(value_col))
     v = F.col(value_col)
-    agg = joined.groupBy("geom_id").agg(
+    # one partition, as the result is one row per polygon: a batch of the
+    # tile-ledger job writes one file, not one per shuffle partition
+    out = joined.union(empty).groupBy("geom_id").agg(
         F.count(v).alias("n_pages"),
         F.sum(v).alias("sum_val"),
         F.avg(v).alias("mean_val"),
         F.min(v).alias("min_val"),
         F.max(v).alias("max_val"),
-    )
-    # one partition, as the result is one row per polygon: a batch of the
-    # tile-ledger job writes one file, not one per LocalTableScan slice
-    all_geoms = local_df(
-        pages.sparkSession, [(p.geom_id,) for p in polys], StructType([POLY_SCHEMA["geom_id"]])
     ).coalesce(1)
-    out = all_geoms.join(F.broadcast(agg), "geom_id", "left").withColumn(
-        "n_pages", F.coalesce(F.col("n_pages"), F.lit(0))
-    )
     if emptyval is not None:
         for c in ("sum_val", "mean_val", "min_val", "max_val"):
             out = out.withColumn(c, F.coalesce(F.col(c), F.lit(emptyval)))

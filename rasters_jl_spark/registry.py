@@ -208,35 +208,41 @@ _DEFS: dict[str, tuple[QueryFn, str | None]] = {
 
 
 # The driver window: the first 50 REGISTRY entries, recorded each round.
-# (a) knn (pinned query side, rank-1 radius projection, evidence-gated
-#     ring/brute tiers); (b) the round-8 rewrites of the read_documents
-#     consumers; (c) the page cover join (one broadcast form, no salt);
-#     (d) the raster cover join (one classified block cover, one mask
-#     form); (e) the other queries whose plans read a driver-built table,
-#     now a JVM local relation (session.local_df). Left out for room:
+# (a) the one raster resampling core (resample and warp share one
+#     target-cell sampler, one downscale path and aggregate's reducer
+#     table); (b) knn (pinned query side, rank-1 radius projection,
+#     evidence-gated ring/brute tiers); (c) the round-8 rewrites of the
+#     read_documents consumers; (d) the page cover join (one broadcast
+#     form, no salt; zonal_pages' empty zones from its one aggregate);
+#     (e) the raster cover join (one classified block cover, one mask
+#     form); (f) line walks on the driver and one more query whose plan
+#     reads a driver-built table (session.local_df). Left out for room:
 #     dedup_components, dedup_spans, dedup_spans_strip and
 #     simhash_wide_pairs, whose one such table is _aug_near's, also read
-#     by (b).
+#     by (c), and the other local_df readers (bpe_*, unigram_*,
+#     langid_fasttext, url_blocklist, blocklist_word, scaled_read,
+#     replace_missing_stack, mosaic_*, explicit_extract).
 _DRIVER_WINDOW = [
     # (a)
-    "knn",
+    "resample_near", "resample_bilinear", "resample_agg", "resample_cubic",
+    "resample_cubicspline", "resample_lanczos", "resample_rms",
+    "warp_mercator", "warp_sinusoidal", "warp_agg", "warp_utm", "warp_utm_agg", "warp_hook",
+    "aggregate_mean", "aggregate_med", "aggregate_mode",
     # (b)
-    "dedup_minhash", "dedup_exact", "simhash_pairs", "decontaminate", "tfidf_topk",
+    "knn",
     # (c)
-    "zonal_pages", "zonal_pages_salted", "spatial_join_pip", "stream_zonal_stats",
+    "dedup_minhash", "dedup_exact", "simhash_pairs", "decontaminate", "tfidf_topk",
     # (d)
+    "zonal_pages", "zonal_pages_salted", "spatial_join_pip", "stream_zonal_stats",
+    # (e)
     "mask_geom", "boolmask", "boolmask_multipoly", "boolmask_holed",
     "boolmask_touches", "boolmask_inside", "missingmask",
     "extract_polygons", "extract_many", "extract_nested",
     "rasterize_polygons", "rasterize_many", "rasterize_multilayer", "rasterize_prod",
     "zonal_stack", "zonal_many", "zonal_northup", "zonal_median", "zonal_coverage",
     "coverage_polygon", "coverage_polygon_union",
-    # (e)
-    "bpe_train", "bpe_train_local", "bpe_train_batched", "bpe_tokenize",
-    "unigram_lm_train", "unigram_tokenize", "langid_fasttext",
-    "url_blocklist", "blocklist_word", "scaled_read", "replace_missing_stack",
-    "mosaic_first", "mosaic_last", "mosaic_mean", "mosaic_stack",
-    "explicit_extract", "explicit_cellarea", "extract_lines", "rasterize_lines",
+    # (f)
+    "extract_lines", "rasterize_lines", "explicit_cellarea",
 ]
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {

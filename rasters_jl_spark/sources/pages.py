@@ -50,6 +50,23 @@ def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
+def warc_ts_col(doc_id: F.Column) -> F.Column:
+    """Synthetic crawl timestamp: 2025-01-01 plus ``doc_id % 86400`` s."""
+    return F.to_timestamp(F.lit("2025-01-01 00:00:00")) + F.make_interval(
+        secs=(doc_id % 86400).cast("double")
+    )
+
+
+def with_geotag(df: DataFrame, res: int = PAGES_RES, tile_res: int = TILE_RES) -> DataFrame:
+    """The one geotag rule, shared by the batch and streaming paths:
+    lat/lon from ``doc_id``, the fine ``cell`` at ``res`` and its coarse
+    ``tile_id`` at ``tile_res``."""
+    g = WebGrid(res)
+    out = df.withColumn("lat", lat_col(F.col("doc_id"))).withColumn("lon", lon_col(F.col("doc_id")))
+    out = out.withColumn("cell", g.cell_col(F.col("lon"), F.col("lat")))
+    return out.withColumn("tile_id", g.parent_cell_col(F.col("cell"), tile_res))
+
+
 def geotag_pages(docs: DataFrame, res: int = PAGES_RES, tile_res: int = TILE_RES) -> DataFrame:
     """documents → pages_geo with url/warc_ts/html synthesised per F1 and
     lat/lon/cell/tile assigned deterministically.
@@ -59,21 +76,13 @@ def geotag_pages(docs: DataFrame, res: int = PAGES_RES, tile_res: int = TILE_RES
     (the engine's explicit partition column — the reference's RasterSeries
     dim, SURVEY.md §1.4).
     """
-    g = WebGrid(res)
     doc_id = F.col("doc_id")
     out = (
         docs.withColumn("url", F.concat(F.lit("https://example.org/d/"), doc_id.cast("string")))
-        .withColumn(
-            "warc_ts",
-            F.to_timestamp(F.lit("2025-01-01 00:00:00")) + F.make_interval(secs=(doc_id % 86400).cast("double")),
-        )
+        .withColumn("warc_ts", warc_ts_col(doc_id))
         .withColumn("html", F.encode(F.concat(F.lit("<html>"), F.col("text"), F.lit("</html>")), "UTF-8"))
-        .withColumn("lat", lat_col(doc_id))
-        .withColumn("lon", lon_col(doc_id))
     )
-    out = out.withColumn("cell", g.cell_col(F.col("lon"), F.col("lat")))
-    out = out.withColumn("tile_id", g.parent_cell_col(F.col("cell"), tile_res))
-    return out
+    return with_geotag(out, res, tile_res)
 
 
 def pages_geo(spark: SparkSession, sf_dir: str, res: int = PAGES_RES) -> DataFrame:

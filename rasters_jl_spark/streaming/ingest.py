@@ -18,8 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rasters_jl_spark.grid import PAGES_RES, TILE_RES, WebGrid
-from rasters_jl_spark.sources.pages import lat_col, lon_col
+from rasters_jl_spark.grid import PAGES_RES, TILE_RES
+from rasters_jl_spark.sources.pages import warc_ts_col, with_geotag
 
 
 def stream_pages(
@@ -32,21 +32,10 @@ def stream_pages(
 
 
 def geotag_stream(pages: DataFrame, res: int = PAGES_RES) -> DataFrame:
-    """Identical geotag math as the batch path (shared column builders)."""
-    g = WebGrid(res)
+    """The batch path's geotag rule (:func:`sources.pages.with_geotag`)."""
     if "warc_ts" not in pages.columns:
-        pages = pages.withColumn(
-            "warc_ts",
-            F.to_timestamp(F.lit("2025-01-01 00:00:00"))
-            + F.make_interval(secs=(F.col("doc_id") % 86400).cast("double")),
-        )
-    out = (
-        pages.withColumn("lat", lat_col(F.col("doc_id")))
-        .withColumn("lon", lon_col(F.col("doc_id")))
-        .withColumn("cell", g.cell_col(F.col("lon"), F.col("lat")))
-        .withColumn("tile_id", g.parent_cell_col(F.col("cell"), TILE_RES))
-    )
-    return out
+        pages = pages.withColumn("warc_ts", warc_ts_col(F.col("doc_id")))
+    return with_geotag(pages, res, TILE_RES)
 
 
 def windowed_cell_counts(

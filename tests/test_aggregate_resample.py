@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from rasters_jl_spark.grid import GridSpec
 from rasters_jl_spark.operators.aggregate import aggregate, disaggregate
-from rasters_jl_spark.operators.resample import cellarea, resample
+from rasters_jl_spark.operators.resample import DOWNSCALE, METHODS, cellarea, resample
 
 
 def _d(df, col="value"):
@@ -203,6 +203,29 @@ def test_resample_med_mode_match_aggregate(spark, grid6):
         got = _d(resample(grid6, src, tgt, method))
         want = _d(aggregate(grid6, 2, method))
         assert got == want, method
+
+
+@pytest.mark.parametrize("method", METHODS)
+def test_warp_between_4326_grids_equals_resample(grid6, method):
+    """warp and resample share one sampling core: between two EPSG:4326
+    grids warp's CRS chain is identity text, so every method returns the
+    same cells with bit-identical values (``==``, no tolerance). The grid
+    steps are decimal literals in warp's SQL text and doubles in
+    resample's Columns."""
+    from rasters_jl_spark.operators.warp import warp
+
+    src = GridSpec(x0=0.5, y0=0.5, dx=1.0, dy=1.0, nx=6, ny=6)
+    if method in DOWNSCALE:
+        tgt = GridSpec(x0=0.95, y0=0.8, dx=1.9, dy=1.7, nx=3, ny=4)
+    else:
+        tgt = GridSpec(x0=0.35, y0=0.2, dx=0.7, dy=0.65, nx=9, ny=10)
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=lambda t: t[:2])
+
+    want = rows(resample(grid6, src, tgt, method))
+    assert sum(v is not None for _, _, v in want) >= 9, method
+    assert rows(warp(grid6, src, tgt, method)) == want
 
 
 def test_aggregate_mixed_scales_and_locus(spark, grid6):

@@ -27,11 +27,11 @@ def test_zonal_pages_record(spark, sf_dir, tool):
     assert rec["jobs"] >= 1 and rec["stages"] >= rec["jobs"]
     assert 0 <= rec["driver_s"] <= rec["wall_s"]
     assert rec["rows"] == len(FX.POLYS_GEO)  # one row per polygon
-    # the counts the earlier explain tool printed for zonal_pages: one
-    # shuffle (the final groupBy), two broadcast joins, no Python
+    # zonal_pages' final plan: one shuffle (the final groupBy), one
+    # broadcast join (the cover; empty zones need no join back), no Python
     assert rec["plan"] == {
-        "ShuffleExchange": 1, "BroadcastExchange": 4, "BroadcastHashJoin": 4,
-        "SortMergeJoin": 0, "BroadcastNestedLoop": 0, "CodegenSpans": 4,
+        "ShuffleExchange": 1, "BroadcastExchange": 2, "BroadcastHashJoin": 2,
+        "SortMergeJoin": 0, "BroadcastNestedLoop": 0, "CodegenSpans": 6,
         "Python/ArrowEval": 0, "PushedFilters": 0, "HashAggregate": 2,
     }
     assert "isFinalPlan=true" in plans

@@ -230,6 +230,24 @@ def test_empty_polygon_list_zonal_pages(spark):
     assert out.collect() == []
 
 
+def test_zonal_pages_empty_zone(spark):
+    """A polygon holding no page still gets its row from the one aggregate:
+    count 0 and NULL stats, or ``emptyval`` (`src/methods/zonal.jl:133-152`)."""
+    from rasters_jl_spark.operators.zonal import zonal_pages
+
+    pages = spark.createDataFrame(
+        [(1, 10.0, 20.0, 7), (2, 10.5, 20.5, 9)], PAGE_SCHEMA + ", n_chars int"
+    )
+    full = Polygon(1, ((9.0, 19.0), (12.0, 19.0), (12.0, 22.0), (9.0, 22.0)))
+    empty = Polygon(2, ((-50.0, -40.0), (-45.0, -40.0), (-45.0, -35.0), (-50.0, -35.0)))
+
+    def rows(**kw):
+        return {r["geom_id"]: tuple(r)[1:] for r in zonal_pages(pages, [full, empty], **kw).collect()}
+
+    assert rows() == {1: (2, 16, 8.0, 7, 9), 2: (0, None, None, None, None)}
+    assert rows(emptyval=-1) == {1: (2, 16, 8.0, 7, 9), 2: (0, -1, -1.0, -1, -1)}
+
+
 def _star(rng, cx, cy, r, n, snap):
     """Seeded non-convex star; vertices on the cover lattice where ``snap``."""
     ang = np.sort(rng.uniform(0.0, 2 * np.pi, n))

@@ -24,6 +24,8 @@ import sys
 # the checkout in place of tools/: tools/profile.py would shadow the standard
 # library's profile module, which pyspark imports (via cProfile)
 sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# Python workers (UDFs) import this checkout's package too
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [sys.path[0], os.environ.get("PYTHONPATH")]))
 
 import numpy as np
 from pyspark.sql import functions as F

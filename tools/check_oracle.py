@@ -9,6 +9,7 @@ Usage: python tools/check_oracle.py [names...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 from pathlib import Path
 
@@ -17,6 +18,8 @@ import duckdb
 # the checkout in place of tools/: tools/profile.py would shadow the standard
 # library's profile module, which pyspark imports (via cProfile)
 sys.path[0] = str(Path(__file__).resolve().parent.parent)
+# Python workers (UDFs) import this checkout's package too
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [sys.path[0], os.environ.get("PYTHONPATH")]))
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [

@@ -19,6 +19,8 @@ import time
 # the checkout in place of tools/: tools/profile.py would shadow the standard
 # library's profile module, which pyspark imports (via cProfile)
 sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# Python workers (UDFs) import this checkout's package too
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [sys.path[0], os.environ.get("PYTHONPATH")]))
 import bench  # noqa: E402
 
 GATE_MS = float(os.environ.get("SPARK_GRAFT_BENCH_BURN_GATE_MS", "135"))

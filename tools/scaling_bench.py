@@ -18,6 +18,8 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# Python workers (UDFs) import this checkout's package too
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")]))
 
 
 def run_bench(cpus: int, expand: int, sf_dir: str, scaling: bool = True, job: str = "zonal") -> dict:
