@@ -4,21 +4,23 @@ the reference's closest machinery is the `Near` selector, `src/lookup.jl`).
 Exact k-nearest pages per query point, planar squared-degree distance
 (engine-defined semantics so the brute-force oracle agrees bit-for-bit):
 
-queries: projected to (q_id, qlat, qlon) and pinned once on entry; every
-         consumer below reads the pin, so the caller's query plan runs
-         once per call;
+queries: projected to (q_id, qlat, qlon) and pinned once on entry; the
+         phase-1 ring explode and the one NULL row per query both read
+         the pin, so the caller's query plan runs once per call;
 phase 1: candidates from rings ≤ R0 around each query cell, R0 sized from
-         global page density (one scalar aggregate, not a collect loop);
-         the same window pass yields rank AND the kth distance, and when
-         the implied exact radius R_q = ceil(sqrt(d_k)/step)+1 fits in R0
-         the top-k is emitted DIRECTLY from the pinned phase-1 top-k — the
-         common case costs one pages scan and one q_id exchange. R_q is
-         constant within a query, so the per-query radius table is the
-         rank-1 projection of that top-k: no aggregate, no exchange;
-routing: one small action over the two pins counts the queries each later
-         tier needs, and a tier is planned only when its count is nonzero —
-         a batch phase 1 fully answers returns a plan with no ring or
-         brute subtree;
+         global page density (one scalar aggregate, not a collect loop),
+         plus one NULL candidate per query ranked last; the same window
+         pass yields rank AND the kth distance, and when the implied exact
+         radius R_q = ceil(sqrt(d_k)/step)+1 fits in R0 the top-k is
+         emitted DIRECTLY from the pinned phase-1 top-k — the common case
+         costs one pages scan and one q_id exchange. Every query has a
+         rank-1 row there (the NULL row when it has no candidate), and R_q
+         is constant within a query, so the rank-1 rows are the later
+         tiers' query table: no aggregate, no join back to the queries;
+routing: the eager phase-1 pin counts, in its own pass (an Observation
+         over the rank-1 rows), the queries each later tier needs, and a
+         tier is planned only when its count is nonzero — a batch phase 1
+         fully answers returns a plan with no ring or brute subtree;
 phase 2: queries whose radius GREW past R0 (up to RING_MAX) re-join rings
          ≤ R_q;
 brute tier: queries phase 2 cannot satisfy within RING_MAX cells (<k
@@ -32,14 +34,14 @@ lies within R_q rings of the query cell. All fan-out is `explode` of
 generated ring arrays capped at (2·RING_MAX+1)² elements — no driver
 iteration, scales with #queries.
 
-Not lazy: under AQE, phase 1 (its broadcast and shuffle-map stages) and the
-routing action run inside `knn_pages()`; the returned frame's action reads
-the pinned top-k plus whichever later tiers were planned.
+Not lazy: phase 1 is pinned eagerly inside `knn_pages()` (under AQE its
+broadcast, shuffle-map and result stages); the returned frame's action
+reads the pinned top-k plus whichever later tiers were planned.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from rasters_jl_spark.grid import WebGrid
@@ -107,23 +109,26 @@ def knn_pages(
 ) -> DataFrame:
     """For each (q_id, qlat, qlon) query row: the k nearest pages.
 
-    ``pages`` must carry (doc_id, lat, lon, cell) at resolution ``res``
-    (defaults to the resolution implied by the cell column — pass it).
+    ``pages`` must carry (doc_id, lat, lon, cell) with ``cell`` at
+    resolution ``res``; left None, ``res`` is ``grid.PAGES_RES``, not read
+    from the cell column. A ``res`` other than the cell column's gives
+    wrong neighbours: the rings are built on the wrong grid.
     ``n_pages`` sizes the phase-1 ring radius from density; ``n_queries``
     gates the phase-1 broadcast hint (exploded queries×ring-cells rows
     must fit in a broadcast relation). Both are sizing hints only: which
     tiers run is decided from the pinned data, never from them. Pass the
     catalog row counts when known (at 10¹² scale that's table statistics,
     not an online count) — left None, one count() action each runs here.
-    Phase 1 and the routing action run inside this call (see the module
-    docstring). Returns (q_id, rank, doc_id, dist2).
+    The eager phase-1 pin, which also counts the later tiers' queries,
+    runs inside this call (see the module docstring). Returns (q_id,
+    rank, doc_id, dist2).
     """
     from rasters_jl_spark.grid import PAGES_RES
 
     g = WebGrid(res if res is not None else PAGES_RES)
-    # The query side is read by the phase-1 ring join, the routing action
-    # and the later tiers; pinned here, the caller's plan (a Python RDD
-    # for createDataFrame(list)) runs once. Query metadata is small at any
+    # The query side is read by the phase-1 ring join and the NULL rows;
+    # pinned here, the caller's plan (a Python RDD for
+    # createDataFrame(list)) runs once. Query metadata is small at any
     # corpus scale, so a local checkpoint is the pin.
     q = queries.select("q_id", "qlat", "qlon").localCheckpoint(eager=False)
     if n_pages is None:
@@ -142,7 +147,9 @@ def knn_pages(
     r0 = int(math.ceil(math.sqrt((k + 4) / max(density, 1e-12)))) + 1
     r0 = min(max(r0, 2), max(g.nx, g.ny), RING_MAX)
 
-    w = Window.partitionBy("q_id").orderBy(F.col("dist2").asc(), F.col("doc_id").asc())
+    # dist2 is NULL only on the one NULL row per query (below): nulls last
+    # ranks it after every real candidate
+    w = Window.partitionBy("q_id").orderBy(F.col("dist2").asc_nulls_last(), F.col("doc_id").asc())
 
     # Phase 1 doubles as the ANSWER for queries whose exact radius fits in
     # r0: rank + per-query kth distance come from ONE window pass, and when
@@ -159,48 +166,43 @@ def knn_pages(
     # query to k per partition. _dk (the kth distance) is then a window
     # max over the ≤k surviving rows — same value as computing it over
     # the full candidate set, since the rank-k row survives the filter.
+    #
+    # One NULL row per query (the query pin, its missing columns NULL) is
+    # unioned into the candidates, so every query has a rank-1 row
+    # carrying (q_id, qlat, qlon, _rf), zero candidates included. A query
+    # with <k real candidates ranks its NULL row at or before k, so its
+    # rank-k dist2 — hence _dk and _rf — is NULL and it routes to brute;
+    # with ≥k the NULL row ranks past k and the rank filter drops it.
     cand1 = _ring_candidates(
         q, pages, g, F.lit(r0), exploded_rows_est=n_queries * (2 * r0 + 1) ** 2
-    )
+    ).unionByName(q, allowMissingColumns=True)
     rf_need = (F.ceil(F.sqrt(F.col("_dk")) / F.lit(g.step)) + 1).cast("int")
     topk = cand1.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= k)
-    c = topk.withColumn(
-        "_dk",
-        F.max(F.when(F.col("_rn") == k, F.col("dist2"))).over(
-            Window.partitionBy("q_id")
-        ),
-    ).withColumn("_rf", rf_need)
-    # Pin the per-query top-k once: the direct output, the per-query radii
-    # and the tier routing all read it, and AQE's stage dedup does not
-    # reuse identical exchanges across them, so unpinned the corpus
-    # candidate join would run per consumer. The table is k×n_queries rows
-    # (bounded query metadata, the pagerank-checkpoint class), so the pin
-    # is metadata-sized at any corpus scale. Under AQE the pin is not
-    # lazy: building its RDD runs the phase-1 broadcast and shuffle-map
-    # stages here, inside knn_pages().
-    c = c.localCheckpoint(eager=False)
+    dk = F.max(F.when(F.col("_rn") == k, F.col("dist2"))).over(Window.partitionBy("q_id"))
+    c = topk.withColumn("_dk", dk).withColumn("_rf", rf_need)
+    needs_ring = (F.col("_rf") > r0) & (F.col("_rf") <= RING_MAX)
+    needs_brute = F.col("_rf").isNull() | (F.col("_rf") > RING_MAX)
+    head = F.col("_rn") == 1
+    # Pin the per-query top-k once: the direct output and both later tiers
+    # read it, and AQE's stage dedup does not reuse identical exchanges
+    # across them, so unpinned the corpus candidate join would run per
+    # consumer. The table is ≤k rows per query (bounded query metadata,
+    # the pagerank-checkpoint class), so the pin is metadata-sized at any
+    # corpus scale. The pin is eager and its one pass also counts, over
+    # the rank-1 rows, the queries each later tier needs (an unnamed
+    # Observation: named ones collide across concurrent calls); a tier is
+    # planned only when its count is nonzero, so a batch phase 1 fully
+    # answers returns a plan with no second pages scan.
+    obs = Observation()
+    c = c.observe(
+        obs,
+        F.count(F.when(head & needs_ring, 1)).alias("ring"),
+        F.count(F.when(head & needs_brute, 1)).alias("brute"),
+    ).localCheckpoint(eager=True)
+    n_ring, n_brute = obs.get["ring"], obs.get["brute"]
     out = c.where(F.col("_rf") <= r0).select(
         "q_id", F.col("_rn").alias("rank"), "doc_id", "dist2"
     )
-
-    # Per-query radius: _rf is constant within a q_id (_dk is a window max
-    # over the query's partition), so the rank-1 row carries it and no
-    # aggregate is needed. NULL when phase 1 found <k candidates; queries
-    # with ZERO candidates have no row, and the left join routes them to
-    # brute. The table is ≤1 row per query, so it is broadcast under the
-    # same gate as the phase-1 query side.
-    radius = c.where(F.col("_rn") == 1).select("q_id", "_rf")
-    if n_queries <= BROADCAST_ROWS_MAX:
-        radius = F.broadcast(radius)
-    routed = q.join(radius, "q_id", "left")
-    needs_ring = (F.col("_rf") > r0) & (F.col("_rf") <= RING_MAX)
-    needs_brute = F.col("_rf").isNull() | (F.col("_rf") > RING_MAX)
-    # One small action over the two pins decides which tiers exist: a tier
-    # is planned only when some query needs it, so a batch phase 1 fully
-    # answers returns a plan with no second pages scan.
-    n_ring, n_brute = routed.agg(
-        F.count(F.when(needs_ring, 1)), F.count(F.when(needs_brute, 1))
-    ).first()
 
     if n_ring:
         # phase 2: the broadcast gate sizes the exploded side from the
@@ -208,7 +210,7 @@ def knn_pages(
         # the hint, AQE can still re-plan the shuffle join as a broadcast
         # join from the materialised exchange stats
         cand2 = _ring_candidates(
-            routed.where(needs_ring),
+            c.where(head & needs_ring),
             pages,
             g,
             F.col("_rf"),
@@ -222,7 +224,7 @@ def knn_pages(
     if n_brute:
         # brute tier: one pages pass against the (rare, tiny) unsatisfied
         # queries — broadcast-nested-loop, no ring arrays at any resolution
-        bq = F.broadcast(routed.where(needs_brute).select("q_id", "qlat", "qlon"))
+        bq = F.broadcast(c.where(head & needs_brute).select("q_id", "qlat", "qlon"))
         p = pages.select("doc_id", F.col("lat").alias("_plat"), F.col("lon").alias("_plon"))
         out = out.unionByName(_top_k(bq.crossJoin(p).withColumn("dist2", _dist2()), w, k))
     return out

@@ -35,17 +35,17 @@ def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     single parquet file (one scan partition); real corpora arrive in many
     files. Repartition so per-row CPU work (md5, shingles) parallelises.
 
-    Lazily localCheckpoint'ed for the same reason as ``_aug_near``: several
-    text queries consume this subtree from self-joined branches (doc spine
-    + freq tables + verify sides), self-join attribute dedup re-aliases
-    each branch, and AQE stage reuse then misses the identical
+    Eagerly localCheckpoint'ed for the same reasons as ``_aug_near``:
+    several text queries consume this subtree from self-joined branches
+    (doc spine + freq tables + verify sides), self-join attribute dedup
+    re-aliases each branch, and AQE stage reuse then misses the identical
     scan+repartition exchange — measured recomputing up to 5x per query.
     One fixture-scale materialisation per call; computed fresh every run."""
     n = spark.sparkContext.defaultParallelism
     return (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .repartition(n, "doc_id")
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
 
 
@@ -76,19 +76,23 @@ def _aug_near(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, [(-1, FX.SHORT_DOC_TEXT), (-2, FX.SHORT_DOC_TEXT)], "doc_id long, text string"
     )
     # single post-union spread (see _aug_exact): one exchange, n tasks.
-    # The lazy localCheckpoint pins ONE materialisation of the augmented
+    # The localCheckpoint pins ONE materialisation of the augmented
     # corpus: the dedup pipelines consume it from several self-joined
     # branches (signatures, verify-a, verify-b), and self-join attribute
     # dedup re-aliases each branch's subtree so AQE stage reuse misses the
     # otherwise-identical exchange (measured: the scan+union+repartition
-    # ran 5x per dedup_minhash run). Fixture-scale table; computed fresh
-    # inside every run.
+    # ran 5x per dedup_minhash run). The pin is eager: a lazy one is
+    # materialised by whichever consumer stage finishes first, while AQE
+    # runs the other branches' stages at the same time, so one of them
+    # could compute the subtree again and report SQL metrics the driver
+    # had already dropped with the pin's lineage ("Failed to update
+    # accumulator"). Fixture-scale table; computed fresh inside every run.
     n = spark.sparkContext.defaultParallelism
     return (
         raw.unionByName(dups)
         .unionByName(shorts)
         .repartition(n, "doc_id")
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
 
 

@@ -208,26 +208,28 @@ _DEFS: dict[str, tuple[QueryFn, str | None]] = {
 
 
 # The driver window: the first 50 REGISTRY entries, recorded each round.
-# (a) the one raster resampling core (resample and warp share one
-#     target-cell sampler, one downscale path and aggregate's reducer
-#     table); (b) knn (pinned query side, rank-1 radius projection,
-#     evidence-gated ring/brute tiers); (c) the round-8 rewrites of the
-#     read_documents consumers; (d) the page cover join (one broadcast
-#     form, no salt; zonal_pages' empty zones from its one aggregate);
-#     (e) the raster cover join (one classified block cover, one mask
-#     form); (f) line walks on the driver and one more query whose plan
-#     reads a driver-built table (session.local_df). Left out for room:
-#     dedup_components, dedup_spans, dedup_spans_strip and
-#     simhash_wide_pairs, whose one such table is _aug_near's, also read
-#     by (c), and the other local_df readers (bpe_*, unigram_*,
-#     langid_fasttext, url_blocklist, blocklist_word, scaled_read,
-#     replace_missing_stack, mosaic_*, explicit_extract).
+# (a) the 16 longest left out of the window: dedup_components, dedup_spans,
+#     dedup_spans_strip and simhash_wide_pairs (their one driver-built
+#     table is _aug_near's, also read by (c)) and the other
+#     session.local_df readers (bpe_*, unigram_*, langid_fasttext,
+#     url_blocklist, blocklist_word, scaled_read, replace_missing_stack,
+#     mosaic_first); (b) knn (pinned query side, one NULL row per query,
+#     tiers counted by an Observation on the eager phase-1 pin); (c) the
+#     round-8 rewrites of the read_documents consumers (their pins are
+#     eager); (d) the page cover join (one broadcast form, no salt;
+#     zonal_pages' empty zones from its one aggregate); (e) the raster cover join (one classified block
+#     cover, one mask form); (f) line walks on the driver and one more
+#     query whose plan reads a driver-built table (session.local_df). Left
+#     out for room: the 16 resample/warp/aggregate queries of the one
+#     raster resampling core (resample_*, warp_*, aggregate_mean/med/mode),
+#     recorded in the round that rewrote them, and mosaic_last,
+#     mosaic_mean, mosaic_stack and explicit_extract.
 _DRIVER_WINDOW = [
     # (a)
-    "resample_near", "resample_bilinear", "resample_agg", "resample_cubic",
-    "resample_cubicspline", "resample_lanczos", "resample_rms",
-    "warp_mercator", "warp_sinusoidal", "warp_agg", "warp_utm", "warp_utm_agg", "warp_hook",
-    "aggregate_mean", "aggregate_med", "aggregate_mode",
+    "dedup_components", "dedup_spans", "dedup_spans_strip", "simhash_wide_pairs",
+    "bpe_train", "bpe_train_local", "bpe_train_batched", "bpe_tokenize",
+    "unigram_lm_train", "unigram_tokenize", "langid_fasttext", "url_blocklist",
+    "blocklist_word", "scaled_read", "replace_missing_stack", "mosaic_first",
     # (b)
     "knn",
     # (c)

@@ -122,11 +122,17 @@ def test_knn_sparse_fine_resolution_brute_tier(spark):
 #   q 2, beside the three isolated pages: <k candidates: brute tier;
 #   q 3, at (lon 160, lat -60), far from every page: no candidates at all:
 #        brute tier.
+# Two more queries sit on the tier boundary, each beside its own tight
+# cluster in an otherwise empty part of the eastern hemisphere (no other
+# page within r0 cells of either):
+#   q 4, at (lon 47, lat 48), with exactly k pages in its cell: phase 1;
+#   q 5, at (lon 47, lat -48), with exactly k-1 pages in its cell: brute.
 MIXED_RES = 5
 MIXED_QUERIES = [(0, -40.3, -135.2), (1, 0.0, -90.0), (2, 10.0, 120.0), (3, -60.0, 160.0)]
+BOUNDARY_QUERIES = [(4, 48.0, 47.0), (5, -48.0, 47.0)]
 
 
-def _mixed_pages():
+def _mixed_pages(k):
     pts = []
     for i in range(64):
         for j in range(64):
@@ -135,6 +141,9 @@ def _mixed_pages():
                 pts.append((len(pts), lat, lon))
     for t in range(3):
         pts.append((len(pts), 10.0 + 0.5 * t, 120.0 + 0.7 * t))
+    for (_, qlat, qlon), n in zip(BOUNDARY_QUERIES, (k, k - 1)):
+        for t in range(1, n + 1):
+            pts.append((len(pts), qlat + 0.01 * t, qlon + 0.013 * t))
     return pts
 
 
@@ -155,20 +164,34 @@ def _plan(df) -> str:
 def test_knn_mixed_tiers_match_bruteforce(spark, k):
     """One batch answered by phase 1, the phase-2 ring tier and the brute
     tier (with and without phase-1 candidates) is exact, and the returned
-    plan carries both the ring branch and the brute branch."""
+    plan carries both the ring branch and the brute branch. On the tier
+    boundary, exactly k phase-1 candidates are answered by phase 1 (no
+    later tier in the plan of that query alone) and k-1 go to brute."""
     g = WebGrid(MIXED_RES)
-    pts = _mixed_pages()
+    pts = _mixed_pages(k)
     pages = spark.createDataFrame(pts, "doc_id long, lat double, lon double")
     pages = pages.withColumn("cell", g.cell_col(F.col("lon"), F.col("lat")))
-    queries = spark.createDataFrame(MIXED_QUERIES, "q_id long, qlat double, qlon double")
+    batch = MIXED_QUERIES + BOUNDARY_QUERIES
+    queries = spark.createDataFrame(batch, "q_id long, qlat double, qlon double")
     out = knn_pages(queries, pages, k=k, res=MIXED_RES)
     plan = _plan(out)
     assert "Generate explode" in plan  # phase-2 ring cells
     assert "BroadcastNestedLoopJoin" in plan  # brute tier
     rows = out.collect()
-    want = _brute_knn(pts, MIXED_QUERIES, k)
+    want = _brute_knn(pts, batch, k)
     assert len(rows) == len(want)
     assert {(r["q_id"], r["rank"]): (r["doc_id"], r["dist2"]) for r in rows} == want
+
+    for q, brute in zip(BOUNDARY_QUERIES, (False, True)):
+        one = knn_pages(
+            spark.createDataFrame([q], "q_id long, qlat double, qlon double"), pages, k=k, res=MIXED_RES
+        )
+        plan = _plan(one)
+        assert "Generate" not in plan
+        assert ("BroadcastNestedLoopJoin" in plan) == brute
+        assert {(r["q_id"], r["rank"]): (r["doc_id"], r["dist2"]) for r in one.collect()} == {
+            key: v for key, v in want.items() if key[0] == q[0]
+        }
 
 
 def test_knn_phase1_batch_plans_no_later_tier(spark, pages):
@@ -188,6 +211,21 @@ def test_knn_phase1_batch_plans_no_later_tier(spark, pages):
     assert "Generate" not in plan
     assert plan.count("InMemoryTableScan") <= 1
     assert out.count() == 50
+
+    # With both sizing hints passed, the call's only action is the eager
+    # phase-1 pin, whose pass also counts the later tiers' queries: under
+    # AQE it runs 3 jobs (the query-side broadcast, the shuffle map stage
+    # and the pinned top-k), and collect() 1 more reading the pin.
+    n_pages = p.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("knn-phase1-jobs", "knn")
+    try:
+        rows = knn_pages(queries, p, k=5, res=PAGES_RES, n_pages=n_pages, n_queries=10).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == 50
+    assert len(sc.statusTracker().getJobIdsForGroup("knn-phase1-jobs")) == 4
 
 
 @pytest.mark.parametrize("empty", ["queries", "pages"])
