@@ -280,7 +280,7 @@ def _raster_cover_rows(polys: list[Polygon], grid, boundary: str) -> list[tuple]
         bbox = tuple(map(float, p.bbox))
         bx, rx0, rx1 = blocks(bbox[0], bbox[1], grid.x0, grid.dx)
         by, ry0, ry1 = blocks(bbox[2], bbox[3], grid.y0, grid.dy)
-        # relative pad: far beyond the few ulps by which x_col, pip_col and
+        # relative pad: far beyond the few ulps by which x_sql, pip_col and
         # these bounds round at the coordinates' magnitude
         big = max(np.abs(np.concatenate([rx0, rx1, ry0, ry1])).max(initial=1.0), *map(abs, bbox))
         pad = _CELL_PAD * big
@@ -306,7 +306,7 @@ def _raster_cover_rows(polys: list[Polygon], grid, boundary: str) -> list[tuple]
                     if i not in col_edges:
                         col_edges[i] = np.flatnonzero((xlo <= rx1[i]) & (xhi >= rx0[i]))
                     # x-band edges keep the clipped-area fold exact: any other
-                    # edge has b <= a in clip_area_edge_col and adds 0.0
+                    # edge has b <= a in clip_area_edge_sql and adds 0.0
                     keep = np.union1d(band[can_cross[k]], col_edges[i])
                     kept[i * len(by) + j] = [edges[q] for q in keep]
         const = [itertools.repeat(v) for v in (p.geom_id, *bbox)]
@@ -355,8 +355,8 @@ def raster_cover_hit(grid, boundary: str, row) -> Column:
     """A raster cell (``ix``, ``iy``) against one cover row, read through
     ``row(name)``: ``inside``, or in the bbox (grown by one cell for
     touches) and ``boundary``'s predicate over the row's edges."""
-    cx = grid.x_col(F.col("ix"))
-    cy = grid.y_col(F.col("iy"))
+    cx = F.expr(grid.x_sql("ix"))
+    cy = F.expr(grid.y_sql("iy"))
     # |step|: cell half-widths and bbox pads are magnitudes — signed steps
     # (north-up dy<0) must not flip the predicate direction
     adx, ady = abs(grid.dx), abs(grid.dy)
@@ -396,10 +396,20 @@ def pip_col(x: Column, y: Column, edges: Column) -> Column:
     return crossings % 2 == 1
 
 
+def crossing_sql(x: str, y: str, e: str) -> str:
+    """Edge ``e`` (a relation alias or struct with x1, y1, x2, y2) crosses
+    the ray (-inf, y) → (x, y): the even-odd term of :func:`pip_col`, as
+    SQL text for the oracles."""
+    return (
+        f"((({e}.y1 > {y}) <> ({e}.y2 > {y}))"
+        f" AND {x} < {e}.x1 + ({e}.x2 - {e}.x1) * ({y} - {e}.y1) / ({e}.y2 - {e}.y1))"
+    )
+
+
 def pip_sql(x: str, y: str, edges_rel: str = "edges e", geom_match: str = "") -> str:
     """Correlated even-odd count over an ``edges(geom_id,x1,y1,x2,y2)``
     relation; same arithmetic as :func:`pip_col`."""
-    where = f"(((e.y1 > {y}) <> (e.y2 > {y})) AND {x} < e.x1 + (e.x2 - e.x1) * ({y} - e.y1) / (e.y2 - e.y1))"
+    where = crossing_sql(x, y, "e")
     if geom_match:
         where = f"{geom_match} AND {where}"
     return f"((SELECT COUNT(*) FROM {edges_rel} WHERE {where}) % 2 = 1)"
@@ -440,37 +450,18 @@ def polys_values_sql(polys: list[Polygon]) -> str:
 # unrolled over literal edges (`coverage_clipped`) it stays in whole-stage
 # codegen, folded over an edge array with ``aggregate`` (`zonal_coverage`)
 # it runs interpreted, as higher-order functions are ``CodegenFallback``.
-# The DuckDB twin has the same operation order, so results are
-# bit-identical. CW rings give the negated area — callers take |Σ| per
-# ring; holes need opposite winding.
-
-
-def clip_area_edge_col(exy, x0, x1, y0, y1) -> Column:
-    """One directed edge's contribution (Columns). ``exy`` = (x1,y1,x2,y2)
-    Columns or float literals; ``x0,x1,y0,y1`` the window bounds Columns."""
-    ex1, ey1, ex2, ey2 = [v if isinstance(v, Column) else F.lit(float(v)) for v in exy]
-    a = F.greatest(x0, F.least(ex1, ex2))
-    b = F.least(x1, F.greatest(ex1, ex2))
-    m = (ey2 - ey1) / (ex2 - ex1)
-    c = ey1 - m * ex1
-
-    def H(u):
-        cu = F.greatest(y0, F.least(y1, u))
-        return (
-            cu * cu / F.lit(2.0)
-            + y1 * F.greatest(F.lit(0.0), u - y1)
-            + y0 * F.least(F.lit(0.0), u - y0)
-        )
-
-    flat = F.greatest(y0, F.least(y1, c)) * (b - a)
-    integ = F.when(m == F.lit(0.0), flat).otherwise((H(m * b + c) - H(m * a + c)) / m)
-    sgn = F.when(ex2 > ex1, F.lit(-1.0)).otherwise(F.lit(1.0))
-    return F.when((ex1 == ex2) | (b <= a), F.lit(0.0)).otherwise(sgn * integ)
+# Spark and the DuckDB oracles run the one SQL text below; it is checked
+# bit for bit against a NumPy fold in `tests/test_zonal.py`. CW rings give
+# the negated area — callers take |Σ| per ring; holes need opposite winding.
 
 
 def clip_area_edge_sql(exy, x0: str, x1: str, y0: str, y1: str) -> str:
-    """IDENTICAL arithmetic as :func:`clip_area_edge_col`, as SQL text —
-    ``exy`` is (x1,y1,x2,y2) as SQL fragments (column refs or reprs)."""
+    """One directed edge's contribution as SQL text, run through ``F.expr``
+    by `zonal_coverage` and `coverage_clipped` and verbatim by their DuckDB
+    oracles. ``exy`` is (x1,y1,x2,y2) and ``x0,x1,y0,y1`` the window bounds,
+    as SQL fragments; a literal edge must be DOUBLE (``CAST(v AS DOUBLE)``):
+    both dialects parse a bare ``0.3`` as DECIMAL, and the edge-only
+    subexpressions (slope, intercept) would then fold in decimal."""
     ex1, ey1, ex2, ey2 = exy
     a = f"GREATEST({x0}, LEAST({ex1}, {ex2}))"
     b = f"LEAST({x1}, GREATEST({ex1}, {ex2}))"

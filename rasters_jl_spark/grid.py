@@ -19,13 +19,22 @@ Two grid families:
   ``StableRange``, `src/utils.jl:362-555`, plays: never re-derive coordinates
   from floats downstream).
 
-Most methods come in two flavours: ``*_col`` returning a pyspark Column and
-``*_sql`` returning ANSI-SQL text for the DuckDB oracle, written as the same
-arithmetic. They are two texts, so it is the oracle compare that keeps them
-equal, not their construction. Not every method has a twin
-(:meth:`WebGrid.ring_cells_col` has none), and a twin's text may differ
-where the values agree (`sources/pages.py::lat_col` pre-reduces the hash
-that ``LAT_SQL`` spells directly).
+GridSpec's coordinate math is written once, as SQL text (``*_sql``): Spark
+evaluates it through ``F.expr`` and the DuckDB oracle runs it verbatim, so
+the two engines share one formula and cannot drift apart. A slip in it is
+the same in both, so `tests/test_grid.py` checks it against hand and NumPy
+values, not the oracle. Literals are written with ``repr``, which both
+dialects parse as DECIMAL and coerce to DOUBLE where they meet a DOUBLE
+operand (exactly in Spark). A literal-only subexpression would be folded
+in decimal arithmetic instead: write such operands as ``CAST(v AS DOUBLE)``.
+
+WebGrid keeps two texts, ``*_col`` Columns for Spark and ``*_sql`` for the
+oracle: ``bench.py`` and ``perfbench/`` import its Columns, and where the
+dialects differ the texts must too (``parent_cell_sql`` uses DuckDB's
+``//``; :meth:`WebGrid.ring_cells_col` has no twin;
+`sources/pages.py::lat_col` pre-reduces the hash that ``LAT_SQL`` spells
+directly). There it is the oracle compare that keeps the two equal, not
+their construction.
 """
 
 from __future__ import annotations
@@ -68,12 +77,6 @@ class GridSpec:
     crs: str = "EPSG:4326"
 
     # -- coordinate math (centers) --
-    def x_col(self, ix: Column) -> Column:
-        return F.lit(self.x0) + ix.cast("double") * F.lit(self.dx)
-
-    def y_col(self, iy: Column) -> Column:
-        return F.lit(self.y0) + iy.cast("double") * F.lit(self.dy)
-
     def x_sql(self, ix: str) -> str:
         return f"({self.x0!r} + CAST({ix} AS DOUBLE) * {self.dx!r})"
 
@@ -83,23 +86,16 @@ class GridSpec:
     # -- point → owning cell (Contains on Intervals(Center)):
     #    half-open [center-d/2, center+d/2) — the reference's
     #    `_at_or_contains` semantics (src/methods/burning/point.jl:47-50)
-    def ix_of_x_col(self, x: Column) -> Column:
-        return F.floor((x - F.lit(self.x0 - self.dx / 2.0)) / F.lit(self.dx)).cast("int")
-
-    def iy_of_y_col(self, y: Column) -> Column:
-        return F.floor((y - F.lit(self.y0 - self.dy / 2.0)) / F.lit(self.dy)).cast("int")
-
     def ix_of_x_sql(self, x: str) -> str:
         return f"CAST(FLOOR(({x} - {self.x0 - self.dx / 2.0!r}) / {self.dx!r}) AS INT)"
 
     def iy_of_y_sql(self, y: str) -> str:
         return f"CAST(FLOOR(({y} - {self.y0 - self.dy / 2.0!r}) / {self.dy!r}) AS INT)"
 
-    def in_bounds_col(self, ix: Column, iy: Column) -> Column:
-        return (ix >= 0) & (ix < self.nx) & (iy >= 0) & (iy < self.ny)
-
     def in_bounds_sql(self, ix: str, iy: str) -> str:
-        return f"({ix} >= 0 AND {ix} < {self.nx} AND {iy} >= 0 AND {iy} < {self.ny})"
+        # left-deep, as Catalyst builds a chain of Column ``&``: the SQL
+        # parser would balance a flat AND chain into a different tree
+        return f"((({ix} >= 0 AND {ix} < {self.nx}) AND {iy} >= 0) AND {iy} < {self.ny})"
 
     # -- extent of the grid as cell-edge bounds (reference `Extents.Extent`);
     #    orientation-safe: min/max over both edge candidates so negative

@@ -30,8 +30,8 @@ def crop(raster: DataFrame, grid: GridSpec, xmin: float, xmax: float, ymin: floa
     returns a lazy view; cells whose *center* lies in the closed extent are
     kept (Touches/`atol` variants are extent padding at the call site).
     """
-    x = grid.x_col(F.col("ix"))
-    y = grid.y_col(F.col("iy"))
+    x = F.expr(grid.x_sql("ix"))
+    y = F.expr(grid.y_sql("iy"))
     return raster.where((x >= xmin) & (x <= xmax) & (y >= ymin) & (y <= ymax))
 
 
@@ -205,6 +205,6 @@ def points(raster: DataFrame, grid: GridSpec, skipmissing: bool = True) -> DataF
     Reference: `src/methods/points.jl:20-34`.
     """
     out = raster.select(
-        grid.x_col(F.col("ix")).alias("x"), grid.y_col(F.col("iy")).alias("y"), "value"
+        F.expr(grid.x_sql("ix")).alias("x"), F.expr(grid.y_sql("iy")).alias("y"), "value"
     )
     return out.where(F.col("value").isNotNull()) if skipmissing else out

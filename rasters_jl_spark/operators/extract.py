@@ -33,13 +33,14 @@ def _assign_cells(
     dims get Contains, Points dims get At(v; atol)): the point must lie
     within atol of the nearest CENTER, else it behaves out-of-grid
     (missing row / dropped under skipmissing). atol=None is exact At."""
-    p = pts.withColumn("ix", grid.ix_of_x_col(F.col(x_col))).withColumn(
-        "iy", grid.iy_of_y_col(F.col(y_col))
+    x, y = f"CAST(`{x_col}` AS DOUBLE)", f"CAST(`{y_col}` AS DOUBLE)"
+    p = pts.withColumn("ix", F.expr(grid.ix_of_x_sql(x))).withColumn(
+        "iy", F.expr(grid.iy_of_y_sql(y))
     )
     if sampling == "points":
         tol = 0.0 if atol is None else float(atol)
-        ok = (F.abs(F.col(x_col) - grid.x_col(F.col("ix"))) <= tol) & (
-            F.abs(F.col(y_col) - grid.y_col(F.col("iy"))) <= tol
+        ok = (F.abs(F.col(x_col) - F.expr(grid.x_sql("ix"))) <= tol) & (
+            F.abs(F.col(y_col) - F.expr(grid.y_sql("iy"))) <= tol
         )
         p = p.withColumn("ix", F.when(ok, F.col("ix"))).withColumn(
             "iy", F.when(ok, F.col("iy"))

@@ -59,14 +59,14 @@ def rasterize_points(
             "rasterize_points: reducer 'first'/'last' requires an explicit "
             "seq_col (deterministic input order); a distributed table has none"
         )
-    ix = grid.ix_of_x_col(F.col(x_col))
-    iy = grid.iy_of_y_col(F.col(y_col))
+    ix = grid.ix_of_x_sql(f"CAST(`{x_col}` AS DOUBLE)")
+    iy = grid.iy_of_y_sql(f"CAST(`{y_col}` AS DOUBLE)")
     cells = pts.select(
-        ix.alias("ix"),
-        iy.alias("iy"),
+        F.expr(ix).alias("ix"),
+        F.expr(iy).alias("iy"),
         F.col(fill_col).alias("_fill"),
         (F.col(seq_col) if seq_col else F.lit(0).cast("long")).alias("_geom_seq"),
-    ).where(grid.in_bounds_col(F.col("ix"), F.col("iy")))
+    ).where(F.expr(grid.in_bounds_sql("ix", "iy")))
     red = _REDUCERS[reducer]
     return cells.groupBy("ix", "iy").agg(red(F.col("_fill")).cast("double").alias("value"))
 

@@ -44,48 +44,7 @@ from rasters_jl_spark.operators.aggregate import _REDUCERS, _aggregate_mode
 
 EARTH_R_KM = 6371.0088
 
-# 2/3 written once so the Spark and SQL kernels share the exact double
-TWO_THIRDS = 2.0 / 3.0
-
-
-def cubic_w_col(t):
-    """Keys bicubic convolution kernel, a = -0.5 (the gdalwarp `cubic`
-    method, `src/extensions.jl:59-75`). Horner form — the DuckDB oracle
-    uses the identical arithmetic string."""
-    at = F.abs(t)
-    return (
-        F.when(at <= 1.0, (F.lit(1.5) * at - F.lit(2.5)) * at * at + F.lit(1.0))
-        .when(at < 2.0, F.lit(-0.5) * (((at - F.lit(5.0)) * at + F.lit(8.0)) * at - F.lit(4.0)))
-        .otherwise(F.lit(0.0))
-    )
-
-
-def cubicspline_w_col(t):
-    """Cubic B-spline kernel (gdalwarp `cubicspline`)."""
-    at = F.abs(t)
-    b = F.lit(2.0) - at
-    return (
-        F.when(at <= 1.0, (F.lit(0.5) * at - F.lit(1.0)) * at * at + F.lit(TWO_THIRDS))
-        .when(at < 2.0, b * b * b / F.lit(6.0))
-        .otherwise(F.lit(0.0))
-    )
-
-
 LANCZOS_A = 3  # gdalwarp lanczos window (6×6 stencil)
-
-
-def lanczos_w_col(t):
-    """Lanczos windowed sinc, a = 3 (gdalwarp `lanczos`): sinc(t)·sinc(t/a)
-    for |t| < a, 1 at t = 0."""
-    at = F.abs(t)
-    pt = F.lit(math.pi) * t
-    pta = pt / F.lit(float(LANCZOS_A))
-    return (
-        F.when(at < 1e-12, F.lit(1.0))
-        .when(at < float(LANCZOS_A), (F.sin(pt) / pt) * (F.sin(pta) / pta))
-        .otherwise(F.lit(0.0))
-    )
-
 
 # stencil offsets per kernel: weights are zero outside |t| < support, and
 # t = di - frac with frac ∈ [0, 1)
@@ -96,9 +55,18 @@ KERNEL_OFFSETS = {
 }
 
 
-def cubic_w_sql(a: str, method: str, t: str = None) -> str:
-    """Identical arithmetic as the Column kernels, as SQL text; ``a`` is an
-    expression for ABS(t) (lanczos also needs the signed ``t``)."""
+def cubic_w_sql(method: str, t: str) -> str:
+    """The stencil weight of offset ``t`` (a parenthesised SQL fragment) as
+    SQL text, run by `_sample` through ``F.expr`` and verbatim by the
+    DuckDB oracle:
+
+    - ``cubic``: Keys bicubic convolution, a = -0.5, in Horner form (the
+      gdalwarp `cubic` method, `src/extensions.jl:59-75`);
+    - ``cubicspline``: the cubic B-spline (gdalwarp `cubicspline`);
+    - ``lanczos``: windowed sinc, a = 3 (gdalwarp `lanczos`):
+      sinc(t)·sinc(t/a) for |t| < a, 1 at t = 0.
+    """
+    a = f"ABS({t})"
     if method == "cubic":
         return (
             f"CASE WHEN {a} <= 1.0 THEN (1.5 * {a} - 2.5) * {a} * {a} + 1.0 "
@@ -114,7 +82,7 @@ def cubic_w_sql(a: str, method: str, t: str = None) -> str:
             f"ELSE 0.0 END"
         )
     return (
-        f"CASE WHEN {a} <= 1.0 THEN (0.5 * {a} - 1.0) * {a} * {a} + {TWO_THIRDS!r} "
+        f"CASE WHEN {a} <= 1.0 THEN (0.5 * {a} - 1.0) * {a} * {a} + {2.0 / 3.0!r} "
         f"WHEN {a} < 2.0 THEN (2.0 - {a}) * (2.0 - {a}) * (2.0 - {a}) / 6.0 "
         f"ELSE 0.0 END"
     )
@@ -126,33 +94,34 @@ def _target_cells(spark, tgt: GridSpec) -> DataFrame:
     return xs.crossJoin(ys)
 
 
-_KERNEL_W = {"cubic": cubic_w_col, "cubicspline": cubicspline_w_col, "lanczos": lanczos_w_col}
 # the gdalwarp -r aggregate surface (`src/extensions.jl:59-75`): a reducer
 # of the one table, or the deterministic mode
 DOWNSCALE = (*_REDUCERS, "mode")
 METHODS = ("near", "bilinear", *KERNEL_OFFSETS, *DOWNSCALE)
 
 
-def _sample(cells: DataFrame, xs, ys, raster: DataFrame, src: GridSpec, method: str) -> DataFrame:
-    """The one target-cell sampler: target cells ``(jx, jy)`` carrying the
-    SOURCE-CRS coordinate Columns ``xs``/``ys`` of their centres → (ix, iy,
-    value) on the target grid. ``resample`` passes the target's own centre
-    Columns, ``warp`` its projection chain as ``F.expr`` text or the hook's
-    pandas-UDF output; all share one join discipline and one semantics."""
+def _sample(cells: DataFrame, xs: str, ys: str, raster: DataFrame, src: GridSpec, method: str) -> DataFrame:
+    """The one target-cell sampler: target cells ``(jx, jy)`` whose centres
+    have the SOURCE-CRS coordinates ``xs``/``ys`` (SQL text over the cells'
+    columns) → (ix, iy, value) on the target grid. ``resample`` passes the
+    target's own centres (``x_sql``/``y_sql``), ``warp`` its projection
+    chain or the column the hook's pandas UDF wrote; the source-grid math
+    and the kernel weights are the SQL texts the oracle runs, so all share
+    one join discipline, one semantics and one formula text."""
     by_cell = raster.select(F.col("ix").alias("_sx"), F.col("iy").alias("_sy"), "value")
     if method == "near":
         t = cells.select(
             F.col("jx").alias("ix"),
             F.col("jy").alias("iy"),
-            src.ix_of_x_col(xs).alias("_sx"),
-            src.iy_of_y_col(ys).alias("_sy"),
-        ).where(src.in_bounds_col(F.col("_sx"), F.col("_sy")))
+            F.expr(src.ix_of_x_sql(xs)).alias("_sx"),
+            F.expr(src.iy_of_y_sql(ys)).alias("_sy"),
+        ).where(F.expr(src.in_bounds_sql("_sx", "_sy")))
         return t.join(by_cell, ["_sx", "_sy"], "left").select("ix", "iy", "value")
-    if method != "bilinear" and method not in _KERNEL_W:
+    if method != "bilinear" and method not in KERNEL_OFFSETS:
         raise ValueError(f"unknown method {method!r}; one of {METHODS}")
 
-    fx = (xs - F.lit(src.x0)) / F.lit(src.dx)
-    fy = (ys - F.lit(src.y0)) / F.lit(src.dy)
+    fx = (F.expr(xs) - F.lit(src.x0)) / F.lit(src.dx)
+    fy = (F.expr(ys) - F.lit(src.y0)) / F.lit(src.dy)
     t = cells.select(
         F.col("jx").alias("ix"),
         F.col("jy").alias("iy"),
@@ -190,7 +159,6 @@ def _sample(cells: DataFrame, xs, ys, raster: DataFrame, src: GridSpec, method: 
     # offsets per target cell, ONE equi left join to the source raster,
     # groupBy(target) with missing-skipping weight renormalisation (same
     # discipline as bilinear). One shuffle; the fan-out is narrow.
-    wfun = _KERNEL_W[method]
     offs = F.array(*[F.lit(i) for i in KERNEL_OFFSETS[method]])
     n = t.select("*", F.explode(offs).alias("_di"))
     n = n.select("*", F.explode(offs).alias("_dj"))
@@ -198,9 +166,9 @@ def _sample(cells: DataFrame, xs, ys, raster: DataFrame, src: GridSpec, method: 
         "_sy", (F.col("_y0") + F.col("_dj")).cast("int")
     )
     j = n.join(by_cell, ["_sx", "_sy"], "left")
-    w = wfun(F.col("_di").cast("double") - F.col("_wx")) * wfun(
-        F.col("_dj").cast("double") - F.col("_wy")
-    )
+    wx = cubic_w_sql(method, "(CAST(_di AS DOUBLE) - _wx)")
+    wy = cubic_w_sql(method, "(CAST(_dj AS DOUBLE) - _wy)")
+    w = F.expr(f"({wx}) * ({wy})")
     v = F.col("value")
     agg = j.groupBy("ix", "iy").agg(
         F.sum(F.when(v.isNotNull(), w * v).otherwise(F.lit(0.0))).alias("_num"),
@@ -211,12 +179,13 @@ def _sample(cells: DataFrame, xs, ys, raster: DataFrame, src: GridSpec, method: 
     return agg.select("ix", "iy", out_v.alias("value"))
 
 
-def _downscale(raster: DataFrame, tix, tiy, tgt: GridSpec, method: str) -> DataFrame:
-    """The one downscale path: ``tix``/``tiy`` are the target-index Columns
-    of each SOURCE cell centre; cells landing off the target grid drop, the
-    rest reduce per target cell with one groupBy (two for ``mode``)."""
-    mapped = raster.select(tix.alias("tix"), tiy.alias("tiy"), "value").where(
-        tgt.in_bounds_col(F.col("tix"), F.col("tiy"))
+def _downscale(raster: DataFrame, tix: str, tiy: str, tgt: GridSpec, method: str) -> DataFrame:
+    """The one downscale path: ``tix``/``tiy`` are the SQL text of the
+    target index of each SOURCE cell centre; cells landing off the target
+    grid drop, the rest reduce per target cell with one groupBy (two for
+    ``mode``)."""
+    mapped = raster.select(F.expr(tix).alias("tix"), F.expr(tiy).alias("tiy"), "value").where(
+        F.expr(tgt.in_bounds_sql("tix", "tiy"))
     )
     mapped = mapped.select(F.col("tix").alias("ix"), F.col("tiy").alias("iy"), "value")
     if method == "mode":
@@ -235,11 +204,10 @@ def resample(
     indexed on the target grid; ``method`` is one of :data:`METHODS`."""
     if method in DOWNSCALE:
         # source cell center → owning target cell
-        sx = src.x_col(F.col("ix"))
-        sy = src.y_col(F.col("iy"))
-        return _downscale(raster, tgt.ix_of_x_col(sx), tgt.iy_of_y_col(sy), tgt, method)
+        tix, tiy = tgt.ix_of_x_sql(src.x_sql("ix")), tgt.iy_of_y_sql(src.y_sql("iy"))
+        return _downscale(raster, tix, tiy, tgt, method)
     cells = _target_cells(raster.sparkSession, tgt)
-    return _sample(cells, tgt.x_col(F.col("jx")), tgt.y_col(F.col("jy")), raster, src, method)
+    return _sample(cells, tgt.x_sql("jx"), tgt.y_sql("jy"), raster, src, method)
 
 
 def cellarea(spark, grid: GridSpec, radius_km: float = EARTH_R_KM) -> DataFrame:
@@ -249,7 +217,7 @@ def cellarea(spark, grid: GridSpec, radius_km: float = EARTH_R_KM) -> DataFrame:
     cells = _target_cells(spark, grid).select(
         F.col("jx").alias("ix"), F.col("jy").alias("iy")
     )
-    y = grid.y_col(F.col("iy"))
+    y = F.expr(grid.y_sql("iy"))
     # |dy|: on a north-up grid (dy<0) the band edges would otherwise swap
     # and every area would come out negative
     y1 = F.radians(y - F.lit(abs(grid.dy) / 2.0))
@@ -320,10 +288,10 @@ def cellarea_quad(spark, grid: GridSpec, radius_km: float = EARTH_R_KM) -> DataF
         F.col("jx").alias("ix"), F.col("jy").alias("iy")
     )
     out = (
-        cells.withColumn("cx1", grid.x_col(F.col("ix")) - F.lit(grid.dx / 2.0))
-        .withColumn("cx2", grid.x_col(F.col("ix")) + F.lit(grid.dx / 2.0))
-        .withColumn("cy1", grid.y_col(F.col("iy")) - F.lit(grid.dy / 2.0))
-        .withColumn("cy2", grid.y_col(F.col("iy")) + F.lit(grid.dy / 2.0))
+        cells.withColumn("cx1", F.expr(grid.x_sql("ix")) - F.lit(grid.dx / 2.0))
+        .withColumn("cx2", F.expr(grid.x_sql("ix")) + F.lit(grid.dx / 2.0))
+        .withColumn("cy1", F.expr(grid.y_sql("iy")) - F.lit(grid.dy / 2.0))
+        .withColumn("cy2", F.expr(grid.y_sql("iy")) + F.lit(grid.dy / 2.0))
     )
     for name, expr in QUAD_CORNER_EXPRS:
         out = out.withColumn(name, F.expr(expr))
@@ -345,8 +313,8 @@ def coverage_rect(
     mode=sum); mode='union' is exact for non-overlapping rects and clamps
     to 1.0 otherwise.
     """
-    cx = grid.x_col(F.col("ix"))
-    cy = grid.y_col(F.col("iy"))
+    cx = F.expr(grid.x_sql("ix"))
+    cy = F.expr(grid.y_sql("iy"))
     hdx, hdy = grid.dx / 2.0, grid.dy / 2.0
     total = F.lit(0.0)
     for _gid, xmin, xmax, ymin, ymax in rects:
@@ -397,8 +365,8 @@ def coverage_polygons(
     df = df.select("*", F.explode(sub).alias("v"))
     hdx, hdy = grid.dx / 2.0, grid.dy / 2.0
     sub_x, sub_y = grid.dx / scale, grid.dy / scale
-    px = grid.x_col(F.col("ix")) - F.lit(hdx) + (F.col("u").cast("double") + F.lit(0.5)) * F.lit(sub_x)
-    py = grid.y_col(F.col("iy")) - F.lit(hdy) + (F.col("v").cast("double") + F.lit(0.5)) * F.lit(sub_y)
+    px = F.expr(grid.x_sql("ix")) - F.lit(hdx) + (F.col("u").cast("double") + F.lit(0.5)) * F.lit(sub_x)
+    py = F.expr(grid.y_sql("iy")) - F.lit(hdy) + (F.col("v").cast("double") + F.lit(0.5)) * F.lit(sub_y)
     hits = df.where(F.col("inside") | pip_col(px, py, F.col("edges")))
     if mode == "union":
         agg = F.count_distinct(F.col("u") * scale + F.col("v"))
@@ -425,7 +393,7 @@ def coverage_clipped(
     SURVEY §2.4 names the clipped-area form as the better Spark plan): the
     fraction of each cell covered by each simple ring is the CLOSED-FORM
     clipped area via per-edge clamped Green's-theorem integrals
-    (`functions/geometry.py::clip_area_edge_col`) — equivalent to
+    (`functions/geometry.py::clip_area_edge_sql`) — equivalent to
     Sutherland–Hodgman clipping + shoelace but EDGE-INDEPENDENT, so it
     unrolls to pure whole-stage-codegen column math: no subpixel explode,
     no groupBy, ZERO shuffles (the subpixel path fans out scale² = 100 rows
@@ -439,20 +407,22 @@ def coverage_clipped(
     join instead."""
     if mode != "sum":
         raise ValueError(f"coverage_clipped supports mode='sum', got {mode!r}")
-    cx = grid.x_col(F.col("ix"))
-    cy = grid.y_col(F.col("iy"))
-    hdx, hdy = grid.dx / 2.0, grid.dy / 2.0
-    x0, x1 = cx - F.lit(hdx), cx + F.lit(hdx)
-    y0, y1 = cy - F.lit(hdy), cy + F.lit(hdy)
-    from rasters_jl_spark.functions.geometry import clip_area_edge_col
+    from rasters_jl_spark.functions.geometry import clip_area_edge_sql
 
-    total = F.lit(0.0)
+    cx, cy = grid.x_sql("ix"), grid.y_sql("iy")
+    hdx, hdy = grid.dx / 2.0, grid.dy / 2.0
+    x0, x1 = f"({cx} - {hdx!r})", f"({cx} + {hdx!r})"
+    y0, y1 = f"({cy} - {hdy!r})", f"({cy} + {hdy!r})"
+    # DOUBLE literals: a repr literal is DECIMAL, and the edge-only
+    # subexpressions (slope, intercept) would fold in decimal arithmetic
+    total = "CAST(0 AS DOUBLE)"
     for p in polys:
-        signed = F.lit(0.0)
+        signed = "CAST(0 AS DOUBLE)"
         for e in p.edges:
-            signed = signed + clip_area_edge_col(e, x0, x1, y0, y1)
-        total = total + F.abs(signed)
-    cov = total / F.lit(grid.dx * grid.dy)
+            exy = [f"CAST({float(v)!r} AS DOUBLE)" for v in e]
+            signed = f"({signed} + {clip_area_edge_sql(exy, x0, x1, y0, y1)})"
+        total = f"({total} + ABS({signed}))"
+    cov = F.expr(f"{total} / {grid.dx * grid.dy!r}")
     return raster_universe.select("ix", "iy", cov.alias("coverage"))
 
 
@@ -480,8 +450,8 @@ def coverage_subpixel(
     sub = F.sequence(F.lit(0), F.lit(scale - 1))
     df = raster_universe.select("ix", "iy", F.explode(sub).alias("u"))
     df = df.select("ix", "iy", "u", F.explode(sub).alias("v"))
-    px = grid.x_col(F.col("ix")) - F.lit(hdx) + (F.col("u").cast("double") + F.lit(0.5)) * F.lit(sub_x)
-    py = grid.y_col(F.col("iy")) - F.lit(hdy) + (F.col("v").cast("double") + F.lit(0.5)) * F.lit(sub_y)
+    px = F.expr(grid.x_sql("ix")) - F.lit(hdx) + (F.col("u").cast("double") + F.lit(0.5)) * F.lit(sub_x)
+    py = F.expr(grid.y_sql("iy")) - F.lit(hdy) + (F.col("v").cast("double") + F.lit(0.5)) * F.lit(sub_y)
 
     def inside(r):
         _gid, xmin, xmax, ymin, ymax = r

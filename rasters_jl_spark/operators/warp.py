@@ -156,8 +156,7 @@ def warp(
         # surface across a CRS change. No join at all: the transform is
         # column math on the data side, the shuffle is the aggregation.
         xt, yt = _target_coord_of_source_sql(src, tgt, "ix", "iy")
-        tix, tiy = F.expr(tgt.ix_of_x_sql(xt)), F.expr(tgt.iy_of_y_sql(yt))
-        return _downscale(raster, tix, tiy, tgt, method)
+        return _downscale(raster, tgt.ix_of_x_sql(xt), tgt.iy_of_y_sql(yt), tgt, method)
 
     cells = _target_cells(raster.sparkSession, tgt)
     if inverse_transform is not None:
@@ -167,12 +166,12 @@ def warp(
             return pd.DataFrame({"x": sx, "y": sy})
 
         withc = cells.withColumn(
-            "_c", _tx(tgt.x_col(F.col("jx")), tgt.y_col(F.col("jy")))
+            "_c", _tx(F.expr(tgt.x_sql("jx")), F.expr(tgt.y_sql("jy")))
         )
-        return _sample(withc, F.col("_c.x"), F.col("_c.y"), raster, src, method)
+        return _sample(withc, "_c.x", "_c.y", raster, src, method)
 
     xs, ys = source_coord_sql(src, tgt, "jx", "jy")
-    return _sample(cells, F.expr(xs), F.expr(ys), raster, src, method)
+    return _sample(cells, xs, ys, raster, src, method)
 
 
 def _target_coord_of_source_sql(src: GridSpec, tgt: GridSpec, ix: str, iy: str) -> tuple[str, str]:

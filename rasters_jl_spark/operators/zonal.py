@@ -178,8 +178,8 @@ def zonal_raster(
     `test/mosaic.jl:69-74`).
     """
     cand = raster_geom_candidates(raster, grid, polys, boundary)
-    cx = grid.x_col(F.col("ix"))
-    cy = grid.y_col(F.col("iy"))
+    cx = F.expr(grid.x_sql("ix"))
+    cy = F.expr(grid.y_sql("iy"))
     in_box = (
         (cx >= F.col("xmin"))
         & (cx <= F.col("xmax"))
@@ -271,7 +271,7 @@ def zonal_coverage(
     Per (cell, geom) candidate the clipped fraction is 1 on an interior
     block and otherwise the closed-form per-edge clamped Green's-theorem
     integral fold over the block's edges
-    (`functions/geometry.py::clip_area_edge_col`; the edges a boundary
+    (`functions/geometry.py::clip_area_edge_sql`; the edges a boundary
     block drops add exactly 0.0) — an interpreted ``aggregate``, no
     subpixel explode. Plan: one scan → broadcast block-cover join →
     fraction expression → groupBy(geom_id) with map-side partial agg.
@@ -285,22 +285,17 @@ def zonal_coverage(
     area. Weights are planar cell fractions; for spherical-area weighting
     multiply by `cellarea` per row before aggregating.
     """
-    from rasters_jl_spark.functions.geometry import clip_area_edge_col
+    from rasters_jl_spark.functions.geometry import clip_area_edge_sql
 
     cand = raster_geom_candidates(
         raster, grid, polys, boundary="touches", keep_arrays=True
     ).where(F.col("_inside"))
     hdx, hdy = abs(grid.dx) / 2.0, abs(grid.dy) / 2.0
-    cx = grid.x_col(F.col("ix"))
-    cy = grid.y_col(F.col("iy"))
-    x0, x1 = cx - F.lit(hdx), cx + F.lit(hdx)
-    y0, y1 = cy - F.lit(hdy), cy + F.lit(hdy)
-    signed = F.aggregate(
-        F.col("edges"),
-        F.lit(0.0),
-        lambda acc, e: acc
-        + clip_area_edge_col((e["x1"], e["y1"], e["x2"], e["y2"]), x0, x1, y0, y1),
-    )
+    cx, cy = grid.x_sql("ix"), grid.y_sql("iy")
+    x0, x1 = f"({cx} - {hdx!r})", f"({cx} + {hdx!r})"
+    y0, y1 = f"({cy} - {hdy!r})", f"({cy} + {hdy!r})"
+    edge = clip_area_edge_sql(("e.x1", "e.y1", "e.x2", "e.y2"), x0, x1, y0, y1)
+    signed = F.expr(f"aggregate(edges, CAST(0 AS DOUBLE), (acc, e) -> acc + {edge})")
     frac = F.when(F.col("inside"), F.lit(1.0)).otherwise(
         F.abs(signed) / F.lit(abs(grid.dx) * abs(grid.dy))
     )

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from rasters_jl_spark import fixtures as FX
 from rasters_jl_spark.functions.geometry import (
+    crossing_sql,
     edges_values_sql,
     polys_values_sql,
 )
@@ -103,8 +104,7 @@ cand AS (
 hits AS (
     SELECT c.doc_id, c.n_chars, c.geom_id
     FROM cand c JOIN edges e ON e.geom_id = c.geom_id
-    WHERE ((e.y1 > c.lat) <> (e.y2 > c.lat))
-      AND c.lon < e.x1 + (e.x2 - e.x1) * (c.lat - e.y1) / (e.y2 - e.y1)
+    WHERE {crossing_sql('c.lon', 'c.lat', 'e')}
     GROUP BY c.doc_id, c.n_chars, c.geom_id
     HAVING COUNT(*) % 2 = 1
 )"""
@@ -269,8 +269,7 @@ def _pip_cells_cte(polys) -> str:
 pip AS (
     SELECT r.ix, r.iy, e.geom_id
     FROM rast r JOIN gedges e
-      ON ((e.y1 > {G.y_sql('r.iy')}) <> (e.y2 > {G.y_sql('r.iy')}))
-     AND {G.x_sql('r.ix')} < e.x1 + (e.x2 - e.x1) * ({G.y_sql('r.iy')} - e.y1) / (e.y2 - e.y1)
+      ON {crossing_sql(G.x_sql('r.ix'), G.y_sql('r.iy'), 'e')}
     GROUP BY r.ix, r.iy, e.geom_id
     HAVING COUNT(*) % 2 = 1
 )"""
@@ -676,8 +675,8 @@ def q_resample_cubicspline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cubic_sql(method: str) -> str:
-    """k×k-stencil kernel resample oracle — same weight arithmetic as the
-    `operators/resample.py` Column kernels (gdalwarp cubic/lanczos family,
+    """k×k-stencil kernel resample oracle — the weight text that
+    `operators/resample.py::_sample` runs (gdalwarp cubic/lanczos family,
     `src/extensions.jl:59-75`; conformance style `test/resample.jl:16-27`)."""
     from rasters_jl_spark.operators.resample import KERNEL_OFFSETS, cubic_w_sql
 
@@ -686,8 +685,8 @@ def _cubic_sql(method: str) -> str:
     fy = f"(({_T.y_sql('jy.j')} - {G.y0!r}) / {G.dy!r})"
     tx = "(CAST(di.d AS DOUBLE) - n.wx)"
     ty = "(CAST(dj.d AS DOUBLE) - n.wy)"
-    wx = cubic_w_sql(f"ABS{tx}", method, t=tx)
-    wy = cubic_w_sql(f"ABS{ty}", method, t=ty)
+    wx = cubic_w_sql(method, tx)
+    wy = cubic_w_sql(method, ty)
     return f"""WITH {RAST_A_CTE},
 t AS (
     SELECT CAST(jx.j AS INT) AS ix, CAST(jy.j AS INT) AS iy,

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from rasters_jl_spark import fixtures as FX
 from rasters_jl_spark.functions import ann
+from rasters_jl_spark.functions.geometry import crossing_sql
 from rasters_jl_spark.grid import GridSpec
 from rasters_jl_spark.operators.aggregate import aggregate
 from rasters_jl_spark.operators.core import classify, points
@@ -651,8 +652,7 @@ gedges AS ({edges_values_sql([MULTI_POLY])}),
 pip AS (
     SELECT r.ix, r.iy
     FROM rast r JOIN gedges e
-      ON ((e.y1 > {cy}) <> (e.y2 > {cy}))
-     AND {cx} < e.x1 + (e.x2 - e.x1) * ({cy} - e.y1) / (e.y2 - e.y1)
+      ON {crossing_sql(cx, cy, 'e')}
     WHERE {cx} >= {xmin!r} AND {cx} <= {xmax!r} AND {cy} >= {ymin!r} AND {cy} <= {ymax!r}
     GROUP BY r.ix, r.iy
     HAVING COUNT(*) % 2 = 1
@@ -918,7 +918,7 @@ def _coverage_exact_sql() -> str:
     for p in FX.RASTER_POLYS:
         signed = "0.0"
         for e in p.edges:
-            exy = tuple(repr(float(v)) for v in e)
+            exy = [f"CAST({float(v)!r} AS DOUBLE)" for v in e]
             signed = f"({signed} + {clip_area_edge_sql(exy, x0, x1, y0, y1)})"
         total = f"({total} + ABS({signed}))"
     return f"""WITH {RAST_A_CTE}
@@ -1246,8 +1246,7 @@ boxed AS (
 pipc AS (
     SELECT b.ix, b.iy, b.geom_id
     FROM boxed b JOIN gedges e ON e.geom_id = b.geom_id
-    WHERE ((e.y1 > {g.y_sql('b.iy')}) <> (e.y2 > {g.y_sql('b.iy')}))
-      AND {g.x_sql('b.ix')} < e.x1 + (e.x2 - e.x1) * ({g.y_sql('b.iy')} - e.y1) / (e.y2 - e.y1)
+    WHERE {crossing_sql(g.x_sql('b.ix'), g.y_sql('b.iy'), 'e')}
     GROUP BY b.ix, b.iy, b.geom_id
     HAVING COUNT(*) % 2 = 1
 )
@@ -1302,8 +1301,7 @@ boxed AS (
 pipc AS (
     SELECT b.ix, b.iy, b.geom_id, ANY_VALUE(b.value) AS value
     FROM boxed b JOIN gedges e ON e.geom_id = b.geom_id
-    WHERE ((e.y1 > {g.y_sql('b.iy')}) <> (e.y2 > {g.y_sql('b.iy')}))
-      AND {g.x_sql('b.ix')} < e.x1 + (e.x2 - e.x1) * ({g.y_sql('b.iy')} - e.y1) / (e.y2 - e.y1)
+    WHERE {crossing_sql(g.x_sql('b.ix'), g.y_sql('b.iy'), 'e')}
     GROUP BY b.ix, b.iy, b.geom_id
     HAVING COUNT(*) % 2 = 1
 )
@@ -1362,8 +1360,7 @@ boxed AS (
 pipc AS (
     SELECT b.ix, b.iy, b.geom_id
     FROM boxed b JOIN gedges e ON e.geom_id = b.geom_id
-    WHERE ((e.y1 > {g.y_sql('b.iy')}) <> (e.y2 > {g.y_sql('b.iy')}))
-      AND {g.x_sql('b.ix')} < e.x1 + (e.x2 - e.x1) * ({g.y_sql('b.iy')} - e.y1) / (e.y2 - e.y1)
+    WHERE {crossing_sql(g.x_sql('b.ix'), g.y_sql('b.iy'), 'e')}
     GROUP BY b.ix, b.iy, b.geom_id
     HAVING COUNT(*) % 2 = 1
 )
@@ -1720,8 +1717,7 @@ hits AS (
     CROSS JOIN generate_series(0, {s - 1}) su(u)
     CROSS JOIN generate_series(0, {s - 1}) sv(v)
     JOIN gedges e ON e.geom_id = c.geom_id
-    WHERE ((e.y1 > {py}) <> (e.y2 > {py}))
-      AND {px} < e.x1 + (e.x2 - e.x1) * ({py} - e.y1) / (e.y2 - e.y1)
+    WHERE {crossing_sql(px, py, 'e')}
     GROUP BY c.ix, c.iy, c.geom_id, su.u, sv.v
     HAVING COUNT(*) % 2 = 1
 ),
@@ -1770,8 +1766,7 @@ cand AS (
 pip AS (
     SELECT c.ix, c.iy, c.geom_id
     FROM cand c JOIN gedges e ON e.geom_id = c.geom_id
-    WHERE ((e.y1 > {g.y_sql('c.iy')}) <> (e.y2 > {g.y_sql('c.iy')}))
-      AND {g.x_sql('c.ix')} < e.x1 + (e.x2 - e.x1) * ({g.y_sql('c.iy')} - e.y1) / (e.y2 - e.y1)
+    WHERE {crossing_sql(g.x_sql('c.ix'), g.y_sql('c.iy'), 'e')}
     GROUP BY c.ix, c.iy, c.geom_id
     HAVING COUNT(*) % 2 = 1
 )
@@ -1967,7 +1962,7 @@ def _zonal_coverage_sql() -> str:
     for p in FX.RASTER_POLYS:
         signed = "0.0"
         for e in p.edges:
-            exy = tuple(repr(float(v)) for v in e)
+            exy = [f"CAST({float(v)!r} AS DOUBLE)" for v in e]
             signed = f"({signed} + {clip_area_edge_sql(exy, x0, x1, y0, y1)})"
         frac = f"(ABS({signed}) / {abs(G.dx) * abs(G.dy)!r})"
         arms.append(

@@ -208,43 +208,34 @@ _DEFS: dict[str, tuple[QueryFn, str | None]] = {
 
 
 # The driver window: the first 50 REGISTRY entries, recorded each round.
-# (a) the 16 longest left out of the window: dedup_components, dedup_spans,
-#     dedup_spans_strip and simhash_wide_pairs (their one driver-built
-#     table is _aug_near's, also read by (c)) and the other
-#     session.local_df readers (bpe_*, unigram_*, langid_fasttext,
-#     url_blocklist, blocklist_word, scaled_read, replace_missing_stack,
-#     mosaic_first); (b) knn (pinned query side, one NULL row per query,
-#     tiers counted by an Observation on the eager phase-1 pin); (c) the
-#     round-8 rewrites of the read_documents consumers (their pins are
-#     eager); (d) the page cover join (one broadcast form, no salt;
-#     zonal_pages' empty zones from its one aggregate); (e) the raster cover join (one classified block
-#     cover, one mask form); (f) line walks on the driver and one more
-#     query whose plan reads a driver-built table (session.local_df). Left
-#     out for room: the 16 resample/warp/aggregate queries of the one
-#     raster resampling core (resample_*, warp_*, aggregate_mean/med/mode),
-#     recorded in the round that rewrote them, and mosaic_last,
-#     mosaic_mean, mosaic_stack and explicit_extract.
+# (a) the stencil kernels, the clipped-area integral and the warps: Spark
+#     runs the oracle's one SQL text through F.expr (cubic_w_sql,
+#     clip_area_edge_sql, GridSpec.*_sql); (b) the other resample, extract,
+#     rasterize and mask queries on the GridSpec SQL texts; (c) the rest
+#     of the grid-math readers (zonal, coverage, cellarea, crop, points);
+#     (d) the page cover join, whose oracle spells the even-odd test with
+#     crossing_sql. Left out for room: the session.local_df readers,
+#     knn and the read_documents consumers recorded in the round before,
+#     zonal_pages_salted, stream_zonal_stats, extract_lines,
+#     rasterize_lines and explicit_cellarea.
 _DRIVER_WINDOW = [
     # (a)
-    "dedup_components", "dedup_spans", "dedup_spans_strip", "simhash_wide_pairs",
-    "bpe_train", "bpe_train_local", "bpe_train_batched", "bpe_tokenize",
-    "unigram_lm_train", "unigram_tokenize", "langid_fasttext", "url_blocklist",
-    "blocklist_word", "scaled_read", "replace_missing_stack", "mosaic_first",
+    "resample_cubic", "resample_cubicspline", "resample_lanczos", "coverage_exact",
+    "zonal_coverage", "warp_hook", "warp_mercator", "warp_sinusoidal", "warp_agg",
+    "warp_utm", "warp_utm_agg",
     # (b)
-    "knn",
-    # (c)
-    "dedup_minhash", "dedup_exact", "simhash_pairs", "decontaminate", "tfidf_topk",
-    # (d)
-    "zonal_pages", "zonal_pages_salted", "spatial_join_pip", "stream_zonal_stats",
-    # (e)
+    "resample_near", "resample_bilinear", "resample_agg", "resample_rms",
+    "extract", "extract_name_atol", "extract_id", "extract_polygons", "extract_many",
+    "extract_nested", "rasterize_points", "rasterize_any", "rasterize_all",
+    "rasterize_polygons", "rasterize_many", "rasterize_multilayer", "rasterize_prod",
     "mask_geom", "boolmask", "boolmask_multipoly", "boolmask_holed",
     "boolmask_touches", "boolmask_inside", "missingmask",
-    "extract_polygons", "extract_many", "extract_nested",
-    "rasterize_polygons", "rasterize_many", "rasterize_multilayer", "rasterize_prod",
-    "zonal_stack", "zonal_many", "zonal_northup", "zonal_median", "zonal_coverage",
-    "coverage_polygon", "coverage_polygon_union",
-    # (f)
-    "extract_lines", "rasterize_lines", "explicit_cellarea",
+    # (c)
+    "zonal_stack", "zonal_many", "zonal_northup", "zonal_median", "zonal_extent",
+    "coverage", "coverage_union", "coverage_polygon", "coverage_polygon_union",
+    "cellarea", "cellarea_quad", "crop", "points",
+    # (d)
+    "zonal_pages", "spatial_join_pip",
 ]
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {

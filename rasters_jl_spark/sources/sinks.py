@@ -6,8 +6,8 @@ partition specs; in the sandbox, parquet directories with the same layout:
 
 - rasters partition by a tile column (`iy // tile` blocks) so extent
   predicates prune files (the reference's chunked IO, DiskArrays);
-- pages partition by `tile_id` so spatial joins and resumable runs touch
-  only the tiles they need.
+- pages bucket by `tile_id` so tile joins and roll-ups read the buckets
+  as their partitioning and skip the exchange.
 """
 
 from __future__ import annotations
@@ -28,16 +28,6 @@ def write_raster(raster: DataFrame, path: str, tile: int = 8, mode: str = "overw
 
 def read_raster(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path).select("ix", "iy", "value")
-
-
-def write_pages(pages: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write geotagged pages partitioned by tile_id — the engine's layout
-    contract: partition pruning turns extent queries into file skips."""
-    pages.write.mode(mode).partitionBy("tile_id").parquet(path)
-
-
-def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def write_pages_bucketed(

@@ -359,6 +359,36 @@ def test_cubic_kernels_linear_precision(spark):
                 assert abs(r["value"] - (2.0 * x - 3.0 * y + 7.0)) < 1e-9, (r, x, y)
 
 
+def test_kernel_weights_match_numpy(spark):
+    """The one weight text of each stencil kernel (run by Spark and by the
+    DuckDB oracle alike) against NumPy written from the textbook forms, not
+    the Horner order: Keys cubic a = -0.5, the cubic B-spline, and Lanczos
+    a = 3 (``np.sinc``), over every branch and its bounds, plus the known
+    Keys values at 0, 0.5, 1, 1.5 and 2."""
+    from rasters_jl_spark.operators.resample import cubic_w_sql
+
+    t = np.concatenate([np.linspace(-3.5, 3.5, 701), [-3.0, -2.0, -1.0, 0.0, 1e-13, 0.5, 1.0, 1.5, 2.0, 3.0]])
+    a = np.abs(t)
+    want = {
+        "cubic": np.where(
+            a <= 1, 1.5 * a**3 - 2.5 * a**2 + 1, np.where(a < 2, -0.5 * a**3 + 2.5 * a**2 - 4 * a + 2, 0.0)
+        ),
+        "cubicspline": np.where(
+            a <= 1, (3 * a**3 - 6 * a**2 + 4) / 6, np.where(a < 2, (2 - a) ** 3 / 6, 0.0)
+        ),
+        "lanczos": np.where(a < 3, np.sinc(t) * np.sinc(t / 3), 0.0),
+    }
+    df = spark.createDataFrame([(i, float(v)) for i, v in enumerate(t)], "i int, t double")
+    for method, w in want.items():
+        rows = df.select("i", F.expr(cubic_w_sql(method, "(t)")).alias("w")).collect()
+        got = np.array([r.w for r in sorted(rows)])
+        np.testing.assert_allclose(got, w, rtol=0, atol=1e-12, err_msg=method)
+    keys = df.where(F.col("t").isin(0.0, 0.5, 1.0, 1.5, 2.0)).select(
+        "t", F.expr(cubic_w_sql("cubic", "(t)")).alias("w")
+    )
+    assert {r.t: r.w for r in keys.collect()} == {0.0: 1.0, 0.5: 0.5625, 1.0: 0.0, 1.5: -0.0625, 2.0: 0.0}
+
+
 def test_aggregate_locus_negative_indices(spark):
     """Locus selection must keep negative-index blocks (extend() output):
     pmod, not %, so block -1's locus cell matches for center/end loci."""

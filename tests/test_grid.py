@@ -1,5 +1,6 @@
 """Grid math: cell assignment, hierarchy, rings, reversed-order lookups."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -53,7 +54,7 @@ def test_gridspec_point_ownership(spark):
     df = spark.createDataFrame(
         [(0.0, 0.0), (0.49, 0.0), (0.5, 0.0), (-0.5, 0.0), (-0.51, 0.0)], "x double, y double"
     )
-    out = [r["ix"] for r in df.select(g.ix_of_x_col(F.col("x")).alias("ix")).collect()]
+    out = [r["ix"] for r in df.select(F.expr(g.ix_of_x_sql("x")).alias("ix")).collect()]
     # half-open [center-0.5, center+0.5)
     assert out == [0, 0, 1, 0, -1]
 
@@ -64,11 +65,59 @@ def test_gridspec_reverse_ordered(spark):
     g = GridSpec(x0=10.0, y0=0.1, dx=-1.0, dy=0.1, nx=2, ny=2)
     df = spark.createDataFrame([(10.0, 0.1), (9.0, 0.2), (9.2, 0.13)], "x double, y double")
     out = df.select(
-        g.ix_of_x_col(F.col("x")).alias("ix"), g.iy_of_y_col(F.col("y")).alias("iy")
+        F.expr(g.ix_of_x_sql("x")).alias("ix"), F.expr(g.iy_of_y_sql("y")).alias("iy")
     ).collect()
     assert (out[0]["ix"], out[0]["iy"]) == (0, 0)
     assert (out[1]["ix"], out[1]["iy"]) == (1, 1)
     assert (out[2]["ix"], out[2]["iy"]) == (1, 0)
+
+
+@pytest.mark.parametrize(
+    "g",
+    [
+        GridSpec(x0=-179.87, y0=-61.3, dx=0.3, dy=0.45, nx=37, ny=23),
+        GridSpec(x0=9_400_015.3, y0=4_100_014.9, dx=30.1, dy=-29.7, nx=37, ny=23),
+    ],
+)
+def test_gridspec_sql_matches_numpy(spark, g):
+    """The one text of the grid math, run by Spark (and verbatim by the
+    DuckDB oracle), against NumPy float64 written independently: centres
+    bit for bit, owning cells of points on and between cell edges, and the
+    bounds test two cells past each side."""
+    ix = np.arange(-2, g.nx + 2)
+    iy = np.arange(-2, g.ny + 2)
+    cells = spark.createDataFrame(
+        [(int(i), int(j)) for i in ix for j in iy], "ix int, iy int"
+    ).select(
+        "ix",
+        "iy",
+        F.expr(g.x_sql("ix")).alias("x"),
+        F.expr(g.y_sql("iy")).alias("y"),
+        F.expr(g.in_bounds_sql("ix", "iy")).alias("ok"),
+    )
+    got = {(r.ix, r.iy): (r.x, r.y, r.ok) for r in cells.collect()}
+    for i in ix:
+        for j in iy:
+            x, y, ok = got[(int(i), int(j))]
+            assert x == g.x0 + float(i) * g.dx and y == g.y0 + float(j) * g.dy
+            assert ok == bool(0 <= i < g.nx and 0 <= j < g.ny)
+
+    rng = np.random.default_rng(3)
+    # in index units; k + 0.5 is the edge between cells k and k + 1
+    u = np.concatenate([rng.uniform(-3, g.nx + 3, 400), np.arange(-2, g.nx + 2) + 0.5])
+    v = np.concatenate([rng.uniform(-3, g.ny + 3, 400), rng.integers(-2, g.ny + 2, g.nx + 4) + 0.5])
+    px, py = g.x0 + u * g.dx, g.y0 + v * g.dy
+    pts = spark.createDataFrame(
+        [(k, float(a), float(b)) for k, (a, b) in enumerate(zip(px, py))], "k int, x double, y double"
+    )
+    owned = pts.select(
+        "k", F.expr(g.ix_of_x_sql("x")).alias("ix"), F.expr(g.iy_of_y_sql("y")).alias("iy")
+    )
+    want_ix = np.floor((px - (g.x0 - g.dx / 2.0)) / g.dx).astype(int)
+    want_iy = np.floor((py - (g.y0 - g.dy / 2.0)) / g.dy).astype(int)
+    assert {r.k: (r.ix, r.iy) for r in owned.collect()} == {
+        k: (int(a), int(b)) for k, (a, b) in enumerate(zip(want_ix, want_iy))
+    }
 
 
 def test_irregular_from_centers_and_bucketed_assign(spark):

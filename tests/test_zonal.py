@@ -491,7 +491,7 @@ def _block_grid(kind):
 def _block_layer(grid, seed):
     """Seeded non-convex stars, three with a star-shaped hole, spanning many
     16-cell blocks and reaching negative indices, with half their vertices
-    on cell corners as x_col/y_col compute them; plus triangles with one
+    on cell corners as x_sql/y_sql compute them; plus triangles with one
     vertex on a block corner (exactly or one ulp off) that reach into one
     quadrant, so the blocks of the other three meet them at most there."""
     rng = np.random.default_rng(seed)
@@ -547,7 +547,7 @@ def _full_edge_pairs(raster, grid, polys, boundary):
     """(cell, geom) pairs under in_bbox & boundary_pred over ALL edges."""
     from rasters_jl_spark.functions.geometry import boundary_pred, polygons_df
 
-    cx, cy = grid.x_col(F.col("ix")), grid.y_col(F.col("iy"))
+    cx, cy = F.expr(grid.x_sql("ix")), F.expr(grid.y_sql("iy"))
     adx, ady = abs(grid.dx), abs(grid.dy)
     bpx, bpy = (adx, ady) if boundary == "touches" else (0.0, 0.0)
     in_bbox = (
@@ -566,7 +566,7 @@ def test_classified_block_cover_is_exact(spark, kind):
     row for row in every boundary mode on signed, negative-index and
     1e7-magnitude grids, and zonal_coverage equals the full-edge
     clipped-area fold; all three block classes occur."""
-    from rasters_jl_spark.functions.geometry import clip_area_edge_col, raster_cover_df
+    from rasters_jl_spark.functions.geometry import clip_area_edge_sql, raster_cover_df
     from rasters_jl_spark.operators.zonal import raster_geom_candidates, zonal_coverage
 
     raster, g = _block_raster(spark, kind)
@@ -590,13 +590,10 @@ def test_classified_block_cover_is_exact(spark, kind):
         return
 
     hdx, hdy = abs(g.dx) / 2.0, abs(g.dy) / 2.0
-    cx, cy = g.x_col(F.col("ix")), g.y_col(F.col("iy"))
-    signed = F.aggregate(
-        F.col("edges"),
-        F.lit(0.0),
-        lambda acc, e: acc
-        + clip_area_edge_col((e["x1"], e["y1"], e["x2"], e["y2"]), cx - hdx, cx + hdx, cy - hdy, cy + hdy),
-    )
+    cx, cy = g.x_sql("ix"), g.y_sql("iy")
+    window = (f"({cx} - {hdx!r})", f"({cx} + {hdx!r})", f"({cy} - {hdy!r})", f"({cy} + {hdy!r})")
+    edge = clip_area_edge_sql(("e.x1", "e.y1", "e.x2", "e.y2"), *window)
+    signed = F.expr(f"aggregate(edges, CAST(0 AS DOUBLE), (acc, e) -> acc + {edge})")
     frac = F.abs(signed) / F.lit(4 * hdx * hdy)
     fi, pi = F.col("fi") / F.lit(1e9), F.col("pi") / F.lit(1e6)
     ref = (
@@ -614,6 +611,56 @@ def test_classified_block_cover_is_exact(spark, kind):
     assert len(want) > 10
     assert got == want
 
+
+
+def _clip_area_fold_np(grid, polys, ix, iy):
+    """NumPy float64 twin of `coverage_clipped`, in its operation order:
+    per ring, the running sum of each edge's clamped integral over the cell
+    window, then the sum of |ring| over the rings, divided by the cell
+    area (the algebra is in `functions/geometry.py`, before
+    ``clip_area_edge_sql``)."""
+    cx, cy = grid.x0 + ix.astype(float) * grid.dx, grid.y0 + iy.astype(float) * grid.dy
+    x0, x1 = cx - grid.dx / 2.0, cx + grid.dx / 2.0
+    y0, y1 = cy - grid.dy / 2.0, cy + grid.dy / 2.0
+
+    def h(u):
+        cu = np.maximum(y0, np.minimum(y1, u))
+        return cu * cu / 2.0 + y1 * np.maximum(0.0, u - y1) + y0 * np.minimum(0.0, u - y0)
+
+    total = np.zeros(len(ix))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        for p in polys:
+            signed = np.zeros(len(ix))
+            for ex1, ey1, ex2, ey2 in np.asarray(p.edges, dtype=np.float64):
+                a = np.maximum(x0, min(ex1, ex2))
+                b = np.minimum(x1, max(ex1, ex2))
+                m = (ey2 - ey1) / (ex2 - ex1)
+                c = ey1 - m * ex1
+                flat = np.maximum(y0, np.minimum(y1, c)) * (b - a)
+                integ = flat if m == 0.0 else (h(m * b + c) - h(m * a + c)) / m
+                term = np.where((ex1 == ex2) | (b <= a), 0.0, (-1.0 if ex2 > ex1 else 1.0) * integ)
+                signed = signed + term
+            total = total + np.abs(signed)
+    return total / (grid.dx * grid.dy)
+
+
+def test_coverage_clipped_matches_numpy_fold_bit_for_bit(spark):
+    """`coverage_clipped` on the 1e7-magnitude grid equals a NumPy float64
+    fold of the same operations bit for bit: its edge literals are DOUBLE,
+    so the edge-only slope and intercept fold in float64. As bare decimal
+    literals they folded in exact decimal arithmetic and moved every
+    boundary cell."""
+    from rasters_jl_spark.operators.resample import coverage_clipped
+
+    raster, g = _block_raster(spark, "projected")
+    polys = _block_layer(g, 5)[:4]
+    got = coverage_clipped(raster.select("ix", "iy"), g, polys).collect()
+    ix = np.array([r.ix for r in got])
+    iy = np.array([r.iy for r in got])
+    cov = np.array([r.coverage for r in got])
+    want = _clip_area_fold_np(g, polys, ix, iy)
+    assert ((want > 0) & (want < 1)).sum() > 500  # boundary cells
+    assert cov.tobytes() == want.tobytes(), np.flatnonzero(cov != want)[:10]
 
 
 def test_raster_cover_chunks_and_bands_are_invisible(monkeypatch):
