@@ -16,6 +16,17 @@ with zero Python and zero extra shuffle. ``filter``/``exists``/``aggregate``
 are interpreted (``CodegenFallback``) inside the otherwise generated stage,
 so their cost grows with the edges each row carries.
 
+Each polygon predicate is one SQL text: the per-edge even-odd term
+(:func:`crossing_sql`), the segment–rectangle touch (:func:`seg_rect_sql`)
+and the cell tests built from them (:func:`boundary_sql`). Spark runs the
+text through ``F.expr``; the DuckDB oracles run the same per-edge texts.
+Only the wrappers differ: Spark applies them with higher-order functions
+over a row's edge array (``filter``, ``exists``), the oracles with a join
+or a correlated subquery over the ``gedges`` relation
+(:func:`edges_values_sql`). A slip in a shared text is the same in both,
+so `tests/test_zonal.py` checks the texts against exact rational
+arithmetic, not the oracle.
+
 Boundary conventions (engine-defined, matching the reference's golden counts
 19²/20²/21² in `test/methods.jl:254-259`):
 - ``center``: ray-cast even-odd; points on the left/bottom boundary are
@@ -31,7 +42,7 @@ it, centre inside: ``inside`` true and no edges, so no per-row test) or
 Pages join :func:`polygon_cover_df`, whose rectangles are ``COVER_RES``
 cells; exterior cells are dropped, and cells on the globe border stay
 boundary with every edge, because ``cell_col`` clamps out-of-range points
-into them. Pages refine with ``inside OR pip_col(lon, lat, edges)``. Raster
+into them. Pages refine with ``inside OR pip_col("lon", "lat", "edges")``. Raster
 cells join :func:`raster_cover_df`, whose rectangles are blocks of
 ``GridSpec`` cells: one row per block, holding a struct for each polygon
 whose bbox reaches it (exterior ones too, so the candidate rows are the
@@ -212,7 +223,7 @@ def _classify(rx0, rx1, ry0, ry1, mx, my, edges):
     """Classify R padded rectangles ``rx0..ry1`` (arrays, or scalars shared
     by all R) against one polygon's E ``edges``, vectorised over rectangles
     × edges. Returns ``touches`` (R,): some closed edge meets the closed
-    rectangle (the test of :func:`_seg_intersects_rect`); ``can_cross``
+    rectangle (the test of :func:`seg_rect_sql`); ``can_cross``
     (R, E): y-span meets and max x ≥ ``rx0`` — no other edge satisfies
     :func:`pip_col`'s crossing predicate in the rectangle; ``centre_in``
     (R,): :func:`pip_col`'s arithmetic at ``(mx, my)``. An edge whose
@@ -351,64 +362,134 @@ def raster_cover_df(spark: SparkSession, polys: list[Polygon], grid, boundary: s
     return local_df(spark, [(*k, v) for k, v in by_block.items()], schema)
 
 
-def raster_cover_hit(grid, boundary: str, row) -> Column:
-    """A raster cell (``ix``, ``iy``) against one cover row, read through
-    ``row(name)``: ``inside``, or in the bbox (grown by one cell for
-    touches) and ``boundary``'s predicate over the row's edges."""
-    cx = F.expr(grid.x_sql("ix"))
-    cy = F.expr(grid.y_sql("iy"))
+def raster_cover_hit(grid, boundary: str, p: str) -> str:
+    """SQL text: a raster cell (``ix``, ``iy``) against one cover struct,
+    whose fields are read as ``{p}inside``, ``{p}xmin`` … (``p`` is ``""``
+    for columns, ``"g."`` for a lambda variable ``g``): ``inside``, or in
+    the bbox (grown by one cell for touches) and ``boundary``'s predicate
+    over the struct's edges."""
+    cx, cy = grid.x_sql("ix"), grid.y_sql("iy")
     # |step|: cell half-widths and bbox pads are magnitudes — signed steps
     # (north-up dy<0) must not flip the predicate direction
     adx, ady = abs(grid.dx), abs(grid.dy)
-    bpx = adx if boundary == "touches" else 0.0
-    bpy = ady if boundary == "touches" else 0.0
+    bpx = dbl_sql(adx if boundary == "touches" else 0.0)
+    bpy = dbl_sql(ady if boundary == "touches" else 0.0)
     in_bbox = (
-        (cx >= row("xmin") - bpx)
-        & (cx <= row("xmax") + bpx)
-        & (cy >= row("ymin") - bpy)
-        & (cy <= row("ymax") + bpy)
+        f"((({cx} >= {p}xmin - {bpx} AND {cx} <= {p}xmax + {bpx})"
+        f" AND {cy} >= {p}ymin - {bpy}) AND {cy} <= {p}ymax + {bpy})"
     )
-    return row("inside") | (
-        in_bbox & boundary_pred(boundary, cx, cy, adx / 2.0, ady / 2.0, row("edges"))
-    )
+    pred = boundary_sql(boundary, cx, cy, adx / 2.0, ady / 2.0, f"{p}edges")
+    return f"({p}inside OR ({in_bbox} AND {pred}))"
 
 
 # --------------------------------------------------------------------------
-# Point-in-polygon — JVM higher-order expression (the default hot path)
+# Polygon predicates — one SQL text each, for Spark (F.expr) and the oracles
 # --------------------------------------------------------------------------
 
 
-def pip_col(x: Column, y: Column, edges: Column) -> Column:
-    """Even-odd ray-cast: crossings of the ray (-inf, y) → (x, y).
-
-    size(filter(edges, e -> (y1>y) != (y2>y) AND x < x_at_y(e))) % 2 == 1
-    Pure Catalyst expression — no Python, no shuffle; ``filter`` itself is
-    interpreted (``CodegenFallback``), so the cost is per edge carried.
-    Identical formula in :func:`pip_sql` for the DuckDB oracle.
-    """
-    crossings = F.size(
-        F.filter(
-            edges,
-            lambda e: ((e["y1"] > y) != (e["y2"] > y))
-            & (x < e["x1"] + (e["x2"] - e["x1"]) * (y - e["y1"]) / (e["y2"] - e["y1"])),
-        )
-    )
-    return crossings % 2 == 1
+def dbl_sql(v: float) -> str:
+    """``v`` as a DOUBLE literal that Spark and DuckDB both parse exactly:
+    17 significant digits in exponent form (both type a plain ``0.3`` as
+    DECIMAL, and DuckDB rounds a 17-digit decimal cast to DOUBLE an ulp
+    off for some values)."""
+    return f"{float(v):.16e}"
 
 
 def crossing_sql(x: str, y: str, e: str) -> str:
     """Edge ``e`` (a relation alias or struct with x1, y1, x2, y2) crosses
-    the ray (-inf, y) → (x, y): the even-odd term of :func:`pip_col`, as
-    SQL text for the oracles."""
+    the ray (-inf, y) → (x, y): the even-odd term. ``x`` and ``y`` are SQL
+    fragments, parenthesised if compound."""
     return (
         f"((({e}.y1 > {y}) <> ({e}.y2 > {y}))"
         f" AND {x} < {e}.x1 + ({e}.x2 - {e}.x1) * ({y} - {e}.y1) / ({e}.y2 - {e}.y1))"
     )
 
 
+def seg_rect_sql(e: str, rx0: str, rx1: str, ry0: str, ry1: str) -> str:
+    """Closed segment ``e`` ∩ closed axis-aligned rect ≠ ∅: the exact
+    separating-axis test — bbox overlap AND (an endpoint inside OR the 4
+    rect corners are not all strictly on one side of the segment's line).
+    Chains are parenthesised left-deep: the Spark parser would balance a
+    flat AND chain into a different tree."""
+    x1, y1, x2, y2 = (f"{e}.{c}" for c in ("x1", "y1", "x2", "y2"))
+
+    def within(x, y):
+        return f"((({x} >= {rx0} AND {x} <= {rx1}) AND {y} >= {ry0}) AND {y} <= {ry1})"
+
+    bbox = (
+        f"(((LEAST({x1}, {x2}) <= {rx1} AND GREATEST({x1}, {x2}) >= {rx0})"
+        f" AND LEAST({y1}, {y2}) <= {ry1}) AND GREATEST({y1}, {y2}) >= {ry0})"
+    )
+    side = [
+        f"(({x2} - {x1}) * ({cy} - {y1}) - ({y2} - {y1}) * ({cx} - {x1}))"
+        for cx, cy in ((rx0, ry0), (rx1, ry0), (rx0, ry1), (rx1, ry1))
+    ]
+
+    def all_(op):
+        s1, s2, s3, s4 = (f"{s} {op} 0" for s in side)
+        return f"((({s1} AND {s2}) AND {s3}) AND {s4})"
+
+    apart = f"((NOT {all_('>')}) AND (NOT {all_('<')}))"
+    return f"({bbox} AND (({within(x1, y1)} OR {within(x2, y2)}) OR {apart}))"
+
+
+def _even_odd_sql(x: str, y: str, edges: str) -> str:
+    """Even-odd count over the edge array ``edges`` (SQL text)."""
+    return f"(size(filter({edges}, e -> {crossing_sql(x, y, 'e')})) % 2 = 1)"
+
+
+def pip_col(x: str, y: str, edges: str) -> Column:
+    """Even-odd ray cast of the point (``x``, ``y``) over the edge array
+    ``edges``, all SQL text: crossings of the ray (-inf, y) → (x, y),
+
+        size(filter(edges, e -> (y1>y) != (y2>y) AND x < x_at_y(e))) % 2 = 1
+
+    Pure Catalyst expression — no Python, no shuffle; ``filter`` itself is
+    interpreted (``CodegenFallback``), so the cost is per edge carried. The
+    oracles run the same :func:`crossing_sql` per edge over ``gedges``.
+    """
+    return F.expr(_even_odd_sql(x, y, edges))
+
+
+def boundary_sql(boundary: str, cx: str, cy: str, hdx: float, hdy: float, edges: str) -> str:
+    """The cell test of ``boundary`` for the cell [cx±hdx]×[cy±hdy] over the
+    edge array ``edges`` (SQL text):
+
+    - ``center``: the even-odd test at the centre (20² golden);
+    - ``touches``: the closed cell rect meets the polygon — the centre is
+      inside OR an edge meets the rect (a vertex in the rect is an endpoint
+      of an edge that does); the reference's 21² golden
+      (`test/methods.jl:258`);
+    - ``inside``: the cell rect lies in the polygon — all four corners,
+      the right/top ones shrunk by 1e-9 of the half-width, pass the
+      even-odd test AND no edge meets the shrunk rect (19² golden). The
+      half-open corner convention matches the reference's own open
+      question on boundary values (`test/methods.jl:252-253`).
+    """
+    if boundary == "center":
+        return _even_odd_sql(cx, cy, edges)
+    rx0, rx1 = f"({cx} - {dbl_sql(hdx)})", f"({cx} + {dbl_sql(hdx)})"
+    ry0, ry1 = f"({cy} - {dbl_sql(hdy)})", f"({cy} + {dbl_sql(hdy)})"
+
+    def hits(x0, x1, y0, y1):
+        return f"exists({edges}, e -> {seg_rect_sql('e', x0, x1, y0, y1)})"
+
+    if boundary == "touches":
+        return f"({_even_odd_sql(cx, cy, edges)} OR {hits(rx0, rx1, ry0, ry1)})"
+    if boundary == "inside":
+        ex, ey = dbl_sql(hdx * 1e-9), dbl_sql(hdy * 1e-9)
+        sx0, sx1 = f"({rx0} + {ex})", f"({rx1} - {ex})"
+        sy0, sy1 = f"({ry0} + {ey})", f"({ry1} - {ey})"
+        c1, c2, c3, c4 = (
+            _even_odd_sql(x, y, edges) for x, y in ((rx0, ry0), (sx1, ry0), (rx0, sy1), (sx1, sy1))
+        )
+        return f"(((({c1} AND {c2}) AND {c3}) AND {c4}) AND (NOT {hits(sx0, sx1, sy0, sy1)}))"
+    raise ValueError(f"boundary must be center|touches|inside, got {boundary!r}")
+
+
 def pip_sql(x: str, y: str, edges_rel: str = "edges e", geom_match: str = "") -> str:
     """Correlated even-odd count over an ``edges(geom_id,x1,y1,x2,y2)``
-    relation; same arithmetic as :func:`pip_col`."""
+    relation: the oracle wrapper of :func:`crossing_sql`."""
     where = crossing_sql(x, y, "e")
     if geom_match:
         where = f"{geom_match} AND {where}"
@@ -416,20 +497,16 @@ def pip_sql(x: str, y: str, edges_rel: str = "edges e", geom_match: str = "") ->
 
 
 def edges_values_sql(polys: list[Polygon]) -> str:
-    """``edges(geom_id,x1,y1,x2,y2) AS (VALUES ...)`` CTE body for DuckDB."""
-    vals = []
-    for p in polys:
-        for x1, y1, x2, y2 in p.edges:
-            vals.append(f"({p.geom_id}, {x1!r}, {y1!r}, {x2!r}, {y2!r})")
+    """``edges(geom_id,x1,y1,x2,y2) AS (VALUES ...)`` CTE body for DuckDB,
+    coordinates DOUBLE (:func:`dbl_sql`)."""
+    vals = [f"({p.geom_id}, {', '.join(map(dbl_sql, e))})" for p in polys for e in p.edges]
     return "SELECT * FROM (VALUES " + ", ".join(vals) + ") AS t(geom_id, x1, y1, x2, y2)"
 
 
 def polys_values_sql(polys: list[Polygon]) -> str:
-    """``polys(geom_id,xmin,xmax,ymin,ymax)`` CTE body for DuckDB."""
-    vals = []
-    for p in polys:
-        xmin, xmax, ymin, ymax = p.bbox
-        vals.append(f"({p.geom_id}, {xmin!r}, {xmax!r}, {ymin!r}, {ymax!r})")
+    """``polys(geom_id,xmin,xmax,ymin,ymax)`` CTE body for DuckDB,
+    coordinates DOUBLE (:func:`dbl_sql`)."""
+    vals = [f"({p.geom_id}, {', '.join(map(dbl_sql, p.bbox))})" for p in polys]
     return (
         "SELECT * FROM (VALUES " + ", ".join(vals) + ") AS t(geom_id, xmin, xmax, ymin, ymax)"
     )
@@ -459,8 +536,8 @@ def clip_area_edge_sql(exy, x0: str, x1: str, y0: str, y1: str) -> str:
     """One directed edge's contribution as SQL text, run through ``F.expr``
     by `zonal_coverage` and `coverage_clipped` and verbatim by their DuckDB
     oracles. ``exy`` is (x1,y1,x2,y2) and ``x0,x1,y0,y1`` the window bounds,
-    as SQL fragments; a literal edge must be DOUBLE (``CAST(v AS DOUBLE)``):
-    both dialects parse a bare ``0.3`` as DECIMAL, and the edge-only
+    as SQL fragments; a literal edge must be DOUBLE (:func:`dbl_sql`): both
+    dialects parse a bare ``0.3`` as DECIMAL, and the edge-only
     subexpressions (slope, intercept) would then fold in decimal."""
     ex1, ey1, ex2, ey2 = exy
     a = f"GREATEST({x0}, LEAST({ex1}, {ex2}))"
@@ -485,81 +562,6 @@ def clip_area_edge_sql(exy, x0: str, x1: str, y0: str, y1: str) -> str:
         f"(CASE WHEN {ex1} = {ex2} OR {b} <= {a} THEN 0.0"
         f" ELSE {sgn} * {integ} END)"
     )
-
-
-# --------------------------------------------------------------------------
-# Cell-rectangle vs polygon predicates (touches / inside boundary modes)
-# --------------------------------------------------------------------------
-
-
-def _seg_intersects_rect(e: Column, rx0, rx1, ry0, ry1) -> Column:
-    """Closed segment ∩ closed axis-aligned rect ≠ ∅.
-
-    Exact separating-axis test: bbox overlap AND (an endpoint inside OR the
-    4 rect corners are not all strictly on one side of the segment's line).
-    """
-    x1, y1, x2, y2 = e["x1"], e["y1"], e["x2"], e["y2"]
-    bbox_overlap = (
-        (F.least(x1, x2) <= rx1)
-        & (F.greatest(x1, x2) >= rx0)
-        & (F.least(y1, y2) <= ry1)
-        & (F.greatest(y1, y2) >= ry0)
-    )
-    p1_in = (x1 >= rx0) & (x1 <= rx1) & (y1 >= ry0) & (y1 <= ry1)
-    p2_in = (x2 >= rx0) & (x2 <= rx1) & (y2 >= ry0) & (y2 <= ry1)
-
-    def side(cx, cy):
-        return (x2 - x1) * (cy - y1) - (y2 - y1) * (cx - x1)
-
-    s1, s2, s3, s4 = side(rx0, ry0), side(rx1, ry0), side(rx0, ry1), side(rx1, ry1)
-    all_pos = (s1 > 0) & (s2 > 0) & (s3 > 0) & (s4 > 0)
-    all_neg = (s1 < 0) & (s2 < 0) & (s3 < 0) & (s4 < 0)
-    return bbox_overlap & (p1_in | p2_in | (~all_pos & ~all_neg))
-
-
-def cell_touches_col(cx: Column, cy: Column, hdx: float, hdy: float, edges: Column) -> Column:
-    """boundary=:touches — closed cell rect [cx±hdx]×[cy±hdy] meets polygon.
-
-    True iff the cell center is inside OR a polygon edge intersects the
-    rect (a vertex in the rect is an endpoint of an edge that does).
-    Reproduces the reference's 21² golden (`test/methods.jl:258`).
-    """
-    rx0, rx1, ry0, ry1 = cx - hdx, cx + hdx, cy - hdy, cy + hdy
-    center_in = pip_col(cx, cy, edges)
-    edge_hits = F.exists(edges, lambda e: _seg_intersects_rect(e, rx0, rx1, ry0, ry1))
-    return center_in | edge_hits
-
-
-def cell_inside_col(cx: Column, cy: Column, hdx: float, hdy: float, edges: Column) -> Column:
-    """boundary=:inside — cell rect fully inside the polygon (19² golden).
-
-    All four corners pass the ray-cast AND no edge crosses the (slightly
-    shrunk) rect. The half-open corner convention matches the reference's
-    own open question on boundary values (`test/methods.jl:252-253`).
-    """
-    eps_x, eps_y = hdx * 1e-9, hdy * 1e-9
-    rx0, rx1, ry0, ry1 = cx - hdx, cx + hdx, cy - hdy, cy + hdy
-    corners_in = (
-        pip_col(rx0, ry0, edges)
-        & pip_col(rx1 - eps_x, ry0, edges)
-        & pip_col(rx0, ry1 - eps_y, edges)
-        & pip_col(rx1 - eps_x, ry1 - eps_y, edges)
-    )
-    edge_hits = F.exists(
-        edges,
-        lambda e: _seg_intersects_rect(e, rx0 + eps_x, rx1 - eps_x, ry0 + eps_y, ry1 - eps_y),
-    )
-    return corners_in & ~edge_hits
-
-
-def boundary_pred(boundary: str, cx: Column, cy: Column, hdx: float, hdy: float, edges: Column) -> Column:
-    if boundary == "center":
-        return pip_col(cx, cy, edges)
-    if boundary == "touches":
-        return cell_touches_col(cx, cy, hdx, hdy, edges)
-    if boundary == "inside":
-        return cell_inside_col(cx, cy, hdx, hdy, edges)
-    raise ValueError(f"boundary must be center|touches|inside, got {boundary!r}")
 
 
 # --------------------------------------------------------------------------

@@ -27,9 +27,12 @@ values, not the oracle. Literals are written with ``repr``, which both
 dialects parse as DECIMAL and coerce to DOUBLE where they meet a DOUBLE
 operand (exactly in Spark). A literal-only subexpression would be folded
 in decimal arithmetic instead: write such operands as ``CAST(v AS DOUBLE)``.
+The polygon predicates are one text each too (`functions/geometry.py`:
+``crossing_sql``, ``seg_rect_sql``, ``boundary_sql``), with their literals
+in exact DOUBLE form (``dbl_sql``).
 
-WebGrid keeps two texts, ``*_col`` Columns for Spark and ``*_sql`` for the
-oracle: ``bench.py`` and ``perfbench/`` import its Columns, and where the
+WebGrid keeps the last Column twins, two texts, ``*_col`` Columns for
+Spark and ``*_sql`` for the oracle: ``bench.py`` and ``perfbench/`` import its Columns, and where the
 dialects differ the texts must too (``parent_cell_sql`` uses DuckDB's
 ``//``; :meth:`WebGrid.ring_cells_col` has no twin;
 `sources/pages.py::lat_col` pre-reduces the hash that ``LAT_SQL`` spells

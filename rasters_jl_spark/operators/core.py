@@ -140,7 +140,7 @@ def _covered(raster: DataFrame, grid: GridSpec, polys: list[Polygon], boundary: 
     distinct and no join back."""
     blocks = raster_cover_df(raster.sparkSession, polys, grid, boundary)
     j = with_blocks(raster).join(F.broadcast(blocks), ["_bx", "_by"], "left")
-    hit = F.exists("geoms", lambda g: raster_cover_hit(grid, boundary, g.getField))
+    hit = F.expr(f"exists(geoms, g -> {raster_cover_hit(grid, boundary, 'g.')})")
     return j.withColumn("_cov", F.coalesce(hit, F.lit(False))).drop("_bx", "_by", "geoms")
 
 

@@ -173,9 +173,11 @@ def knn_pages(
     # with <k real candidates ranks its NULL row at or before k, so its
     # rank-k dist2 — hence _dk and _rf — is NULL and it routes to brute;
     # with ≥k the NULL row ranks past k and the rank filter drops it.
+    # The NULL rows come from one partition: one task in the phase-1 map
+    # stage, not one per partition of the query pin.
     cand1 = _ring_candidates(
         q, pages, g, F.lit(r0), exploded_rows_est=n_queries * (2 * r0 + 1) ** 2
-    ).unionByName(q, allowMissingColumns=True)
+    ).unionByName(q.coalesce(1), allowMissingColumns=True)
     rf_need = (F.ceil(F.sqrt(F.col("_dk")) / F.lit(g.step)) + 1).cast("int")
     topk = cand1.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= k)
     dk = F.max(F.when(F.col("_rn") == k, F.col("dist2"))).over(Window.partitionBy("q_id"))

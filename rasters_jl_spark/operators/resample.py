@@ -353,7 +353,7 @@ def coverage_polygons(
     zero-coverage cells. At 100× data the subpixel explode never touches
     the (vast) empty part of the raster.
     """
-    from rasters_jl_spark.functions.geometry import pip_col
+    from rasters_jl_spark.functions.geometry import dbl_sql, pip_col
     from rasters_jl_spark.operators.zonal import raster_geom_candidates
 
     cand = raster_geom_candidates(
@@ -363,11 +363,12 @@ def coverage_polygons(
     sub = F.sequence(F.lit(0), F.lit(scale - 1))
     df = cand.select("*", F.explode(sub).alias("u"))
     df = df.select("*", F.explode(sub).alias("v"))
-    hdx, hdy = grid.dx / 2.0, grid.dy / 2.0
-    sub_x, sub_y = grid.dx / scale, grid.dy / scale
-    px = F.expr(grid.x_sql("ix")) - F.lit(hdx) + (F.col("u").cast("double") + F.lit(0.5)) * F.lit(sub_x)
-    py = F.expr(grid.y_sql("iy")) - F.lit(hdy) + (F.col("v").cast("double") + F.lit(0.5)) * F.lit(sub_y)
-    hits = df.where(F.col("inside") | pip_col(px, py, F.col("edges")))
+    hdx, hdy = dbl_sql(grid.dx / 2.0), dbl_sql(grid.dy / 2.0)
+    sub_x, sub_y = dbl_sql(grid.dx / scale), dbl_sql(grid.dy / scale)
+    half = dbl_sql(0.5)
+    px = f"(({grid.x_sql('ix')} - {hdx}) + (CAST(u AS DOUBLE) + {half}) * {sub_x})"
+    py = f"(({grid.y_sql('iy')} - {hdy}) + (CAST(v AS DOUBLE) + {half}) * {sub_y})"
+    hits = df.where(F.col("inside") | pip_col(px, py, "edges"))
     if mode == "union":
         agg = F.count_distinct(F.col("u") * scale + F.col("v"))
     elif mode == "sum":
@@ -407,7 +408,7 @@ def coverage_clipped(
     join instead."""
     if mode != "sum":
         raise ValueError(f"coverage_clipped supports mode='sum', got {mode!r}")
-    from rasters_jl_spark.functions.geometry import clip_area_edge_sql
+    from rasters_jl_spark.functions.geometry import clip_area_edge_sql, dbl_sql
 
     cx, cy = grid.x_sql("ix"), grid.y_sql("iy")
     hdx, hdy = grid.dx / 2.0, grid.dy / 2.0
@@ -419,7 +420,7 @@ def coverage_clipped(
     for p in polys:
         signed = "CAST(0 AS DOUBLE)"
         for e in p.edges:
-            exy = [f"CAST({float(v)!r} AS DOUBLE)" for v in e]
+            exy = list(map(dbl_sql, e))
             signed = f"({signed} + {clip_area_edge_sql(exy, x0, x1, y0, y1)})"
         total = f"({total} + ABS({signed}))"
     cov = F.expr(f"{total} / {grid.dx * grid.dy!r}")

@@ -55,7 +55,7 @@ def spatial_join_pages(pages: DataFrame, polys: list[Polygon]) -> DataFrame:
     cand = p.join(F.broadcast(cover), p["_cover_cell"] == cover["cover_cell"]).drop(
         "cover_cell"
     )
-    hit = pip_col(F.col("lon"), F.col("lat"), F.col("edges"))
+    hit = pip_col("lon", "lat", "edges")
     # interior cover cells need no ray cast; boundary cells carry the edges
     refined = cand.where(F.col("inside") | hit)
     return refined.select("geom_id", *pages.columns)
@@ -151,7 +151,7 @@ def raster_geom_candidates(
     cover = raster_cover_df(raster.sparkSession, polys, grid, boundary)
     cand = with_blocks(raster).join(F.broadcast(cover), ["_bx", "_by"])
     cand = cand.select(*raster.columns, F.inline("geoms"))
-    out = cand.withColumn("_inside", raster_cover_hit(grid, boundary, F.col))
+    out = cand.withColumn("_inside", F.expr(raster_cover_hit(grid, boundary, "")))
     return out if keep_arrays else out.drop("inside", "edges")
 
 

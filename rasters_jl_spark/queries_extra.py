@@ -9,7 +9,15 @@ from pyspark.sql import functions as F
 
 from rasters_jl_spark import fixtures as FX
 from rasters_jl_spark.functions import ann
-from rasters_jl_spark.functions.geometry import crossing_sql
+from rasters_jl_spark.functions.geometry import (
+    clip_area_edge_sql,
+    crossing_sql,
+    dbl_sql,
+    edges_values_sql,
+    pip_sql,
+    polys_values_sql,
+    seg_rect_sql,
+)
 from rasters_jl_spark.grid import GridSpec
 from rasters_jl_spark.operators.aggregate import aggregate
 from rasters_jl_spark.operators.core import classify, points
@@ -645,7 +653,6 @@ def _multipoly_sql() -> str:
     # components; mirrored here
     cx, cy = G.x_sql("r.ix"), G.y_sql("r.iy")
     xmin, xmax, ymin, ymax = MULTI_POLY.bbox
-    from rasters_jl_spark.functions.geometry import edges_values_sql
 
     return f"""WITH {RAST_A_CTE},
 gedges AS ({edges_values_sql([MULTI_POLY])}),
@@ -907,8 +914,6 @@ def q_coverage_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _coverage_exact_sql() -> str:
-    from rasters_jl_spark.functions.geometry import clip_area_edge_sql
-
     hdx, hdy = G.dx / 2.0, G.dy / 2.0
     x0 = f"({G.x_sql('r.ix')} - {hdx!r})"
     x1 = f"({G.x_sql('r.ix')} + {hdx!r})"
@@ -918,7 +923,7 @@ def _coverage_exact_sql() -> str:
     for p in FX.RASTER_POLYS:
         signed = "0.0"
         for e in p.edges:
-            exy = [f"CAST({float(v)!r} AS DOUBLE)" for v in e]
+            exy = list(map(dbl_sql, e))
             signed = f"({signed} + {clip_area_edge_sql(exy, x0, x1, y0, y1)})"
         total = f"({total} + ABS({signed}))"
     return f"""WITH {RAST_A_CTE}
@@ -1226,8 +1231,6 @@ def q_zonal_many(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _zonal_many_sql() -> str:
-    from rasters_jl_spark.functions.geometry import edges_values_sql, polys_values_sql
-
     g = FX.MANY_GRID
     cx, cy = g.x_sql("c.ix"), g.y_sql("c.iy")
     return f"""WITH cells AS (
@@ -1281,8 +1284,6 @@ def q_extract_many(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _extract_many_sql() -> str:
-    from rasters_jl_spark.functions.geometry import edges_values_sql, polys_values_sql
-
     g = FX.MANY_GRID
     cx, cy = g.x_sql("c.ix"), g.y_sql("c.iy")
     return f"""WITH cells AS (
@@ -1344,8 +1345,6 @@ def q_zonal_northup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _zonal_northup_sql() -> str:
-    from rasters_jl_spark.functions.geometry import edges_values_sql, polys_values_sql
-
     g = NU_GRID
     cx, cy = g.x_sql("c.ix"), g.y_sql("c.iy")
     return f"""WITH rast0 AS ({synth_raster_sql('a')}),
@@ -1695,8 +1694,6 @@ def q_coverage_polygon_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _coverage_polygon_sql(mode: str) -> str:
-    from rasters_jl_spark.functions.geometry import edges_values_sql, polys_values_sql
-
     s = _COV_SCALE
     hdx, hdy = G.dx / 2.0, G.dy / 2.0
     subx, suby = G.dx / s, G.dy / s
@@ -1748,8 +1745,6 @@ def q_rasterize_many(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rasterize_many_sql() -> str:
-    from rasters_jl_spark.functions.geometry import edges_values_sql, polys_values_sql
-
     g = FX.MANY_GRID
     cx, cy = g.x_sql("c.ix"), g.y_sql("c.iy")
     return f"""WITH cells AS (
@@ -1787,41 +1782,20 @@ def q_boolmask_touches(spark: SparkSession, sf_dir: str) -> DataFrame:
     return boolmask(synth_raster(spark, sf_dir, "a"), G, FX.RASTER_POLYS, boundary="touches")
 
 
-def _touches_sql() -> str:
-    """Transliterate cell_touches_col / _seg_intersects_rect
-    (functions/geometry.py) into DuckDB SQL with polygon literals —
-    identical arithmetic structure so doubles match bit-for-bit."""
-    hdx, hdy = G.dx / 2.0, G.dy / 2.0
+def _cell_rect(hdx: float, hdy: float) -> tuple[str, str, str, str]:
+    """(x0, x1, y0, y1) of the rect [cx±hdx]×[cy±hdy] of raster cell r."""
     cx, cy = G.x_sql("r.ix"), G.y_sql("r.iy")
-    rx0, rx1 = f"({cx} - {hdx!r})", f"({cx} + {hdx!r})"
-    ry0, ry1 = f"({cy} - {hdy!r})", f"({cy} + {hdy!r})"
-    terms = []
-    for p in FX.RASTER_POLYS:
-        for vx, vy in p.ring:
-            terms.append(
-                f"({vx!r} >= {rx0} AND {vx!r} <= {rx1} AND {vy!r} >= {ry0} AND {vy!r} <= {ry1})"
-            )
-        for x1, y1, x2, y2 in p.edges:
-            bbox = (
-                f"(LEAST({x1!r}, {x2!r}) <= {rx1} AND GREATEST({x1!r}, {x2!r}) >= {rx0}"
-                f" AND LEAST({y1!r}, {y2!r}) <= {ry1} AND GREATEST({y1!r}, {y2!r}) >= {ry0})"
-            )
-            p1in = f"({x1!r} >= {rx0} AND {x1!r} <= {rx1} AND {y1!r} >= {ry0} AND {y1!r} <= {ry1})"
-            p2in = f"({x2!r} >= {rx0} AND {x2!r} <= {rx1} AND {y2!r} >= {ry0} AND {y2!r} <= {ry1})"
+    hx, hy = dbl_sql(hdx), dbl_sql(hdy)
+    return f"({cx} - {hx})", f"({cx} + {hx})", f"({cy} - {hy})", f"({cy} + {hy})"
 
-            def side(px, py):
-                return (
-                    f"(({x2!r} - {x1!r}) * ({py} - {y1!r}) - ({y2!r} - {y1!r}) * ({px} - {x1!r}))"
-                )
 
-            s1, s2 = side(rx0, ry0), side(rx1, ry0)
-            s3, s4 = side(rx0, ry1), side(rx1, ry1)
-            all_pos = f"({s1} > 0 AND {s2} > 0 AND {s3} > 0 AND {s4} > 0)"
-            all_neg = f"({s1} < 0 AND {s2} < 0 AND {s3} < 0 AND {s4} < 0)"
-            terms.append(f"({bbox} AND ({p1in} OR {p2in} OR (NOT {all_pos} AND NOT {all_neg})))")
-    geom_term = " OR ".join(terms)
+def _touches_sql() -> str:
+    """boundary=:touches over the gedges relation: the centre passes the
+    even-odd test (the ``pip`` CTE) or some edge meets the closed cell rect
+    (seg_rect_sql, the text the engine runs)."""
+    hit = seg_rect_sql("e", *_cell_rect(abs(G.dx) / 2.0, abs(G.dy) / 2.0))
     return f"""WITH {RAST_A_CTE}, {_pip_cells_cte(FX.RASTER_POLYS)}
-SELECT r.ix, r.iy, (p.ix IS NOT NULL OR {geom_term}) AS mask
+SELECT r.ix, r.iy, (p.ix IS NOT NULL OR EXISTS (SELECT 1 FROM gedges e WHERE {hit})) AS mask
 FROM rast r LEFT JOIN (SELECT DISTINCT ix, iy FROM pip) p ON r.ix = p.ix AND r.iy = p.iy"""
 
 
@@ -1837,60 +1811,25 @@ def q_boolmask_inside(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _inside_sql() -> str:
-    """Transliterate cell_inside_col (functions/geometry.py): all four
-    (eps-shrunk) corners pass the even-odd ray cast AND no edge meets the
-    shrunk rect — same literal arithmetic as the Spark predicate."""
-    hdx, hdy = G.dx / 2.0, G.dy / 2.0
-    eps_x, eps_y = hdx * 1e-9, hdy * 1e-9
-    cx, cy = G.x_sql("r.ix"), G.y_sql("r.iy")
-    rx0, rx1 = f"({cx} - {hdx!r})", f"({cx} + {hdx!r})"
-    ry0, ry1 = f"({cy} - {hdy!r})", f"({cy} + {hdy!r})"
-
-    def pip(px, py, poly):
-        cases = []
-        for x1, y1, x2, y2 in poly.edges:
-            cross = f"(({y1!r} > {py}) <> ({y2!r} > {py}))"
-            xaty = f"({x1!r} + ({x2!r} - {x1!r}) * ({py} - {y1!r}) / ({y2!r} - {y1!r}))"
-            cases.append(f"(CASE WHEN {cross} AND {px} < {xaty} THEN 1 ELSE 0 END)")
-        return f"(({' + '.join(cases)}) % 2 = 1)"
-
-    def seg_hits_shrunk(poly):
-        sx0, sx1 = f"({rx0} + {eps_x!r})", f"({rx1} - {eps_x!r})"
-        sy0, sy1 = f"({ry0} + {eps_y!r})", f"({ry1} - {eps_y!r})"
-        hits = []
-        for x1, y1, x2, y2 in poly.edges:
-            bbox = (
-                f"(LEAST({x1!r}, {x2!r}) <= {sx1} AND GREATEST({x1!r}, {x2!r}) >= {sx0}"
-                f" AND LEAST({y1!r}, {y2!r}) <= {sy1} AND GREATEST({y1!r}, {y2!r}) >= {sy0})"
-            )
-            p1in = f"({x1!r} >= {sx0} AND {x1!r} <= {sx1} AND {y1!r} >= {sy0} AND {y1!r} <= {sy1})"
-            p2in = f"({x2!r} >= {sx0} AND {x2!r} <= {sx1} AND {y2!r} >= {sy0} AND {y2!r} <= {sy1})"
-
-            def side(px, py):
-                return (
-                    f"(({x2!r} - {x1!r}) * ({py} - {y1!r}) - ({y2!r} - {y1!r}) * ({px} - {x1!r}))"
-                )
-
-            s1, s2 = side(sx0, sy0), side(sx1, sy0)
-            s3, s4 = side(sx0, sy1), side(sx1, sy1)
-            all_pos = f"({s1} > 0 AND {s2} > 0 AND {s3} > 0 AND {s4} > 0)"
-            all_neg = f"({s1} < 0 AND {s2} < 0 AND {s3} < 0 AND {s4} < 0)"
-            hits.append(f"({bbox} AND ({p1in} OR {p2in} OR (NOT {all_pos} AND NOT {all_neg})))")
-        return f"({' OR '.join(hits)})"
-
-    per_poly = []
-    for p in FX.RASTER_POLYS:
-        corners = " AND ".join(
-            [
-                pip(rx0, ry0, p),
-                pip(f"({rx1} - {eps_x!r})", ry0, p),
-                pip(rx0, f"({ry1} - {eps_y!r})", p),
-                pip(f"({rx1} - {eps_x!r})", f"({ry1} - {eps_y!r})", p),
-            ]
-        )
-        per_poly.append(f"(({corners}) AND NOT {seg_hits_shrunk(p)})")
-    return f"""WITH {RAST_A_CTE}
-SELECT r.ix, r.iy, ({' OR '.join(per_poly)}) AS mask FROM rast r"""
+    """boundary=:inside over the gedges relation: for some polygon, all four
+    corners (the right/top ones shrunk by 1e-9 of the half-width) pass its
+    even-odd test (pip_sql) AND none of its edges meets the shrunk rect
+    (seg_rect_sql)."""
+    hdx, hdy = abs(G.dx) / 2.0, abs(G.dy) / 2.0
+    ex, ey = dbl_sql(hdx * 1e-9), dbl_sql(hdy * 1e-9)
+    rx0, rx1, ry0, ry1 = _cell_rect(hdx, hdy)
+    sx1, sy1 = f"({rx1} - {ex})", f"({ry1} - {ey})"
+    own = ("gedges e", "e.geom_id = p.geom_id")
+    corners = " AND ".join(
+        pip_sql(x, y, *own) for x, y in ((rx0, ry0), (sx1, ry0), (rx0, sy1), (sx1, sy1))
+    )
+    hit = seg_rect_sql("e", f"({rx0} + {ex})", sx1, f"({ry0} + {ey})", sy1)
+    return f"""WITH {RAST_A_CTE},
+gpolys AS ({polys_values_sql(FX.RASTER_POLYS)}),
+gedges AS ({edges_values_sql(FX.RASTER_POLYS)})
+SELECT r.ix, r.iy,
+       BOOL_OR({corners} AND NOT EXISTS (SELECT 1 FROM gedges e WHERE {own[1]} AND {hit})) AS mask
+FROM rast r CROSS JOIN gpolys p GROUP BY r.ix, r.iy"""
 
 
 SQL_boolmask_inside = _inside_sql()
@@ -1951,7 +1890,6 @@ def q_zonal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _zonal_coverage_sql() -> str:
-    from rasters_jl_spark.functions.geometry import clip_area_edge_sql
 
     hdx, hdy = abs(G.dx) / 2.0, abs(G.dy) / 2.0
     x0 = f"({G.x_sql('r.ix')} - {hdx!r})"
@@ -1962,7 +1900,7 @@ def _zonal_coverage_sql() -> str:
     for p in FX.RASTER_POLYS:
         signed = "0.0"
         for e in p.edges:
-            exy = [f"CAST({float(v)!r} AS DOUBLE)" for v in e]
+            exy = list(map(dbl_sql, e))
             signed = f"({signed} + {clip_area_edge_sql(exy, x0, x1, y0, y1)})"
         frac = f"(ABS({signed}) / {abs(G.dx) * abs(G.dy)!r})"
         arms.append(

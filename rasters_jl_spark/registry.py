@@ -208,34 +208,37 @@ _DEFS: dict[str, tuple[QueryFn, str | None]] = {
 
 
 # The driver window: the first 50 REGISTRY entries, recorded each round.
-# (a) the stencil kernels, the clipped-area integral and the warps: Spark
-#     runs the oracle's one SQL text through F.expr (cubic_w_sql,
-#     clip_area_edge_sql, GridSpec.*_sql); (b) the other resample, extract,
-#     rasterize and mask queries on the GridSpec SQL texts; (c) the rest
-#     of the grid-math readers (zonal, coverage, cellarea, crop, points);
-#     (d) the page cover join, whose oracle spells the even-odd test with
-#     crossing_sql. Left out for room: the session.local_df readers,
-#     knn and the read_documents consumers recorded in the round before,
-#     zonal_pages_salted, stream_zonal_stats, extract_lines,
-#     rasterize_lines and explicit_cellarea.
+# (a) the page cover join, whose PIP refine (pip_col) is the one
+#     crossing_sql text; (b) the readers of raster_cover_hit, whose
+#     boundary tests are the one boundary_sql text and whose oracles read
+#     the DOUBLE gedges relation (the masks, extract, rasterize, zonal and
+#     polygon-coverage queries): with (a) these are every edges_values_sql
+#     oracle reader; (c) knn, whose NULL rows now come from one partition;
+#     (d) the one-text grid, kernel and clipped-area queries of the round
+#     before. Left out for room: cellarea, crop and points, recorded in
+#     the round before, and what that round left out (the session.local_df
+#     readers, the read_documents consumers, extract_lines,
+#     rasterize_lines, explicit_cellarea, aggregate_*, mosaic_* and
+#     explicit_extract).
 _DRIVER_WINDOW = [
     # (a)
-    "resample_cubic", "resample_cubicspline", "resample_lanczos", "coverage_exact",
-    "zonal_coverage", "warp_hook", "warp_mercator", "warp_sinusoidal", "warp_agg",
-    "warp_utm", "warp_utm_agg",
+    "zonal_pages", "spatial_join_pip", "zonal_pages_salted", "stream_zonal_stats",
     # (b)
-    "resample_near", "resample_bilinear", "resample_agg", "resample_rms",
-    "extract", "extract_name_atol", "extract_id", "extract_polygons", "extract_many",
-    "extract_nested", "rasterize_points", "rasterize_any", "rasterize_all",
-    "rasterize_polygons", "rasterize_many", "rasterize_multilayer", "rasterize_prod",
     "mask_geom", "boolmask", "boolmask_multipoly", "boolmask_holed",
     "boolmask_touches", "boolmask_inside", "missingmask",
+    "extract_polygons", "extract_many", "extract_nested",
+    "rasterize_polygons", "rasterize_many", "rasterize_multilayer", "rasterize_prod",
+    "zonal_stack", "zonal_many", "zonal_northup", "zonal_median", "zonal_coverage",
+    "coverage_polygon", "coverage_polygon_union",
     # (c)
-    "zonal_stack", "zonal_many", "zonal_northup", "zonal_median", "zonal_extent",
-    "coverage", "coverage_union", "coverage_polygon", "coverage_polygon_union",
-    "cellarea", "cellarea_quad", "crop", "points",
+    "knn",
     # (d)
-    "zonal_pages", "spatial_join_pip",
+    "resample_cubic", "resample_cubicspline", "resample_lanczos", "coverage_exact",
+    "warp_hook", "warp_mercator", "warp_sinusoidal", "warp_agg", "warp_utm", "warp_utm_agg",
+    "resample_near", "resample_bilinear", "resample_agg", "resample_rms",
+    "extract", "extract_name_atol", "extract_id",
+    "rasterize_points", "rasterize_any", "rasterize_all",
+    "zonal_extent", "coverage", "coverage_union", "cellarea_quad",
 ]
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {

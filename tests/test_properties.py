@@ -134,7 +134,7 @@ def test_pip_rectangle_equals_bbox(spark, xmin, w, ymin, h):
     )
     got = (
         pts.crossJoin(F.broadcast(edges))
-        .withColumn("inside", pip_col(F.col("x"), F.col("y"), F.col("edges")))
+        .withColumn("inside", pip_col("x", "y", "edges"))
         .collect()
     )
     for row in got:

@@ -322,7 +322,7 @@ def test_classified_cover_join_is_exact(spark):
     pages = _probe_pages(spark, 3, step)
     full = (
         pages.crossJoin(polygons_df(spark, polys))
-        .where(pip_col(F.col("lon"), F.col("lat"), F.col("edges")))
+        .where(pip_col("lon", "lat", "edges"))
         .select("geom_id", *pages.columns)
     )
     want = sorted(map(tuple, full.collect()))
@@ -347,7 +347,8 @@ def _seg_meets_box(e, x0, x1, y0, y1) -> bool:
 
 
 def _pip_ref(x, y, edges) -> bool:
-    """pip_col's even-odd ray cast at one point (test reference)."""
+    """The even-odd ray cast at one point (test reference), in the
+    arithmetic of its arguments: floats, or Fractions for an exact one."""
     return sum(
         (y1 > y) != (y2 > y) and x < x1 + (x2 - x1) * (y - y1) / (y2 - y1)
         for x1, y1, x2, y2 in edges
@@ -544,8 +545,8 @@ def _block_raster(spark, kind):
 
 
 def _full_edge_pairs(raster, grid, polys, boundary):
-    """(cell, geom) pairs under in_bbox & boundary_pred over ALL edges."""
-    from rasters_jl_spark.functions.geometry import boundary_pred, polygons_df
+    """(cell, geom) pairs under in_bbox & boundary_sql over ALL edges."""
+    from rasters_jl_spark.functions.geometry import boundary_sql, polygons_df
 
     cx, cy = F.expr(grid.x_sql("ix")), F.expr(grid.y_sql("iy"))
     adx, ady = abs(grid.dx), abs(grid.dy)
@@ -556,7 +557,8 @@ def _full_edge_pairs(raster, grid, polys, boundary):
         & (cy >= F.col("ymin") - bpy)
         & (cy <= F.col("ymax") + bpy)
     )
-    hit = in_bbox & boundary_pred(boundary, cx, cy, adx / 2.0, ady / 2.0, F.col("edges"))
+    pred = boundary_sql(boundary, grid.x_sql("ix"), grid.y_sql("iy"), adx / 2.0, ady / 2.0, "edges")
+    hit = in_bbox & F.expr(pred)
     return raster.crossJoin(polygons_df(raster.sparkSession, polys)).where(hit)
 
 
@@ -609,6 +611,139 @@ def test_classified_block_cover_is_exact(spark, kind):
     want = sorted(map(tuple, ref.collect()))
     got = sorted(map(tuple, zonal_coverage(raster, g, polys).collect()))
     assert len(want) > 10
+    assert got == want
+
+
+def test_oracle_polygon_literals_are_exact_doubles():
+    """The oracles' edges/polys relations are DOUBLE, value for value bit
+    for bit, as the engine's polygons_df is: a repr literal would be
+    DECIMAL (edge arithmetic in decimal), and DuckDB rounds a 17-digit
+    decimal cast to DOUBLE an ulp off for some values."""
+    import duckdb
+
+    from rasters_jl_spark import fixtures as FX
+    from rasters_jl_spark.functions.geometry import edges_values_sql, polys_values_sql
+
+    rng = np.random.default_rng(24)
+    xy = rng.uniform(-1e3, 1e3, (1000, 2)) * 10.0 ** rng.integers(-9, 7, (1000, 1))
+    polys = [*FX.RASTER_POLYS, Polygon(7, tuple(map(tuple, xy.tolist())))]
+    con = duckdb.connect()
+    for sql, want in (
+        (edges_values_sql(polys), [(p.geom_id, *e) for p in polys for e in p.edges]),
+        (polys_values_sql(polys), [(p.geom_id, *p.bbox) for p in polys]),
+    ):
+        rel = con.sql(sql)
+        assert [str(t) for t in rel.types[1:]] == ["DOUBLE"] * 4
+        got = rel.fetchall()
+        assert [tuple(map(float.hex, r[1:])) for r in got] == [
+            tuple(float.hex(float(v)) for v in r[1:]) for r in want
+        ]
+        assert [r[0] for r in got] == [r[0] for r in want]
+
+# ---- the shared predicate texts against exact arithmetic --------------------
+
+# Cell corners at multiples of dx and dy and every vertex on the 1/128
+# lattice: each coordinate, side() product and crossing input is exact in
+# float64, and a point off an edge's line is ~1e-5 from it, far beyond the
+# 1e-9 shrink of boundary=:inside, so exact rational arithmetic is the
+# reference with nothing to forgive.
+_EXACT_GRID = GridSpec(x0=5 / 64, y0=3 / 64, dx=5 / 32, dy=3 / 32, nx=24, ny=24)
+
+
+def _exact_layer(g, seed):
+    """Seeded polygons with vertices on cell corners and cell edges: a
+    rectangle along cell edges with a rectangular hole, two diamonds (one
+    per winding) whose edges run through cell corners, so cells outside
+    meet them at one corner only, and non-convex stars, one holed."""
+    rng = np.random.default_rng(seed)
+
+    def corner(k, m):
+        return (k * g.dx, m * g.dy)
+
+    def snap(u, v):  # cell units -> a corner, a point on a cell edge, or any lattice point
+        kind = rng.integers(0, 3)
+        x, y = (round(u) if kind < 2 else u) * g.dx, (round(v) if kind == 0 else v) * g.dy
+        return (round(x * 128) / 128, round(y * 128) / 128)
+
+    def star(cu, cv, r, n):
+        ang = np.sort(rng.uniform(0.0, 2 * np.pi, n))
+        rad = r * rng.uniform(0.4, 1.0, n)
+        return tuple(snap(cu + a * np.cos(t), cv + a * np.sin(t)) for t, a in zip(ang, rad))
+
+    rect = lambda k0, m0, k1, m1: (corner(k0, m0), corner(k1, m0), corner(k1, m1), corner(k0, m1))
+    diamond = lambda k, m, h: (corner(k + h, m), corner(k, m + h), corner(k - h, m), corner(k, m - h))
+    polys = [
+        Polygon(1, rect(2, 2, 10, 9), (rect(4, 4, 7, 6),)),
+        Polygon(2, diamond(16, 6, 3)),
+        Polygon(3, diamond(6, 16, 4)[::-1]),
+    ]
+    for k in range(5):
+        polys.append(Polygon(4 + k, star(*rng.uniform(5, 19, 2), rng.uniform(2.5, 5.0), 11)))
+    cu, cv = rng.uniform(8, 16, 2)
+    polys.append(Polygon(9, star(cu, cv, 6.0, 13), (star(cu, cv, 2.0, 7),)))
+    return polys
+
+
+def _sat_meets(e, x0, x1, y0, y1, closed):
+    """Closed segment ``e`` meets the closed (or open) box: separating-axis
+    theorem in exact arithmetic over the box axes and the segment normal.
+    For the open box a separating axis may touch it."""
+    ax, ay, bx, by = e
+    apart = (lambda a, b: a < b) if closed else (lambda a, b: a <= b)
+    if (
+        apart(max(ax, bx), x0) or apart(x1, min(ax, bx))
+        or apart(max(ay, by), y0) or apart(y1, min(ay, by))
+    ):
+        return False
+    if (ax, ay) == (bx, by):
+        return True
+    side = [(bx - ax) * (cy - ay) - (by - ay) * (cx - ax) for cx in (x0, x1) for cy in (y0, y1)]
+    return not (all(apart(0, s) for s in side) or all(apart(s, 0) for s in side))
+
+
+@pytest.mark.parametrize("boundary", ["center", "touches", "inside"])
+def test_boundary_sql_matches_exact_reference(spark, boundary):
+    """boundary_sql, the one text Spark runs and the oracles share, equals
+    an exact Fraction reference per (cell, polygon): center is the even-odd
+    test at the centre; touches adds any edge meeting the closed cell;
+    inside is the centre inside and no edge meeting the open cell. Cells
+    that meet a polygon only on their border occur in both ways (outside
+    it, touching at a corner or side; inside it, sharing a side)."""
+    from fractions import Fraction
+
+    from rasters_jl_spark.functions.geometry import boundary_sql, polygons_df
+
+    g = _EXACT_GRID
+    polys = _exact_layer(g, 5)
+    hdx, hdy = g.dx / 2.0, g.dy / 2.0
+    pred = boundary_sql(boundary, g.x_sql("ix"), g.y_sql("iy"), hdx, hdy, "edges")
+    cells = spark.range(g.nx * g.ny).select(
+        (F.col("id") % g.nx).cast("int").alias("ix"), (F.col("id") / g.nx).cast("int").alias("iy")
+    )
+    hits = cells.crossJoin(polygons_df(spark, polys)).where(F.expr(pred))
+    got = {tuple(r) for r in hits.select("ix", "iy", "geom_id").collect()}
+
+    want, contact = set(), {"outside": 0, "inside": 0}
+    for p in polys:
+        edges = [tuple(map(Fraction, e)) for e in p.edges]
+        for ix in range(g.nx):
+            for iy in range(g.ny):
+                cx, cy = Fraction(g.x0) + ix * Fraction(g.dx), Fraction(g.y0) + iy * Fraction(g.dy)
+                box = (cx - Fraction(hdx), cx + Fraction(hdx), cy - Fraction(hdy), cy + Fraction(hdy))
+                centre_in = _pip_ref(cx, cy, edges)
+                closed = any(_sat_meets(e, *box, closed=True) for e in edges)
+                opened = any(_sat_meets(e, *box, closed=False) for e in edges)
+                if closed and not opened:
+                    contact["inside" if centre_in else "outside"] += 1
+                hit = {
+                    "center": centre_in,
+                    "touches": centre_in or closed,
+                    "inside": centre_in and not opened,
+                }[boundary]
+                if hit:
+                    want.add((ix, iy, p.geom_id))
+    assert contact["outside"] > 20 and contact["inside"] > 20, contact
+    assert 100 < len(want) < g.nx * g.ny * len(polys) // 2
     assert got == want
 
 
