@@ -69,7 +69,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from rasters_jl_spark.grid import COVER_RES, GridSpec, WebGrid
+from rasters_jl_spark.grid import COVER_RES, GridSpec, WebGrid, dbl_sql
 from rasters_jl_spark.session import local_df
 
 
@@ -387,14 +387,6 @@ def raster_cover_hit(grid, boundary: str, p: str) -> str:
 # --------------------------------------------------------------------------
 
 
-def dbl_sql(v: float) -> str:
-    """``v`` as a DOUBLE literal that Spark and DuckDB both parse exactly:
-    17 significant digits in exponent form (both type a plain ``0.3`` as
-    DECIMAL, and DuckDB rounds a 17-digit decimal cast to DOUBLE an ulp
-    off for some values)."""
-    return f"{float(v):.16e}"
-
-
 def crossing_sql(x: str, y: str, e: str) -> str:
     """Edge ``e`` (a relation alias or struct with x1, y1, x2, y2) crosses
     the ray (-inf, y) → (x, y): the even-odd term. ``x`` and ``y`` are SQL
@@ -407,8 +399,12 @@ def crossing_sql(x: str, y: str, e: str) -> str:
 
 def seg_rect_sql(e: str, rx0: str, rx1: str, ry0: str, ry1: str) -> str:
     """Closed segment ``e`` ∩ closed axis-aligned rect ≠ ∅: the exact
-    separating-axis test — bbox overlap AND (an endpoint inside OR the 4
-    rect corners are not all strictly on one side of the segment's line).
+    separating-axis test — bbox overlap AND (the second endpoint inside OR
+    the 4 rect corners are not all strictly on one side of the segment's
+    line). The first endpoint needs no term: the sides are measured from
+    it, so with it in the closed rect one corner's side comes out <= 0 and
+    another's >= 0 even in float64 (each factor's sign is exact), and the
+    corner test already holds.
     Chains are parenthesised left-deep: the Spark parser would balance a
     flat AND chain into a different tree."""
     x1, y1, x2, y2 = (f"{e}.{c}" for c in ("x1", "y1", "x2", "y2"))
@@ -430,7 +426,7 @@ def seg_rect_sql(e: str, rx0: str, rx1: str, ry0: str, ry1: str) -> str:
         return f"((({s1} AND {s2}) AND {s3}) AND {s4})"
 
     apart = f"((NOT {all_('>')}) AND (NOT {all_('<')}))"
-    return f"({bbox} AND (({within(x1, y1)} OR {within(x2, y2)}) OR {apart}))"
+    return f"({bbox} AND ({within(x2, y2)} OR {apart}))"
 
 
 def _even_odd_sql(x: str, y: str, edges: str) -> str:

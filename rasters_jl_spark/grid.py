@@ -19,33 +19,51 @@ Two grid families:
   ``StableRange``, `src/utils.jl:362-555`, plays: never re-derive coordinates
   from floats downstream).
 
-GridSpec's coordinate math is written once, as SQL text (``*_sql``): Spark
+Every grid formula is written once, as SQL text (``*_sql``): Spark
 evaluates it through ``F.expr`` and the DuckDB oracle runs it verbatim, so
 the two engines share one formula and cannot drift apart. A slip in it is
 the same in both, so `tests/test_grid.py` checks it against hand and NumPy
-values, not the oracle. Literals are written with ``repr``, which both
-dialects parse as DECIMAL and coerce to DOUBLE where they meet a DOUBLE
-operand (exactly in Spark). A literal-only subexpression would be folded
-in decimal arithmetic instead: write such operands as ``CAST(v AS DOUBLE)``.
-The polygon predicates are one text each too (`functions/geometry.py`:
-``crossing_sql``, ``seg_rect_sql``, ``boundary_sql``), with their literals
-in exact DOUBLE form (``dbl_sql``).
-
-WebGrid keeps the last Column twins, two texts, ``*_col`` Columns for
-Spark and ``*_sql`` for the oracle: ``bench.py`` and ``perfbench/`` import its Columns, and where the
-dialects differ the texts must too (``parent_cell_sql`` uses DuckDB's
-``//``; :meth:`WebGrid.ring_cells_col` has no twin;
-`sources/pages.py::lat_col` pre-reduces the hash that ``LAT_SQL`` spells
-directly). There it is the oracle compare that keeps the two equal, not
-their construction.
+values, not the oracle. Literals are exact DOUBLE exponent literals
+(:func:`dbl_sql`). WebGrid's ``*_col`` names (``bench.py`` and
+``perfbench/`` import them) are ``F.expr`` over the same texts; they take
+text or a plain column reference (:func:`ref_sql`). The ring text
+(:meth:`WebGrid.ring_cells_sql`) is run by Spark only: no oracle has a
+ring. The polygon predicates are one text each too
+(`functions/geometry.py`: ``crossing_sql``, ``seg_rect_sql``,
+``boundary_sql``).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column
+from py4j.java_gateway import is_instance_of
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
+
+
+def dbl_sql(v: float) -> str:
+    """``v`` as a DOUBLE literal that Spark and DuckDB both parse exactly:
+    17 significant digits in exponent form (both type a plain ``0.3`` as
+    DECIMAL, and DuckDB rounds a 17-digit decimal cast to DOUBLE an ulp
+    off for some values)."""
+    return f"{float(v):.16e}"
+
+
+def ref_sql(c: str | Column) -> str:
+    """SQL text of a formula argument: text as is, a plain column reference
+    (``F.col(name)``) as its SQL name. The rule of PySpark's own
+    ``spark.sql`` string formatter (``sql_formatter._convert_value``): any
+    other Column raises ``ValueError``."""
+    if isinstance(c, str):
+        return c
+    spark = SparkSession.active()
+    jexpr = spark._jsparkSession.expression(c._jc)
+    plain = ("analysis.UnresolvedAttribute", "expressions.AttributeReference")
+    gw = spark.sparkContext._gateway
+    if any(is_instance_of(gw, jexpr, f"org.apache.spark.sql.catalyst.{k}") for k in plain):
+        return jexpr.sql()
+    raise ValueError(f"not SQL text or a plain column reference: {c}")
 
 
 # --------------------------------------------------------------------------
@@ -81,19 +99,19 @@ class GridSpec:
 
     # -- coordinate math (centers) --
     def x_sql(self, ix: str) -> str:
-        return f"({self.x0!r} + CAST({ix} AS DOUBLE) * {self.dx!r})"
+        return f"({dbl_sql(self.x0)} + CAST({ix} AS DOUBLE) * {dbl_sql(self.dx)})"
 
     def y_sql(self, iy: str) -> str:
-        return f"({self.y0!r} + CAST({iy} AS DOUBLE) * {self.dy!r})"
+        return f"({dbl_sql(self.y0)} + CAST({iy} AS DOUBLE) * {dbl_sql(self.dy)})"
 
     # -- point → owning cell (Contains on Intervals(Center)):
     #    half-open [center-d/2, center+d/2) — the reference's
     #    `_at_or_contains` semantics (src/methods/burning/point.jl:47-50)
     def ix_of_x_sql(self, x: str) -> str:
-        return f"CAST(FLOOR(({x} - {self.x0 - self.dx / 2.0!r}) / {self.dx!r}) AS INT)"
+        return f"CAST(FLOOR(({x} - {dbl_sql(self.x0 - self.dx / 2.0)}) / {dbl_sql(self.dx)}) AS INT)"
 
     def iy_of_y_sql(self, y: str) -> str:
-        return f"CAST(FLOOR(({y} - {self.y0 - self.dy / 2.0!r}) / {self.dy!r}) AS INT)"
+        return f"CAST(FLOOR(({y} - {dbl_sql(self.y0 - self.dy / 2.0)}) / {dbl_sql(self.dy)}) AS INT)"
 
     def in_bounds_sql(self, ix: str, iy: str) -> str:
         # left-deep, as Catalyst builds a chain of Column ``&``: the SQL
@@ -184,46 +202,34 @@ class WebGrid:
     def step(self) -> float:
         return 180.0 / (1 << self.res)
 
-    # -- assignment --
-    def ix_col(self, lon: Column) -> Column:
-        c = F.floor((lon + F.lit(180.0)) / F.lit(self.step)).cast("long")
-        return F.least(F.greatest(c, F.lit(0)), F.lit(self.nx - 1))
-
-    def iy_col(self, lat: Column) -> Column:
-        c = F.floor((lat + F.lit(90.0)) / F.lit(self.step)).cast("long")
-        return F.least(F.greatest(c, F.lit(0)), F.lit(self.ny - 1))
-
-    def cell_col(self, lon: Column, lat: Column) -> Column:
-        return self.iy_col(lat) * F.lit(self.nx) + self.ix_col(lon)
-
+    # -- assignment (clamped: points past the globe border fall in the
+    #    border cells) --
     def ix_sql(self, lon: str) -> str:
-        c = f"CAST(FLOOR(({lon} + 180.0) / {self.step!r}) AS BIGINT)"
+        c = f"CAST(FLOOR(({lon} + {dbl_sql(180.0)}) / {dbl_sql(self.step)}) AS BIGINT)"
         return f"LEAST(GREATEST({c}, 0), {self.nx - 1})"
 
     def iy_sql(self, lat: str) -> str:
-        c = f"CAST(FLOOR(({lat} + 90.0) / {self.step!r}) AS BIGINT)"
+        c = f"CAST(FLOOR(({lat} + {dbl_sql(90.0)}) / {dbl_sql(self.step)}) AS BIGINT)"
         return f"LEAST(GREATEST({c}, 0), {self.ny - 1})"
 
     def cell_sql(self, lon: str, lat: str) -> str:
         return f"({self.iy_sql(lat)} * {self.nx} + {self.ix_sql(lon)})"
 
+    def cell_col(self, lon: str | Column, lat: str | Column) -> Column:
+        return F.expr(self.cell_sql(ref_sql(lon), ref_sql(lat)))
+
     # -- hierarchy --
-    def parent_cell_col(self, cell: Column, parent_res: int) -> Column:
-        """Parent id at a coarser resolution, by integer div of ix/iy."""
+    def parent_cell_sql(self, cell: str, parent_res: int) -> str:
+        """Parent id at a coarser resolution: iy is ``cell >> (res+1)`` and
+        ix ``cell & (nx-1)`` (cells are never negative), each shifted right
+        by the resolution difference."""
         shift = self.res - parent_res
         assert shift >= 0
-        ix = cell % F.lit(self.nx)
-        iy = (cell / F.lit(self.nx)).cast("long")
-        pnx = 2 << parent_res
-        return F.shiftright(iy, shift) * F.lit(pnx) + F.shiftright(ix, shift)
+        iy, ix = f"({cell} >> {self.res + 1})", f"({cell} & {self.nx - 1})"
+        return f"(({iy} >> {shift}) * {2 << parent_res} + ({ix} >> {shift}))"
 
-    def parent_cell_sql(self, cell: str, parent_res: int) -> str:
-        shift = self.res - parent_res
-        pnx = 2 << parent_res
-        return (
-            f"((({cell}) // {self.nx}) // {1 << shift} * {pnx}"
-            f" + (({cell}) % {self.nx}) // {1 << shift})"
-        )
+    def parent_cell_col(self, cell: str | Column, parent_res: int) -> Column:
+        return F.expr(self.parent_cell_sql(ref_sql(cell), parent_res))
 
     # -- geometry of a cell --
     def cell_bounds(self, ix: int, iy: int) -> tuple[float, float, float, float]:
@@ -233,32 +239,24 @@ class WebGrid:
 
     # -- ring neighbours (kNN expansion; planar, no wrap — documented
     #    engine semantics so the brute-force oracle agrees exactly) --
-    def ring_cells_col(self, cell: Column, radius: Column) -> Column:
+    def ring_cells_sql(self, cell: str, radius: str) -> str:
         """Array of all cell ids within Chebyshev distance ``radius``.
 
-        Built with explode-free higher-order functions: flatten of a 2-d
+        Explode-free higher-order functions: filter of the flatten of a 2-d
         transform over sequences. Higher-order functions are
         ``CodegenFallback``, so this expression is evaluated interpreted.
         """
-        ix = cell % F.lit(self.nx)
-        iy = (cell / F.lit(self.nx)).cast("long")
-        dxs = F.sequence(-radius, radius)
-        dys = F.sequence(-radius, radius)
-        nxl = F.lit(self.nx)
-        nyl = F.lit(self.ny)
-        arr = F.flatten(
-            F.transform(
-                dys,
-                lambda dy: F.transform(
-                    dxs,
-                    lambda dx: F.when(
-                        ((iy + dy) >= 0) & ((iy + dy) < nyl) & ((ix + dx) >= 0) & ((ix + dx) < nxl),
-                        (iy + dy) * nxl + (ix + dx),
-                    ),
-                ),
-            )
+        ix, iy = f"({cell} % {self.nx})", f"CAST({cell} / {self.nx} AS BIGINT)"
+        x, y = f"({ix} + dx)", f"({iy} + dy)"
+        ok = f"((({y} >= 0 AND {y} < {self.ny}) AND {x} >= 0) AND {x} < {self.nx})"
+        span = f"sequence(-({radius}), {radius})"
+        return (
+            f"filter(flatten(transform({span}, dy -> transform({span}, dx ->"
+            f" CASE WHEN {ok} THEN {y} * {self.nx} + {x} END))), c -> c IS NOT NULL)"
         )
-        return F.filter(arr, lambda c: c.isNotNull())
+
+    def ring_cells_col(self, cell: str | Column, radius: str | Column) -> Column:
+        return F.expr(self.ring_cells_sql(ref_sql(cell), ref_sql(radius)))
 
 
 # Engine-wide default resolutions.

@@ -63,11 +63,11 @@ def _ring_candidates(
     queries: DataFrame,
     pages: DataFrame,
     g: WebGrid,
-    radius_col,
+    radius: str,
     exploded_rows_est: int | None = None,
 ) -> DataFrame:
-    q = queries.withColumn("_qcell", g.cell_col(F.col("qlon"), F.col("qlat")))
-    q = q.withColumn("_cells", g.ring_cells_col(F.col("_qcell"), radius_col))
+    q = queries.withColumn("_qcell", g.cell_col("qlon", "qlat"))
+    q = q.withColumn("_cells", g.ring_cells_col("_qcell", radius))
     q = q.select("q_id", "qlat", "qlon", F.explode("_cells").alias("cell"))
     p = pages.select(
         "cell", F.col("doc_id").alias("doc_id"), F.col("lat").alias("_plat"), F.col("lon").alias("_plon")
@@ -176,7 +176,7 @@ def knn_pages(
     # The NULL rows come from one partition: one task in the phase-1 map
     # stage, not one per partition of the query pin.
     cand1 = _ring_candidates(
-        q, pages, g, F.lit(r0), exploded_rows_est=n_queries * (2 * r0 + 1) ** 2
+        q, pages, g, str(r0), exploded_rows_est=n_queries * (2 * r0 + 1) ** 2
     ).unionByName(q.coalesce(1), allowMissingColumns=True)
     rf_need = (F.ceil(F.sqrt(F.col("_dk")) / F.lit(g.step)) + 1).cast("int")
     topk = cand1.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= k)
@@ -215,10 +215,10 @@ def knn_pages(
             c.where(head & needs_ring),
             pages,
             g,
-            F.col("_rf"),
+            "_rf",
             exploded_rows_est=n_ring * (2 * RING_MAX + 1) ** 2,
         )
-        # (q_id, doc_id) is already unique in cand2: ring_cells_col emits
+        # (q_id, doc_id) is already unique in cand2: ring_cells_sql emits
         # each in-bounds cell id exactly once (offsets are clipped, never
         # wrapped), and a page lives in one cell — so no dedup pass is
         # needed before the top-k window

@@ -51,7 +51,7 @@ def spatial_join_pages(pages: DataFrame, polys: list[Polygon]) -> DataFrame:
     """
     g = WebGrid(COVER_RES)
     cover = polygon_cover_df(pages.sparkSession, polys)
-    p = pages.withColumn("_cover_cell", g.cell_col(F.col("lon"), F.col("lat")))
+    p = pages.withColumn("_cover_cell", g.cell_col("lon", "lat"))
     cand = p.join(F.broadcast(cover), p["_cover_cell"] == cover["cover_cell"]).drop(
         "cover_cell"
     )

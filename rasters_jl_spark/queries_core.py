@@ -41,7 +41,7 @@ from rasters_jl_spark.operators import (
 from rasters_jl_spark.operators.core import boolmask
 from rasters_jl_spark.operators.rasterize import rasterize_points, rasterize_polygons
 from rasters_jl_spark.operators.zonal import spatial_join_pages, zonal_pages
-from rasters_jl_spark.sources.pages import lat_col, lon_col, pages_geo, pages_geo_sql
+from rasters_jl_spark.sources.pages import lat_col, lat_sql, lon_col, lon_sql, pages_geo, pages_geo_sql
 from rasters_jl_spark.sources.raster_synth import (
     RASTER_GRID,
     synth_raster,
@@ -165,8 +165,8 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids = spark.range(FX.KNN_ID_BASE, FX.KNN_ID_BASE + FX.N_KNN_QUERIES)
     queries = ids.select(
         (F.col("id") - FX.KNN_ID_BASE).alias("q_id"),
-        lat_col(F.col("id")).alias("qlat"),
-        lon_col(F.col("id")).alias("qlon"),
+        lat_col("id").alias("qlat"),
+        lon_col("id").alias("qlon"),
     )
     out = knn_pages(queries, pages, k=FX.KNN_K, res=PAGES_RES)
     return out.select("q_id", "rank", "doc_id", F.round("dist2", 9).alias("dist2"))
@@ -175,8 +175,8 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_knn = f"""WITH {PAGES_CTE},
 q AS (
     SELECT t.qid - {FX.KNN_ID_BASE} AS q_id,
-           ((t.qid * 2654435761) % 1800000) / 10000.0 - 90.0 AS qlat,
-           ((t.qid * 40503) % 3600000) / 10000.0 - 180.0 AS qlon
+           {lat_sql("t.qid")} AS qlat,
+           {lon_sql("t.qid")} AS qlon
     FROM generate_series({FX.KNN_ID_BASE}, {FX.KNN_ID_BASE + FX.N_KNN_QUERIES - 1}) t(qid)
 ),
 cand AS (

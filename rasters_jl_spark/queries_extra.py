@@ -12,13 +12,12 @@ from rasters_jl_spark.functions import ann
 from rasters_jl_spark.functions.geometry import (
     clip_area_edge_sql,
     crossing_sql,
-    dbl_sql,
     edges_values_sql,
     pip_sql,
     polys_values_sql,
     seg_rect_sql,
 )
-from rasters_jl_spark.grid import GridSpec
+from rasters_jl_spark.grid import GridSpec, dbl_sql
 from rasters_jl_spark.operators.aggregate import aggregate
 from rasters_jl_spark.operators.core import classify, points
 from rasters_jl_spark.operators.extras import (

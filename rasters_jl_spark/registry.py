@@ -208,37 +208,35 @@ _DEFS: dict[str, tuple[QueryFn, str | None]] = {
 
 
 # The driver window: the first 50 REGISTRY entries, recorded each round.
-# (a) the page cover join, whose PIP refine (pip_col) is the one
-#     crossing_sql text; (b) the readers of raster_cover_hit, whose
-#     boundary tests are the one boundary_sql text and whose oracles read
-#     the DOUBLE gedges relation (the masks, extract, rasterize, zonal and
-#     polygon-coverage queries): with (a) these are every edges_values_sql
-#     oracle reader; (c) knn, whose NULL rows now come from one partition;
-#     (d) the one-text grid, kernel and clipped-area queries of the round
-#     before. Left out for room: cellarea, crop and points, recorded in
-#     the round before, and what that round left out (the session.local_df
-#     readers, the read_documents consumers, extract_lines,
-#     rasterize_lines, explicit_cellarea, aggregate_*, mosaic_* and
-#     explicit_extract).
+# (a) the readers of the geotag and web-grid texts that Spark now runs
+#     through F.expr (pages_geo, PAGES_CTE, with_geotag; knn and
+#     stream_zonal_stats); (b) the touches/inside readers of seg_rect_sql,
+#     whose first-endpoint term is gone; (c) the other raster_cover_hit
+#     readers and (d) the grid, kernel and clipped-area queries, whose
+#     oracles' GridSpec literals are now exact DOUBLEs. Left out for room:
+#     zonal_extent, coverage, coverage_union and cellarea_quad (GridSpec
+#     literals too), and what the round before left out (cellarea, crop,
+#     points, the session.local_df readers, the read_documents consumers,
+#     extract_lines, rasterize_lines, explicit_cellarea, aggregate_*,
+#     mosaic_* and explicit_extract).
 _DRIVER_WINDOW = [
     # (a)
-    "zonal_pages", "spatial_join_pip", "zonal_pages_salted", "stream_zonal_stats",
+    "geotag", "cell_count", "tile_stats", "text_identity",
+    "zonal_pages", "spatial_join_pip", "zonal_pages_salted",
+    "rasterize_points", "rasterize_any", "rasterize_all", "knn", "stream_zonal_stats",
     # (b)
-    "mask_geom", "boolmask", "boolmask_multipoly", "boolmask_holed",
-    "boolmask_touches", "boolmask_inside", "missingmask",
+    "boolmask_touches", "boolmask_inside", "zonal_coverage",
+    # (c)
+    "mask_geom", "boolmask", "boolmask_multipoly", "boolmask_holed", "missingmask",
     "extract_polygons", "extract_many", "extract_nested",
     "rasterize_polygons", "rasterize_many", "rasterize_multilayer", "rasterize_prod",
-    "zonal_stack", "zonal_many", "zonal_northup", "zonal_median", "zonal_coverage",
+    "zonal_stack", "zonal_many", "zonal_northup", "zonal_median",
     "coverage_polygon", "coverage_polygon_union",
-    # (c)
-    "knn",
     # (d)
     "resample_cubic", "resample_cubicspline", "resample_lanczos", "coverage_exact",
     "warp_hook", "warp_mercator", "warp_sinusoidal", "warp_agg", "warp_utm", "warp_utm_agg",
     "resample_near", "resample_bilinear", "resample_agg", "resample_rms",
     "extract", "extract_name_atol", "extract_id",
-    "rasterize_points", "rasterize_any", "rasterize_all",
-    "zonal_extent", "coverage", "coverage_union", "cellarea_quad",
 ]
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {

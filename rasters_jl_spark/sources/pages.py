@@ -5,11 +5,11 @@ Input shape (BASELINE.json input_hint):
 The sandbox synthesises it deterministically from the driver's ``documents``
 table; at production scale this is an Iceberg table scan.
 
-Geotag rule (FIXTURES.md F1): a deterministic integer-hash → lat/lon —
-expressible identically in Spark and DuckDB so the oracle can re-derive it:
-
-    lat = ((doc_id * 2654435761) % 1800000) / 10000.0 - 90.0
-    lon = ((doc_id * 40503)      % 3600000) / 10000.0 - 180.0
+Geotag rule (FIXTURES.md F1): a deterministic multiplicative integer hash
+of ``doc_id`` → lat/lon on a 1e-4 degree lattice (:func:`lat_sql`,
+:func:`lon_sql`). Like the web grid's cell math (:mod:`rasters_jl_spark.grid`)
+it is one SQL text, run by Spark through ``F.expr`` and verbatim by the
+DuckDB oracle (:func:`pages_geo_sql`).
 
 Per-row invariant: ``text`` passes through every stage byte-identical
 (verified by the ``text_identity`` query and tests).
@@ -20,30 +20,32 @@ codegen; see :mod:`rasters_jl_spark.grid`): pages never leave the JVM.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rasters_jl_spark.grid import PAGES_RES, TILE_RES, WebGrid
-
-LAT_MULT = 2654435761  # Knuth multiplicative-hash constant
-LON_MULT = 40503
-
-LAT_SQL = "((doc_id * 2654435761) % 1800000) / 10000.0 - 90.0"
-LON_SQL = "((doc_id * 40503) % 3600000) / 10000.0 - 180.0"
+from rasters_jl_spark.grid import PAGES_RES, TILE_RES, WebGrid, dbl_sql, ref_sql
 
 
-def lat_col(doc_id: F.Column) -> F.Column:
-    # (id * M) % L == ((id % L) * M) % L — same value, but the pre-reduction
-    # keeps the product < 5e15 so int64 never overflows at 10¹²-row ids.
-    return (((doc_id % F.lit(1800000)) * F.lit(LAT_MULT)) % F.lit(1800000)) / F.lit(
-        10000.0
-    ) - F.lit(90.0)
+def _hash_sql(doc_id: str, mult: int, mod: int, offset: float) -> str:
+    # (id * M) % L == ((id % L) * M) % L — the pre-reduction keeps the
+    # product < 5e15, so int64 never overflows at 10¹²-row ids
+    return f"((({doc_id} % {mod}) * {mult} % {mod}) / {dbl_sql(1e4)} - {dbl_sql(offset)})"
 
 
-def lon_col(doc_id: F.Column) -> F.Column:
-    return (((doc_id % F.lit(3600000)) * F.lit(LON_MULT)) % F.lit(3600000)) / F.lit(
-        10000.0
-    ) - F.lit(180.0)
+def lat_sql(doc_id: str) -> str:
+    return _hash_sql(doc_id, 2654435761, 1800000, 90.0)  # Knuth's constant
+
+
+def lon_sql(doc_id: str) -> str:
+    return _hash_sql(doc_id, 40503, 3600000, 180.0)
+
+
+def lat_col(doc_id: str | Column) -> Column:
+    return F.expr(lat_sql(ref_sql(doc_id)))
+
+
+def lon_col(doc_id: str | Column) -> Column:
+    return F.expr(lon_sql(ref_sql(doc_id)))
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,9 +64,9 @@ def with_geotag(df: DataFrame, res: int = PAGES_RES, tile_res: int = TILE_RES) -
     lat/lon from ``doc_id``, the fine ``cell`` at ``res`` and its coarse
     ``tile_id`` at ``tile_res``."""
     g = WebGrid(res)
-    out = df.withColumn("lat", lat_col(F.col("doc_id"))).withColumn("lon", lon_col(F.col("doc_id")))
-    out = out.withColumn("cell", g.cell_col(F.col("lon"), F.col("lat")))
-    return out.withColumn("tile_id", g.parent_cell_col(F.col("cell"), tile_res))
+    out = df.withColumn("lat", lat_col("doc_id")).withColumn("lon", lon_col("doc_id"))
+    out = out.withColumn("cell", g.cell_col("lon", "lat"))
+    return out.withColumn("tile_id", g.parent_cell_col("cell", tile_res))
 
 
 def geotag_pages(docs: DataFrame, res: int = PAGES_RES, tile_res: int = TILE_RES) -> DataFrame:
@@ -92,14 +94,16 @@ def pages_geo(spark: SparkSession, sf_dir: str, res: int = PAGES_RES) -> DataFra
 def pages_geo_sql(res: int = PAGES_RES, tile_res: int = TILE_RES, table: str = "documents") -> str:
     """DuckDB CTE body producing the same pages_geo relation (oracle side)."""
     g = WebGrid(res)
+    lat, lon = lat_sql("doc_id"), lon_sql("doc_id")
+    cell = g.cell_sql(lon, lat)
     return f"""
     SELECT
         'https://example.org/d/' || CAST(doc_id AS VARCHAR) AS url,
         TIMESTAMP '2025-01-01 00:00:00' + (doc_id % 86400) * INTERVAL 1 SECOND AS warc_ts,
         text, lang, doc_id, n_chars,
-        {LAT_SQL} AS lat,
-        {LON_SQL} AS lon,
-        {g.cell_sql(f"({LON_SQL})", f"({LAT_SQL})")} AS cell,
-        {g.parent_cell_sql(g.cell_sql(f"({LON_SQL})", f"({LAT_SQL})"), tile_res)} AS tile_id
+        {lat} AS lat,
+        {lon} AS lon,
+        {cell} AS cell,
+        {g.parent_cell_sql(cell, tile_res)} AS tile_id
     FROM {table}
     """
