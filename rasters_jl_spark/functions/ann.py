@@ -17,7 +17,9 @@
 - IVF: coarse quantizer TRAINED by seeded k-means (deterministic init =
   the first IVF_K vectors, IVF_ITERS Lloyd rounds, centroids rounded to
   6 dp so the DuckDB oracle reproduces the index bit-for-bit), then
-  nprobe-list search.
+  nprobe-list search. Each Lloyd round pins its K-row centroid table
+  (``localCheckpoint()``: one job in the round), as the PQ codebook
+  training does; the next round and the search read that copy.
 """
 
 from __future__ import annotations
@@ -196,7 +198,7 @@ def trained_centroids(
         # K-row table: truncate the per-round lineage so the search plan
         # doesn't embed the whole training DAG twice per Lloyd round
         # (at production scale: train once, persist the centroid table)
-        cent = cent.localCheckpoint(eager=False)
+        cent = cent.localCheckpoint()
     return cent
 
 
@@ -361,7 +363,7 @@ def _pq_train(subs: DataFrame, k_codes: int, iters: int) -> DataFrame:
             .groupBy("m", "code", "pos")
             .agg(F.round(F.avg("val"), CENT_ROUND).alias("w"))
         )
-        cent = cent.localCheckpoint(eager=False)
+        cent = cent.localCheckpoint()
     return cent
 
 

@@ -8,9 +8,10 @@ tokens; this is how production BPE trainers work too). Each merge round is
 one zip_with pair-explode + partial-aggregated groupBy over that table;
 the argmax is a single-row driver collect per round (same documented class
 as the k-means/connected-components round loop), and the merge itself is
-a left-to-right greedy fold (F.aggregate — no Python, no UDF). Per-round
-``localCheckpoint`` truncates the lineage so round R's plan doesn't embed
-R copies of the training DAG.
+a left-to-right greedy fold (F.aggregate — no Python, no UDF). Each
+round starts by pinning the symbol table (``localCheckpoint()``, one job):
+the round's count and the next round's fold read that one copy, and round
+R's plan doesn't embed R copies of the training DAG.
 
 Determinism: ties in pair frequency break by (left, right) lexicographic —
 both engines produce the identical merge sequence, so the DuckDB oracle
@@ -111,9 +112,9 @@ def bpe_train(
     ``batch=B`` selects up to B mutually non-interacting pairs per count
     round (greedy by frequency over the top ``8*B`` candidates — one
     bounded driver collect) and applies them as ONE chained-fold
-    projection + localCheckpoint, cutting the number of sequential Spark
-    jobs from n_merges to ceil(n_merges/B). batch=1 (default) is exact
-    sequential Sennrich training. The round schedule is fixed
+    projection, cutting the number of sequential rounds (a pin and a
+    count each) from n_merges to ceil(n_merges/B). batch=1 (default) is
+    exact sequential Sennrich training. The round schedule is fixed
     (min(batch, remaining) per round); if disjointness underfills a
     round the total comes up short rather than re-counting mid-batch —
     deterministic, so the DuckDB oracle replicates it round-for-round.
@@ -123,11 +124,7 @@ def bpe_train(
     if batch < 1:
         raise ValueError(f"batch must be >= 1, got {batch}")
     spark = docs.sparkSession
-    state = (
-        word_freqs(docs, text_col)
-        .select("w", "freq", chars_col(F.col("w")).alias("syms"))
-        .localCheckpoint(eager=False)
-    )
+    state = word_freqs(docs, text_col).select("w", "freq", chars_col(F.col("w")).alias("syms"))
     merges: list[tuple[int, str, str, int]] = []
     n_rounds = -(-n_merges // batch)
     for r in range(n_rounds):
@@ -138,6 +135,7 @@ def bpe_train(
         cap = min(batch, n_merges - r * batch)
         if cap <= 0:
             break
+        state = state.localCheckpoint()
         counts = (
             state.select("freq", F.explode(sym_pairs_col(F.col("syms"))).alias("p"))
             .groupBy("p.l", "p.r")
@@ -156,7 +154,7 @@ def bpe_train(
         for l, rr, f in sel:
             merges.append((len(merges), l, rr, f))
             syms = apply_merge_col(syms, l, rr)
-        state = state.withColumn("syms", syms).localCheckpoint(eager=False)
+        state = state.withColumn("syms", syms)
     df = local_df(
         spark, merges, "round int, left string, right string, pair_freq bigint"
     )

@@ -399,19 +399,17 @@ def crossing_sql(x: str, y: str, e: str) -> str:
 
 def seg_rect_sql(e: str, rx0: str, rx1: str, ry0: str, ry1: str) -> str:
     """Closed segment ``e`` ∩ closed axis-aligned rect ≠ ∅: the exact
-    separating-axis test — bbox overlap AND (the second endpoint inside OR
-    the 4 rect corners are not all strictly on one side of the segment's
-    line). The first endpoint needs no term: the sides are measured from
-    it, so with it in the closed rect one corner's side comes out <= 0 and
-    another's >= 0 even in float64 (each factor's sign is exact), and the
-    corner test already holds.
+    separating-axis test — bbox overlap AND the 4 rect corners are not all
+    strictly on one side of the segment's line; term for term the
+    ``touches`` of :func:`_classify`. An endpoint in the closed rect needs
+    no term of its own, even in float64: the sides are measured from
+    (x1, y1), so with it inside each factor's sign is exact; with (x2, y2)
+    inside, each corner's side compares its two products with the one
+    rounded product ``fl((x2-x1)*(y2-y1))`` under monotone rounding. Either
+    way one corner's side comes out <= 0 and another's >= 0.
     Chains are parenthesised left-deep: the Spark parser would balance a
     flat AND chain into a different tree."""
     x1, y1, x2, y2 = (f"{e}.{c}" for c in ("x1", "y1", "x2", "y2"))
-
-    def within(x, y):
-        return f"((({x} >= {rx0} AND {x} <= {rx1}) AND {y} >= {ry0}) AND {y} <= {ry1})"
-
     bbox = (
         f"(((LEAST({x1}, {x2}) <= {rx1} AND GREATEST({x1}, {x2}) >= {rx0})"
         f" AND LEAST({y1}, {y2}) <= {ry1}) AND GREATEST({y1}, {y2}) >= {ry0})"
@@ -426,7 +424,7 @@ def seg_rect_sql(e: str, rx0: str, rx1: str, ry0: str, ry1: str) -> str:
         return f"((({s1} AND {s2}) AND {s3}) AND {s4})"
 
     apart = f"((NOT {all_('>')}) AND (NOT {all_('<')}))"
-    return f"({bbox} AND ({within(x2, y2)} OR {apart}))"
+    return f"({bbox} AND {apart})"
 
 
 def _even_odd_sql(x: str, y: str, edges: str) -> str:

@@ -51,16 +51,16 @@ def pagerank(
     # TWICE per iteration (contrib + dangling), doubling the tree each
     # round — audited at 84 exchanges for 3 iterations vs 2-3 per round
     # checkpointed. Edge/node/outdeg tables checkpoint once.
-    edges = edges.localCheckpoint(eager=True)
+    edges = edges.localCheckpoint()
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
     outdeg = edges.groupBy("src").agg(
         F.count(F.lit(1)).alias("outdeg")
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint()
     n = nodes.count()  # bounded: one scalar over the host table
     base_u = units // n
     tele_u = ((100 - d_pct) * base_u) // 100
@@ -92,7 +92,7 @@ def pagerank(
                     )
                 ).cast("long").alias("rank_u"),
             )
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint()
     return ranks
 
 

@@ -7,6 +7,9 @@ The only global quantity is the PREFIX SUM of token counts in doc order —
 computed distributed: range-partition by doc id, one per-partition window
 cumsum, then add per-partition offsets (a P-row driver reduction, P =
 #partitions — metadata-scale, same class as the documented knn count).
+The ranged table is pinned (``localCheckpoint()``, run inside the call)
+so the offsets and the output read one materialisation of the same
+sampled range cuts.
 A single unpartitioned window would serialize the corpus through one task;
 this shape never does. The output is invariant to the (sampled) range
 boundaries because disjoint ordered ranges reconstruct the same global
@@ -55,7 +58,7 @@ def pack_sequences(
     t2 = t.withColumn("_p", F.spark_partition_id()).withColumn(
         "_local_end", F.sum("n_tok").over(w)
     )
-    t2 = t2.localCheckpoint(eager=False)  # pin partitioning: _p must not be recomputed
+    t2 = t2.localCheckpoint()  # pin partitioning: _p must not be recomputed
     # P partition totals -> prefix offsets (driver-side, P rows)
     totals = t2.groupBy("_p").agg(F.max("_local_end").alias("tot")).collect()
     offs, acc = {}, 0

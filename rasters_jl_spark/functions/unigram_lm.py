@@ -204,14 +204,15 @@ def unigram_lm_train(
     """Distributed hard-EM unigram-LM training. Returns (counts, costs,
     DataFrame(piece, cnt, cost_nano)).
 
-    One corpus pass (word_freqs), then per round: a zero-shuffle Viterbi
-    fold over the distinct-word table + a ≤-vocab-sized piece groupBy;
-    only bounded piece tables are collected. Bit-identical to
-    :func:`unigram_lm_train_local` (asserted in tests) and to the
-    DuckDB oracle, which recomputes the whole pipeline from the corpus.
+    One corpus pass (word_freqs, pinned with ``localCheckpoint()`` for
+    the seed counts and every round), then per round: a zero-shuffle
+    Viterbi fold over the distinct-word table + a ≤-vocab-sized piece
+    groupBy; only bounded piece tables are collected. Bit-identical to
+    :func:`unigram_lm_train_local` (asserted in tests) and to the DuckDB
+    oracle, which recomputes the whole pipeline from the corpus.
     """
     spark = docs.sparkSession
-    wf = word_freqs(docs, text_col).cache()
+    wf = word_freqs(docs, text_col).localCheckpoint()
     seed = seed_counts(wf, max_piece_len)
     singles = {
         r["piece"]: int(r["cnt"])
@@ -239,7 +240,6 @@ def unigram_lm_train(
         counts = _prune(
             {r["piece"]: int(r["cnt"]) for r in n.collect()}, chars, vocab_size
         )
-    wf.unpersist()
     costs = costs_from_counts(counts)
     rows = [(p, counts[p], costs[p]) for p in sorted(counts)]
     df = local_df(spark, rows, "piece string, cnt bigint, cost_nano bigint")

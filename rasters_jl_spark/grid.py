@@ -255,9 +255,6 @@ class WebGrid:
             f" CASE WHEN {ok} THEN {y} * {self.nx} + {x} END))), c -> c IS NOT NULL)"
         )
 
-    def ring_cells_col(self, cell: str | Column, radius: str | Column) -> Column:
-        return F.expr(self.ring_cells_sql(ref_sql(cell), ref_sql(radius)))
-
 
 # Engine-wide default resolutions.
 PAGES_RES = 7  # fine indexing cells for pages (step 1.40625°; tune per density)

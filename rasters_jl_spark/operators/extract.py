@@ -70,14 +70,15 @@ def ordered_id(df: DataFrame, cols: list[str], name: str = "id") -> DataFrame:
     Ties across a range-partition boundary still yield a valid row_number
     (ties are arbitrary-order in any engine); with a total ordering the ids
     are exactly the global ``row_number() OVER (ORDER BY cols)``. The
-    ranged table is localCheckpoint'ed (lazily) before fanning out: the
-    range exchange samples partition boundaries NON-deterministically, and
-    correctness requires the offsets branch and the main branch to see the
-    SAME boundaries — exchange reuse usually guarantees that, but it is a
-    physical-plan optimization Spark may skip (AQE stage dedup has been
-    observed leaving identical exchanges unreused), and a re-run would
-    draw a fresh sample. The checkpoint pins one materialisation for both
-    consumers (and computes the exchange exactly once).
+    ranged table is pinned (``localCheckpoint()``, run here) before fanning
+    out: the range exchange samples partition boundaries
+    NON-deterministically, and correctness requires the offsets branch and
+    the main branch to see the SAME boundaries — exchange reuse usually
+    guarantees that, but it is a physical-plan optimization Spark may skip
+    (AQE stage dedup has been observed leaving identical exchanges
+    unreused), and a re-run would draw a fresh sample. The checkpoint pins
+    one materialisation for both consumers (and computes the exchange
+    exactly once).
     """
     from pyspark.sql import Window
 
@@ -85,7 +86,7 @@ def ordered_id(df: DataFrame, cols: list[str], name: str = "id") -> DataFrame:
     part = (
         df.repartitionByRange(*order)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     offsets = (
         part.groupBy("_pid")

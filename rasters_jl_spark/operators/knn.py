@@ -4,12 +4,13 @@ the reference's closest machinery is the `Near` selector, `src/lookup.jl`).
 Exact k-nearest pages per query point, planar squared-degree distance
 (engine-defined semantics so the brute-force oracle agrees bit-for-bit):
 
-queries: projected to (q_id, qlat, qlon) and pinned once on entry; the
-         phase-1 ring explode and the one NULL row per query both read
-         the pin, so the caller's query plan runs once per call;
+queries: projected to (q_id, qlat, qlon) and read once, by the phase-1
+         ring join (not pinned: it is the one reader), so the caller's
+         query plan runs once per call, inside the phase-1 pin;
 phase 1: candidates from rings ≤ R0 around each query cell, R0 sized from
          global page density (one scalar aggregate, not a collect loop),
-         plus one NULL candidate per query ranked last; the same window
+         plus one NULL candidate per query ranked last: each ring ends in
+         cell -1, which only a sentinel page row has; the same window
          pass yields rank AND the kth distance, and when the implied exact
          radius R_q = ceil(sqrt(d_k)/step)+1 fits in R0 the top-k is
          emitted DIRECTLY from the pinned phase-1 top-k — the common case
@@ -34,7 +35,7 @@ lies within R_q rings of the query cell. All fan-out is `explode` of
 generated ring arrays capped at (2·RING_MAX+1)² elements — no driver
 iteration, scales with #queries.
 
-Not lazy: phase 1 is pinned eagerly inside `knn_pages()` (under AQE its
+Not lazy: phase 1 is pinned inside `knn_pages()` (under AQE its
 broadcast, shuffle-map and result stages); the returned frame's action
 reads the pinned top-k plus whichever later tiers were planned.
 """
@@ -43,8 +44,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from rasters_jl_spark.grid import WebGrid
+from rasters_jl_spark.session import local_df
 
 # largest ring radius (in cells) the explode path will materialize:
 # (2·64+1)² = 16,641 array elements per query row — past this, exactness
@@ -66,20 +69,26 @@ def _ring_candidates(
     radius: str,
     exploded_rows_est: int | None = None,
 ) -> DataFrame:
+    # Each ring ends in cell -1, which no page has (cells are >= 0) but the
+    # one sentinel page row (-1, NULL, NULL, NULL) unioned into the pages:
+    # every query meets it once, so it has one NULL candidate (dist2 NULL)
+    # from the join itself, zero real candidates included
+    cells = f"concat({g.ring_cells_sql('_qcell', radius)}, array(CAST(-1 AS BIGINT)))"
     q = queries.withColumn("_qcell", g.cell_col("qlon", "qlat"))
-    q = q.withColumn("_cells", g.ring_cells_col("_qcell", radius))
-    q = q.select("q_id", "qlat", "qlon", F.explode("_cells").alias("cell"))
+    q = q.select("q_id", "qlat", "qlon", F.explode(F.expr(cells)).alias("cell"))
     p = pages.select(
         "cell", F.col("doc_id").alias("doc_id"), F.col("lat").alias("_plat"), F.col("lon").alias("_plon")
     )
-    # The query side arrives behind a pin or shuffles, so without a hint
-    # Spark can't see when it's small and plans a sort-merge join that
-    # shuffles the whole pages table. But the hint is only safe when the
-    # exploded side actually fits in a broadcast relation: the caller
-    # passes its row estimate (queries × ring cells) and past
-    # BROADCAST_ROWS_MAX the hint is withheld (many-query phase-1 at
-    # r0=RING_MAX would otherwise force a multi-GB broadcast and fail
-    # where the shuffle join works).
+    nullable = StructType([StructField(f.name, f.dataType, True) for f in p.schema])
+    p = p.unionByName(local_df(pages.sparkSession, [(-1, None, None, None)], nullable))
+    # The query side is the caller's plan (phase 1) or a filter of the
+    # phase-1 pin (phase 2), exploded: Spark can't see when it's small and
+    # plans a sort-merge join that shuffles the whole pages table. But the
+    # hint is only safe when the exploded side actually fits in a
+    # broadcast relation: the caller passes its row estimate (queries ×
+    # ring cells) and past BROADCAST_ROWS_MAX the hint is withheld
+    # (many-query phase-1 at r0=RING_MAX would otherwise force a multi-GB
+    # broadcast and fail where the shuffle join works).
     if exploded_rows_est is None or exploded_rows_est <= BROADCAST_ROWS_MAX:
         q = F.broadcast(q)
     return q.join(p, "cell").withColumn("dist2", _dist2())
@@ -119,18 +128,14 @@ def knn_pages(
     tiers run is decided from the pinned data, never from them. Pass the
     catalog row counts when known (at 10¹² scale that's table statistics,
     not an online count) — left None, one count() action each runs here.
-    The eager phase-1 pin, which also counts the later tiers' queries,
-    runs inside this call (see the module docstring). Returns (q_id,
-    rank, doc_id, dist2).
+    The phase-1 pin, which also counts the later tiers' queries, runs
+    inside this call, and the query side is read once, by it (see the
+    module docstring). Returns (q_id, rank, doc_id, dist2).
     """
     from rasters_jl_spark.grid import PAGES_RES
 
     g = WebGrid(res if res is not None else PAGES_RES)
-    # The query side is read by the phase-1 ring join and the NULL rows;
-    # pinned here, the caller's plan (a Python RDD for
-    # createDataFrame(list)) runs once. Query metadata is small at any
-    # corpus scale, so a local checkpoint is the pin.
-    q = queries.select("q_id", "qlat", "qlon").localCheckpoint(eager=False)
+    q = queries.select("q_id", "qlat", "qlon")
     if n_pages is None:
         n_pages = pages.count()  # one scalar action to size R0 from density
     if n_queries is None:
@@ -147,8 +152,8 @@ def knn_pages(
     r0 = int(math.ceil(math.sqrt((k + 4) / max(density, 1e-12)))) + 1
     r0 = min(max(r0, 2), max(g.nx, g.ny), RING_MAX)
 
-    # dist2 is NULL only on the one NULL row per query (below): nulls last
-    # ranks it after every real candidate
+    # dist2 is NULL only on the one NULL candidate per query (the ring's
+    # cell -1): nulls last ranks it after every real candidate
     w = Window.partitionBy("q_id").orderBy(F.col("dist2").asc_nulls_last(), F.col("doc_id").asc())
 
     # Phase 1 doubles as the ANSWER for queries whose exact radius fits in
@@ -167,17 +172,15 @@ def knn_pages(
     # max over the ≤k surviving rows — same value as computing it over
     # the full candidate set, since the rank-k row survives the filter.
     #
-    # One NULL row per query (the query pin, its missing columns NULL) is
-    # unioned into the candidates, so every query has a rank-1 row
-    # carrying (q_id, qlat, qlon, _rf), zero candidates included. A query
-    # with <k real candidates ranks its NULL row at or before k, so its
-    # rank-k dist2 — hence _dk and _rf — is NULL and it routes to brute;
-    # with ≥k the NULL row ranks past k and the rank filter drops it.
-    # The NULL rows come from one partition: one task in the phase-1 map
-    # stage, not one per partition of the query pin.
+    # Every query's NULL candidate (see _ring_candidates) gives it a
+    # rank-1 row carrying (q_id, qlat, qlon, _rf), zero candidates
+    # included. A query with <k real candidates ranks its NULL row at or
+    # before k, so its rank-k dist2 — hence _dk and _rf — is NULL and it
+    # routes to brute; with ≥k the NULL row ranks past k and the rank
+    # filter drops it (so too in phase 2, whose queries have ≥k).
     cand1 = _ring_candidates(
         q, pages, g, str(r0), exploded_rows_est=n_queries * (2 * r0 + 1) ** 2
-    ).unionByName(q.coalesce(1), allowMissingColumns=True)
+    )
     rf_need = (F.ceil(F.sqrt(F.col("_dk")) / F.lit(g.step)) + 1).cast("int")
     topk = cand1.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= k)
     dk = F.max(F.when(F.col("_rn") == k, F.col("dist2"))).over(Window.partitionBy("q_id"))
@@ -190,7 +193,7 @@ def knn_pages(
     # across them, so unpinned the corpus candidate join would run per
     # consumer. The table is ≤k rows per query (bounded query metadata,
     # the pagerank-checkpoint class), so the pin is metadata-sized at any
-    # corpus scale. The pin is eager and its one pass also counts, over
+    # corpus scale. The pin runs here, and its one pass also counts, over
     # the rank-1 rows, the queries each later tier needs (an unnamed
     # Observation: named ones collide across concurrent calls); a tier is
     # planned only when its count is nonzero, so a batch phase 1 fully
@@ -200,7 +203,7 @@ def knn_pages(
         obs,
         F.count(F.when(head & needs_ring, 1)).alias("ring"),
         F.count(F.when(head & needs_brute, 1)).alias("brute"),
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint()
     n_ring, n_brute = obs.get["ring"], obs.get["brute"]
     out = c.where(F.col("_rf") <= r0).select(
         "q_id", F.col("_rn").alias("rank"), "doc_id", "dist2"

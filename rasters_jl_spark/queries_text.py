@@ -35,17 +35,18 @@ def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     single parquet file (one scan partition); real corpora arrive in many
     files. Repartition so per-row CPU work (md5, shingles) parallelises.
 
-    Eagerly localCheckpoint'ed for the same reasons as ``_aug_near``:
-    several text queries consume this subtree from self-joined branches
-    (doc spine + freq tables + verify sides), self-join attribute dedup
-    re-aliases each branch, and AQE stage reuse then misses the identical
-    scan+repartition exchange — measured recomputing up to 5x per query.
+    Pinned (``localCheckpoint()``, run here) for the same reasons as
+    ``_aug_near``: several text queries consume this subtree from
+    self-joined branches (doc spine + freq tables + verify sides),
+    self-join attribute dedup re-aliases each branch, and AQE stage reuse
+    then misses the identical scan+repartition exchange — measured
+    recomputing up to 5x per query.
     One fixture-scale materialisation per call; computed fresh every run."""
     n = spark.sparkContext.defaultParallelism
     return (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .repartition(n, "doc_id")
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
 
 
@@ -81,18 +82,15 @@ def _aug_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branches (signatures, verify-a, verify-b), and self-join attribute
     # dedup re-aliases each branch's subtree so AQE stage reuse misses the
     # otherwise-identical exchange (measured: the scan+union+repartition
-    # ran 5x per dedup_minhash run). The pin is eager: a lazy one is
-    # materialised by whichever consumer stage finishes first, while AQE
-    # runs the other branches' stages at the same time, so one of them
-    # could compute the subtree again and report SQL metrics the driver
-    # had already dropped with the pin's lineage ("Failed to update
-    # accumulator"). Fixture-scale table; computed fresh inside every run.
+    # ran 5x per dedup_minhash run). The pin runs here, before any
+    # consumer (the one pin form: see the session module). Fixture-scale
+    # table; computed fresh inside every run.
     n = spark.sparkContext.defaultParallelism
     return (
         raw.unionByName(dups)
         .unionByName(shorts)
         .repartition(n, "doc_id")
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
 
 

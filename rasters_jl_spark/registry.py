@@ -208,35 +208,41 @@ _DEFS: dict[str, tuple[QueryFn, str | None]] = {
 
 
 # The driver window: the first 50 REGISTRY entries, recorded each round.
-# (a) the readers of the geotag and web-grid texts that Spark now runs
-#     through F.expr (pages_geo, PAGES_CTE, with_geotag; knn and
-#     stream_zonal_stats); (b) the touches/inside readers of seg_rect_sql,
-#     whose first-endpoint term is gone; (c) the other raster_cover_hit
-#     readers and (d) the grid, kernel and clipped-area queries, whose
-#     oracles' GridSpec literals are now exact DOUBLEs. Left out for room:
-#     zonal_extent, coverage, coverage_union and cellarea_quad (GridSpec
-#     literals too), and what the round before left out (cellarea, crop,
-#     points, the session.local_df readers, the read_documents consumers,
-#     extract_lines, rasterize_lines, explicit_cellarea, aggregate_*,
-#     mosaic_* and explicit_extract).
+# (a) the queries whose pins changed: every in-call pin is one
+#     localCheckpoint() (extract_id's ordered_id, pack_sequences, the
+#     bpe, ann and unigram trainers) and knn's query side is read once,
+#     by its phase-1 pin; (b) the touches/inside readers of seg_rect_sql,
+#     whose second-endpoint term is gone; (c) the readers of the geotag
+#     and web-grid texts (pages_geo, PAGES_CTE, with_geotag;
+#     stream_zonal_stats); (d) the other raster_cover_hit readers and (e)
+#     the grid, kernel and clipped-area queries whose oracles' GridSpec
+#     literals became exact DOUBLEs. Left out for room: warp_mercator,
+#     warp_sinusoidal, warp_agg, warp_utm, warp_utm_agg, resample_near,
+#     resample_bilinear, resample_agg, resample_rms, extract and
+#     extract_name_atol (GridSpec literals), and what the rounds before
+#     left out (zonal_extent, coverage, coverage_union, cellarea_quad,
+#     cellarea, crop, points, the session.local_df readers, the
+#     read_documents consumers, extract_lines, rasterize_lines,
+#     explicit_cellarea, aggregate_*, mosaic_* and explicit_extract).
 _DRIVER_WINDOW = [
     # (a)
-    "geotag", "cell_count", "tile_stats", "text_identity",
-    "zonal_pages", "spatial_join_pip", "zonal_pages_salted",
-    "rasterize_points", "rasterize_any", "rasterize_all", "knn", "stream_zonal_stats",
+    "knn", "extract_id", "pack_sequences", "bpe_train", "bpe_train_batched", "bpe_tokenize",
+    "ann_ivf_topk", "ann_pq_topk", "ann_ivfpq_topk", "ann_ivfpq_rerank", "ann_opq_topk",
+    "unigram_lm_train", "unigram_tokenize",
     # (b)
     "boolmask_touches", "boolmask_inside", "zonal_coverage",
     # (c)
+    "geotag", "cell_count", "tile_stats", "text_identity",
+    "zonal_pages", "spatial_join_pip", "zonal_pages_salted",
+    "rasterize_points", "rasterize_any", "rasterize_all", "stream_zonal_stats",
+    # (d)
     "mask_geom", "boolmask", "boolmask_multipoly", "boolmask_holed", "missingmask",
     "extract_polygons", "extract_many", "extract_nested",
     "rasterize_polygons", "rasterize_many", "rasterize_multilayer", "rasterize_prod",
     "zonal_stack", "zonal_many", "zonal_northup", "zonal_median",
     "coverage_polygon", "coverage_polygon_union",
-    # (d)
-    "resample_cubic", "resample_cubicspline", "resample_lanczos", "coverage_exact",
-    "warp_hook", "warp_mercator", "warp_sinusoidal", "warp_agg", "warp_utm", "warp_utm_agg",
-    "resample_near", "resample_bilinear", "resample_agg", "resample_rms",
-    "extract", "extract_name_atol", "extract_id",
+    # (e)
+    "resample_cubic", "resample_cubicspline", "resample_lanczos", "coverage_exact", "warp_hook",
 ]
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {

@@ -3,6 +3,25 @@ constructor of driver-side tables (:func:`local_df`).
 
 Local testing runs ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the same
 conf ships via ``spark-submit --py-files`` — nothing here is local-only.
+
+Pins. A table that several readers inside one engine call share (both
+branches of ``ordered_id``, the kNN phase-1 top-k) or that a loop's next
+round builds on (a training round's state, a PageRank round's ranks) is
+pinned one way: ``.localCheckpoint()``, which runs where the call makes
+it, before any reader, so every reader reads one copy and the lineage is
+cut. A table with one reader is not pinned. A lazy local checkpoint is
+not used: the first reader materialises it while AQE runs the other
+readers' stages at the same time, so those compute the subtree again and
+report SQL metrics the driver has already dropped ("Failed to update
+accumulator").
+Failure mode: a local checkpoint is not fault-tolerant. Its blocks live
+only on the executors that computed them and its lineage is cut, so
+losing one of those executors fails the job that reads the pin; at corpus
+scale the exposure grows with the pinned bytes and the call's length.
+The stream snapshot of ``streaming/ingest.py`` is the one table cached:
+it outlives the call and serves every later micro-batch, and a cache
+recomputes lost blocks from lineage where a local checkpoint would fail
+every batch after one lost executor.
 """
 
 from __future__ import annotations

@@ -22,5 +22,28 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture(scope="session")
+def counted(spark):
+    """``counted(group, fn)``: ``fn()``'s result and the jobs and stages
+    Spark ran for it under job group ``group``, counted as
+    ``tools/profile.py`` counts them (StatusTracker; skipped stages too)."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        st = sc.statusTracker()
+        jobs = st.getJobIdsForGroup(group)
+        stages = [s for j in jobs for s in st.getJobInfo(j).stageIds if st.getStageInfo(s)]
+        return out, len(jobs), len(stages)
+
+    return run
+
+
 def rows_to_dict(df, key_cols=("ix", "iy"), val_col="value"):
     return {tuple(r[k] for k in key_cols): r[val_col] for r in df.collect()}

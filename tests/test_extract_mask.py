@@ -172,10 +172,12 @@ def test_extract_name_atol_id_keywords(spark):
     assert exact == set()  # 0.02/0.01 offsets are not exact
 
 
-def test_ordered_id_scale_safe(spark):
+def test_ordered_id_scale_safe(spark, counted):
     """ordered_id == global row_number on a gapped, tie-heavy fixture, and
     the full-data window is range-partitioned (the only single-partition
-    window is the partition-count-sized offsets branch)."""
+    window is the partition-count-sized offsets branch). The ranged table
+    is pinned inside the call, so the call and its collect run a fixed
+    job and stage count: a changed plan shape fails here."""
     from pyspark.sql import functions as F
 
     from rasters_jl_spark.operators.extract import ordered_id
@@ -190,7 +192,10 @@ def test_ordered_id_scale_safe(spark):
         )
         .where("id % 3 != 1")  # gaps
     )
-    out = ordered_id(df, ["k", "v", "orig"], "seq").collect()
+    out, jobs, stages = counted(
+        "ordered-id", lambda: ordered_id(df, ["k", "v", "orig"], "seq").collect()
+    )
+    assert (jobs, stages) == (8, 13)
     got = [(r["k"], r["v"], r["orig"], r["seq"]) for r in out]
     got.sort(key=lambda t: t[3])
     expected = sorted(((r["k"], r["v"], r["orig"]) for r in out))

@@ -162,7 +162,7 @@ def test_webgrid_col_call_shapes(spark):
         with pytest.raises(ValueError):
             lat_col(bad)
     with pytest.raises(ValueError):
-        g.ring_cells_col("cell", F.lit(1))
+        g.parent_cell_col(F.lit(1), 4)
 
 
 def test_gridspec_point_ownership(spark):

@@ -228,6 +228,40 @@ def test_knn_phase1_batch_plans_no_later_tier(spark, pages):
     assert len(sc.statusTracker().getJobIdsForGroup("knn-phase1-jobs")) == 4
 
 
+def test_knn_query_side_read_once(spark):
+    """The query side has one reader, the phase-1 pin: one knn_pages()
+    call and its collect evaluate each query row once, here a Python UDF
+    over a createDataFrame(list) frame. Query 2 has no page in its ring;
+    its NULL candidate (the ring's cell -1) routes it to the brute tier,
+    which still returns its k nearest pages."""
+    res, k = 5, 5
+    g = WebGrid(res)
+    pts = [(i * 10 + j, -10.0 + i * 0.7, 20.0 + j * 0.7) for i in range(10) for j in range(10)]
+    pages = spark.createDataFrame(pts, "doc_id long, lat double, lon double")
+    pages = pages.withColumn("cell", g.cell_col("lon", "lat"))
+    qs = [(0, -7.0, 23.0), (1, -5.5, 24.1), (2, 60.0, -150.0)]
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted_lat(v):
+        seen.add(1)
+        return v
+
+    queries = spark.createDataFrame(qs, "q_id long, qlat double, qlon double").select(
+        "q_id", F.udf(counted_lat, "double")("qlat").alias("qlat"), "qlon"
+    )
+    got = {
+        (r["q_id"], r["rank"]): (r["doc_id"], r["dist2"])
+        for r in knn_pages(queries, pages, k=k, res=res).collect()
+    }
+    assert seen.value == len(qs)
+    want = {}
+    for qid, qlat, qlon in qs:
+        ds = sorted(((la - qlat) * (la - qlat) + (lo - qlon) * (lo - qlon), d) for d, la, lo in pts)
+        for rank, (d2, doc) in enumerate(ds[:k], 1):
+            want[(qid, rank)] = (doc, d2)
+    assert got == want
+
+
 @pytest.mark.parametrize("empty", ["queries", "pages"])
 def test_knn_empty_input_returns_empty_frame(spark, empty):
     q_rows = [] if empty == "queries" else [(1, 10.0, 20.0)]

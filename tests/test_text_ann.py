@@ -524,6 +524,18 @@ def test_pack_sequences_invariants(spark, docs):
     assert a == {(r["doc_id"], r["chunk_id"], r["tok_start_in_doc"], r["n_toks"]) for r in out}
 
 
+def test_pack_sequences_pin_counts(spark, sf_dir, counted):
+    """The range-partitioned table is pinned inside the call, before the
+    driver reads its partition totals: the call and its collect run a
+    fixed job and stage count, so a changed plan shape fails here."""
+    from rasters_jl_spark.functions.packing import pack_sequences
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    rows, jobs, stages = counted("pack-sequences", lambda: pack_sequences(docs).collect())
+    assert rows
+    assert (jobs, stages) == (7, 11)
+
+
 def test_mixture_sample_rates_and_determinism(spark, docs):
     """Per-source keep rates: rate-1.0 sources survive whole, rate-0
     sources vanish, fractional rates land near target, and the survivor
@@ -1387,6 +1399,24 @@ def test_unigram_lm_distributed_matches_local_and_goldens(spark):
     one = spark.createDataFrame([(0, "abc abc")], "doc_id int, text string")
     toks = U.unigram_tokenize(one, costs, 2).collect()[0]["tokens"]
     assert toks == ["a", "b", "c", "a", "b", "c"]
+
+
+def test_unigram_lm_train_pin_counts(spark, sf_dir, counted):
+    """The word-frequency table is pinned once inside the call and every
+    round reads that copy: training plus a collect of the piece table run
+    a fixed job and stage count, so a changed plan shape fails here."""
+    from rasters_jl_spark import queries_text as QT
+    from rasters_jl_spark.functions import unigram_lm as U
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    rows, jobs, stages = counted(
+        "unigram-lm-train",
+        lambda: U.unigram_lm_train(
+            docs, QT.UNIGRAM_K, QT.UNIGRAM_SEED_MULTI, QT.UNIGRAM_VOCAB, QT.UNIGRAM_ITERS
+        )[2].collect(),
+    )
+    assert rows
+    assert (jobs, stages) == (10, 15)
 
 
 def test_unigram_tokenize_fold_matches_udf_and_unknown_chars(spark):
